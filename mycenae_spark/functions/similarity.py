@@ -52,9 +52,9 @@ def pair_dot_arrow(
     embedding_lsh / knn_graph / semantic_pairs verify legs (r19 VERDICT
     item 5).  Each 64-dim pair costs the boundary ~1 KB in and 8 B out.
 
-    Preconditions (asserted): non-null, equal-length arrays — the corpus
-    contract every caller already guarantees (fixed ``dim``, filtered
-    non-null embeddings)."""
+    Preconditions (asserted): non-null, non-empty, equal-length arrays —
+    the corpus contract every caller already guarantees (fixed ``dim``,
+    filtered non-null embeddings)."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from mycenae_spark.pickling import register_module_by_value
@@ -71,6 +71,7 @@ def pair_dot_arrow(
     def fold(it):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         arrow_schema = None
         for b in it:
@@ -91,11 +92,13 @@ def pair_dot_arrow(
                 raise ValueError("pair_dot_arrow: null embedding component")
             a = va.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
             v = vb.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            la = pa.compute.list_value_length(ca).to_numpy()
-            lb = pa.compute.list_value_length(cb).to_numpy()
+            la = pc.list_value_length(ca).to_numpy()
+            lb = pc.list_value_length(cb).to_numpy()
             if (la != la[0]).any() or (lb != la[0]).any():
                 raise ValueError("pair_dot_arrow: ragged embedding arrays")
             d = int(la[0])
+            if d == 0:
+                raise ValueError("pair_dot_arrow: empty embedding arrays")
             A = a.reshape(n, d)
             B = v.reshape(n, d)
             acc = np.zeros(n, dtype=np.float64)

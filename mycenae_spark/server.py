@@ -58,6 +58,7 @@ make API parity concrete and end-to-end testable.
 
 from __future__ import annotations
 
+import contextlib
 import copy
 import json
 import logging
@@ -155,12 +156,25 @@ class Engine:
         #: cascade_rollup).  Routed onto per query when current + covering;
         #: the ingest-maintained fine rung stays the fallback.
         self.ladder = ladder or {}
-        #: rung_dir → (marker as_of_seq, read_rollup_series frame).  The
-        #: frame embeds driver-side tag-key discovery (a collect over the
-        #: rung), so rebuilding it per sub-query is wasted work; a rung is
-        #: immutable per generation and refresh_ladder publishes a NEW
-        #: as_of pin, which misses the cache and replaces the stale frame
-        #: naturally.
+        #: Per-generation serving-frame memo (_generation_frame): the
+        #: points frame, the catalog frame and the fine rollup series
+        #: frame, keyed (frame name, pinned log head, the build's other
+        #: inputs — tag-key tuple / fine retention horizon).  Between two
+        #: commits these frames depend only on the head, so every read
+        #: pinned to one checkpointed generation (query, expression and
+        #: the cached analytics verbs) reuses them instead of re-listing
+        #: the snapshot files and re-collecting the rollup's tag keys.
+        #: Bypassed by unpinned reads; never stores a build that degraded
+        #: to a directory read (NoBaseline) or raised; holds the newest
+        #: generation only.  A read that raises on reused frames evicts
+        #: the generation, rebuilds and retries once
+        #: (_evict_reused_frames).  Guarded by the result-cache lock.
+        self._frames: dict = {}
+        #: Ladder rungs are memoized apart from _frames: rung_dir →
+        #: (marker as_of_seq, read_rollup_series frame).  A rung is
+        #: immutable per marker pin, not per log head, so its frame stays
+        #: valid across commits; refresh_ladder publishes a NEW as_of pin,
+        #: which misses and replaces the stale frame naturally.
         self._rung_frames: dict = {}
         #: (checked_to pin, scanned-to seq, verdict) memo for
         #: _fine_foreign_tail — incremental: each log entry is scanned
@@ -206,7 +220,8 @@ class Engine:
         #: key at head S, its snapshot reads resolve AT S (not the live
         #: head) — otherwise a write landing mid-query leaks S+1 data
         #: into an answer cached under S, breaking the pure-function-of-
-        #: (request, generation) invariant.
+        #: (request, generation) invariant.  ``reused`` records whether
+        #: this request was served memoized frames (see _frames).
         self._read_pin = threading.local()
         #: Per-request-thread routing trace: one entry per served
         #: subquery — "qsample:<iv>", "ladder:<iv>", or "fine" — so
@@ -389,6 +404,72 @@ class Engine:
         """The current request's generation pin, if one is active."""
         return getattr(self._read_pin, "as_of", None)
 
+    def _checkpointed_head(self) -> int | None:
+        """The commit-log head when a checkpoint exists (reads are then
+        log-gated and a pin at the head is exact), else ``None``."""
+        from mycenae_spark.streaming import commitlog
+        from mycenae_spark.streaming import snapshot as snap
+
+        if snap.latest_checkpoint(self.lake_dir) is None:
+            return None
+        return commitlog.latest_seq(self.lake_dir)
+
+    @contextlib.contextmanager
+    def _pinned(self, head: int | None):
+        """Pin this thread's snapshot reads (and frame memo) to ``head``
+        for the duration of one request, with a fresh degraded-reads
+        flag."""
+        self._read_pin.as_of = head
+        self._read_pin.reused = False
+        self._degraded_reads.flag = False
+        try:
+            yield
+        finally:
+            self._read_pin.as_of = None
+
+    def _generation_frame(self, name: str, inputs: tuple, build) -> DataFrame:
+        """``build()``, memoized per pinned generation (see ``_frames``).
+        Stores nothing once any read of this request degraded (the result
+        cache's rule); storing a newer generation drops the older one,
+        and a straggler request at an older head stores nothing."""
+        head = self._pinned_as_of()
+        if head is None:
+            return build()
+        key = (name, head, inputs)
+        with self._result_cache_lock:
+            hit = self._frames.get(key)
+        if hit is not None:
+            self._read_pin.reused = True
+            return hit
+        frame = build()
+        if not getattr(self._degraded_reads, "flag", False):
+            with self._result_cache_lock:
+                if all(k[1] <= head for k in self._frames):
+                    self._frames = {
+                        k: f for k, f in self._frames.items() if k[1] == head
+                    }
+                    self._frames[key] = frame
+        return frame
+
+    def _evict_reused_frames(self, head: int | None) -> bool:
+        """Called when a read raised: if this request was served memoized
+        frames, drop generation ``head``'s entries and return True so the
+        caller rebuilds and retries ONCE (compaction or TTL may have moved
+        a file the memoized frame lists into ``_retained/<seq>``; a fresh
+        snapshot read finds it there).  False = nothing reused, re-raise."""
+        if not getattr(self._read_pin, "reused", False):
+            return False
+        self._read_pin.reused = False
+        logger.warning(
+            "read on memoized frames at generation %s failed; "
+            "rebuilding them and retrying once", head, exc_info=True,
+        )
+        with self._result_cache_lock:
+            self._frames = {
+                k: f for k, f in self._frames.items() if k[1] != head
+            }
+        return True
+
     def _read_lake(self) -> DataFrame:
         """Log-gated snapshot read when a checkpoint exists; directory read
         only when no baseline exists (see :meth:`_snapshot_or_dir`)."""
@@ -402,28 +483,32 @@ class Engine:
         )
 
     def _read_catalog(self) -> DataFrame:
-        """Catalog twin of :meth:`_read_lake` (same fallback contract)."""
+        """Catalog twin of :meth:`_read_lake` (same fallback contract),
+        memoized per pinned generation."""
         from mycenae_spark.streaming import snapshot as snap
 
-        return self._snapshot_or_dir(
-            lambda: snap.read_catalog_snapshot(
-                self.spark, self.lake_dir, self.catalog_dir,
-                as_of=self._pinned_as_of(),
-            ),
-            self.catalog_dir,
-        )
+        return self._generation_frame("catalog", (), lambda: (
+            self._snapshot_or_dir(
+                lambda: snap.read_catalog_snapshot(
+                    self.spark, self.lake_dir, self.catalog_dir,
+                    as_of=self._pinned_as_of(),
+                ),
+                self.catalog_dir,
+            )
+        ))
 
     def _points(self) -> DataFrame:
-        lake = self._read_lake()
-        cols = [
-            F.col("tags").getItem(k).alias(f"tag_{k}") for k in self._tag_keys()
-        ]
-        return lake.select(
-            "metric",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            "value",
-            *cols,
-        )
+        keys = tuple(self._tag_keys())
+
+        def build() -> DataFrame:
+            return self._read_lake().select(
+                "metric",
+                F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+                "value",
+                *[F.col("tags").getItem(k).alias(f"tag_{k}") for k in keys],
+            )
+
+        return self._generation_frame("points", keys, build)
 
     def query(self, body: dict) -> list:
         now_ms = int(time.time() * 1000)
@@ -431,20 +516,13 @@ class Engine:
         if isinstance(body.get("start"), int) and isinstance(
             body.get("end"), int
         ):
-            from mycenae_spark.streaming import commitlog
-            from mycenae_spark.streaming import snapshot as snap
-
-            if snap.latest_checkpoint(self.lake_dir) is not None:
-                head = commitlog.latest_seq(self.lake_dir)
+            head = self._checkpointed_head()
+        self._route_trace.routes = []
         # Pin this request's snapshot reads to the generation its cache
         # keys are derived from: a write landing mid-query must not leak
         # newer-generation data into an answer cached under an older key.
-        self._read_pin.as_of = head
-        self._route_trace.routes = []
-        try:
+        with self._pinned(head):
             return self._query_subqueries(body, now_ms, head)
-        finally:
-            self._read_pin.as_of = None
 
     def _note_route(self, route: str) -> None:
         routes = getattr(self._route_trace, "routes", None)
@@ -535,15 +613,14 @@ class Engine:
         out = []
         pts = rollup = None
         frames_built = False
-        # Reset the degraded-reads flag ONCE, before any read can set it:
-        # the snapshot fallbacks fire during FRAME RESOLUTION
-        # (_build_frames → _points/_read_catalog/rollup read), so a reset
-        # after the build would launder a NoBaseline directory fallback
-        # into every subquery's cache entry (review finding r9 — the
-        # exact torn-answer-pinned-for-a-generation class the flag
+        # The degraded-reads flag was reset ONCE by _pinned, before any
+        # read can set it: the snapshot fallbacks fire during FRAME
+        # RESOLUTION (_build_frames → _points/_read_catalog/rollup read),
+        # so a reset after the build would launder a NoBaseline directory
+        # fallback into every subquery's cache entry (review finding r9 —
+        # the exact torn-answer-pinned-for-a-generation class the flag
         # guards).  Frames are shared across subqueries, so once any
         # read degrades, NOTHING from this request may cache.
-        self._degraded_reads.flag = False
         for q in parse_query_request(body, now_ms):
             key = None
             if head is not None:
@@ -565,7 +642,13 @@ class Engine:
             if not frames_built:
                 pts, rollup = self._build_frames(head)
                 frames_built = True
-            rows = self._run_subquery(pts, rollup, q)
+            try:
+                rows = self._run_subquery(pts, rollup, q)
+            except Exception:
+                if not self._evict_reused_frames(head):
+                    raise
+                pts, rollup = self._build_frames(head)
+                rows = self._run_subquery(pts, rollup, q)
             if key is not None and not getattr(
                 self._degraded_reads, "flag", False
             ):
@@ -580,7 +663,11 @@ class Engine:
 
     def _build_frames(self, head: "int | None" = None):
         """Lazy points/rollup serving frames — skipped entirely when every
-        subquery in the request hits the cache.  ``head`` (the request's
+        subquery in the request hits the cache.  Both frames come from the
+        per-generation memo (``_frames``) when the request is pinned; the
+        coverage and foreign-tail gates below still run per request (cheap
+        marker and log reads), so a memoized rollup frame is only routed
+        onto while it provably covers the lake.  ``head`` (the request's
         already-read log head, when log-gated) saves the foreign-tail
         gate a redundant commit-log listing."""
         pts = self._points()
@@ -591,6 +678,7 @@ class Engine:
             from mycenae_spark.streaming.rollup import (
                 read_rollup_series,
                 rollup_coverage_complete,
+                sketch_retained_from,
             )
 
             # Route onto partials only when the rollup provably covers the
@@ -607,20 +695,25 @@ class Engine:
                 # NoBaseline degrades to a directory read inside the
                 # helper; TransientInFlight retries; LogGap propagates —
                 # same contract as the points/catalog paths.
-                roll_df = self._snapshot_or_dir(
-                    lambda: snap.read_rollup_snapshot(
-                        self.spark, self.lake_dir, self.rollup_dir,
-                        as_of=self._pinned_as_of(),
-                    ),
-                    self.rollup_dir,
-                )
                 # clamp_to_retention: the Engine memoizes this frame and
                 # refuses pre-horizon fine-grain queries per request via
                 # _guard_fine_retention — the library default (refuse)
-                # would brick construction over a legally pruned lake
-                rollup = read_rollup_series(
-                    self.spark, self.rollup_dir, df=roll_df,
-                    clamp_to_retention=True,
+                # would brick construction over a legally pruned lake.
+                # The horizon the clamp reads is part of the memo key.
+                rollup = self._generation_frame(
+                    "rollup",
+                    (sketch_retained_from(self.rollup_dir),),
+                    lambda: read_rollup_series(
+                        self.spark, self.rollup_dir,
+                        df=self._snapshot_or_dir(
+                            lambda: snap.read_rollup_snapshot(
+                                self.spark, self.lake_dir, self.rollup_dir,
+                                as_of=self._pinned_as_of(),
+                            ),
+                            self.rollup_dir,
+                        ),
+                        clamp_to_retention=True,
+                    ),
                 )
         return pts, rollup
 
@@ -1047,7 +1140,16 @@ class Engine:
     def query_expression(self, exp: str) -> list:
         now_ms = int(time.time() * 1000)
         q = parse_expression(exp, now_ms)
-        return shape_response(plan(self._points(), q), q)
+        # Pinned at the head resolved now — the same rows as a live read,
+        # and the pin lets expression reads share the frame memo.
+        head = self._checkpointed_head()
+        with self._pinned(head):
+            try:
+                return shape_response(plan(self._points(), q), q)
+            except Exception:
+                if not self._evict_reused_frames(head):
+                    raise
+                return shape_response(plan(self._points(), q), q)
 
     #: Recognized body fields + defaults per analytics verb — the cache
     #: key's schema.  A field absent here is IGNORED by the verb's
@@ -1100,12 +1202,7 @@ class Engine:
         semantically identical requests share one entry, and a client
         varying an ignored field per poll cannot churn the shared FIFO
         (review finding)."""
-        from mycenae_spark.streaming import commitlog
-        from mycenae_spark.streaming import snapshot as snap
-
-        head = None
-        if snap.latest_checkpoint(self.lake_dir) is not None:
-            head = commitlog.latest_seq(self.lake_dir)
+        head = self._checkpointed_head()
         if head is None:
             return compute()
         key = (kind, self._canonical_analytics(kind, body), head)
@@ -1113,12 +1210,13 @@ class Engine:
             hit = self._result_cache.get(key)
         if hit is not None:
             return copy.deepcopy(hit)  # served copies must not poison it
-        self._degraded_reads.flag = False
-        self._read_pin.as_of = head
-        try:
-            out = compute()
-        finally:
-            self._read_pin.as_of = None
+        with self._pinned(head):
+            try:
+                out = compute()
+            except Exception:
+                if not self._evict_reused_frames(head):
+                    raise
+                out = compute()
         if not getattr(self._degraded_reads, "flag", False):
             with self._result_cache_lock:
                 self._result_cache[key] = copy.deepcopy(out)

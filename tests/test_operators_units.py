@@ -592,3 +592,18 @@ def test_pair_dot_arrow_rejects_ragged_and_null(spark):
     )
     with pytest.raises(Exception, match="null embedding"):
         pair_dot_arrow(withnull, "_ea", "_eb", ["i"], "d").collect()
+
+
+def test_pair_dot_arrow_rejects_empty_arrays(spark):
+    """A non-empty batch of zero-length embeddings is a degenerate
+    projection upstream: it raises like the ragged/null cases instead of
+    folding to 0.0 dots."""
+    import pytest
+
+    from mycenae_spark.functions.similarity import pair_dot_arrow
+
+    empty = spark.createDataFrame(
+        [(1, [], [])], "i long, _ea array<double>, _eb array<double>"
+    )
+    with pytest.raises(Exception, match="empty embedding"):
+        pair_dot_arrow(empty, "_ea", "_eb", ["i"], "d").collect()

@@ -820,6 +820,164 @@ def test_result_cache_pins_reads_to_key_generation(spark, tmp_path_factory,
     assert sum(fresh[0]["dps"].values()) == pytest.approx(103.0)
 
 
+def _count_calls(monkeypatch, module, name):
+    """Wrap ``module.name`` with a call counter; returns the count list."""
+    calls = []
+    real = getattr(module, name)
+
+    def counted(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+def test_frame_memo_reused_across_requests_at_one_generation(
+    spark, tmp_path_factory, monkeypatch
+):
+    """Serving frames depend only on the commit-log head between two
+    commits: two DIFFERENT cache-missing queries at one generation build
+    the points snapshot frame and the fine rollup series frame once in
+    total, and the expression and gaps reads at that generation reuse
+    them too.  Every answer stays exact."""
+    import mycenae_spark.streaming.rollup as rollup
+    import mycenae_spark.streaming.snapshot as snap
+    from mycenae_spark.server import Engine
+
+    d = tmp_path_factory.mktemp("framememo")
+    eng = Engine(spark, str(d / "lake"), str(d / "catalog"),
+                 rollup_dir=str(d / "rollup"))
+    eng.put([{"metric": "fm.m", "tags": {"ksid": "k1", "host": f"h{i % 2}"},
+              "timestamp": BASE_TS + i * 60_000, "value": float(i)}
+             for i in range(10)])
+    eng.checkpoint()
+    points = _count_calls(monkeypatch, snap, "read_points_snapshot")
+    series = _count_calls(monkeypatch, rollup, "read_rollup_series")
+
+    def query(**sub):
+        return eng.query({
+            "start": BASE_TS, "end": BASE_TS + 600_000,
+            "queries": [dict(metric="fm.m", **sub)],
+        })
+
+    out1 = query(aggregator="sum", downsample="5m-avg")
+    assert list(out1[0]["dps"].values()) == [pytest.approx(4.0),
+                                             pytest.approx(14.0)]
+    out2 = query(aggregator="max")
+    assert sum(out2[0]["dps"].values()) == pytest.approx(45.0)
+    assert eng.last_routes() == ["fine"]  # a miss, not a cache hit
+    assert (len(points), len(series)) == (1, 1)
+
+    exp = eng.query_expression(
+        f"merge(sum,query(fm.m,{{host=*}},{BASE_TS}))"
+    )
+    assert sum(exp[0]["dps"].values()) == pytest.approx(45.0)
+    gaps = eng.query_gaps({"metric": "fm.m"})
+    assert sorted(r["n_points"] for r in gaps) == [5, 5]
+    assert (len(points), len(series)) == (1, 1)
+    assert {k[0] for k in eng._frames} == {"points", "catalog", "rollup"}
+
+
+def test_frame_memo_rebuilds_on_generation_advance(spark, tmp_path_factory):
+    """A put advances the log head: the next query misses the frame memo,
+    rebuilds, sees the new point, and the memo keeps only the newest
+    generation's frames."""
+    import mycenae_spark.streaming.commitlog as cl
+    from mycenae_spark.server import Engine
+
+    d = tmp_path_factory.mktemp("framegen")
+    lake = str(d / "lake")
+    eng = Engine(spark, lake, str(d / "catalog"))
+    eng.put([{"metric": "fg.m", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + i * 60_000, "value": float(i)}
+             for i in range(3)])
+    eng.checkpoint()
+    body = {
+        "start": BASE_TS, "end": BASE_TS + 600_000,
+        "queries": [{"metric": "fg.m", "aggregator": "sum"}],
+    }
+    eng.query(body)
+    head_s = cl.latest_seq(lake)
+    assert {k[1] for k in eng._frames} == {head_s}
+
+    eng.put([{"metric": "fg.m", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + 1, "value": 100.0}])
+    out = eng.query(body)
+    assert sum(out[0]["dps"].values()) == pytest.approx(103.0)
+    head_s2 = cl.latest_seq(lake)
+    assert head_s2 > head_s
+    assert {k[1] for k in eng._frames} == {head_s2}
+
+
+def test_degraded_frame_build_never_memoizes(spark, tmp_path_factory,
+                                             monkeypatch):
+    """A request whose reads degraded to a directory fallback (catalog
+    snapshot raising NoBaseline, as in the result-cache test above)
+    stores no serving frame: the fallback is not a pure function of the
+    generation."""
+    import mycenae_spark.streaming.snapshot as snap
+    from mycenae_spark.server import Engine
+
+    d = tmp_path_factory.mktemp("framedegrade")
+    eng = Engine(spark, str(d / "lake"), str(d / "catalog"))
+    eng.put([{"metric": "fd.m", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + i * 60_000, "value": float(i)}
+             for i in range(3)])
+    eng.checkpoint()
+
+    def no_baseline(*a, **k):
+        raise snap.NoBaseline("checkpoint lacks a catalog section")
+    monkeypatch.setattr(snap, "read_catalog_snapshot", no_baseline)
+
+    out = eng.query({
+        "start": BASE_TS, "end": BASE_TS + 600_000,
+        "queries": [{"metric": "fd.m", "aggregator": "sum"}],
+    })
+    assert sum(out[0]["dps"].values()) == pytest.approx(3.0)
+    assert not eng._frames
+
+
+def test_frame_memo_survives_files_moved_by_compaction(
+    spark, tmp_path_factory, monkeypatch
+):
+    """Compaction moves the superseded point files into _retained/<seq>.
+    A request still pinned at the old head S (latest_seq frozen at S)
+    hits the memoized frame, whose file list is gone: the read fails,
+    the generation is evicted, and the rebuilt snapshot read (which finds
+    the files under _retained) answers correctly."""
+    import os
+
+    import mycenae_spark.streaming.commitlog as cl
+    from mycenae_spark.maintenance import compact_partition
+    from mycenae_spark.server import Engine
+
+    d = tmp_path_factory.mktemp("framemoved")
+    lake = str(d / "lake")
+    eng = Engine(spark, lake, str(d / "catalog"))
+    for i in range(3):
+        eng.put([{"metric": "mv.m", "tags": {"ksid": "k1", "host": "h0"},
+                  "timestamp": BASE_TS + i * 60_000, "value": float(i)}])
+    eng.checkpoint()
+    head_s = cl.latest_seq(lake)
+    body = {
+        "start": BASE_TS, "end": BASE_TS + 600_000,
+        "queries": [{"metric": "mv.m", "aggregator": "sum"}],
+    }
+    assert sum(eng.query(body)[0]["dps"].values()) == pytest.approx(3.0)
+    memoized = dict(eng._frames)
+    assert memoized
+
+    compact_partition(spark, lake, "k1", "2024-01-01")
+    assert os.path.isdir(os.path.join(lake, "_retained"))
+    monkeypatch.setattr(cl, "latest_seq", lambda p: head_s)
+    eng._result_cache.clear()
+    out = eng.query(body)
+    assert sum(out[0]["dps"].values()) == pytest.approx(3.0)
+    points_key = next(k for k in memoized if k[0] == "points")
+    assert eng._frames[points_key] is not memoized[points_key]  # rebuilt
+
+
 def test_tag_key_discovery_reads_catalog_not_lake(spark, tmp_path_factory):
     """_points()/suggest tag-key discovery must come from the #series-bounded
     catalog, never a full scan of the point lake's tags column (a per-request

@@ -48,14 +48,17 @@ def main() -> int:
     results: dict[str, dict[str, list[float]]] = {
         q: {"on": [], "off": []} for q in queries
     }
-    for c in range(cycles):
-        arms = ["on", "off"] if c % 2 == 0 else ["off", "on"]
-        for arm in arms:
-            setattr(mod, attr, arm == "on")
-            for q in queries:
-                sc.setJobDescription(f"ab_flag c{c} {arm} {q}")
-                results[q][arm].append(run(q))
-    setattr(mod, attr, True)
+    orig = getattr(mod, attr)
+    try:
+        for c in range(cycles):
+            arms = ["on", "off"] if c % 2 == 0 else ["off", "on"]
+            for arm in arms:
+                setattr(mod, attr, arm == "on")
+                for q in queries:
+                    sc.setJobDescription(f"ab_flag c{c} {arm} {q}")
+                    results[q][arm].append(run(q))
+    finally:
+        setattr(mod, attr, orig)
 
     print(f"\n=== A/B {mod_name}:{attr} cycles={cycles} sf={sf_dir} ===")
     print(f"{'query':34s} {'on_min':>7s} {'off_min':>7s} {'on_med':>7s} "
