@@ -3,8 +3,8 @@
 A thin stdlib HTTP server over the engine — the endpoints a mycenae client
 already speaks, backed by the Parquet lake + planner:
 
-* ``POST /api/put``                     — numeric points (JSON array or object)
-* ``POST /api/text/put``                — text points
+* ``POST /api/put`` / ``POST /api/text/put`` — points (JSON array or
+  object); one route: each point carries exactly one of value/text
 * ``POST /keysets/{ks}/api/query``      — OpenTSDB query JSON
 * ``GET  /keysets/{ks}/api/query/expression?exp=...`` — expression query
 * ``POST /keysets/{ks}/api/query/funnel``    — ordered multi-step funnel
@@ -24,6 +24,8 @@ already speaks, backed by the Parquet lake + planner:
   over a posted asset batch, image (dhash/ahash) or audio (afp)
   (body: items[{id, payload b64}]/family/max_hamming/limit/after_key →
   duplicate groups + keep verdicts)
+* ``POST /keysets/{ks}/api/query/similar`` — top-k cosine neighbours of
+  posted vectors over the committed IVFPQ index (requires ``sim_dir``)
 * ``GET /keysets/{ks}/api/query/ladder_status`` — per-rung routing
   gates (coverage / currency / pin) for the rollup + qsample ladders
 * ``GET /keysets/{ks}/api/query/dedup_valve`` — per-band valve-excision
@@ -52,8 +54,13 @@ Python, but all data work is a Spark plan over the lake.  Ingest here is the
 synchronous batch path (per-request append + catalog merge) matching the
 HTTP semantics; high-volume ingest uses streaming/ingest.py.
 
-Not a production webserver (single-threaded stdlib handler) — it exists to
-make API parity concrete and end-to-end testable.
+Not a production webserver — it exists to make API parity concrete and
+end-to-end testable.  ``serve()`` runs a ``ThreadingHTTPServer``: handlers
+run concurrently over one shared Engine, which is why the Engine keeps its
+caches under a lock and its per-request state in thread-locals.  Routing is
+one table (``_ROUTES``) of (method, path pattern, handler) rows; a path no
+row matches under the request's method answers 404, and an exception from
+a handler answers 400.
 """
 
 from __future__ import annotations
@@ -168,7 +175,7 @@ class Engine:
         #: to a directory read (NoBaseline) or raised; holds the newest
         #: generation only.  A read that raises on reused frames evicts
         #: the generation, rebuilds and retries once
-        #: (_evict_reused_frames).  Guarded by the result-cache lock.
+        #: (_retry_on_fresh_frames).  Guarded by the result-cache lock.
         self._frames: dict = {}
         #: Ladder rungs are memoized apart from _frames: rung_dir →
         #: (marker as_of_seq, read_rollup_series frame).  A rung is
@@ -221,7 +228,9 @@ class Engine:
         #: head) — otherwise a write landing mid-query leaks S+1 data
         #: into an answer cached under S, breaking the pure-function-of-
         #: (request, generation) invariant.  ``reused`` records whether
-        #: this request was served memoized frames (see _frames).
+        #: this request was served memoized frames (see _frames);
+        #: ``frames`` holds a query's (points, rollup) serving frames,
+        #: built once and shared by all of its subqueries.
         self._read_pin = threading.local()
         #: Per-request-thread routing trace: one entry per served
         #: subquery — "qsample:<iv>", "ladder:<iv>", or "fine" — so
@@ -236,7 +245,7 @@ class Engine:
 
     # -- ingest -----------------------------------------------------------
 
-    def put(self, body, text_mode: bool = False) -> dict:
+    def put(self, body) -> dict:
         points = body if isinstance(body, list) else [body]
         raw = self.spark.createDataFrame(
             [(json.dumps(p),) for p in points], ["value"]
@@ -383,8 +392,6 @@ class Engine:
           operator must re-baseline deliberately, silent degradation would
           hide a real consistency loss.
         """
-        import time as _time
-
         from mycenae_spark.streaming import snapshot as snap
 
         for _ in range(20):
@@ -397,7 +404,7 @@ class Engine:
                 self._degraded_reads.flag = True
                 return self.spark.read.parquet(dir_path)
             except snap.TransientInFlight:
-                _time.sleep(0.05)
+                time.sleep(0.05)
         return read_snapshot()  # still in-flight after ~1s: surface it
 
     def _pinned_as_of(self):
@@ -418,14 +425,16 @@ class Engine:
     def _pinned(self, head: int | None):
         """Pin this thread's snapshot reads (and frame memo) to ``head``
         for the duration of one request, with a fresh degraded-reads
-        flag."""
+        flag and no request frames yet."""
         self._read_pin.as_of = head
         self._read_pin.reused = False
+        self._read_pin.frames = None
         self._degraded_reads.flag = False
         try:
             yield
         finally:
             self._read_pin.as_of = None
+            self._read_pin.frames = None
 
     def _generation_frame(self, name: str, inputs: tuple, build) -> DataFrame:
         """``build()``, memoized per pinned generation (see ``_frames``).
@@ -451,24 +460,32 @@ class Engine:
                     self._frames[key] = frame
         return frame
 
-    def _evict_reused_frames(self, head: int | None) -> bool:
-        """Called when a read raised: if this request was served memoized
-        frames, drop generation ``head``'s entries and return True so the
-        caller rebuilds and retries ONCE (compaction or TTL may have moved
-        a file the memoized frame lists into ``_retained/<seq>``; a fresh
-        snapshot read finds it there).  False = nothing reused, re-raise."""
-        if not getattr(self._read_pin, "reused", False):
-            return False
-        self._read_pin.reused = False
-        logger.warning(
-            "read on memoized frames at generation %s failed; "
-            "rebuilding them and retrying once", head, exc_info=True,
-        )
-        with self._result_cache_lock:
-            self._frames = {
-                k: f for k, f in self._frames.items() if k[1] != head
-            }
-        return True
+    def _retry_on_fresh_frames(self, head: int | None, compute):
+        """``compute()`` for one pinned request, retried at most once.
+
+        A failure re-raises unless this request was served memoized
+        frames: compaction or TTL may have moved a file such a frame
+        lists into ``_retained/<seq>``.  Then generation ``head``'s memo
+        entries and the request's own frames are dropped, and
+        ``compute()`` runs again on frames rebuilt from a fresh snapshot
+        read, which finds the file there.  When nothing fails the frames
+        are built once, as ``compute`` asks for them."""
+        try:
+            return compute()
+        except Exception:
+            if not getattr(self._read_pin, "reused", False):
+                raise
+            self._read_pin.reused = False
+            self._read_pin.frames = None
+            logger.warning(
+                "read on memoized frames at generation %s failed; "
+                "rebuilding them and retrying once", head, exc_info=True,
+            )
+            with self._result_cache_lock:
+                self._frames = {
+                    k: f for k, f in self._frames.items() if k[1] != head
+                }
+            return compute()
 
     def _read_lake(self) -> DataFrame:
         """Log-gated snapshot read when a checkpoint exists; directory read
@@ -609,72 +626,75 @@ class Engine:
         Y's cached answers servable.  The r8 purity gates carry over
         per subquery: only time-pinned requests, only LOG-GATED reads
         (``head`` is None otherwise), and never rows whose reads degraded
-        to a directory fallback."""
+        to a directory fallback.
+
+        The degraded-reads flag is reset once, by ``_pinned``, before any
+        read can set it: the snapshot fallbacks fire while the shared
+        frames resolve, so once any read of the request degrades, none
+        of its subqueries may cache (review finding r9)."""
         out = []
-        pts = rollup = None
-        frames_built = False
-        # The degraded-reads flag was reset ONCE by _pinned, before any
-        # read can set it: the snapshot fallbacks fire during FRAME
-        # RESOLUTION (_build_frames → _points/_read_catalog/rollup read),
-        # so a reset after the build would launder a NoBaseline directory
-        # fallback into every subquery's cache entry (review finding r9 —
-        # the exact torn-answer-pinned-for-a-generation class the flag
-        # guards).  Frames are shared across subqueries, so once any
-        # read degrades, NOTHING from this request may cache.
         for q in parse_query_request(body, now_ms):
             key = None
             if head is not None:
                 gen = self._metric_generation(q.metric, head)
                 if gen is not None:
                     key = (self._canonical_subquery(q), gen)
-            if key is not None:
-                with self._result_cache_lock:
-                    hit = self._result_cache.get(key)
-                if hit is not None:
-                    # deep copy: served responses must not be able to
-                    # poison the cached entry (r8 ADVICE)
-                    out.extend(copy.deepcopy(hit))
-                    self._note_route("cache")
-                    continue
-            # MaxTimeseries reject BEFORE any lake work (L2): cache
-            # misses only — a hit was computed under the cap already.
-            self._guard_series_cap(metric=q.metric, filters=q.filters)
-            if not frames_built:
-                pts, rollup = self._build_frames(head)
-                frames_built = True
-            try:
-                rows = self._run_subquery(pts, rollup, q)
-            except Exception:
-                if not self._evict_reused_frames(head):
-                    raise
-                pts, rollup = self._build_frames(head)
-                rows = self._run_subquery(pts, rollup, q)
-            if key is not None and not getattr(
-                self._degraded_reads, "flag", False
-            ):
-                with self._result_cache_lock:
-                    self._result_cache[key] = copy.deepcopy(rows)
-                    while len(self._result_cache) > 256:  # bounded FIFO
-                        self._result_cache.pop(
-                            next(iter(self._result_cache))
-                        )
+            rows = self._cache_get(key)
+            if rows is not None:
+                self._note_route("cache")
+            else:
+                # MaxTimeseries reject BEFORE any lake work (L2): cache
+                # misses only — a hit was computed under the cap already.
+                self._guard_series_cap(metric=q.metric, filters=q.filters)
+                rows = self._retry_on_fresh_frames(
+                    head,
+                    lambda: self._run_subquery(
+                        *self._build_frames(head), q
+                    ),
+                )
+                self._cache_put(key, rows)
             out.extend(rows)
         return out
 
+    def _cache_get(self, key):
+        """The result cache's answer for ``key``, or None on a miss (and
+        for key None, an uncacheable request).  A deep copy, so a served
+        response can never poison the entry (r8 ADVICE)."""
+        if key is None:
+            return None
+        with self._result_cache_lock:
+            hit = self._result_cache.get(key)
+        return None if hit is None else copy.deepcopy(hit)
+
+    def _cache_put(self, key, value) -> None:
+        """Store a deep copy of ``value`` under ``key``.  Nothing is
+        stored for key None or once any read of this request degraded to
+        a directory fallback (such an answer is not a pure function of
+        the generation).  Bounded FIFO: past 256 entries the oldest goes."""
+        if key is None or getattr(self._degraded_reads, "flag", False):
+            return
+        with self._result_cache_lock:
+            self._result_cache[key] = copy.deepcopy(value)
+            while len(self._result_cache) > 256:
+                self._result_cache.pop(next(iter(self._result_cache)))
+
     def _build_frames(self, head: "int | None" = None):
-        """Lazy points/rollup serving frames — skipped entirely when every
-        subquery in the request hits the cache.  Both frames come from the
-        per-generation memo (``_frames``) when the request is pinned; the
-        coverage and foreign-tail gates below still run per request (cheap
-        marker and log reads), so a memoized rollup frame is only routed
-        onto while it provably covers the lake.  ``head`` (the request's
-        already-read log head, when log-gated) saves the foreign-tail
-        gate a redundant commit-log listing."""
+        """The request's (points, rollup) serving frames, built on its
+        first cache miss and then shared by every subquery (kept on
+        ``_read_pin`` until the request ends or a retry drops them).
+        Both frames come from the per-generation memo (``_frames``) when
+        the request is pinned; the coverage and foreign-tail gates below
+        still run per request (cheap marker and log reads), so a
+        memoized rollup frame is only routed onto while it provably
+        covers the lake.  ``head`` (the request's already-read log head,
+        when log-gated) saves the foreign-tail gate a redundant
+        commit-log listing."""
+        frames = getattr(self._read_pin, "frames", None)
+        if frames is not None:
+            return frames
         pts = self._points()
         rollup = None
         if self.rollup_dir is not None:
-            import os
-
             from mycenae_spark.streaming.rollup import (
                 read_rollup_series,
                 rollup_coverage_complete,
@@ -715,6 +735,7 @@ class Engine:
                         clamp_to_retention=True,
                     ),
                 )
+        self._read_pin.frames = (pts, rollup)
         return pts, rollup
 
     def _run_subquery(self, pts, rollup, q) -> list:
@@ -744,103 +765,67 @@ class Engine:
                     q.downsample,
                     exc_info=True,
                 )
-        try:
-            r, r_iv = self._pick_rung(q, rollup)
-        except Exception:
-            # _pick_rung handles the known swap-race class itself
-            # (per-rung, logged, falls through to the next fit);
-            # anything reaching here is an UNEXPECTED routing failure.
-            # The fine path is still always correct, so degrade — but
-            # log loudly and leave the memoized frames alone so a
-            # genuine routing bug surfaces in logs instead of being
-            # masked by a silent cache wipe (r8 ADVICE).
-            logger.warning(
-                "ladder routing failed for downsample=%s; "
-                "serving the fine path",
-                getattr(q, "downsample", None),
-                exc_info=True,
-            )
-            r, r_iv = rollup, 60_000
-        if r is rollup and r is not None:
-            self._guard_fine_retention(q)
-        try:
-            rows = shape_response(
-                plan(pts, q, rollup=r, rollup_interval_ms=r_iv),
-                q,
-                nan_fill=nan_fill,
-            )
-            self._note_route("fine" if r is rollup else f"ladder:{r_iv}")
-            return rows
-        except Exception:
-            if r is rollup:
-                raise
-            # Ladder-routed read raced refresh_ladder's atomic swap:
-            # _pick_rung's currency check passed just before the
-            # rename, then the old rung's files vanished mid-read.
-            # Drop the stale memoized frame and re-pick ONCE — the
-            # freshly swapped generation is current and answers the
-            # same query (r18 review: with fine-sketch retention a
-            # straight fine retry would 400 a rung-grain query over a
-            # pre-horizon span that the new rung serves fine).  Only if
-            # no rung comes back does the retry serve from fine, behind
-            # the retention guard (a genuine query error re-raises).
-            self._rung_frames = {
-                d: c for d, c in self._rung_frames.items() if c[1] is not r
-            }
+        # At most two rung attempts, then the one fine path.  A rung read
+        # that fails has most likely raced refresh_ladder's atomic swap
+        # (the currency check passed just before the rename, then the
+        # old rung's files vanished mid-read): drop that rung's memoized
+        # frame and re-pick once — the freshly swapped generation is
+        # current and answers the same query, where a straight fine
+        # retry would 400 a rung-grain query over a pre-horizon span
+        # (r18 review).  After two raced reads the request degrades to
+        # the guarded fine path: a typed retryable 400 there beats an
+        # unbounded re-pick loop (r18 review pass 3).  _pick_rung
+        # handles the known per-rung races itself; an exception out of
+        # it is an UNEXPECTED routing failure, logged loudly with the
+        # memoized frames left alone, so a genuine routing bug surfaces
+        # instead of being masked by a silent cache wipe (r8 ADVICE).
+        for attempt in range(2):
             try:
-                r2, r2_iv = self._pick_rung(q, rollup)
+                r, r_iv = self._pick_rung(q, rollup)
             except Exception:
-                # same loud-degrade contract as the first attempt (r8
-                # ADVICE): an unexpected routing failure must surface
-                # in logs, not vanish into a silent fine-path serve
                 logger.warning(
-                    "ladder re-pick failed on the swap-race retry for "
-                    "downsample=%s; serving the fine path",
+                    ("ladder routing failed for downsample=%s; "
+                     "serving the fine path",
+                     "ladder re-pick failed on the swap-race retry for "
+                     "downsample=%s; serving the fine path")[attempt],
                     getattr(q, "downsample", None),
                     exc_info=True,
                 )
-                r2, r2_iv = rollup, 60_000
-            if r2 is not rollup:
-                try:
-                    rows = shape_response(
-                        plan(pts, q, rollup=r2, rollup_interval_ms=r2_iv),
-                        q,
-                        nan_fill=nan_fill,
-                    )
-                    self._note_route(f"ladder:{r2_iv}")
-                    return rows
-                except Exception:
-                    # a SECOND swap raced the re-picked generation
-                    # (fast refresh cadence) — degrade to the guarded
-                    # fine path rather than surface the read error.
-                    # Honest bound (r18 review pass 3): the guard may
-                    # still refuse a pre-horizon rung-grain query here
-                    # (fine cannot serve it) — after TWO consecutive
-                    # swaps raced one request, a typed retryable 400
-                    # beats an unbounded re-pick loop.
+                break
+            if r is rollup:
+                break
+            try:
+                rows = shape_response(
+                    plan(pts, q, rollup=r, rollup_interval_ms=r_iv),
+                    q,
+                    nan_fill=nan_fill,
+                )
+                self._note_route(f"ladder:{r_iv}")
+                return rows
+            except Exception:
+                if attempt:
                     logger.warning(
                         "re-picked rung read failed for downsample=%s; "
                         "degrading to the guarded fine path",
                         getattr(q, "downsample", None),
                         exc_info=True,
                     )
-                    self._rung_frames = {
-                        d: c for d, c in self._rung_frames.items()
-                        if c[1] is not r2
-                    }
-            if rollup is not None:
-                # the retry serves from fine — guard it exactly like the
-                # first attempt (r18 ADVICE: unconditional here would
-                # false-400 a raw-points serve when the fine frame is
-                # None but the dir carries a retained_from_ms)
-                self._guard_fine_retention(q)
-            rows = shape_response(
-                plan(pts, q, rollup=rollup, rollup_interval_ms=60_000),
-                q,
-                nan_fill=nan_fill,
-            )
-            self._note_route("fine")
-            return rows
+                self._rung_frames = {
+                    d: c for d, c in self._rung_frames.items()
+                    if c[1] is not r
+                }
+        # the fine path is always correct, but fine partials pruned below
+        # the retention horizon must refuse rather than under-read (r18
+        # ADVICE: no guard without a fine frame, where raw points serve)
+        if rollup is not None:
+            self._guard_fine_retention(q)
+        rows = shape_response(
+            plan(pts, q, rollup=rollup, rollup_interval_ms=60_000),
+            q,
+            nan_fill=nan_fill,
+        )
+        self._note_route("fine")
+        return rows
 
     def _guard_fine_retention(self, q) -> None:
         """Fine-sketch retention guard (r17 VERDICT "what's missing" #1):
@@ -936,89 +921,31 @@ class Engine:
 
     def _pick_rung(self, q, fine_rollup):
         """Coarsest serving frame for ``q``'s downsample: a ladder rung
-        (cascaded materialization) when one divides the query interval, is
-        marked covering, AND is current against the commit log — else the
-        ingest-maintained fine rung — else raw points.
+        (cascaded materialization) that passes ``_walk_rungs``' gates —
+        else the ingest-maintained fine rung — else raw points.
 
         Rung selection is per query: a `1d-avg` reads the 1d rung
         (#series × #days rows), while a `90s-avg` in the same request
         falls through to the fine rung or points.  Cascades are immutable
         once built (atomic rename), so a plain directory read is safe
-        here; staleness is the commit-log check, not file watching."""
+        here; staleness is the commit-log check, not file watching.  A
+        rung's frame is memoized in ``_rung_frames`` per marker pin."""
         if not self.ladder or fine_rollup is None or not q.downsample:
             return fine_rollup, 60_000
         from mycenae_spark.plans.tsdb import rollup_routable
-        from mycenae_spark.schema import parse_interval_ms
-        from mycenae_spark.streaming.rollup import (
-            cascade_is_current,
-            read_rollup_series,
-            rollup_coverage_complete,
-            SketchRetentionError,
-        )
+        from mycenae_spark.streaming.rollup import read_rollup_series
 
-        try:
-            interval_ms = parse_interval_ms(q.downsample.split("-")[0])
-        except (ValueError, IndexError):
-            return fine_rollup, 60_000
-        fits = sorted(
-            (iv for iv in self.ladder if interval_ms % iv == 0), reverse=True
-        )
-        from mycenae_spark.streaming.rollup import _read_marker_as_of
+        def frame(rung_dir, pin, _interval_ms):
+            cached = self._rung_frames.get(rung_dir)
+            if cached is None or cached[0] != pin:
+                cached = (pin, read_rollup_series(self.spark, rung_dir))
+                self._rung_frames[rung_dir] = cached
+            return cached[1]
 
-        for iv in fits:
-            rung_dir = self.ladder[iv]
-            if (
-                rollup_routable(q, iv)
-                and rollup_coverage_complete(rung_dir)
-                and cascade_is_current(self.lake_dir, rung_dir)
-            ):
-                pin = _read_marker_as_of(rung_dir) or -1
-                head = self._pinned_as_of()
-                if head is not None and pin > head:
-                    # Rung re-backfilled AFTER this request pinned its
-                    # head: its rows may reflect commits newer than the
-                    # pinned generation, and the answer would be cached
-                    # under the older key.  Fall through (next fit, then
-                    # the fine path, which reads log-gated AT the pin).
-                    continue
-                cached = self._rung_frames.get(rung_dir)
-                if cached is None or cached[0] != pin:
-                    try:
-                        cached = (
-                            pin, read_rollup_series(self.spark, rung_dir)
-                        )
-                    except SketchRetentionError as exc:
-                        # PERMANENT misconfiguration, not a race: a
-                        # pruned fine dir is in the ladder map as a
-                        # rung.  Fall through (the fine/raw path stays
-                        # correct) but name the real remedy instead of
-                        # spamming a misleading swap-race traceback per
-                        # request (r19 review).
-                        logger.warning(
-                            "ladder rung %s is a pruned fine lake — "
-                            "remove it from the ladder map or backfill "
-                            "it; serving a finer path (%s)",
-                            rung_dir, exc,
-                        )
-                        continue
-                    except Exception:
-                        # refresh_ladder's atomic swap can race the FRAME
-                        # BUILD (read_rollup_series lists + collects over
-                        # the rung dir, a wider window than the marker
-                        # checks).  Drop only THIS rung's memoized frame,
-                        # log, and fall through to the next (coarser →
-                        # finer) fit — the fine path is always correct.
-                        logger.warning(
-                            "rung frame build raced a swap for %s; "
-                            "falling through",
-                            rung_dir,
-                            exc_info=True,
-                        )
-                        self._rung_frames.pop(rung_dir, None)
-                        continue
-                    self._rung_frames[rung_dir] = cached
-                return cached[1], iv
-        return fine_rollup, 60_000
+        picked = self._walk_rungs(
+            q, self.ladder, "ladder", rollup_routable, frame
+        )
+        return picked or (fine_rollup, 60_000)
 
     #: pNN name → quantile fraction, the downsample family QSAMPLE_AGGS
     #: routes (mirrors operators/downsample.py's exact pNN set).
@@ -1027,81 +954,102 @@ class Engine:
     def _pick_qsample(self, q):
         """Quantile-sample-ladder route for a percentile downsample:
         returns (points-shaped frame, rewritten query, rung interval) or
-        None when no rung fits.  Gates mirror ``_pick_rung`` exactly —
-        routability (alignment + stage order, ``qsample_routable``),
-        coverage marker, commit-log currency — plus the pNN-specific
-        rewrite: the rung frame already holds ONE percentile value per
-        (series, bucket), so the downsample stage is rewritten to
-        ``<iv>-avg`` (any agg is identity over a single row) and the
-        rest of the query — tag filters, cross-series aggregation,
-        post-downsample rate/fill — lowers through the ordinary planner
-        unchanged."""
+        None when no rung fits.  The gates are ``_pick_rung``'s
+        (``_walk_rungs``, with ``qsample_routable``: alignment + stage
+        order), plus the pNN-specific rewrite: the rung frame already
+        holds ONE percentile value per (series, bucket), so the
+        downsample stage is rewritten to ``<iv>-avg`` (any agg is
+        identity over a single row) and the rest of the query — tag
+        filters, cross-series aggregation, post-downsample rate/fill —
+        lowers through the ordinary planner unchanged.  The frame is
+        built fresh per request."""
         if not self.qsample_ladder or not q.downsample:
             return None
         from mycenae_spark.plans.tsdb import qsample_routable
-        from mycenae_spark.schema import parse_interval_ms
-        from mycenae_spark.streaming.rollup import (
-            cascade_is_current,
-            rollup_coverage_complete,
-            SketchRetentionError,
-        )
 
         parts = q.downsample.split("-")
         pct = self._PCTS.get(parts[1]) if len(parts) > 1 else None
         if pct is None:
             return None
+        picked = self._walk_rungs(
+            q, self.qsample_ladder, "qsample", qsample_routable,
+            lambda rung_dir, _pin, interval_ms: self._qsample_points(
+                rung_dir, pct, interval_ms
+            ),
+        )
+        if picked is None:
+            return None
+        import dataclasses
+
+        q2 = dataclasses.replace(
+            q, downsample="-".join([parts[0], "avg", *parts[2:]])
+        )
+        return picked[0], q2, picked[1]
+
+    def _walk_rungs(self, q, ladder: dict, kind: str, routable, build):
+        """The ladder gate walk, one for both ladders: ``(frame, iv)``
+        for the coarsest rung of ``ladder`` that can serve ``q``, else
+        None.  A rung serves when all of these hold, in order:
+
+        * its interval divides the downsample interval;
+        * ``routable(q, iv)`` (the ladder's alignment/stage rules);
+        * its coverage marker says complete;
+        * it is current against the commit log (``cascade_is_current``);
+        * its marker pin is not newer than this request's pinned head —
+          a rung re-backfilled after the pin may hold rows newer than
+          the generation the answer is cached under (r10 ADVICE);
+        * ``build(rung_dir, pin, interval_ms)`` returns its frame.
+
+        A failing rung falls through to the next finer fit; the fine path
+        is always correct.  A ``SketchRetentionError`` build is a
+        permanent misconfiguration (a pruned fine dir in the ladder map),
+        logged with its remedy rather than as a race (r19 review).  Any
+        other build failure is refresh_ladder's atomic swap racing the
+        frame build (a wider window than the marker checks): logged, and
+        that rung's memoized frame dropped."""
+        from mycenae_spark.schema import parse_interval_ms
+        from mycenae_spark.streaming.rollup import (
+            SketchRetentionError,
+            _read_marker_as_of,
+            cascade_is_current,
+            rollup_coverage_complete,
+        )
+
         try:
-            interval_ms = parse_interval_ms(parts[0])
+            interval_ms = parse_interval_ms(q.downsample.split("-")[0])
         except (ValueError, IndexError):
             return None
         fits = sorted(
-            (iv for iv in self.qsample_ladder if interval_ms % iv == 0),
-            reverse=True,
+            (iv for iv in ladder if interval_ms % iv == 0), reverse=True
         )
         for iv in fits:
-            rung_dir = self.qsample_ladder[iv]
-            if (
-                qsample_routable(q, iv)
+            rung_dir = ladder[iv]
+            if not (
+                routable(q, iv)
                 and rollup_coverage_complete(rung_dir)
                 and cascade_is_current(self.lake_dir, rung_dir)
             ):
-                from mycenae_spark.streaming.rollup import _read_marker_as_of
-
-                pin = _read_marker_as_of(rung_dir) or -1
-                head = self._pinned_as_of()
-                if head is not None and pin > head:
-                    # Same gate as _pick_rung (r10 ADVICE): a rung
-                    # re-backfilled between head-pinning and serving can
-                    # hold rows newer than the pinned generation — the
-                    # fine path at the pin is always correct.
-                    continue
-                try:
-                    qpts = self._qsample_points(rung_dir, pct, interval_ms)
-                except SketchRetentionError as exc:
-                    # permanent misconfiguration (pruned fine dir in the
-                    # qsample ladder), not a race — same contract as the
-                    # algebraic rung handler above (r19 review)
-                    logger.warning(
-                        "qsample rung %s is a pruned fine lake — remove "
-                        "it from the ladder map or backfill it; serving "
-                        "a finer path (%s)",
-                        rung_dir, exc,
-                    )
-                    continue
-                except Exception:
-                    logger.warning(
-                        "qsample frame build raced a swap for %s; "
-                        "falling through",
-                        rung_dir,
-                        exc_info=True,
-                    )
-                    continue
-                import dataclasses
-
-                q2 = dataclasses.replace(
-                    q, downsample="-".join([parts[0], "avg", *parts[2:]])
+                continue
+            pin = _read_marker_as_of(rung_dir) or -1
+            head = self._pinned_as_of()
+            if head is not None and pin > head:
+                continue
+            try:
+                return build(rung_dir, pin, interval_ms), iv
+            except SketchRetentionError as exc:
+                logger.warning(
+                    "%s rung %s is a pruned fine lake — remove it from "
+                    "the ladder map or backfill it; serving a finer "
+                    "path (%s)",
+                    kind, rung_dir, exc,
                 )
-                return qpts, q2, iv
+            except Exception:
+                logger.warning(
+                    "%s frame build raced a swap for %s; falling through",
+                    "rung" if kind == "ladder" else kind, rung_dir,
+                    exc_info=True,
+                )
+                self._rung_frames.pop(rung_dir, None)
         return None
 
     def _qsample_points(self, rung_dir: str, pct: float, interval_ms: int):
@@ -1144,12 +1092,9 @@ class Engine:
         # and the pin lets expression reads share the frame memo.
         head = self._checkpointed_head()
         with self._pinned(head):
-            try:
-                return shape_response(plan(self._points(), q), q)
-            except Exception:
-                if not self._evict_reused_frames(head):
-                    raise
-                return shape_response(plan(self._points(), q), q)
+            return self._retry_on_fresh_frames(
+                head, lambda: shape_response(plan(self._points(), q), q)
+            )
 
     #: Recognized body fields + defaults per analytics verb — the cache
     #: key's schema.  A field absent here is IGNORED by the verb's
@@ -1206,22 +1151,11 @@ class Engine:
         if head is None:
             return compute()
         key = (kind, self._canonical_analytics(kind, body), head)
-        with self._result_cache_lock:
-            hit = self._result_cache.get(key)
-        if hit is not None:
-            return copy.deepcopy(hit)  # served copies must not poison it
-        with self._pinned(head):
-            try:
-                out = compute()
-            except Exception:
-                if not self._evict_reused_frames(head):
-                    raise
-                out = compute()
-        if not getattr(self._degraded_reads, "flag", False):
-            with self._result_cache_lock:
-                self._result_cache[key] = copy.deepcopy(out)
-                while len(self._result_cache) > 256:  # bounded FIFO
-                    self._result_cache.pop(next(iter(self._result_cache)))
+        out = self._cache_get(key)
+        if out is None:
+            with self._pinned(head):
+                out = self._retry_on_fresh_frames(head, compute)
+            self._cache_put(key, out)
         return out
 
     def _guard_series_cap(
@@ -1568,42 +1502,50 @@ class Engine:
         return agg
 
     def _gaps_compute(self, body: dict) -> list:
+        from mycenae_spark.operators.gaps import series_gap_stats
         from mycenae_spark.schema import parse_interval_ms
 
-        from mycenae_spark.operators.gaps import series_gap_stats
-
         thr_us = parse_interval_ms(str(body.get("threshold", "6h"))) * 1000
-        limit = self._page_limit(body)
-        if limit is None:
-            # Unbounded collect (one row per series): subject to the
-            # MaxTimeseries reject.  A bounded page is ≤ limit rows by
-            # construction, so pagination is the sanctioned way to walk
-            # an over-cap catalog (VERDICT r11 item 1).
-            self._guard_series_cap(
-                metric=str(body["metric"]) if body.get("metric") else None
-            )
-        p = self._points()
-        if body.get("metric"):
-            p = p.filter(F.col("metric") == str(body["metric"]))
-        if isinstance(body.get("start"), int):
-            p = p.filter(F.col("ts_us") >= body["start"] * 1000)
-        if isinstance(body.get("end"), int):
-            p = p.filter(F.col("ts_us") < body["end"] * 1000)
-        keys = ["metric"] + [f"tag_{k}" for k in self._tag_keys()]
-        agg = self._series_page(
-            series_gap_stats(p, keys, thr_us), keys, body, limit
+
+        def aggregate(p, keys):
+            if isinstance(body.get("start"), int):
+                p = p.filter(F.col("ts_us") >= body["start"] * 1000)
+            if isinstance(body.get("end"), int):
+                p = p.filter(F.col("ts_us") < body["end"] * 1000)
+            return series_gap_stats(p, keys, thr_us)
+
+        return self._series_rows(
+            body, aggregate,
+            lambda r: {k: r[k] for k in (
+                "n_points", "max_gap_us", "n_large_gaps", "mean_gap_us")},
         )
+
+    def _series_rows(self, body: dict, aggregate, shape) -> list:
+        """The per-series verbs' (gaps, last) one path: the points frame,
+        sliced to the body's ``metric``, reduced to one row per series
+        identity (metric + every tag column) by ``aggregate(p, keys)``
+        (which applies the verb's own time slice), paged keyset-style
+        (``_series_page``), each row shaped as metric, tags, cursor
+        ``key`` and then ``shape(row)``'s fields.  An unbounded
+        collect (no ``limit``) is subject to the MaxTimeseries reject; a
+        bounded page is ≤ limit rows by construction, so pagination is
+        the sanctioned way to walk an over-cap catalog (VERDICT r11
+        item 1)."""
+        limit = self._page_limit(body)
+        metric = str(body["metric"]) if body.get("metric") else None
+        if limit is None:
+            self._guard_series_cap(metric=metric)
+        p = self._points()
+        if metric is not None:
+            p = p.filter(F.col("metric") == metric)
+        keys = ["metric"] + [f"tag_{k}" for k in self._tag_keys()]
+        agg = self._series_page(aggregate(p, keys), keys, body, limit)
         return [
             {
                 "metric": r["metric"],
-                "tags": {
-                    k[4:]: r[k] for k in keys[1:] if r[k] is not None
-                },
+                "tags": {k[4:]: r[k] for k in keys[1:] if r[k] is not None},
                 "key": r["_key"],
-                "n_points": r["n_points"],
-                "max_gap_us": r["max_gap_us"],
-                "n_large_gaps": r["n_large_gaps"],
-                "mean_gap_us": r["mean_gap_us"],
+                **shape(r),
             }
             for r in agg.collect()
         ]
@@ -1629,40 +1571,23 @@ class Engine:
         )
 
     def _last_compute(self, body: dict) -> list:
-        import time as _time
-
-        limit = self._page_limit(body)
-        if limit is None:
-            # same guard-or-paginate contract as _gaps_compute
-            self._guard_series_cap(
-                metric=str(body["metric"]) if body.get("metric") else None
+        def aggregate(p, keys):
+            back = body.get("back_scan")
+            if isinstance(back, (int, float)) and back > 0:
+                floor_us = int((time.time() - float(back) * 3600) * 1_000_000)
+                p = p.filter(F.col("ts_us") >= floor_us)
+            return p.groupBy(*keys).agg(
+                F.max("ts_us").alias("_ts"),
+                # ties at the max ts resolve by the larger value — the
+                # points frame carries no id column, and ANY fixed total
+                # order beats partitioning luck
+                F.max_by("value", F.struct("ts_us", "value")).alias("_v"),
             )
-        p = self._points()
-        if body.get("metric"):
-            p = p.filter(F.col("metric") == str(body["metric"]))
-        back = body.get("back_scan")
-        if isinstance(back, (int, float)) and back > 0:
-            floor_us = int((_time.time() - float(back) * 3600) * 1_000_000)
-            p = p.filter(F.col("ts_us") >= floor_us)
-        keys = ["metric"] + [f"tag_{k}" for k in self._tag_keys()]
-        agg = p.groupBy(*keys).agg(
-            F.max("ts_us").alias("_ts"),
-            # ties at the max ts resolve by the larger value — the
-            # points frame carries no id column, and ANY fixed total
-            # order beats partitioning luck
-            F.max_by("value", F.struct("ts_us", "value")).alias("_v"),
+
+        return self._series_rows(
+            body, aggregate,
+            lambda r: {"timestamp": r["_ts"] // 1000, "value": r["_v"]},
         )
-        agg = self._series_page(agg, keys, body, limit)
-        return [
-            {
-                "metric": r["metric"],
-                "tags": {k[4:]: r[k] for k in keys[1:] if r[k] is not None},
-                "key": r["_key"],
-                "timestamp": r["_ts"] // 1000,
-                "value": r["_v"],
-            }
-            for r in agg.collect()
-        ]
 
     def query_retention(self, body: dict) -> dict:
         """``POST /keysets/{ks}/api/query/retention`` — the served form
@@ -1755,7 +1680,6 @@ class Engine:
         conflicts and the whole read-rewrite retries against the fresh
         catalog — serializing catalog rewrites against the put path.
         """
-        import os
         import shutil
         import uuid
 
@@ -2315,7 +2239,6 @@ class Engine:
         manifest (no day processed yet / wrong dir), answer typed 400s
         — the U90 convention."""
         import hashlib
-        import json as _json
 
         if self.chain_dir is None:
             raise ValueError(
@@ -2328,7 +2251,7 @@ class Engine:
         path = os.path.join(self.chain_dir, CHAIN_MANIFEST)
         try:
             with open(path) as fh:
-                state = _json.load(fh)
+                state = json.load(fh)
         except FileNotFoundError:
             raise ValueError(
                 f"no chain manifest at {path!r} — chain_dir must be a "
@@ -2364,7 +2287,7 @@ class Engine:
             "horizon_days": sorted(state.get("horizon_days", [])),
             "pruned_days": sorted(state.get("pruned_days", [])),
             "manifest_md5": hashlib.md5(
-                _json.dumps(state, sort_keys=True).encode()
+                json.dumps(state, sort_keys=True).encode()
             ).hexdigest(),
         }
 
@@ -2572,137 +2495,119 @@ class _Handler(BaseHTTPRequestHandler):
                     )
         return json.loads(raw or b"null")
 
-    def do_GET(self):  # noqa: N802 (stdlib casing)
+    def _dispatch(self, method: str) -> None:
+        """Answer from the first ``_ROUTES`` row matching the method and
+        the whole path: a 404 when none does, a 400 with the message when
+        its handler raises.  Request bodies are read by the handler only,
+        so an unknown route never reads one."""
         u = urlparse(self.path)
-        qs = parse_qs(u.query)
         try:
-            if u.path == "/api/aggregators":
-                return self._send(200, AGGREGATORS_ENDPOINT)
-            if u.path == "/api/config/filters":
-                return self._send(200, FILTERS_ENDPOINT)
-            if u.path == "/api/suggest":
-                return self._send(
-                    200,
-                    self.engine.suggest(
-                        qs.get("type", ["metrics"])[0],
-                        qs.get("q", [""])[0],
-                        int(qs.get("max", ["25"])[0]),
-                        tagk=qs.get("tagk", [None])[0],
-                    ),
-                )
-            if u.path == "/keyspaces":
-                return self._send(200, self.engine.keyspaces.list())
-            m = re.match(r"^/keyspaces/([^/]+)$", u.path)
-            if m:
-                try:
-                    return self._send(200, self.engine.keyspace_get(m.group(1)))
-                except KeyError:
-                    return self._send(404, {"error": f"no keyspace {m.group(1)}"})
-            m = re.match(r"^/keysets/[^/]+/api/query/expression$", u.path)
-            if m:
-                return self._send(
-                    200, self.engine.query_expression(qs["exp"][0])
-                )
-            if re.match(r"^/keysets/[^/]+/api/query/dedup_daily$", u.path):
-                return self._send(
-                    200,
-                    self.engine.query_dedup_daily(qs.get("day", [None])[0]),
-                )
-            if re.match(r"^/keysets/[^/]+/api/query/dedup_valve$", u.path):
-                return self._send(200, self.engine.query_dedup_valve())
-            if re.match(r"^/keysets/[^/]+/api/query/ladder_status$", u.path):
-                return self._send(200, self.engine.query_ladder_status())
-            if re.match(r"^/keysets/[^/]+/api/query/ann_drift$", u.path):
-                return self._send(200, self.engine.query_ann_drift())
-            if re.match(r"^/keysets/[^/]+/api/query/chain_status$", u.path):
-                return self._send(200, self.engine.query_chain_status())
+            for verb, pattern, handler in _ROUTES:
+                m = pattern.fullmatch(u.path) if verb == method else None
+                if m:
+                    return self._send(*handler(self, m, parse_qs(u.query)))
             return self._send(404, {"error": f"no route {u.path}"})
-        except Exception as exc:  # noqa: BLE001 — HTTP edge reports all errors
+        except Exception as exc:  # noqa: BLE001 — the edge reports all
             return self._send(400, {"error": str(exc)})
+
+    def do_GET(self):  # noqa: N802 (stdlib casing)
+        self._dispatch("GET")
 
     def do_POST(self):  # noqa: N802
-        u = urlparse(self.path)
-        try:
-            if u.path in ("/api/put", "/api/text/put"):
-                return self._send(
-                    200, self.engine.put(self._body(), u.path.startswith("/api/text"))
-                )
-            if re.match(r"^/keysets/[^/]+/api/query$", u.path):
-                return self._send(200, self.engine.query(self._body()))
-            if re.match(r"^/keysets/[^/]+/api/query/funnel$", u.path):
-                return self._send(200, self.engine.query_funnel(self._body()))
-            if re.match(r"^/keysets/[^/]+/api/query/retention$", u.path):
-                return self._send(
-                    200, self.engine.query_retention(self._body())
-                )
-            if re.match(r"^/keysets/[^/]+/api/query/attribution$", u.path):
-                return self._send(
-                    200, self.engine.query_attribution(self._body())
-                )
-            if re.match(r"^/keysets/[^/]+/api/query/gaps$", u.path):
-                return self._send(200, self.engine.query_gaps(self._body()))
-            if re.match(r"^/keysets/[^/]+/api/query/last$", u.path):
-                return self._send(200, self.engine.query_last(self._body()))
-            if re.match(r"^/keysets/[^/]+/api/query/media_dups$", u.path):
-                return self._send(
-                    200, self.engine.query_media_dups(self._body())
-                )
-            if re.match(r"^/keysets/[^/]+/api/query/similar$", u.path):
-                return self._send(
-                    200, self.engine.query_similar(self._body())
-                )
-            if u.path == "/api/expression/check":
-                errors = check_expression(
-                    self._body()["exp"], int(time.time() * 1000)
-                )
-                return self._send(200 if not errors else 400, {"errors": errors})
-            m = re.match(r"^/keyspaces/([^/]+)$", u.path)
-            if m:
-                return self._send(
-                    201, self.engine.keyspace_create(m.group(1), self._body())
-                )
-            return self._send(404, {"error": f"no route {u.path}"})
-        except Exception as exc:  # noqa: BLE001
-            return self._send(400, {"error": str(exc)})
+        self._dispatch("POST")
 
     def do_PUT(self):  # noqa: N802
-        u = urlparse(self.path)
-        try:
-            m = re.match(r"^/keyspaces/([^/]+)$", u.path)
-            if m:
-                body = self._body() or {}
-                try:
-                    self.engine.keyspaces.update_ttl(
-                        m.group(1), int(body["ttl_days"])
-                    )
-                except KeyError as exc:
-                    missing = str(exc).strip("'")
-                    code = 400 if missing == "ttl_days" else 404
-                    return self._send(code, {"error": f"missing {missing}"})
-                return self._send(200, self.engine.keyspace_get(m.group(1)))
-            return self._send(404, {"error": f"no route {u.path}"})
-        except Exception as exc:  # noqa: BLE001
-            return self._send(400, {"error": str(exc)})
+        self._dispatch("PUT")
 
     def do_DELETE(self):  # noqa: N802
-        u = urlparse(self.path)
-        qs = parse_qs(u.query)
-        try:
-            m = re.match(r"^/keyspaces/([^/]+)$", u.path)
-            if m:
-                self.engine.keyspaces.drop(m.group(1))
-                return self._send(200, {"ksid": m.group(1), "dropped": True})
-            if re.match(r"^/keysets/[^/]+/api/meta$", u.path):
-                tag_eq = {
-                    k[4:]: v[0] for k, v in qs.items() if k.startswith("tag_")
-                }
-                return self._send(
-                    200,
-                    self.engine.delete_meta(qs.get("metric", [None])[0], tag_eq),
-                )
-            return self._send(404, {"error": f"no route {u.path}"})
-        except Exception as exc:  # noqa: BLE001
-            return self._send(400, {"error": str(exc)})
+        self._dispatch("DELETE")
+
+
+def _keyspace_get(h: _Handler, m, _qs):
+    try:
+        return 200, h.engine.keyspace_get(m[1])
+    except KeyError:
+        return 404, {"error": f"no keyspace {m[1]}"}
+
+
+def _keyspace_update(h: _Handler, m, _qs):
+    body = h._body() or {}
+    try:
+        h.engine.keyspaces.update_ttl(m[1], int(body["ttl_days"]))
+    except KeyError as exc:
+        missing = str(exc).strip("'")
+        return 400 if missing == "ttl_days" else 404, {
+            "error": f"missing {missing}"
+        }
+    return 200, h.engine.keyspace_get(m[1])
+
+
+def _keyspace_drop(h: _Handler, m, _qs):
+    h.engine.keyspaces.drop(m[1])
+    return 200, {"ksid": m[1], "dropped": True}
+
+
+def _expression_check(h: _Handler, _m, _qs):
+    errors = check_expression(h._body()["exp"], int(time.time() * 1000))
+    return 400 if errors else 200, {"errors": errors}
+
+
+def _suggest(h: _Handler, _m, qs):
+    return 200, h.engine.suggest(
+        qs.get("type", ["metrics"])[0],
+        qs.get("q", [""])[0],
+        int(qs.get("max", ["25"])[0]),
+        tagk=qs.get("tagk", [None])[0],
+    )
+
+
+def _delete_meta(h: _Handler, _m, qs):
+    tag_eq = {k[4:]: v[0] for k, v in qs.items() if k.startswith("tag_")}
+    return 200, h.engine.delete_meta(qs.get("metric", [None])[0], tag_eq)
+
+
+_KEYSET = r"/keysets/[^/]+/api"
+
+#: The whole HTTP surface: (method, full-path pattern, handler) rows, each
+#: handler ``(handler instance, match, query params) -> (status, payload)``.
+#: Engine verbs are looked up on ``h.engine`` at request time, never bound
+#: here, so a method patched on the Engine class (a tracer) is honoured;
+#: the ``query_<verb>`` names come only from a fixed alternation.
+_ROUTES = [
+    (method, re.compile(pattern), handler)
+    for method, pattern, handler in (
+        ("GET", r"/api/aggregators",
+         lambda h, m, qs: (200, AGGREGATORS_ENDPOINT)),
+        ("GET", r"/api/config/filters",
+         lambda h, m, qs: (200, FILTERS_ENDPOINT)),
+        ("GET", r"/api/suggest", _suggest),
+        ("GET", r"/keyspaces",
+         lambda h, m, qs: (200, h.engine.keyspaces.list())),
+        ("GET", r"/keyspaces/([^/]+)", _keyspace_get),
+        ("GET", _KEYSET + r"/query/expression",
+         lambda h, m, qs: (200, h.engine.query_expression(qs["exp"][0]))),
+        ("GET", _KEYSET + r"/query/dedup_daily",
+         lambda h, m, qs: (200, h.engine.query_dedup_daily(
+             qs.get("day", [None])[0]))),
+        ("GET", _KEYSET + r"/query/(dedup_valve|ladder_status|ann_drift|"
+                          r"chain_status)",
+         lambda h, m, qs: (200, getattr(h.engine, "query_" + m[1])())),
+        ("POST", r"/api/(text/)?put",
+         lambda h, m, qs: (200, h.engine.put(h._body()))),
+        ("POST", _KEYSET + r"/query",
+         lambda h, m, qs: (200, h.engine.query(h._body()))),
+        ("POST", _KEYSET + r"/query/(funnel|retention|attribution|gaps|"
+                           r"last|media_dups|similar)",
+         lambda h, m, qs: (
+             200, getattr(h.engine, "query_" + m[1])(h._body()))),
+        ("POST", r"/api/expression/check", _expression_check),
+        ("POST", r"/keyspaces/([^/]+)",
+         lambda h, m, qs: (201, h.engine.keyspace_create(m[1], h._body()))),
+        ("PUT", r"/keyspaces/([^/]+)", _keyspace_update),
+        ("DELETE", r"/keyspaces/([^/]+)", _keyspace_drop),
+        ("DELETE", _KEYSET + r"/meta", _delete_meta),
+    )
+]
 
 
 def serve(

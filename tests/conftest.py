@@ -56,7 +56,6 @@ SLOW_TESTS = frozenset({
     "tests/test_oracle.py::test_oracle_match[dedup_index_assimilate]",
     "tests/test_oracle.py::test_oracle_match[dedup_index_probe]",
     "tests/test_oracle.py::test_oracle_match[dedup_media_index_assimilate]",
-    "tests/test_oracle.py::test_oracle_match[dedup_semantic_clusters]",
     "tests/test_oracle.py::test_oracle_match[kmv_backfill_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[pipeline_corpus_prep]",
     "tests/test_oracle.py::test_oracle_match[pipeline_media_prep]",

@@ -2228,3 +2228,102 @@ def test_ladder_status_without_ladders_is_empty_200(server):
     assert code == 200
     assert out["ladder"] == [] and out["qsample"] == []
     assert out["fine_rollup"] is None
+
+
+def test_text_put_endpoint(server):
+    """``/api/text/put`` shares ``/api/put``'s decode and validation: a
+    text point lands, and a point carrying both ``value`` and ``text``
+    fails the value-XOR-text rule."""
+    point = {"metric": "log.events", "tags": {"ksid": "k1", "host": "t0"},
+             "timestamp": BASE_TS, "text": "disk full"}
+    code, resp = _req(server, "/api/text/put", [point])
+    assert code == 200 and resp == {"success": 1, "failed": 0}
+    code, resp = _req(server, "/api/text/put", [{**point, "value": 1.0}])
+    assert code == 200 and resp == {"success": 0, "failed": 1}
+
+
+_EXPRESSION = (
+    "merge(max,downsample(5m,avg,query(cpu.usage,{host=*},"
+    f"{BASE_TS})))"
+)
+
+#: (method, path, body, expected status) for every endpoint of the
+#: module docstring, plus known paths under the wrong method and unknown
+#: verbs, which answer 404.  ``{ks}`` is a keyspace created for the case.
+_ROUTE_CONTRACT = [
+    ("POST", "/api/put", [{"metric": "route.contract",
+                           "tags": {"ksid": "k1"}, "timestamp": BASE_TS,
+                           "value": 1.0}], 200),
+    ("POST", "/api/text/put", [{"metric": "route.contract",
+                                "tags": {"ksid": "k1"},
+                                "timestamp": BASE_TS, "text": "x"}], 200),
+    ("POST", "/keysets/k1/api/query",
+     {"start": BASE_TS, "end": BASE_TS + 60_000,
+      "queries": [{"metric": "cpu.usage", "aggregator": "sum"}]}, 200),
+    ("GET", f"/keysets/k1/api/query/expression?exp={_EXPRESSION}", None, 200),
+    ("POST", "/keysets/k1/api/query/funnel", {}, 400),
+    ("POST", "/keysets/k1/api/query/retention", {"user_tag": "nope"}, 400),
+    ("POST", "/keysets/k1/api/query/attribution", {}, 400),
+    ("POST", "/keysets/k1/api/query/gaps", {"metric": "cpu.usage"}, 200),
+    ("POST", "/keysets/k1/api/query/last", {"metric": "cpu.usage"}, 200),
+    ("POST", "/keysets/k1/api/query/media_dups", {}, 400),
+    ("POST", "/keysets/k1/api/query/similar", {}, 400),
+    ("GET", "/keysets/k1/api/query/ladder_status", None, 200),
+    ("GET", "/keysets/k1/api/query/dedup_valve", None, 400),
+    ("GET", "/keysets/k1/api/query/ann_drift", None, 400),
+    ("GET", "/keysets/k1/api/query/chain_status", None, 400),
+    ("GET", "/keysets/k1/api/query/dedup_daily?day=1", None, 400),
+    ("POST", "/api/expression/check", {"exp": _EXPRESSION}, 200),
+    ("GET", "/api/suggest?type=metrics&q=cpu&max=5", None, 200),
+    ("GET", "/api/aggregators", None, 200),
+    ("GET", "/api/config/filters", None, 200),
+    ("GET", "/keyspaces", None, 200),
+    ("POST", "/keyspaces/{ks}_new", {"ttl_days": 3}, 201),
+    ("GET", "/keyspaces/{ks}", None, 200),
+    ("PUT", "/keyspaces/{ks}", {"ttl_days": 2}, 200),
+    ("DELETE", "/keyspaces/{ks}", None, 200),
+    ("DELETE", "/keysets/k1/api/meta?metric=route.none", None, 200),
+    ("GET", "/keysets/k1/api/query", None, 404),
+    ("POST", "/keysets/k1/api/query/nonexistent", {}, 404),
+    ("PUT", "/api/put", [], 404),
+    ("DELETE", "/keyspaces", None, 404),
+    ("GET", "/api/put", None, 404),
+    ("POST", "/api/aggregators", {}, 404),
+    ("GET", "/keysets/k1/api/query/funnel", None, 404),
+    ("POST", "/keysets/k1/api/query/ladder_status", {}, 404),
+]
+
+
+@pytest.mark.parametrize(
+    "method,path,body,want", _ROUTE_CONTRACT,
+    ids=[f"{m} {p.split('?')[0]}" for m, p, _b, _w in _ROUTE_CONTRACT],
+)
+def test_route_contract(server, method, path, body, want):
+    """Each endpoint answers on its method; a known path under another
+    method, and an unknown verb, answer 404."""
+    import uuid
+
+    ks = f"ks_route_{uuid.uuid4().hex[:8]}"
+    if "/keyspaces/{ks}" in path and not path.endswith("_new"):
+        assert _req(server, f"/keyspaces/{ks}", {"ttl_days": 1})[0] == 201
+    code, _resp = _req(server, path.replace("{ks}", ks), body, method=method)
+    assert code == want
+
+
+def test_perfbench_hook_names_exist(spark):
+    """The traced benchmark patches engine methods and module globals by
+    name; a renamed or removed hook must fail here rather than silently
+    zero a per-layer metric."""
+    import mycenae_spark.server as srv
+    from mycenae_spark.streaming import rollup
+    from perfbench.trace import Tracer
+    from perfbench.tsdb_read import Workload
+
+    before = (srv.Engine.query, srv.plan, rollup.read_rollup_series)
+    tracer = Tracer(spark)
+    try:
+        Workload.instrument(None, tracer)
+        assert srv.Engine.query is not before[0]
+    finally:
+        tracer.unwrap_all()
+    assert (srv.Engine.query, srv.plan, rollup.read_rollup_series) == before
