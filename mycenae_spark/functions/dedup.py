@@ -44,9 +44,7 @@ def minhash_signatures(
     """
     # Per-shingle md5 × n_bands is the whole pre-exchange cost — spread the
     # narrow projection core-wide first (identity on already-parallel scans).
-    toked = spread_scan(
-        df.select(id_col, text_col), site="dedup.minhash_signatures"
-    ).select(
+    toked = spread_scan(df.select(id_col, text_col)).select(
         id_col, tokens(text_col).alias("_toks")
     ).filter(F.size("_toks") >= ngram)
     idx = F.sequence(F.lit(1), F.size("_toks") - (ngram - 1))
@@ -277,7 +275,7 @@ def _gram_postings(
       measured the extra repartition a small net loss (6.19 → 6.55 s)."""
     src = df.select(id_col, text_col)
     if spread:
-        src = spread_scan(src, site="dedup.gram_postings")
+        src = spread_scan(src)
     g = src.select(
         id_col, tokens(text_col).alias("_toks")
     ).filter(F.size("_toks") >= ngram).select(
@@ -443,9 +441,7 @@ def _positioned_windows(
     # The per-position slice+concat(+md5) below is the span family's whole
     # pre-exchange cost — spread the narrow projection core-wide first
     # (identity on already-parallel scans; see spread_scan).
-    docs = spread_scan(
-        df.select(id_col, text_col), site="dedup.positioned_windows"
-    ).select(
+    docs = spread_scan(df.select(id_col, text_col)).select(
         id_col, tokens(text_col).alias("_ts")
     ).filter(F.size("_ts") >= k)
     # explode_ne: docs filtered to size(_ts) >= k, so the window array has

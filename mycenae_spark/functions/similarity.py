@@ -3,7 +3,9 @@ IVF-bucketed ANN, over ``array<float>`` columns with double math.
 
 Dot products use ``zip_with`` + ``aggregate`` (JVM higher-order functions,
 fixed left-to-right fold) — no UDF, deterministic summation order, so the
-DuckDB oracle reproduces values bit-for-bit before rounding.
+DuckDB oracle reproduces values bit-for-bit before rounding.  The
+per-pair legs of ``knn_graph`` and ``semantic_pairs`` run the same fold
+vectorized in ``pair_dot_arrow``, bit-identical to ``dot``.
 """
 
 from __future__ import annotations
@@ -20,13 +22,6 @@ def dot(x: Column, y: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-#: Route per-PAIR dot products through the Arrow kernel below instead of the
-#: interpreted HOF fold.  Default ON after the r20 hash-parity proof
-#: (tests/test_operators_units.py::test_pair_dot_arrow_bit_parity + oracle
-#: green on every affected id); flip off to fall back to the pure-JVM path.
-ARROW_PAIR_DOT = True
 
 
 def pair_dot_arrow(
@@ -156,7 +151,7 @@ def brute_topk(
     # the corpus scan stage — spread the narrow corpus projection
     # core-wide first (identity on real multi-split scans).
     c = with_norm(
-        spread_scan(corpus.select(id_col, emb_col), site="sim.brute_topk"),
+        spread_scan(corpus.select(id_col, emb_col)),
         emb_col,
     ).select(
         F.col(id_col).alias("n_id"),
@@ -389,7 +384,7 @@ def embedding_lsh_pairs(
     # One shared spread projection under the bucket-key pass and both
     # verify sides — the repartition exchange is reused (ReusedExchange)
     # and the per-row plane dots / per-pair cosines run core-wide.
-    cn = spread_scan(corpus.select(id_col, emb_col), site="sim.embedding_lsh")
+    cn = spread_scan(corpus.select(id_col, emb_col))
     # The planes are LITERAL constants, so every table's key folds into
     # ONE projection per vector — n_tables × n_bits sign-dots against
     # literal arrays, summed as bit * 2^b — instead of the earlier
@@ -583,7 +578,7 @@ def ivf_assign(
     with WindowGroupLimit's map-side prune rather than the partial agg."""
     rounder = score_rounder or (lambda c: c)
     en = with_norm(
-        spread_scan(corpus.select(id_col, emb_col), site="sim.ivf_assign"),
+        spread_scan(corpus.select(id_col, emb_col)),
         emb_col,
     )
     cent = with_norm(centroids, emb_col).select(
@@ -639,8 +634,7 @@ def ivf_assign_topn(
     rank ≤ n map-side, so the exchange carries ≤ n rows per vector."""
     rounder = score_rounder or (lambda c: c)
     en = with_norm(
-        spread_scan(corpus.select(id_col, emb_col),
-                    site="sim.ivf_assign_topn"),
+        spread_scan(corpus.select(id_col, emb_col)),
         emb_col,
     )
     cent = with_norm(centroids, emb_col).select(
@@ -730,7 +724,7 @@ def knn_graph(
         )
         q_assign = topn.select(id_col, "c_id")
     en = with_norm(
-        spread_scan(corpus.select(id_col, emb_col), site="sim.knn_graph"),
+        spread_scan(corpus.select(id_col, emb_col)),
         emb_col,
     )
     a = en.join(q_assign, id_col).select(
@@ -750,14 +744,10 @@ def knn_graph(
         (F.col("c_id") == F.col("_c_id_b"))
         & (F.col("_qid") != F.col("n_id")),
     )
-    if ARROW_PAIR_DOT:
-        scored = pair_dot_arrow(
-            pairs, "_ea", "_eb", ["_qid", "n_id", "_na", "_nb"], "_dot"
-        )
-        cos = F.col("_dot") / (F.col("_na") * F.col("_nb"))
-    else:
-        scored = pairs
-        cos = cosine(F.col("_ea"), F.col("_eb"), F.col("_na"), F.col("_nb"))
+    scored = pair_dot_arrow(
+        pairs, "_ea", "_eb", ["_qid", "n_id", "_na", "_nb"], "_dot"
+    )
+    cos = F.col("_dot") / (F.col("_na") * F.col("_nb"))
     w = Window.partitionBy("_qid").orderBy(F.desc("cos_r"), "n_id")
     return (
         scored
@@ -799,7 +789,7 @@ def semantic_pairs(
         max_cluster_size,
     )
     en = with_norm(
-        spread_scan(corpus.select(id_col, emb_col), site="sim.semantic_pairs"),
+        spread_scan(corpus.select(id_col, emb_col)),
         emb_col,
     ).join(assign, id_col)
     a = en.select(
@@ -819,15 +809,10 @@ def semantic_pairs(
         (F.col("c_id") == F.col("_c_id_b"))
         & (F.col("vec_a") < F.col("vec_b")),
     )
-    if ARROW_PAIR_DOT:
-        scored = pair_dot_arrow(
-            pairs, "_ea", "_eb", ["c_id", "vec_a", "vec_b", "_na", "_nb"],
-            "_dot",
-        )
-        cos = F.col("_dot") / (F.col("_na") * F.col("_nb"))
-    else:
-        scored = pairs
-        cos = cosine(F.col("_ea"), F.col("_eb"), F.col("_na"), F.col("_nb"))
+    scored = pair_dot_arrow(
+        pairs, "_ea", "_eb", ["c_id", "vec_a", "vec_b", "_na", "_nb"], "_dot"
+    )
+    cos = F.col("_dot") / (F.col("_na") * F.col("_nb"))
     return (
         scored
         .withColumn("cos_r", rounder(cos))

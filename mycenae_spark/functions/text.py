@@ -88,9 +88,7 @@ def winnow_fingerprints(
     # The per-gram slice+concat+md5 below is this kernel's whole
     # pre-exchange cost — spread the narrow projection core-wide first
     # (identity on already-parallel scans; see spread_scan).
-    toked = spread_scan(
-        df.select(id_col, text_col), site="text.winnow"
-    ).select(
+    toked = spread_scan(df.select(id_col, text_col)).select(
         id_col, tokens(text_col).alias("_ts")
     ).filter(
         F.size("_ts") >= k + w - 1  # at least one full window

@@ -4480,8 +4480,7 @@ def text_char_entropy(spark, sf_dir):
     # pushed-down scan filter so explode_ne's non-empty precondition holds
     # (Spark's sequence() never yields an empty array).
     ch = spread_scan(
-        d.filter(F.col("text").isNotNull()).select("doc_id", "text"),
-        site="q.char_entropy",
+        d.filter(F.col("text").isNotNull()).select("doc_id", "text")
     ).select(
         "doc_id",
         explode_ne(
@@ -4897,8 +4896,7 @@ def text_langid_trigram(spark, sf_dir):
     # The 3×-recomputed gram explosion is the whole pre-exchange cost —
     # spread the narrow projection core-wide (identity on real scans).
     grams = spread_scan(
-        d.filter(F.length("text") >= 3).select("doc_id", "lang", "text"),
-        site="q.langid_grams",
+        d.filter(F.length("text") >= 3).select("doc_id", "lang", "text")
     ).select(
         "doc_id",
         "lang",
@@ -5067,8 +5065,8 @@ def langid_mixture_confusion(spark, sf_dir, orders):
         # broadcast the bounded #langs × vocab profile exactly like
         # text_langid_trigram — HERE the hint changes the plan: the
         # (ord, gram) composite key defeated the estimate and this join
-        # ran as a SortMergeJoin of the corpus-sized dg frame
-        # (plans/r20/text_langid_mixture: node 30 SMJ → node 27 BHJ;
+        # ran as a SortMergeJoin of the corpus-sized dg frame (pinned by
+        # tests/test_plans.py::test_langid_mixture_broadcasts_profile_join;
         # the remaining SMJ is the doc-keyed dnorm join, correctly left)
         dg.join(F.broadcast(prof), ["ord", "gram"])
         .groupBy("doc_id", "lang", "plang", "ord")

@@ -100,32 +100,29 @@ def events_as_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Probe hook for interleaved A/B measurement (tools/ab_spread.py): site
-#: labels added here make that ``spread_scan`` call the identity.  Empty in
-#: production; per-site verdicts are hard-coded at the call sites.
-SPREAD_DISABLED: set[str] = set()
-
-#: Logical operators that repartition their output (post-shuffle
-#: parallelism = spark.sql.shuffle.partitions ≥ cores, so spreading after
-#: them is never needed) — and, under AQE, the exact operators whose
-#: presence makes ``df.rdd`` materialize shuffle stages, i.e. launch REAL
-#: jobs at query-CONSTRUCTION time (r19 ADVICE: kmeans_refine paid an eager
-#: scan+shuffle job per iteration before the query even ran).  Narrow
-#: operators (Project/Filter/Generate/Union/…) preserve the scan's
-#: partitioning and are deliberately absent.
-_EXCHANGE_NODES = frozenset({
-    "Repartition", "RepartitionByExpression", "RebalancePartitions",
-    "Join", "Aggregate", "Window", "Sort", "Deduplicate", "Distinct",
-    "Intersect", "Except", "GlobalLimit", "CoGroup",
+#: Logical operators that keep a scan narrow: a projection, a filter or an
+#: explode over a file scan (``LogicalRelation``), a checkpointed / local
+#: frame (``LogicalRDD``), a ``Range``, or a ``Union`` of those.  Output
+#: partitioning is the inputs', and ``df.rdd`` over them is a driver-side
+#: conversion — zero jobs.  EVERY other node counts as exchange-bearing
+#: (fail closed): a shuffling node reaching the ``df.rdd`` probe makes AQE
+#: materialize its shuffle stages — REAL jobs at query-CONSTRUCTION time
+#: (r19 ADVICE: kmeans_refine paid an eager scan+shuffle job per iteration
+#: before the query even ran), and shuffling nodes are open-ended
+#: (``cogroup().applyInPandas`` → FlatMapCoGroupsInPandas).  An unlisted
+#: narrow node only costs a skipped spread, never a job.
+_NARROW_NODES = frozenset({
+    "Project", "Filter", "Generate", "LogicalRelation", "LogicalRDD",
+    "Range", "Union",
 })
 
 
 def _has_exchange_op(df: DataFrame) -> bool:
-    """True iff the ANALYZED logical plan contains an exchange-inducing
-    operator.  Pure plan-tree walk over py4j — no optimization, no RDD
-    conversion, no jobs."""
+    """True iff the ANALYZED logical plan contains any operator outside
+    ``_NARROW_NODES``.  Pure plan-tree walk over py4j — no optimization,
+    no RDD conversion, no jobs."""
     def walk(node) -> bool:
-        if node.nodeName() in _EXCHANGE_NODES:
+        if node.nodeName() not in _NARROW_NODES:
             return True
         children = node.children()
         for i in range(children.length()):
@@ -136,7 +133,7 @@ def _has_exchange_op(df: DataFrame) -> bool:
     return walk(df._jdf.queryExecution().analyzed())
 
 
-def spread_scan(df: DataFrame, site: str = "") -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Raise a compute-heavy frame's parallelism to the session default when
     its source scan under-parallelizes it (guide: input skew — an
     unsplittable input should be repartitioned right after the read).
@@ -160,17 +157,12 @@ def spread_scan(df: DataFrame, site: str = "") -> DataFrame:
     not itself run jobs.  ``df.rdd`` on a plan that already contains an
     exchange materializes its shuffle stages under AQE — a real scan+shuffle
     job at query-construction time, paid once per ``spread_scan`` call (the
-    kmeans_refine loop re-entered this per iteration).  So: if the analyzed
-    plan contains any exchange-inducing operator, its output parallelism is
-    already ≥ cores and this is the identity WITHOUT any probe; only pure
-    narrow scan plans (where ``.rdd`` is a driver-side conversion, zero
-    jobs) fall through to the exact partition-count probe.
-
-    ``site`` labels the call site for the interleaved A/B probe harness
-    (``SPREAD_DISABLED``); it has no effect in production.
+    kmeans_refine loop re-entered this per iteration).  So: unless the
+    analyzed plan is made only of ``_NARROW_NODES``, this is the identity
+    WITHOUT any probe; only pure narrow scan plans (where ``.rdd`` is a
+    driver-side conversion, zero jobs) fall through to the exact
+    partition-count probe.
     """
-    if site and site in SPREAD_DISABLED:
-        return df
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if _has_exchange_op(df):
         return df

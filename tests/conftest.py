@@ -32,6 +32,10 @@ SF_DIR = os.environ.get("MYCENAE_TEST_SF_DIR", "/root/testdata/sf0.001")
 # below was measured ≥ ~7 s (top-60 = 898 s of the 1690 s total, full run
 # logged green 2026-08-18, exit 0).  Default run deselects them → ~13 min.
 # Run EVERYTHING with:  MYCENAE_FULL_TESTS=1 python -m pytest tests/ -q
+# The cheapest oracle id of each lifecycle family stays in the default gate
+# so a break in the family still fails it: bus_ingest_roundtrip (bus),
+# ann_ivfpq_recall_drift (pq index), stream_text_assimilate_roundtrip
+# (stream assimilation), ~10 s each.
 SLOW_TESTS = frozenset({
     "tests/test_bus.py::test_bus_engine_crash_replay_no_dupes",
     "tests/test_bus.py::test_start_bus_ingest_end_to_end",
@@ -50,9 +54,7 @@ SLOW_TESTS = frozenset({
     "tests/test_ingest.py::test_tsdb_bridge_maintenance_tail_sweeps_debris",
     "tests/test_ingest.py::test_tsdb_bridge_restart_and_replay",
     "tests/test_multimodal.py::test_media_clusters_and_keep_best_triple_collapse",
-    "tests/test_oracle.py::test_oracle_match[ann_ivfpq_recall_drift]",
     "tests/test_oracle.py::test_oracle_match[bus_engine_roundtrip]",
-    "tests/test_oracle.py::test_oracle_match[bus_ingest_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[dedup_index_assimilate]",
     "tests/test_oracle.py::test_oracle_match[dedup_index_probe]",
     "tests/test_oracle.py::test_oracle_match[dedup_media_index_assimilate]",
@@ -64,7 +66,6 @@ SLOW_TESTS = frozenset({
     "tests/test_oracle.py::test_oracle_match[stream_chain_rebase_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_evict_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_media_assimilate_roundtrip]",
-    "tests/test_oracle.py::test_oracle_match[stream_text_assimilate_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_tsdb_ingest_roundtrip]",
     "tests/test_pq_index.py::test_band_index_assimilate_equals_rebuild",
     "tests/test_pq_index.py::test_band_valve_report_tracks_assimilation",

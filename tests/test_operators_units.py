@@ -607,3 +607,47 @@ def test_pair_dot_arrow_rejects_empty_arrays(spark):
     )
     with pytest.raises(Exception, match="empty embedding"):
         pair_dot_arrow(empty, "_ea", "_eb", ["i"], "d").collect()
+
+
+def test_spread_scan_fails_closed_on_unlisted_shuffles(spark, tmp_path):
+    """spread_scan names the NARROW logical nodes and treats every other
+    node as exchange-bearing.  Pandas cogroup / grouped-map nodes
+    (FlatMapCoGroupsInPandas, FlatMapGroupsInPandas) shuffle but were
+    missing from the old exchange list, so the guard fell through to the
+    ``df.rdd`` probe — under AQE that runs the shuffle stages as jobs at
+    query-construction time.  They must come back unchanged with ZERO
+    jobs started; a narrow single-file scan projection (with and without
+    an explode) must still spread to the session default parallelism."""
+    import pyspark.sql.functions as F
+
+    from mycenae_spark.sources.tables import spread_scan
+
+    sc = spark.sparkContext
+    keyed = spark.range(64).withColumn("k", F.col("id") % 4)
+    cogrouped = keyed.groupBy("k").cogroup(keyed.groupBy("k")).applyInPandas(
+        lambda left, right: left, schema=keyed.schema
+    )
+    grouped = keyed.groupBy("k").applyInPandas(lambda p: p, schema=keyed.schema)
+    group = "spread-scan-fail-closed"
+    sc.setJobGroup(group, "spread_scan construction must start no job")
+    try:
+        for frame in (cogrouped, grouped):
+            assert spread_scan(frame) is frame
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    path = str(tmp_path / "one_file")
+    spark.range(256).select(
+        "id", F.array(F.col("id"), F.col("id") + 1).alias("xs")
+    ).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    parallelism = sc.defaultParallelism
+    assert parallelism > 1
+    for narrow in (
+        scan.select("id", "xs"),
+        scan.filter(F.col("id") > 3).select("id", F.explode("xs").alias("x")),
+    ):
+        assert spread_scan(narrow).rdd.getNumPartitions() == parallelism

@@ -796,3 +796,56 @@ def test_media_index_probe_partition_pruned(spark):
     # never reach Python)
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_langid_mixture_broadcasts_profile_join(spark):
+    """text_langid_mixture joins the tf frame to the bounded #langs × vocab
+    profile by BROADCAST on (ord, gram).  Without the explicit hint the
+    composite key defeated the size estimate and this join ran as a
+    SortMergeJoin of the corpus-sized tf frame; the only sort-merge join
+    left is the doc-keyed norm join."""
+    import re
+
+    plan = _plan(spark, "text_langid_mixture")
+    assert re.search(r"BroadcastHashJoin \[ord#\d+, gram#\d+\]", plan), plan
+    for keys in re.findall(r"SortMergeJoin (\[[^\]]*\], \[[^\]]*\])", plan):
+        left, right = keys.split("], [")
+        assert "doc_id" in left and "doc_id" in right, keys
+
+
+def test_reverted_spread_sites_stay_unspread(spark):
+    """Two spread_scan sites were measured as losses and reverted: the
+    corpus under kmeans_refine's Lloyd step (its work drains into keyed
+    aggregations that repartition anyway) and the corpus under
+    brute_topk_filtered (the keyed broadcast join already spreads the
+    scored frame).  Only ivf_assign's own spread may appear in a
+    refinement step, and the filtered search has none."""
+    from mycenae_spark.functions.similarity import kmeans_refine
+    from mycenae_spark.registry.llm_queries import _cent0
+    from mycenae_spark.sources.tables import load_table
+
+    cent = kmeans_refine(
+        load_table(spark, SF_DIR, "embeddings"),
+        _cent0(spark, SF_DIR).withColumnRenamed("c_id", "vec_id"),
+        iters=1,
+    )
+    plan = cent._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") <= 1, plan
+    assert "RoundRobinPartitioning" not in _plan(spark, "ann_filtered_topk")
+
+
+@pytest.mark.parametrize(
+    "name, arrow",
+    [
+        ("dedup_semantic", True),
+        ("knn_graph_topk", True),
+        ("knn_graph_multiprobe", True),
+        ("dedup_embedding_lsh", False),
+    ],
+)
+def test_pair_dot_leg_engine(spark, name, arrow):
+    """The in-cluster pair legs of semantic_pairs / knn_graph score pairs
+    through the pair_dot_arrow kernel (one MapInArrow); the LSH verify leg
+    keeps the JVM dot fold, where the Python round-trip measured slower
+    than the interpreted fold on its small per-task slices."""
+    assert ("MapInArrow" in _plan(spark, name)) is arrow
