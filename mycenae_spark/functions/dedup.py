@@ -9,19 +9,11 @@ valid minwise family with no engine-specific integer hashing anywhere.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 from mycenae_spark.functions.text import shingles, tokens
 from mycenae_spark.sources.tables import explode_ne, spread_scan
-
-logger = logging.getLogger(__name__)
-
-#: One-shot flag so the _iter_boundary internal-API-drift fallback warns
-#: once per process instead of once per round (r15 ADVICE item).
-_ITER_BOUNDARY_WARNED = False
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -805,34 +797,18 @@ def _iter_boundary(df: DataFrame) -> DataFrame:
     logical plan, stage counts, GC are all flat; only the stats object
     grows.  Rebuilding the frame over the SAME checkpointed RDD via
     ``internalCreateDataFrame`` drops originStats, so every round plans
-    against fresh leaf stats and round cost stays constant.  Falls back
-    to the plain checkpoint if the internal API moves."""
+    against fresh leaf stats and round cost stays constant.  No fallback:
+    if the internal API moves this raises, rather than silently bringing
+    back the originStats growth (``test_iter_boundary_resets_carried_plan_
+    stats`` pins the path)."""
     ck = df.localCheckpoint(eager=True)
-    try:
-        spark = ck.sparkSession
-        jrdd = ck._jdf.queryExecution().toRdd()
-        jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
-            ck.schema.json()
-        )
-        jdf = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jschema, False
-        )
-        return DataFrame(jdf, spark)
-    except Exception as exc:  # pragma: no cover - internal-API drift fallback
-        # The fallback silently reinstates the exponential originStats
-        # regression this function exists to fix — warn ONCE per process
-        # so an internal-API drift shows up in logs instead of
-        # re-manifesting as an unexplained driver slowdown (r15 ADVICE).
-        global _ITER_BOUNDARY_WARNED
-        if not _ITER_BOUNDARY_WARNED:
-            _ITER_BOUNDARY_WARNED = True
-            logger.warning(
-                "_iter_boundary: internalCreateDataFrame path failed (%s: %s)"
-                " — falling back to plain localCheckpoint; iterative plans"
-                " will carry originStats and slow down past ~15 rounds",
-                type(exc).__name__, exc,
-            )
-        return ck
+    spark = ck.sparkSession
+    jrdd = ck._jdf.queryExecution().toRdd()
+    jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
+        ck.schema.json()
+    )
+    jdf = spark._jsparkSession.internalCreateDataFrame(jrdd, jschema, False)
+    return DataFrame(jdf, spark)
 
 
 #: Edge-count gate for connected_components' driver fast path — the

@@ -57,7 +57,17 @@ class TsdbQuery:
 
     @classmethod
     def from_opentsdb(cls, q: dict, sub: dict, now_ms: int) -> "TsdbQuery":
-        """Lower one sub-query of an OpenTSDB/mycenae query dict."""
+        """Lower one sub-query of an OpenTSDB/mycenae query dict.
+
+        The legacy OpenTSDB ``tags`` map is refused, not ignored: dropping
+        it would answer the unfiltered series (and share their cache
+        entry) while the client believes its tag constraint applied."""
+        if sub.get("tags"):
+            raise ValueError(
+                f"sub-query for {sub.get('metric')!r} uses the legacy "
+                "'tags' field; express tag constraints as 'filters' "
+                "([{tagk, type, filter, groupBy}])"
+            )
         start = parse_relative_time(q["start"], now_ms)
         end = parse_relative_time(q.get("end", now_ms), now_ms)
         return cls(

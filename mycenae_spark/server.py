@@ -57,7 +57,8 @@ HTTP semantics; high-volume ingest uses streaming/ingest.py.
 Not a production webserver — it exists to make API parity concrete and
 end-to-end testable.  ``serve()`` runs a ``ThreadingHTTPServer``: handlers
 run concurrently over one shared Engine, which is why the Engine keeps its
-caches under a lock and its per-request state in thread-locals.  Routing is
+memo and result cache under a lock and each request's state in one
+thread-local.  Routing is
 one table (``_ROUTES``) of (method, path pattern, handler) rows; a path no
 row matches under the request's method answers 404, and an exception from
 a handler answers 400.
@@ -71,9 +72,9 @@ import json
 import logging
 import os
 import re
+import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from threading import Thread
 from urllib.parse import parse_qs, urlparse
 
 import pyspark.sql.functions as F
@@ -100,6 +101,35 @@ def _is_int(v) -> bool:
     JSON ``true``/``false`` and treats it as a stage/timestamp instead of
     returning the documented 400 (advice r14)."""
     return isinstance(v, int) and not isinstance(v, bool)
+
+
+def _tag_columns(keys) -> list:
+    """One ``tag_<k>`` column per tag key, expanded from the ``tags`` map:
+    the per-tag-column form the planner and ``catalog.suggest`` read."""
+    return [F.col("tags").getItem(k).alias(f"tag_{k}") for k in keys]
+
+
+class _RequestState(threading.local):
+    """One request's state, per handler thread (``Engine._read_pin``).
+
+    * ``as_of`` — the commit-log head the request's snapshot reads (and
+      the memo's lake slots) are pinned to; None reads the live head;
+    * ``frames`` — the query's (points, rollup) serving frames, built on
+      its first cache miss and shared by all of its subqueries;
+    * ``reused`` — the lake frame slots it was served from the memo, which
+      the evict-and-retry drops;
+    * ``degraded`` — did any read fall back to a directory listing;
+    * ``routes`` — one entry per subquery of the latest ``query()``.
+
+    ``Engine._pinned`` resets the first four per request and ``query()``
+    the routes."""
+
+    def __init__(self):
+        self.as_of = None
+        self.frames = None
+        self.reused: set = set()
+        self.degraded = False
+        self.routes: list = []
 
 
 class Engine:
@@ -163,31 +193,38 @@ class Engine:
         #: cascade_rollup).  Routed onto per query when current + covering;
         #: the ingest-maintained fine rung stays the fallback.
         self.ladder = ladder or {}
-        #: Per-generation serving-frame memo (_generation_frame): the
-        #: points frame, the catalog frame and the fine rollup series
-        #: frame, keyed (frame name, pinned log head, the build's other
-        #: inputs — tag-key tuple / fine retention horizon).  Between two
-        #: commits these frames depend only on the head, so every read
-        #: pinned to one checkpointed generation (query, expression and
-        #: the cached analytics verbs) reuses them instead of re-listing
-        #: the snapshot files and re-collecting the rollup's tag keys.
-        #: Bypassed by unpinned reads; never stores a build that degraded
-        #: to a directory read (NoBaseline) or raised; holds the newest
-        #: generation only.  A read that raises on reused frames evicts
-        #: the generation, rebuilds and retries once
-        #: (_retry_on_fresh_frames).  Guarded by the result-cache lock.
+        #: The one memo of lake-derived state (_memo): slot → (stamp,
+        #: inputs, value), one entry per slot.  The slots are "points",
+        #: "catalog" and "rollup" (the serving frames), "tag_keys" (the
+        #: catalog's tag keys) and one per ladder rung dir (its
+        #: read_rollup_series frame).
+        #:
+        #: * Stamps: the request's pinned log head for the lake slots —
+        #:   between two commits these values depend only on the head,
+        #:   so every read pinned to one generation (query, expression
+        #:   and the cached analytics verbs) reuses them.  Unpinned reads
+        #:   build their frames fresh; "tag_keys" then takes the live log
+        #:   head, so an unchanged log never recomputes the keys and a
+        #:   commit from any writer refreshes them.  A rung's stamp is its
+        #:   marker as_of pin: a rung is immutable per pin, so its frame
+        #:   stays valid across commits until refresh_ladder publishes a
+        #:   new pin.
+        #: * A lookup hits only when stamp and inputs (tag-key tuple,
+        #:   fine retention horizon) both match; a build at an older
+        #:   stamp than the stored one stores nothing.
+        #: * The serving frames are not stored once a read of the request
+        #:   degraded to a directory listing (NoBaseline).
+        #: * A read that raises on reused serving frames evicts them,
+        #:   rebuilds and retries once (_retry_on_fresh_frames); a rung
+        #:   read or build that raced a swap evicts that rung.  _memo's
+        #:   store and _evict are the only writes.
+        #:
+        #: Guarded by the result-cache lock.
         self._frames: dict = {}
-        #: Ladder rungs are memoized apart from _frames: rung_dir →
-        #: (marker as_of_seq, read_rollup_series frame).  A rung is
-        #: immutable per marker pin, not per log head, so its frame stays
-        #: valid across commits; refresh_ladder publishes a NEW as_of pin,
-        #: which misses and replaces the stale frame naturally.
-        self._rung_frames: dict = {}
-        #: (checked_to pin, scanned-to seq, verdict) memo for
+        #: (checked_to pin, scanned-to seq, verdict) state for
         #: _fine_foreign_tail — incremental: each log entry is scanned
         #: at most once per engine lifetime; reset when the pin moves
         self._fine_foreign_memo: tuple | None = None
-        self._tag_keys_cache: list[str] | None = None
         #: Shaped-response cache — the reference's memcached tier, scoped
         #: to a COMMIT-LOG GENERATION: keys are (canonical request JSON,
         #: log head seq at serve time).  Every write path (points, rollup,
@@ -210,35 +247,22 @@ class Engine:
         #: Bounded FIFO; lock-guarded (ThreadingHTTPServer handlers share
         #: the engine).
         self._result_cache: dict = {}
-        import threading
-
         self._result_cache_lock = threading.Lock()
         #: Incremental per-metric generation state (guarded by the cache
         #: lock): (scanned-to seq, {metric: last seq whose points-append
         #: footprint named it}, wildcard floor seq raised by every commit
         #: with no metric footprint).  See _metric_generation.
         self._metric_heads: tuple[int, dict, int] = (0, {}, 0)
-        #: Per-request-thread flag: did any read in the CURRENT query fall
-        #: back to a directory listing?  Thread-local so concurrent
-        #: requests cannot launder each other's degraded reads into the
-        #: cache.
-        self._degraded_reads = threading.local()
-        #: Per-request-thread snapshot pin: when a query computes a cache
-        #: key at head S, its snapshot reads resolve AT S (not the live
-        #: head) — otherwise a write landing mid-query leaks S+1 data
-        #: into an answer cached under S, breaking the pure-function-of-
-        #: (request, generation) invariant.  ``reused`` records whether
-        #: this request was served memoized frames (see _frames);
-        #: ``frames`` holds a query's (points, rollup) serving frames,
-        #: built once and shared by all of its subqueries.
-        self._read_pin = threading.local()
-        #: Per-request-thread routing trace: one entry per served
-        #: subquery — "qsample:<iv>", "ladder:<iv>", or "fine" — so
-        #: operators (and the routing behavioral tests) can see WHICH
-        #: rung class answered without parsing physical plans.  Reset by
-        #: query(); read via last_routes().  Cache hits append
-        #: "cache" (no frame was consulted).
-        self._route_trace = threading.local()
+        #: The one per-request state (_RequestState): the snapshot pin —
+        #: when a query computes a cache key at head S, its snapshot reads
+        #: resolve AT S (not the live head), otherwise a write landing
+        #: mid-query leaks S+1 data into an answer cached under S — plus
+        #: the request's frames, reused memo slots, degraded-reads flag
+        #: (thread-local, so concurrent requests cannot launder each
+        #: other's degraded reads into the cache) and routing trace: one
+        #: "qsample:<iv>", "ladder:<iv>", "fine" or "cache" entry per
+        #: served subquery, read via last_routes().
+        self._read_pin = _RequestState()
         from mycenae_spark.keyspace import KeyspaceManager
 
         self.keyspaces = KeyspaceManager(lake_dir)
@@ -278,7 +302,6 @@ class Engine:
             rollup_dir=self.rollup_dir,
             content_fp=SKIP_CONTENT_FP,
         )
-        self._tag_keys_cache = None  # batch may introduce new tag keys
         return {"success": len(points) - n_bad, "failed": n_bad}
 
     def drain_bus(
@@ -314,28 +337,19 @@ class Engine:
             rollup_dir=self.rollup_dir,
             group=group,
         )
-        try:
-            if not job.awaitTermination(timeout_s):
-                # Timeout with the query STILL RUNNING: returning
-                # normally here would tell the caller the topic is
-                # drained while ingest continues in the background —
-                # and a retry on the same checkpoint would start a
-                # second query against the active one.  Stop the job
-                # and surface the truth; the checkpoint makes the
-                # retry exactly-once.
-                job.stop()
-                raise TimeoutError(
-                    f"drain_bus: topic {topic_dir!r} not drained within "
-                    f"{timeout_s}s; streaming job stopped — retry "
-                    "resumes from the checkpoint"
-                )
-        finally:
-            # Micro-batches that committed BEFORE a timeout already
-            # mutated the lake (each commits independently via the 2PC
-            # sink), so the tag-key cache must drop on EVERY exit path —
-            # a raise that skipped this served stale tag columns against
-            # data the engine had already committed (review finding).
-            self._tag_keys_cache = None
+        if not job.awaitTermination(timeout_s):
+            # Timeout with the query STILL RUNNING: returning normally
+            # here would tell the caller the topic is drained while
+            # ingest continues in the background — and a retry on the
+            # same checkpoint would start a second query against the
+            # active one.  Stop the job and surface the truth; the
+            # checkpoint makes the retry exactly-once.
+            job.stop()
+            raise TimeoutError(
+                f"drain_bus: topic {topic_dir!r} not drained within "
+                f"{timeout_s}s; streaming job stopped — retry resumes "
+                "from the checkpoint"
+            )
 
     # -- query ------------------------------------------------------------
 
@@ -348,23 +362,31 @@ class Engine:
         map per new series).  The catalog is #series-bounded, so this scan
         stays tiny no matter how many points land; scanning the lake's tags
         column per HTTP request would be a full 100 TB read on the hot path.
-        Cached per engine; writers (put / delete_meta) invalidate.
-        """
-        if self._tag_keys_cache is None:
-            from pyspark.errors import AnalysisException
 
-            try:
-                cat = self._read_catalog()
-            except AnalysisException:  # no catalog yet → no tag keys yet
-                return []
-            self._tag_keys_cache = sorted(
+        Memoized in the "tag_keys" slot, stamped by the request's pin or
+        else the live log head: an unchanged log never recomputes the
+        keys, and a commit from any writer (this engine, another engine,
+        a bus drain) refreshes them.  Stored even when the catalog read
+        degraded to a directory listing, as on a lake with no checkpoint,
+        where every catalog read does.
+        """
+        from pyspark.errors import AnalysisException
+
+        from mycenae_spark.streaming import commitlog
+
+        stamp = self._read_pin.as_of
+        if stamp is None:
+            stamp = commitlog.latest_seq(self.lake_dir)
+        try:
+            return self._memo("tag_keys", stamp, (), lambda: sorted(
                 r[0]
-                for r in cat.select(
+                for r in self._read_catalog().select(
                     F.explode(F.map_keys("tags")).alias("k")
                 ).distinct().collect()
                 if r[0] not in ("ksid", "ttl")
-            )
-        return self._tag_keys_cache
+            ))
+        except AnalysisException:  # no catalog yet → no tag keys yet
+            return []
 
     def checkpoint(self) -> int:
         """Enable log-gated reads for this lake (streaming/snapshot.py):
@@ -401,15 +423,11 @@ class Engine:
                 # directory fallback: correct pre-log-gating semantics,
                 # but NOT a pure function of the log generation — mark
                 # the request so the result cache skips it
-                self._degraded_reads.flag = True
+                self._read_pin.degraded = True
                 return self.spark.read.parquet(dir_path)
             except snap.TransientInFlight:
                 time.sleep(0.05)
         return read_snapshot()  # still in-flight after ~1s: surface it
-
-    def _pinned_as_of(self):
-        """The current request's generation pin, if one is active."""
-        return getattr(self._read_pin, "as_of", None)
 
     def _checkpointed_head(self) -> int | None:
         """The commit-log head when a checkpoint exists (reads are then
@@ -423,68 +441,80 @@ class Engine:
 
     @contextlib.contextmanager
     def _pinned(self, head: int | None):
-        """Pin this thread's snapshot reads (and frame memo) to ``head``
-        for the duration of one request, with a fresh degraded-reads
-        flag and no request frames yet."""
-        self._read_pin.as_of = head
-        self._read_pin.reused = False
-        self._read_pin.frames = None
-        self._degraded_reads.flag = False
+        """Pin this thread's snapshot reads (and the memo's lake slots) to
+        ``head`` for the duration of one request, with a fresh
+        degraded-reads flag, no reused slots and no request frames yet."""
+        pin = self._read_pin
+        pin.as_of, pin.frames, pin.reused, pin.degraded = (
+            head, None, set(), False
+        )
         try:
             yield
         finally:
-            self._read_pin.as_of = None
-            self._read_pin.frames = None
+            pin.as_of = pin.frames = None
 
-    def _generation_frame(self, name: str, inputs: tuple, build) -> DataFrame:
-        """``build()``, memoized per pinned generation (see ``_frames``).
-        Stores nothing once any read of this request degraded (the result
-        cache's rule); storing a newer generation drops the older one,
-        and a straggler request at an older head stores nothing."""
-        head = self._pinned_as_of()
-        if head is None:
+    #: The memo's serving-frame slots.  Their frames list snapshot files
+    #: that compaction or TTL may move, so a hit on one is recorded in
+    #: ``_read_pin.reused`` for the evict-and-retry, and a request whose
+    #: reads degraded stores none of them.
+    _SERVING_FRAMES = ("points", "catalog", "rollup")
+
+    def _memo(self, slot: str, stamp, inputs: tuple, build):
+        """``build()``'s value, memoized in ``slot`` of ``_frames``: a hit
+        needs the stored stamp and inputs to equal ``stamp`` and
+        ``inputs``.  A None stamp (an unpinned serving frame) builds fresh
+        and stores nothing.  A build stores nothing when the slot already
+        holds a newer stamp — a straggler request at an older head — nor,
+        for a serving frame, once any read of this request degraded (the
+        result cache's rule)."""
+        if stamp is None:
             return build()
-        key = (name, head, inputs)
+        serving = slot in self._SERVING_FRAMES
         with self._result_cache_lock:
-            hit = self._frames.get(key)
-        if hit is not None:
-            self._read_pin.reused = True
-            return hit
-        frame = build()
-        if not getattr(self._degraded_reads, "flag", False):
+            entry = self._frames.get(slot)
+        if entry is not None and entry[:2] == (stamp, inputs):
+            if serving:
+                self._read_pin.reused.add(slot)
+            return entry[2]
+        value = build()
+        if not (serving and self._read_pin.degraded):
             with self._result_cache_lock:
-                if all(k[1] <= head for k in self._frames):
-                    self._frames = {
-                        k: f for k, f in self._frames.items() if k[1] == head
-                    }
-                    self._frames[key] = frame
-        return frame
+                entry = self._frames.get(slot)
+                if entry is None or entry[0] <= stamp:
+                    self._frames[slot] = (stamp, inputs, value)
+        return value
+
+    def _evict(self, *slots: str) -> None:
+        """Drop ``slots`` from the memo, after a read on their memoized
+        values failed: the evict-and-retry (``_retry_on_fresh_frames``),
+        a rung read that raced a swap (``_run_subquery``) and a rung
+        build that did (``_walk_rungs``)."""
+        with self._result_cache_lock:
+            for slot in slots:
+                self._frames.pop(slot, None)
 
     def _retry_on_fresh_frames(self, head: int | None, compute):
         """``compute()`` for one pinned request, retried at most once.
 
         A failure re-raises unless this request was served memoized
-        frames: compaction or TTL may have moved a file such a frame
-        lists into ``_retained/<seq>``.  Then generation ``head``'s memo
-        entries and the request's own frames are dropped, and
-        ``compute()`` runs again on frames rebuilt from a fresh snapshot
-        read, which finds the file there.  When nothing fails the frames
-        are built once, as ``compute`` asks for them."""
+        serving frames: compaction or TTL may have moved a file such a
+        frame lists into ``_retained/<seq>``.  Then exactly the reused
+        slots and the request's own frames are dropped, and ``compute()``
+        runs again on frames rebuilt from a fresh snapshot read, which
+        finds the file there.  When nothing fails the frames are built
+        once, as ``compute`` asks for them."""
         try:
             return compute()
         except Exception:
-            if not getattr(self._read_pin, "reused", False):
+            pin = self._read_pin
+            if not pin.reused:
                 raise
-            self._read_pin.reused = False
-            self._read_pin.frames = None
             logger.warning(
                 "read on memoized frames at generation %s failed; "
                 "rebuilding them and retrying once", head, exc_info=True,
             )
-            with self._result_cache_lock:
-                self._frames = {
-                    k: f for k, f in self._frames.items() if k[1] != head
-                }
+            self._evict(*pin.reused)
+            pin.reused, pin.frames = set(), None
             return compute()
 
     def _read_lake(self) -> DataFrame:
@@ -494,7 +524,7 @@ class Engine:
 
         return self._snapshot_or_dir(
             lambda: snap.read_points_snapshot(
-                self.spark, self.lake_dir, as_of=self._pinned_as_of()
+                self.spark, self.lake_dir, as_of=self._read_pin.as_of
             ),
             self.lake_dir,
         )
@@ -504,28 +534,24 @@ class Engine:
         memoized per pinned generation."""
         from mycenae_spark.streaming import snapshot as snap
 
-        return self._generation_frame("catalog", (), lambda: (
-            self._snapshot_or_dir(
-                lambda: snap.read_catalog_snapshot(
-                    self.spark, self.lake_dir, self.catalog_dir,
-                    as_of=self._pinned_as_of(),
-                ),
-                self.catalog_dir,
-            )
+        pin = self._read_pin.as_of
+        return self._memo("catalog", pin, (), lambda: self._snapshot_or_dir(
+            lambda: snap.read_catalog_snapshot(
+                self.spark, self.lake_dir, self.catalog_dir, as_of=pin,
+            ),
+            self.catalog_dir,
         ))
 
     def _points(self) -> DataFrame:
         keys = tuple(self._tag_keys())
-
-        def build() -> DataFrame:
-            return self._read_lake().select(
+        return self._memo("points", self._read_pin.as_of, keys, lambda: (
+            self._read_lake().select(
                 "metric",
                 F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
                 "value",
-                *[F.col("tags").getItem(k).alias(f"tag_{k}") for k in keys],
+                *_tag_columns(keys),
             )
-
-        return self._generation_frame("points", keys, build)
+        ))
 
     def query(self, body: dict) -> list:
         now_ms = int(time.time() * 1000)
@@ -534,7 +560,7 @@ class Engine:
             body.get("end"), int
         ):
             head = self._checkpointed_head()
-        self._route_trace.routes = []
+        self._read_pin.routes = []
         # Pin this request's snapshot reads to the generation its cache
         # keys are derived from: a write landing mid-query must not leak
         # newer-generation data into an answer cached under an older key.
@@ -542,16 +568,14 @@ class Engine:
             return self._query_subqueries(body, now_ms, head)
 
     def _note_route(self, route: str) -> None:
-        routes = getattr(self._route_trace, "routes", None)
-        if routes is not None:
-            routes.append(route)
+        self._read_pin.routes.append(route)
         logger.debug("subquery served from %s", route)
 
     def last_routes(self) -> list[str]:
         """Routing trace of this thread's most recent query() — one
         "qsample:<iv>" / "ladder:<iv>" / "fine" / "cache" entry per
         subquery, in order."""
-        return list(getattr(self._route_trace, "routes", []))
+        return list(self._read_pin.routes)
 
     @staticmethod
     def _canonical_subquery(q) -> str:
@@ -671,7 +695,7 @@ class Engine:
         stored for key None or once any read of this request degraded to
         a directory fallback (such an answer is not a pure function of
         the generation).  Bounded FIFO: past 256 entries the oldest goes."""
-        if key is None or getattr(self._degraded_reads, "flag", False):
+        if key is None or self._read_pin.degraded:
             return
         with self._result_cache_lock:
             self._result_cache[key] = copy.deepcopy(value)
@@ -689,7 +713,7 @@ class Engine:
         covers the lake.  ``head`` (the request's already-read log head,
         when log-gated) saves the foreign-tail gate a redundant
         commit-log listing."""
-        frames = getattr(self._read_pin, "frames", None)
+        frames = self._read_pin.frames
         if frames is not None:
             return frames
         pts = self._points()
@@ -720,15 +744,16 @@ class Engine:
                 # _guard_fine_retention — the library default (refuse)
                 # would brick construction over a legally pruned lake.
                 # The horizon the clamp reads is part of the memo key.
-                rollup = self._generation_frame(
-                    "rollup",
+                pin = self._read_pin.as_of
+                rollup = self._memo(
+                    "rollup", pin,
                     (sketch_retained_from(self.rollup_dir),),
                     lambda: read_rollup_series(
                         self.spark, self.rollup_dir,
                         df=self._snapshot_or_dir(
                             lambda: snap.read_rollup_snapshot(
                                 self.spark, self.lake_dir, self.rollup_dir,
-                                as_of=self._pinned_as_of(),
+                                as_of=pin,
                             ),
                             self.rollup_dir,
                         ),
@@ -810,10 +835,7 @@ class Engine:
                         getattr(q, "downsample", None),
                         exc_info=True,
                     )
-                self._rung_frames = {
-                    d: c for d, c in self._rung_frames.items()
-                    if c[1] is not r
-                }
+                self._evict(self.ladder[r_iv])
         # the fine path is always correct, but fine partials pruned below
         # the retention horizon must refuse rather than under-read (r18
         # ADVICE: no guard without a fine frame, where raw points serve)
@@ -929,21 +951,19 @@ class Engine:
         falls through to the fine rung or points.  Cascades are immutable
         once built (atomic rename), so a plain directory read is safe
         here; staleness is the commit-log check, not file watching.  A
-        rung's frame is memoized in ``_rung_frames`` per marker pin."""
+        rung's frame is memoized in its own slot of ``_frames``, stamped
+        by the rung's marker pin."""
         if not self.ladder or fine_rollup is None or not q.downsample:
             return fine_rollup, 60_000
         from mycenae_spark.plans.tsdb import rollup_routable
         from mycenae_spark.streaming.rollup import read_rollup_series
 
-        def frame(rung_dir, pin, _interval_ms):
-            cached = self._rung_frames.get(rung_dir)
-            if cached is None or cached[0] != pin:
-                cached = (pin, read_rollup_series(self.spark, rung_dir))
-                self._rung_frames[rung_dir] = cached
-            return cached[1]
-
         picked = self._walk_rungs(
-            q, self.ladder, "ladder", rollup_routable, frame
+            q, self.ladder, "ladder", rollup_routable,
+            lambda rung_dir, pin, _iv: self._memo(
+                rung_dir, pin, (),
+                lambda: read_rollup_series(self.spark, rung_dir),
+            ),
         )
         return picked or (fine_rollup, 60_000)
 
@@ -1031,7 +1051,7 @@ class Engine:
             ):
                 continue
             pin = _read_marker_as_of(rung_dir) or -1
-            head = self._pinned_as_of()
+            head = self._read_pin.as_of
             if head is not None and pin > head:
                 continue
             try:
@@ -1049,7 +1069,7 @@ class Engine:
                     "rung" if kind == "ladder" else kind, rung_dir,
                     exc_info=True,
                 )
-                self._rung_frames.pop(rung_dir, None)
+                self._evict(rung_dir)
         return None
 
     def _qsample_points(self, rung_dir: str, pct: float, interval_ms: int):
@@ -1061,7 +1081,7 @@ class Engine:
         bit-for-bit), then join each series' tags from the CATALOG
         (#series-bounded broadcast — the sketch lake itself stays
         tag-free) and expand them to ``tag_<k>`` columns at the bucket
-        timestamp.  All lazy: no collect beyond the cached tag-key
+        timestamp.  All lazy: no collect beyond the memoized tag-key
         discovery the ordinary points path already does."""
         from pyspark.sql.functions import broadcast
 
@@ -1077,12 +1097,11 @@ class Engine:
         cat = self._read_catalog().select("tsid", "tags").dropDuplicates(
             ["tsid"]
         )
-        keys = self._tag_keys()
         return qq.join(broadcast(cat), "tsid").select(
             "metric",
             (F.col("bucket_ms") * 1000).alias("ts_us"),
             "value",
-            *[F.col("tags").getItem(k).alias(f"tag_{k}") for k in keys],
+            *_tag_columns(self._tag_keys()),
         )
 
     def query_expression(self, exp: str) -> list:
@@ -1538,7 +1557,7 @@ class Engine:
         p = self._points()
         if metric is not None:
             p = p.filter(F.col("metric") == metric)
-        keys = ["metric"] + [f"tag_{k}" for k in self._tag_keys()]
+        keys = ["metric"] + [c for c in p.columns if c.startswith("tag_")]
         agg = self._series_page(aggregate(p, keys), keys, body, limit)
         return [
             {
@@ -1638,11 +1657,9 @@ class Engine:
 
         # The stored catalog carries a tags MAP column; expand it to the
         # per-tag-column form catalog.suggest expects (any tag schema),
-        # sharing the cached _tag_keys source of truth.
-        cat = self._read_catalog()
-        cat = cat.select(
-            "metric",
-            *[F.col("tags").getItem(k).alias(f"tag_{k}") for k in self._tag_keys()],
+        # sharing the memoized _tag_keys source of truth.
+        cat = self._read_catalog().select(
+            "metric", *_tag_columns(self._tag_keys())
         )
         return [
             r[0] for r in suggest(cat, kind, prefix, limit, tagk=tagk).collect()
@@ -1724,7 +1741,6 @@ class Engine:
             # CAS and the rename (see maintenance.swap_catalog_dir); the
             # superseded generation is retained for pinned snapshot readers
             swap_catalog_dir(self.catalog_dir, tmp, snapshot, retain_seq=seq)
-            self._tag_keys_cache = None
             return {"deleted": n_before - n_after, "remaining": n_after}
         raise RuntimeError(
             "catalog rewrite lost the commit-log race 5 times in a row"
@@ -1842,11 +1858,14 @@ class Engine:
         # asset has a null signature but is NOT undecodable (review
         # finding: the two classes were conflated in a client counter).
         evid = "n_samples" if family == "afp" else "width"
+        # One collect of the (id, signature, decode evidence) profile —
+        # bounded by MAX_MEDIA_ITEMS rows — feeds both counters and the
+        # signature groups.
         prof = sig_fn(media, max_batch_bytes=1 << 20).select(
             "media_id", F.col(family).alias("sig"), F.col(evid).alias("_ev")
-        ).localCheckpoint(eager=True)
-        n_undecodable = prof.filter(F.col("_ev").isNull()).count()
-        n_no_signature = prof.filter(F.col("sig").isNull()).count()
+        ).collect()
+        n_undecodable = sum(r["_ev"] is None for r in prof)
+        n_no_signature = sum(r["sig"] is None for r in prof)
         # Exact-duplicate signatures are grouped DRIVER-SIDE as cliques
         # (Hamming 0 by definition), and only DISTINCT signatures enter
         # the banding stage — a batch of 600 copies of one image is one
@@ -1856,10 +1875,10 @@ class Engine:
         # signatures share a segment value (adversarial batches); when it
         # does, n_capped_buckets > 0 tells the client the answer is a
         # subset instead of pretending completeness.
-        sig_rows = prof.filter(F.col("sig").isNotNull()).collect()
         by_sig: dict = {}
-        for r in sig_rows:
-            by_sig.setdefault(r["sig"], []).append(r["media_id"])
+        for r in prof:
+            if r["sig"] is not None:
+                by_sig.setdefault(r["sig"], []).append(r["media_id"])
         distinct = self.spark.createDataFrame(
             [(min(ms), s) for s, ms in by_sig.items()],
             "media_id long, sig long",
@@ -2657,6 +2676,6 @@ def serve(
                           chain_dir=chain_dir)},
     )
     httpd = ThreadingHTTPServer(("127.0.0.1", port), handler)
-    thread = Thread(target=httpd.serve_forever, daemon=True)
+    thread = threading.Thread(target=httpd.serve_forever, daemon=True)
     thread.start()
     return httpd, thread

@@ -35,7 +35,8 @@ SF_DIR = os.environ.get("MYCENAE_TEST_SF_DIR", "/root/testdata/sf0.001")
 # The cheapest oracle id of each lifecycle family stays in the default gate
 # so a break in the family still fails it: bus_ingest_roundtrip (bus),
 # ann_ivfpq_recall_drift (pq index), stream_text_assimilate_roundtrip
-# (stream assimilation), ~10 s each.
+# (stream assimilation), ~10 s each; the media family's is the served
+# test_server.py::test_media_dups_endpoint (~18 s).
 SLOW_TESTS = frozenset({
     "tests/test_bus.py::test_bus_engine_crash_replay_no_dupes",
     "tests/test_bus.py::test_start_bus_ingest_end_to_end",
@@ -81,7 +82,6 @@ SLOW_TESTS = frozenset({
     "tests/test_rate_properties.py::test_kmv_cascade_equals_direct_sketch",
     "tests/test_rate_properties.py::test_qsample_cascade_equals_direct_sample",
     "tests/test_server.py::test_funnel_attribution_cursor_pagination",
-    "tests/test_server.py::test_media_dups_endpoint",
     "tests/test_stream_assimilate.py::test_ann_bridge_matches_batch_lifecycle",
     "tests/test_stream_assimilate.py::test_bridge_all_dup_day_replay_idempotent",
     "tests/test_stream_assimilate.py::test_bridge_checkpoint_restart",

@@ -449,7 +449,7 @@ def test_engine_refuses_fine_grain_below_retention(spark, tmp_path_factory):
 
     from mycenae_spark.streaming.rollup import cascade_rollup, _swap_in
 
-    assert eng._rung_frames  # the rung frame is memoized
+    assert rung1h in eng._frames  # the rung frame is memoized
     marker = (Path(rung1h) / "_coverage_complete").read_bytes()
     tmp = rung1h + f"_new_{_uuid.uuid4().hex[:8]}"
     cascade_rollup(spark, roll, tmp, 3_600_000, lake_dir=lake,
@@ -559,7 +559,7 @@ def test_engine_ladder_swap_race_retries_on_fine_path(spark, tmp_path_factory):
     }
     out = eng.query(body)  # memoizes the rung frame; serves from the rung
     want = {k: pytest.approx(v) for k, v in out[0]["dps"].items()}
-    assert eng._rung_frames  # routed + memoized
+    assert rung1h in eng._frames  # routed + memoized
 
     # the swap: old rung data vanishes; the marker survives so the
     # coverage/currency checks still pass (checks-then-read race window)
@@ -573,7 +573,7 @@ def test_engine_ladder_swap_race_retries_on_fine_path(spark, tmp_path_factory):
     eng._result_cache.clear()
     out2 = eng.query(body)  # must retry on the fine rollup path
     assert {k: v for k, v in out2[0]["dps"].items()} == want
-    assert not eng._rung_frames  # the stale memoized frame was dropped
+    assert rung1h not in eng._frames  # the stale memoized frame was dropped
 
 
 def test_query_result_cache_generation_scoped(spark, tmp_path_factory,
@@ -876,7 +876,7 @@ def test_frame_memo_reused_across_requests_at_one_generation(
     gaps = eng.query_gaps({"metric": "fm.m"})
     assert sorted(r["n_points"] for r in gaps) == [5, 5]
     assert (len(points), len(series)) == (1, 1)
-    assert {k[0] for k in eng._frames} == {"points", "catalog", "rollup"}
+    assert set(eng._frames) == {"points", "catalog", "rollup", "tag_keys"}
 
 
 def test_frame_memo_rebuilds_on_generation_advance(spark, tmp_path_factory):
@@ -899,7 +899,7 @@ def test_frame_memo_rebuilds_on_generation_advance(spark, tmp_path_factory):
     }
     eng.query(body)
     head_s = cl.latest_seq(lake)
-    assert {k[1] for k in eng._frames} == {head_s}
+    assert {stamp for stamp, _in, _v in eng._frames.values()} == {head_s}
 
     eng.put([{"metric": "fg.m", "tags": {"ksid": "k1", "host": "h0"},
               "timestamp": BASE_TS + 1, "value": 100.0}])
@@ -907,7 +907,7 @@ def test_frame_memo_rebuilds_on_generation_advance(spark, tmp_path_factory):
     assert sum(out[0]["dps"].values()) == pytest.approx(103.0)
     head_s2 = cl.latest_seq(lake)
     assert head_s2 > head_s
-    assert {k[1] for k in eng._frames} == {head_s2}
+    assert {stamp for stamp, _in, _v in eng._frames.values()} == {head_s2}
 
 
 def test_degraded_frame_build_never_memoizes(spark, tmp_path_factory,
@@ -935,7 +935,9 @@ def test_degraded_frame_build_never_memoizes(spark, tmp_path_factory,
         "queries": [{"metric": "fd.m", "aggregator": "sum"}],
     })
     assert sum(out[0]["dps"].values()) == pytest.approx(3.0)
-    assert not eng._frames
+    # only the tag keys are kept: they are column names, stored from a
+    # directory read too, as on a lake with no checkpoint
+    assert set(eng._frames) == {"tag_keys"}
 
 
 def test_frame_memo_survives_files_moved_by_compaction(
@@ -974,16 +976,50 @@ def test_frame_memo_survives_files_moved_by_compaction(
     eng._result_cache.clear()
     out = eng.query(body)
     assert sum(out[0]["dps"].values()) == pytest.approx(3.0)
-    points_key = next(k for k in memoized if k[0] == "points")
-    assert eng._frames[points_key] is not memoized[points_key]  # rebuilt
+    assert eng._frames["points"][2] is not memoized["points"][2]  # rebuilt
+
+
+def test_memo_keeps_newest_stamp_under_concurrent_builds(tmp_path):
+    """Sixteen threads build one memo slot at interleaved stamps: every
+    call gets the value for its own stamp, and once it returns the slot
+    holds that stamp or a newer one — a straggler's older build never
+    replaces a newer one (a check-then-store outside the lock would)."""
+    import sys
+    import threading
+
+    from mycenae_spark.server import Engine
+
+    eng = Engine(None, str(tmp_path / "lake"), str(tmp_path / "catalog"))
+    wrong = []
+
+    def worker(i):
+        for stamp in range(i, 4000, 16):
+            got = eng._memo("tag_keys", stamp, (), lambda: ["k", stamp])
+            if got != ["k", stamp] or eng._frames["tag_keys"][0] < stamp:
+                wrong.append((stamp, got))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,))
+                   for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not wrong
+    assert eng._frames["tag_keys"][0] == 3999
 
 
 def test_tag_key_discovery_reads_catalog_not_lake(spark, tmp_path_factory):
     """_points()/suggest tag-key discovery must come from the #series-bounded
     catalog, never a full scan of the point lake's tags column (a per-request
     100 TB read at scale).  Proven behaviorally: a tag key present only in
-    lake rows (never cataloged) is invisible, and the key set is cached until
-    a writer invalidates it."""
+    lake rows (never cataloged) is invisible, and the key set is memoized
+    until a commit advances the log head."""
     import pyspark.sql.functions as F
 
     from mycenae_spark.server import Engine
@@ -1005,19 +1041,53 @@ def test_tag_key_discovery_reads_catalog_not_lake(spark, tmp_path_factory):
     )
     rogue.write.mode("append").partitionBy("ksid", "date").parquet(lake)
 
-    eng._tag_keys_cache = None
+    eng._evict("tag_keys")
     assert eng._tag_keys() == ["host"]
     assert [c for c in eng._points().columns if c.startswith("tag_")] == ["tag_host"]
 
-    # cached: poisoning the cache proves later reads don't recompute…
-    eng._tag_keys_cache = ["sentinel"]
+    # memoized: poisoning the memo entry proves later reads don't
+    # recompute…
+    stamp, inputs, _keys = eng._frames["tag_keys"]
+    eng._frames["tag_keys"] = (stamp, inputs, ["sentinel"])
     assert eng._tag_keys() == ["sentinel"]
-    # …and a write invalidates, picking up genuinely new cataloged keys
+    # …and a write advances the log head, picking up genuinely new
+    # cataloged keys
     eng.put([
         {"metric": "m.b", "tags": {"ksid": "k1", "dc": "eu"},
          "timestamp": BASE_TS, "value": 2.0},
     ])
     assert eng._tag_keys() == ["dc", "host"]
+
+
+def test_tag_key_committed_by_another_writer_is_queryable(
+    spark, tmp_path_factory
+):
+    """Two engines share one lake.  A tag key that engine B commits is
+    queryable through engine A at the next generation, with no restart
+    and no write of A's own: the tag keys are stamped by the log head,
+    so a commit from any writer refreshes them."""
+    from mycenae_spark.server import Engine
+
+    d = tmp_path_factory.mktemp("twowriters")
+    lake, catalog = str(d / "lake"), str(d / "catalog")
+    a, b = Engine(spark, lake, catalog), Engine(spark, lake, catalog)
+    a.put([{"metric": "m.a", "tags": {"ksid": "k1", "host": "h0"},
+            "timestamp": BASE_TS, "value": 1.0}])
+    a.checkpoint()
+    span = {"start": BASE_TS, "end": BASE_TS + 600_000}
+    out = a.query({**span, "queries": [{"metric": "m.a",
+                                        "aggregator": "sum"}]})
+    assert sum(out[0]["dps"].values()) == pytest.approx(1.0)
+
+    b.put([{"metric": "m.b", "tags": {"ksid": "k1", "dc": dc},
+            "timestamp": BASE_TS, "value": v}
+           for dc, v in (("eu", 2.0), ("us", 3.0))])
+    eu = {**span, "queries": [{
+        "metric": "m.b", "aggregator": "sum",
+        "filters": [{"tagk": "dc", "type": "literal_or", "filter": "eu"}],
+    }]}
+    assert sum(b.query(eu)[0]["dps"].values()) == pytest.approx(2.0)
+    assert sum(a.query(eu)[0]["dps"].values()) == pytest.approx(2.0)
 
 
 def test_engine_log_gated_reads_after_checkpoint(spark, tmp_path_factory):
@@ -2260,6 +2330,11 @@ _ROUTE_CONTRACT = [
     ("POST", "/keysets/k1/api/query",
      {"start": BASE_TS, "end": BASE_TS + 60_000,
       "queries": [{"metric": "cpu.usage", "aggregator": "sum"}]}, 200),
+    # the legacy OpenTSDB ``tags`` map is refused, never silently dropped
+    ("POST", "/keysets/legacy_tags/api/query",
+     {"start": BASE_TS, "end": BASE_TS + 60_000,
+      "queries": [{"metric": "route.contract", "aggregator": "sum",
+                   "tags": {"ksid": "k1"}}]}, 400),
     ("GET", f"/keysets/k1/api/query/expression?exp={_EXPRESSION}", None, 200),
     ("POST", "/keysets/k1/api/query/funnel", {}, 400),
     ("POST", "/keysets/k1/api/query/retention", {"user_tag": "nope"}, 400),

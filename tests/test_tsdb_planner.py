@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from mycenae_spark.api import parse_query_request, shape_response
 from mycenae_spark.plans.tsdb import TsdbQuery, plan
@@ -192,3 +193,16 @@ def test_multi_subquery_request(spark):
     assert payloads[0][0]["metric"] == "click"
     assert payloads[1][0]["metric"] == "error"
     assert all(v > 100 for v in payloads[1][0]["dps"].values())
+
+
+def test_legacy_subquery_tags_fail_closed():
+    """A sub-query's legacy ``tags`` map raises a ValueError naming
+    ``filters`` instead of being dropped (which would answer the
+    unfiltered series); an empty map is no constraint and parses."""
+    body = {"start": 0, "end": 60_000,
+            "queries": [{"metric": "m", "tags": {"dc": "eu"}}]}
+    with pytest.raises(ValueError, match="'filters'"):
+        parse_query_request(body, 60_000)
+    body["queries"][0]["tags"] = {}
+    (q,) = parse_query_request(body, 60_000)
+    assert q.filters == []
