@@ -151,6 +151,12 @@ def prepare_points(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
     return valid, invalid
 
 
+#: The manifest sections holding lake data: points, then the derived
+#: families (rollup partials, KMV and value-sample states) in
+#: ``write_points_batch``'s write order.
+_DATA_SECTIONS = ("points", "rollup", "kmv", "qsample")
+
+
 def _staged_metric_footprint(points_root: str, cap: int = 65) -> list[str]:
     """Distinct metrics of a staged batch, read DRIVER-SIDE from the
     already-written staged point files (column-pruned Arrow scan — the
@@ -240,8 +246,23 @@ def write_points_batch(
             return True
         return all(e.endswith(".lock") for e in entries)
 
-    for _deriv_dir in (rollup_dir, kmv_dir, qsample_dir):
-        if _deriv_dir is not None and _unwritten(_deriv_dir):
+    from mycenae_spark.streaming.rollup import (
+        write_kmv_batch,
+        write_qsample_batch,
+        write_rollup_batch,
+    )
+
+    #: (manifest section, derived dir, batch writer) — the derived-lake
+    #: families that stage and commit under the batch's manifest
+    families = [
+        (sec, d, w) for sec, d, w in (
+            ("rollup", rollup_dir, write_rollup_batch),
+            ("kmv", kmv_dir, write_kmv_batch),
+            ("qsample", qsample_dir, write_qsample_batch),
+        ) if d is not None
+    ]
+    for _sec, _deriv_dir, _writer in families:
+        if _unwritten(_deriv_dir):
             # First derived-lake write: coverage is complete only if the
             # lake holds no pre-existing points (otherwise their buckets
             # are missing and routed queries would silently under-report —
@@ -322,10 +343,9 @@ def write_points_batch(
                 {
                     "kind": "points-append",
                     "batch_id": str(batch_id),
-                    "n_files": len(manifest.get("points", ()))
-                    + len(manifest.get("rollup", ()))
-                    + len(manifest.get("kmv", ()))
-                    + len(manifest.get("qsample", ())),
+                    "n_files": sum(
+                        len(manifest.get(s, ())) for s in _DATA_SECTIONS
+                    ),
                     # Distinct metrics this batch touched (None = unknown/
                     # too many = treat as touching everything): the
                     # per-subquery result cache derives per-metric
@@ -348,12 +368,11 @@ def write_points_batch(
                     # just as foreign to this bridge's fine lakes as one
                     # maintaining none (r19 review).
                     "sections": [
-                        s for s in ("points", "rollup", "kmv", "qsample")
-                        if manifest.get(s)
+                        s for s in _DATA_SECTIONS if manifest.get(s)
                     ],
                     "roots": {
                         s: manifest.get("roots", {}).get(s)
-                        for s in ("rollup", "kmv", "qsample")
+                        for s in _DATA_SECTIONS[1:]
                         if manifest.get(s)
                     },
                 },
@@ -450,29 +469,12 @@ def write_points_batch(
                 .partitionBy("ksid", "date")
                 .parquet(points_out)
             )
-            if rollup_dir is not None:
-                from mycenae_spark.streaming.rollup import write_rollup_batch
-
-                rollup_out = (
-                    rollup_dir if staging is None else os.path.join(staging, "rollup")
+            for sec, deriv_dir, writer in families:
+                writer(
+                    valid,
+                    deriv_dir if staging is None else os.path.join(staging, sec),
+                    rollup_interval_ms,
                 )
-                write_rollup_batch(valid, rollup_out, rollup_interval_ms)
-            if kmv_dir is not None:
-                from mycenae_spark.streaming.rollup import write_kmv_batch
-
-                kmv_out = (
-                    kmv_dir if staging is None else os.path.join(staging, "kmv")
-                )
-                write_kmv_batch(valid, kmv_out, rollup_interval_ms)
-            if qsample_dir is not None:
-                from mycenae_spark.streaming.rollup import write_qsample_batch
-
-                qs_out = (
-                    qsample_dir
-                    if staging is None
-                    else os.path.join(staging, "qsample")
-                )
-                write_qsample_batch(valid, qs_out, rollup_interval_ms)
             if marker is None:
                 _new_series().write.mode("append").parquet(catalog_dir)
             else:
@@ -512,17 +514,9 @@ def write_points_batch(
                     # replay detect a batch-id collision with different
                     # content (see the replay branch above)
                     manifest["content_fp"] = content_fp
-                if rollup_dir is not None:
-                    manifest["roots"]["rollup"] = os.path.abspath(rollup_dir)
-                    manifest["rollup"] = _staged_files(os.path.join(staging, "rollup"))
-                if kmv_dir is not None:
-                    manifest["roots"]["kmv"] = os.path.abspath(kmv_dir)
-                    manifest["kmv"] = _staged_files(os.path.join(staging, "kmv"))
-                if qsample_dir is not None:
-                    manifest["roots"]["qsample"] = os.path.abspath(qsample_dir)
-                    manifest["qsample"] = _staged_files(
-                        os.path.join(staging, "qsample")
-                    )
+                for sec, deriv_dir, _writer in families:
+                    manifest["roots"][sec] = os.path.abspath(deriv_dir)
+                    manifest[sec] = _staged_files(os.path.join(staging, sec))
                 tmp = marker + ".tmp"
                 with open(tmp, "w") as f:
                     _json.dump(manifest, f)

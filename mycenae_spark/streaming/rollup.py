@@ -57,11 +57,28 @@ def _hist_bin(value, bins: int, lo: float, hi: float):
     return F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1))
 
 
+def _hist_map(
+    binned: DataFrame, keys: list[str], bin_col: str, n, n_col: str
+) -> DataFrame:
+    """THE one ``p_hist`` builder (batch and cascade): aggregate ``n``
+    per (``keys``, bin), then collect the bin-sorted MAP<bin, count> per
+    ``keys``."""
+    return (
+        binned.groupBy(*keys, bin_col)
+        .agg(n.alias(n_col))
+        .groupBy(*keys)
+        .agg(
+            F.map_from_entries(
+                F.array_sort(F.collect_list(F.struct(bin_col, n_col)))
+            ).alias("p_hist")
+        )
+    )
+
+
 def rollup_batch(
     valid: DataFrame,
     interval_ms: int,
     series_cols: list[str] | None = None,
-    hist: bool = True,
     hist_bins: int = HIST_BINS,
     hist_lo: float = HIST_LO,
     hist_hi: float = HIST_HI,
@@ -71,7 +88,7 @@ def rollup_batch(
     ``valid`` is the prepared point frame (streaming/ingest.py schema with
     ``tsid``/``ksid``/``ts``/``value``/``date``).
 
-    With ``hist``, each partial also carries ``p_hist`` — a MAP<bin, count>
+    Each partial also carries ``p_hist`` — a MAP<bin, count>
     fixed-grid histogram (Prometheus-style).  Histograms merge by summing
     counts, which makes approximate percentiles mergeable across batches
     and series where exact sort-based percentiles are not; the error is
@@ -91,22 +108,14 @@ def rollup_batch(
         # carried (not grouped: MapType can't be a grouping key) so the
         # query-time rollup router can apply tag filters without the lake.
         aggs.append(F.first("tags").alias("tags"))
+    keys = [*series_cols, "date", "bucket_ms"]
     base = valid.withColumn("bucket_ms", bucket_ms_long(ts_us, interval_ms))
-    out = base.groupBy(*series_cols, "date", "bucket_ms").agg(*aggs)
-    if not hist:
-        return out
-    hist_df = (
-        base.withColumn("_bin", _hist_bin(F.col("value"), hist_bins, hist_lo, hist_hi))
-        .groupBy(*series_cols, "date", "bucket_ms", "_bin")
-        .agg(F.count("value").alias("_n"))
-        .groupBy(*series_cols, "date", "bucket_ms")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("_bin", "_n")))
-            ).alias("p_hist")
-        )
+    out = base.groupBy(*keys).agg(*aggs)
+    hist_df = _hist_map(
+        base.withColumn("_bin", _hist_bin(F.col("value"), hist_bins, hist_lo, hist_hi)),
+        keys, "_bin", F.count("value"), "_n",
     )
-    return out.join(hist_df, [*series_cols, "date", "bucket_ms"])
+    return out.join(hist_df, keys)
 
 
 def write_rollup_batch(
@@ -401,7 +410,7 @@ def prune_sketch_lake(
     rungs; a query needing the fine grain below the horizon refuses
     loudly (server.Engine) or falls to raw points where servable; rung
     REBUILDS carry the pre-horizon span over from the previous rung
-    generation (``refresh_ladder`` / ``refresh_sketch_ladder``).  Late
+    generation (``refresh_ladder``, every family).  Late
     points below the horizon are outside the data contract, exactly as
     ``apply_ttl`` declares for expired partitions.
 
@@ -1020,6 +1029,82 @@ def _carry_pruned_span(
     ).unionByName(old)
 
 
+def _cascade(
+    spark,
+    src_dir: str,
+    dst_dir: str,
+    dst_interval_ms: int,
+    series_cols: list[str] | None,
+    lake_dir: str | None,
+    merge,
+    kind: str,
+    what: str,
+    pinless,
+    carry_dir: str | None,
+    carry_below_ms: int,
+) -> None:
+    """THE one rung-cascade lifecycle, shared by the algebraic, KMV and
+    value-sample families: pin, re-bucket, ``merge`` on the coarse grid
+    (``date`` stays in the group key), carry a pruned source's span
+    (:func:`_carry_pruned_span`), write ``<dst>_new_<hex>``, mark it,
+    then publish by :func:`_swap_in`.
+
+    With ``lake_dir`` the marker pins ``min(head, source pin)`` — a
+    cascade is only as fresh as its input.  A source without a pin is
+    the family's ``pinless(src_marker, head)`` rule to settle or
+    refuse.  Coverage is inherited from the source marker, so a rung
+    never claims more than its source proves; the marker lands in the
+    new generation BEFORE the swap (a published rung always has
+    one)."""
+    import uuid
+
+    from mycenae_spark.streaming import commitlog
+
+    as_of_seq = None
+    if lake_dir is not None:
+        as_of_seq = commitlog.latest_seq(lake_dir)
+        src_marker = _read_marker(src_dir)
+        src_as_of = src_marker.get("as_of_seq")
+        if src_as_of is not None:
+            as_of_seq = min(as_of_seq, src_as_of)
+        else:
+            pinless(src_marker, as_of_seq)
+    series_cols = series_cols or ["ksid", "tsid", "metric"]
+    df = _rebucket(spark.read.parquet(src_dir), dst_interval_ms)
+    merged = _carry_pruned_span(
+        spark, merge(df, [*series_cols, "date", "bucket_ms"]), carry_dir,
+        carry_below_ms, what, dst_interval_ms,
+    )
+    tmp = dst_dir.rstrip("/") + f"_new_{uuid.uuid4().hex[:8]}"
+    merged.write.mode("overwrite").partitionBy("ksid", "date").parquet(tmp)
+    mark_rollup_coverage(
+        tmp, rollup_coverage_complete(src_dir), as_of_seq=as_of_seq,
+        kind=kind,
+    )
+    _swap_in(tmp, dst_dir)
+
+
+def _merge_partials(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The algebraic merge rule: sum/count sum, min/max extremum,
+    histogram bins sum (:func:`_hist_map`)."""
+    aggs = [
+        F.sum("p_sum").alias("p_sum"),
+        F.sum("p_count").alias("p_count"),
+        F.min("p_min").alias("p_min"),
+        F.max("p_max").alias("p_max"),
+    ]
+    if "tags" in df.columns:
+        aggs.append(F.first("tags").alias("tags"))
+    merged = df.groupBy(*keys).agg(*aggs)
+    if "p_hist" in df.columns:
+        hist = _hist_map(
+            df.select(*keys, F.explode("p_hist").alias("bin", "n")),
+            keys, "bin", F.sum("n"), "n",
+        )
+        merged = merged.join(hist, keys)
+    return merged
+
+
 def cascade_rollup(
     spark,
     src_dir: str,
@@ -1048,9 +1133,9 @@ def cascade_rollup(
     bucket makes that invisible (the same property that makes micro-batch
     bucket splits safe).
 
-    Atomic publish: write to a temp dir, rename into place (the rung
-    either exists completely or not at all); coverage is inherited from
-    the source rung's marker.
+    Publish, marker and pin are the shared lifecycle (:func:`_cascade`):
+    the rung either exists completely, with its marker, or not at all;
+    coverage is inherited from the source rung's marker.
 
     With ``lake_dir``, the rung's marker also pins the lake's commit-log
     head at build time (``as_of_seq``): `cascade_is_current` then detects
@@ -1069,20 +1154,11 @@ def cascade_rollup(
       partials can be mid-move while this build lists the directory —
       the same torn-bootstrap guard checkpoints use).
     """
-    import os
-    import time as _time
-    import uuid
 
-    from mycenae_spark.streaming import commitlog
+    def settle(src_marker: dict, as_of_seq: int) -> None:
+        import time as _time
 
-    as_of_seq = None
-    if lake_dir is not None:
-        as_of_seq = commitlog.latest_seq(lake_dir)
-        src_marker = _read_marker(src_dir)
-        src_as_of = src_marker.get("as_of_seq")
-        if src_as_of is not None:
-            as_of_seq = min(as_of_seq, src_as_of)
-        elif src_marker.get("kind") == "cascade":
+        if src_marker.get("kind") == "cascade":
             # A cascaded source WITHOUT a pin was built without lake_dir:
             # its files never appear in commit manifests, so the settle
             # wait below could never succeed — fail fast with the real
@@ -1094,64 +1170,24 @@ def cascade_rollup(
                 "source with lake_dir to cascade from it with currency "
                 "tracking"
             )
-        else:
-            from mycenae_spark.streaming import snapshot as _snap
+        from mycenae_spark.streaming import snapshot as _snap
 
-            deadline = _time.monotonic() + settle_timeout_s
-            while not _snap._appends_settled(
-                lake_dir, {"rollup": src_dir}, 0, as_of_seq
-            ):
-                if _time.monotonic() > deadline:
-                    raise RuntimeError(
-                        "cascade_rollup: a committed batch's rollup file "
-                        "moves never settled (crashed writer?) — run "
-                        "backfill_rollup to repair, then re-cascade"
-                    )
-                _time.sleep(0.05)
-    series_cols = series_cols or ["ksid", "tsid", "metric"]
-    df = spark.read.parquet(src_dir)
-    df = df.withColumn(
-        "bucket_ms",
-        F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(dst_interval_ms)),
-    )
-    aggs = [
-        F.sum("p_sum").alias("p_sum"),
-        F.sum("p_count").alias("p_count"),
-        F.min("p_min").alias("p_min"),
-        F.max("p_max").alias("p_max"),
-    ]
-    if "tags" in df.columns:
-        aggs.append(F.first("tags").alias("tags"))
-    merged = df.groupBy(*series_cols, "date", "bucket_ms").agg(*aggs)
-    if "p_hist" in df.columns:
-        hist = (
-            df.select(
-                *series_cols, "date", "bucket_ms",
-                F.explode("p_hist").alias("bin", "n"),
-            )
-            .groupBy(*series_cols, "date", "bucket_ms", "bin")
-            .agg(F.sum("n").alias("n"))
-            .groupBy(*series_cols, "date", "bucket_ms")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(F.collect_list(F.struct("bin", "n")))
-                ).alias("p_hist")
-            )
-        )
-        merged = merged.join(hist, [*series_cols, "date", "bucket_ms"])
-    merged = _carry_pruned_span(
-        spark, merged, carry_dir, carry_below_ms, "cascade_rollup",
-        dst_interval_ms,
-    )
-    base = os.path.dirname(dst_dir.rstrip("/")) or "."
-    tmp = os.path.join(base, f"_rollup_cascade_{uuid.uuid4().hex[:8]}")
-    merged.write.mode("overwrite").partitionBy("ksid", "date").parquet(tmp)
-    os.rename(tmp, dst_dir)
-    mark_rollup_coverage(
-        dst_dir,
-        rollup_coverage_complete(src_dir),
-        as_of_seq=as_of_seq,
-        kind="cascade",
+        deadline = _time.monotonic() + settle_timeout_s
+        while not _snap._appends_settled(
+            lake_dir, {"rollup": src_dir}, 0, as_of_seq
+        ):
+            if _time.monotonic() > deadline:
+                raise RuntimeError(
+                    "cascade_rollup: a committed batch's rollup file "
+                    "moves never settled (crashed writer?) — run "
+                    "backfill_rollup to repair, then re-cascade"
+                )
+            _time.sleep(0.05)
+
+    _cascade(
+        spark, src_dir, dst_dir, dst_interval_ms, series_cols, lake_dir,
+        _merge_partials, "cascade", "cascade_rollup", settle,
+        carry_dir, carry_below_ms,
     )
 
 
@@ -1226,118 +1262,58 @@ def refresh_ladder(
     lake_dir: str,
     fine_dir: str,
     rungs: dict[int, str],
-    force: bool = False,
+    cascade=cascade_rollup,
 ) -> dict[int, bool]:
-    """Rebuild every STALE ladder rung (the scheduled maintenance job the
-    engine's `cascade_is_current` fallback assumes — like compaction, run
-    on a cadence, cheap between refreshes because currency is a log-tail
-    check).  Returns interval_ms → whether it was rebuilt.
+    """Rebuild every STALE ladder rung of one family (the scheduled
+    maintenance job the engine's `cascade_is_current` fallback assumes —
+    like compaction, run on a cadence, cheap between refreshes because
+    currency is a log-tail check).  ``cascade`` is the family's verb:
+    :func:`cascade_rollup` (default), :func:`cascade_kmv` or
+    :func:`cascade_qsample`.  Returns interval_ms → whether it was
+    rebuilt.
+
+    A fine lake that is not coverage-complete (a foreign sketch-less
+    writer demoted it, or points predate it) is skipped entirely: its
+    rungs would inherit complete=False — unroutable, so the full cascade
+    per drain is pure waste.  Run the family's backfill to heal, then
+    refresh.
 
     Rungs rebuild fine-to-coarse, and each rung cascades FROM the
     freshest finer rung whose interval divides it (1d from the
     just-refreshed 1h, not from 1m) — associativity makes that exact and
     the merge pass proportionally smaller.  A current rung is both
     skipped and a valid source (currency means it equals the fine rung's
-    content on its grid).
+    content on its grid).  A PRUNED fine source no longer holds the
+    pre-horizon span: the rung carries it over from its previous
+    generation (rung sources are never pruned, so retained is 0 for
+    them).
 
-    Publish is an atomic swap: build beside, rename away, rename in,
-    delete old.  A query that resolved the OLD rung's files just before
-    the swap can fail mid-read and needs a retry — cascades are derived,
-    unlogged data, so they get the compaction-style race contract, not
-    the snapshot protocol's retained generations; the window is one
-    directory rename."""
-    import os
-    import uuid
-
-    rebuilt: dict[int, bool] = {}
-    if not force and not rollup_coverage_complete(fine_dir):
-        # A demoted/incomplete fine lake (foreign sketch-less writer,
-        # points predating the rollup) would mint rungs that inherit
-        # complete=False — unroutable, so the full cascade per drain is
-        # pure waste (r19 review pass 6; refresh_sketch_ladder already
-        # gates this way).  Run backfill_rollup to heal, then refresh.
+    Publish is the cascade's atomic swap.  A query that resolved the OLD
+    rung's files just before the swap can fail mid-read and needs a
+    retry — cascades are derived, unlogged data, so they get the
+    compaction-style race contract, not the snapshot protocol's retained
+    generations; the window is one directory rename."""
+    if not rollup_coverage_complete(fine_dir):
         return {iv: False for iv in rungs}
+    rebuilt: dict[int, bool] = {}
     sources: list[tuple[int, str]] = []  # (interval, dir) fresh this pass
     for iv in sorted(rungs):
         dst = rungs[iv]
-        if (
-            not force
-            and os.path.isdir(dst)
+        rebuilt[iv] = not (
+            os.path.isdir(dst)
             and rollup_coverage_complete(dst)
             and cascade_is_current(lake_dir, dst)
-        ):
-            rebuilt[iv] = False
-            sources.append((iv, dst))
-            continue
-        src = fine_dir
-        for s_iv, s_dir in reversed(sources):
-            if iv % s_iv == 0:
-                src = s_dir
-                break
-        # A PRUNED fine source no longer holds the pre-horizon span:
-        # carry it over from the rung's previous generation (rung
-        # sources are never pruned, so retained is 0 for them).
-        retained = sketch_retained_from(src)
-        tmp = dst.rstrip("/") + f"_new_{uuid.uuid4().hex[:8]}"
-        cascade_rollup(
-            spark, src, tmp, iv, lake_dir=lake_dir,
-            carry_dir=dst if retained else None, carry_below_ms=retained,
         )
-        # Guarded generation swap with restore-on-race — shared with the
-        # KMV publish paths (one copy of the protocol).
-        _swap_in(tmp, dst)
-        rebuilt[iv] = True
-        sources.append((iv, dst))
-    return rebuilt
-
-
-def refresh_sketch_ladder(
-    spark,
-    lake_dir: str,
-    fine_dir: str,
-    rungs: dict[int, str],
-    cascade,
-    force: bool = False,
-) -> dict[int, bool]:
-    """``refresh_ladder``'s sketch twin: rebuild every stale KMV or
-    value-sample rung by cascading from the freshest finer rung whose
-    interval divides it (``cascade`` is :func:`cascade_kmv` or
-    :func:`cascade_qsample` — both publish via the shared guarded-swap
-    lifecycle).  The fine sketch lake must carry an ``as_of_seq`` pin
-    (a backfill, or the ingest bridge's per-batch re-pin) — a pin-less
-    source fails fast inside ``_cascade_sketch``.  A fine lake that is
-    not coverage-complete (points predate the sketch lake) is skipped
-    entirely: cascading it would mint rungs that silently under-report;
-    run the matching backfill first.  Returns interval_ms → rebuilt."""
-    import os
-
-    rebuilt: dict[int, bool] = {}
-    if not rollup_coverage_complete(fine_dir):
-        return {iv: False for iv in rungs}
-    sources: list[tuple[int, str]] = []
-    for iv in sorted(rungs):
-        dst = rungs[iv]
-        if (
-            not force
-            and os.path.isdir(dst)
-            and rollup_coverage_complete(dst)
-            and cascade_is_current(lake_dir, dst)
-        ):
-            rebuilt[iv] = False
-            sources.append((iv, dst))
-            continue
-        src = fine_dir
-        for s_iv, s_dir in reversed(sources):
-            if iv % s_iv == 0:
-                src = s_dir
-                break
-        # Same pruned-source carry-over rule as refresh_ladder.
-        retained = sketch_retained_from(src)
-        cascade(
-            spark, src, dst, iv, lake_dir=lake_dir,
-            carry_dir=dst if retained else None, carry_below_ms=retained,
-        )
-        rebuilt[iv] = True
+        if rebuilt[iv]:
+            src = next(
+                (s_dir for s_iv, s_dir in reversed(sources) if iv % s_iv == 0),
+                fine_dir,
+            )
+            retained = sketch_retained_from(src)
+            cascade(
+                spark, src, dst, iv, lake_dir=lake_dir,
+                carry_dir=dst if retained else None, carry_below_ms=retained,
+            )
         sources.append((iv, dst))
     return rebuilt
 
@@ -1348,14 +1324,15 @@ def gc_ladder_temps(
 ) -> list[str]:
     """Sweep crash debris from cascade builds and ladder swaps by age —
     the `gc_staging` contract applied to the ladder: an interrupted
-    `cascade_rollup` leaves a `_rollup_cascade_*` build dir, a crash
-    inside `refresh_ladder`'s swap can leave `<rung>_new_*` /
-    `<rung>_old_*` generations.  All are invisible to readers (only the
-    exact rung path is ever resolved) but accumulate bytes.  Young dirs
-    are left alone — they may belong to a build in progress.  KMV sketch
-    dirs use the same `<dir>_new_*`/`<dir>_old_*` debris naming
-    (``_swap_in``), so include them in ``rungs`` to sweep crashed
-    backfill_kmv / cascade_kmv builds too.  ``backfill_rollup``'s
+    cascade or a crash inside its swap (``_swap_in``) can leave
+    `<rung>_new_*` / `<rung>_old_*` generations; `_rollup_cascade_*`
+    build dirs are what earlier cascade builds left behind, still swept.
+    All are invisible to readers (only the exact rung path is ever
+    resolved) but accumulate bytes.  Young dirs are left alone — they
+    may belong to a build in progress.  Sketch dirs use the same
+    `<dir>_new_*`/`<dir>_old_*` debris naming, so include them in
+    ``rungs`` to sweep crashed sketch backfills and cascades too.
+    ``backfill_rollup``'s
     debris (`<dir>_bfnew_*` builds, `<dir>_bfold_<seq>_*` superseded
     generations) is handled with different rules — a hard age floor
     (``_BF_DEBRIS_MIN_AGE_S``) whatever the dial, and `_bfold_` is
@@ -1452,6 +1429,17 @@ def ladder_rung(rungs: dict[int, str], interval_ms: int) -> tuple[int, str]:
 
 
 
+def _rebucket(df: DataFrame, interval_ms: int | None) -> DataFrame:
+    """Floor ``bucket_ms`` onto a coarser grid (no-op for None) — the
+    one re-bucket of the cascades and the read verbs."""
+    if interval_ms is None:
+        return df
+    return df.withColumn(
+        "bucket_ms",
+        F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(interval_ms)),
+    )
+
+
 def _guarded_scan(
     spark,
     sketch_dir: str,
@@ -1460,15 +1448,19 @@ def _guarded_scan(
     clamp: bool,
     interval_ms: int | None = None,
 ) -> DataFrame:
-    """Guard-then-filter preamble shared by the directory-reading sketch
-    verbs — ONE copy (r19 review: five hand-synced copies is how the
-    next guard change reopens the silent-under-read hole on the verb
-    that misses it).  ``read_rollup_series`` keeps its df-override
-    variant inline."""
+    """Guard, filter and re-bucket — the one scan preamble of the
+    directory-reading verbs (r19 review: five hand-synced copies is how
+    the next guard change reopens the silent-under-read hole on the
+    verb that misses it).  The retention bound applies to the STORED
+    grid, before the re-bucket to ``interval_ms``.
+    ``read_rollup_series`` keeps its df-override variant inline."""
     bound = guard_sketch_retention(
         sketch_dir, start_ms, clamp, what, interval_ms=interval_ms
     )
-    return _apply_retention_bound(spark.read.parquet(sketch_dir), bound)
+    return _rebucket(
+        _apply_retention_bound(spark.read.parquet(sketch_dir), bound),
+        interval_ms,
+    )
 
 
 def read_rollup_ladder(
@@ -1525,11 +1517,6 @@ def read_rollup(
         spark, rollup_dir, "read_rollup", start_ms, clamp_to_retention,
         interval_ms,
     )
-    if interval_ms is not None:
-        df = df.withColumn(
-            "bucket_ms",
-            F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(interval_ms)),
-        )
     return (
         df.groupBy(*series_cols, "bucket_ms")
         .agg(_MERGE_EXPRS[agg]().alias("value"))
@@ -1564,11 +1551,6 @@ def read_rollup_percentile(
     )
     if "p_hist" not in df.columns:
         raise ValueError("rollup was written without histogram partials")
-    if interval_ms is not None:
-        df = df.withColumn(
-            "bucket_ms",
-            F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(interval_ms)),
-        )
     width = (hist_hi - hist_lo) / hist_bins
     bins = (
         df.select(*series_cols, "bucket_ms", F.explode("p_hist").alias("bin", "n"))
@@ -1632,22 +1614,12 @@ def kmv_batch(
     (series, bucket, hash) then a per-group bottom-k (window rank — the
     partition is a (series, bucket) group, never global), state ≤ k values
     per bucket.  Batches splitting a bucket are fine by mergeability."""
-    from pyspark.sql import Window
-
     series_cols = series_cols or ["ksid", "tsid", "metric"]
+    keys = [*series_cols, "date", "bucket_ms"]
     ts_us = F.unix_micros(F.col("ts"))
     base = valid.withColumn("bucket_ms", bucket_ms_long(ts_us, interval_ms))
-    h = base.select(
-        *series_cols, "date", "bucket_ms",
-        kmv_hash(F.col(key_col)).alias("hv"),
-    ).distinct()
-    w = Window.partitionBy(*series_cols, "date", "bucket_ms").orderBy("hv")
-    return (
-        h.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .groupBy(*series_cols, "date", "bucket_ms")
-        .agg(F.sort_array(F.collect_list("hv")).alias("p_kmv"))
-    )
+    h = base.select(*keys, kmv_hash(F.col(key_col)).alias("hv"))
+    return _bottom_k(h, k, keys, "hv", "p_kmv")
 
 
 def write_kmv_batch(
@@ -1668,80 +1640,51 @@ def write_kmv_batch(
     )
 
 
+def _bottom_k(
+    rows: DataFrame, k: int, keys: list[str], item: str, out: str
+) -> DataFrame:
+    """THE bottom-k kernel of both sketch families (batch build, cascade
+    merge and read merge): distinct (``keys``, ``item``) rows, keep the
+    ≤ k smallest ``item`` per ``keys`` group (window rank — the
+    partition is one group, never global), collect them sorted into
+    ``out``."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(item)
+    return (
+        rows.distinct()
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(item)).alias(out))
+    )
+
+
 def _kmv_retake(
     df: DataFrame, k: int, group_cols: list[str]
 ) -> DataFrame:
     """Union + re-take-k: explode states, distinct hashes per group, keep
     the k smallest, re-collect the sorted array.  The one KMV merge rule,
     shared by cascade and read."""
-    from pyspark.sql import Window
-
-    ex = df.select(
-        *group_cols, F.explode("p_kmv").alias("hv")
-    ).distinct()
-    w = Window.partitionBy(*group_cols).orderBy("hv")
-    return (
-        ex.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .groupBy(*group_cols)
-        .agg(F.sort_array(F.collect_list("hv")).alias("p_kmv"))
+    return _bottom_k(
+        df.select(*group_cols, F.explode("p_kmv").alias("hv")),
+        k, group_cols, "hv", "p_kmv",
     )
 
 
-def _cascade_sketch(
-    spark,
-    src_dir: str,
-    dst_dir: str,
-    dst_interval_ms: int,
-    k: int,
-    series_cols: list[str] | None,
-    lake_dir: str | None,
-    retake,
-    kind: str,
-    remedy: str,
-    carry_dir: str | None = None,
-    carry_below_ms: int = 0,
-) -> None:
-    """THE one copy of the sketch-cascade lifecycle (KMV and value-sample
-    rungs share it — r9 review: three drifting copies of the pin /
-    guarded-swap contract is how a future fix misses one): re-bucket,
-    union + re-take-k via ``retake``, guarded-swap publish, optional
-    currency pin ``min(head, source pin)`` — a cascade is only as fresh
-    as its input.  Sketch sources have no manifest-tracked files, so
-    there is no settle-wait path: a pin-less source cannot prove a cut
-    and fails fast with ``remedy``."""
-    import uuid
+def _sketch_pinless(kind: str, remedy: str):
+    """The sketch families' pin-less rule for :func:`_cascade`: sketch
+    files are never manifest-tracked, so no settle-wait can prove a cut
+    — refuse with the family's ``remedy``."""
 
-    from mycenae_spark.streaming import commitlog
+    def refuse(_src_marker: dict, _head: int) -> None:
+        raise ValueError(
+            f"{kind}: source sketch lake carries no as_of_seq pin "
+            f"— run {remedy} on the source (or cascade from a "
+            "pinned rung) before cascading with currency tracking"
+        )
 
-    as_of_seq = None
-    if lake_dir is not None:
-        as_of_seq = commitlog.latest_seq(lake_dir)
-        src_as_of = _read_marker(src_dir).get("as_of_seq")
-        if src_as_of is None:
-            raise ValueError(
-                f"{kind}: source sketch lake carries no as_of_seq pin "
-                f"— run {remedy} on the source (or cascade from a "
-                "pinned rung) before cascading with currency tracking"
-            )
-        as_of_seq = min(as_of_seq, src_as_of)
-    series_cols = series_cols or ["ksid", "tsid", "metric"]
-    df = spark.read.parquet(src_dir).withColumn(
-        "bucket_ms",
-        F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(dst_interval_ms)),
-    )
-    merged = retake(df, k, [*series_cols, "date", "bucket_ms"])
-    merged = _carry_pruned_span(
-        spark, merged, carry_dir, carry_below_ms, kind, dst_interval_ms
-    )
-    tmp = dst_dir.rstrip("/") + f"_new_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").partitionBy("ksid", "date").parquet(tmp)
-    # Guarded swap, so RE-cascading after the source re-pins (the refresh
-    # path a staled rung takes) replaces the old generation instead of
-    # failing on a non-empty destination.
-    _swap_in(tmp, dst_dir)
-    if as_of_seq is not None:
-        mark_rollup_coverage(dst_dir, True, as_of_seq=as_of_seq, kind=kind)
+    return refuse
 
 
 def _backfill_sketch(
@@ -1791,11 +1734,12 @@ def cascade_kmv(
     coarse interval.  ``date`` stays in the group key like the algebraic
     cascade (a day-crossing coarse bucket keeps one state per date; the
     read path's re-merge makes that invisible).  Pin/swap lifecycle:
-    ``_cascade_sketch``."""
-    _cascade_sketch(
-        spark, src_dir, dst_dir, dst_interval_ms, k, series_cols, lake_dir,
-        _kmv_retake, "kmv-cascade", "backfill_kmv",
-        carry_dir=carry_dir, carry_below_ms=carry_below_ms,
+    :func:`_cascade`."""
+    _cascade(
+        spark, src_dir, dst_dir, dst_interval_ms, series_cols, lake_dir,
+        lambda df, keys: _kmv_retake(df, k, keys), "kmv-cascade",
+        "kmv-cascade", _sketch_pinless("kmv-cascade", "backfill_kmv"),
+        carry_dir, carry_below_ms,
     )
 
 
@@ -1820,11 +1764,6 @@ def read_kmv_distinct(
         spark, kmv_dir, "read_kmv_distinct", start_ms, clamp_to_retention,
         interval_ms,
     )
-    if interval_ms is not None:
-        df = df.withColumn(
-            "bucket_ms",
-            F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(interval_ms)),
-        )
     r = _kmv_retake(df, k, [*series_cols, "bucket_ms"]).select(
         *series_cols, "bucket_ms",
         F.size("p_kmv").alias("n_kmv"),
@@ -1838,19 +1777,22 @@ def read_kmv_distinct(
 
 def _swap_in(tmp: str, dst: str) -> None:
     """Guarded generation swap — THE one copy of the publish protocol,
-    used by ``refresh_ladder`` and every KMV publish path: rename
-    ``tmp`` into ``dst``, replacing any existing generation via
-    rename-away → rename-in.  On the recreate race (something recreates
-    ``dst`` between the two renames) the old generation is RESTORED and
-    the conflict surfaces — the compact_partition recovery contract.  Debris
-    uses the ``<dst>_new_*`` / ``<dst>_old_*`` naming, so
-    ``gc_ladder_temps`` sweeps crashed KMV builds with no new prefixes —
-    pass sketch dirs in its ``rungs`` mapping alongside algebraic ones.
+    used by every rung cascade (:func:`_cascade`, all three families)
+    and the sketch backfills: rename ``tmp`` into ``dst``, replacing
+    any existing generation via rename-away → rename-in.  On the
+    recreate race (something recreates ``dst`` between the two renames)
+    the old generation is RESTORED and the conflict surfaces — the
+    compact_partition recovery contract.  Debris uses the
+    ``<dst>_new_*`` / ``<dst>_old_*`` naming, so ``gc_ladder_temps``
+    sweeps crashed builds of every family — pass sketch dirs in its
+    ``rungs`` mapping alongside algebraic ones.
 
     A reader racing the swap can observe one transient missing-path
-    window between the renames; KMV readers are maintenance/analysis
-    jobs (never the engine hot path) and a retry reads the new
-    generation."""
+    window between the renames.  The Engine serves algebraic and
+    qsample rungs on its hot path: a raced algebraic rung read re-picks
+    the freshly swapped rung once, a raced qsample read degrades to the
+    always-correct fine path (``server.Engine``); other readers retry
+    and read the new generation."""
     import os
     import shutil
     import uuid
@@ -1976,30 +1918,23 @@ def qsample_batch(
     hashes, sorted by hash.  Same shape as ``kmv_batch``: per-group
     window rank, state ≤ k entries per bucket, batch splits healed by
     mergeability."""
-    from pyspark.sql import Window
-
     series_cols = series_cols or ["ksid", "tsid", "metric"]
+    keys = [*series_cols, "date", "bucket_ms"]
     ts_us = F.unix_micros(F.col("ts"))
     base = valid.withColumn("bucket_ms", bucket_ms_long(ts_us, interval_ms))
     h = base.select(
-        *series_cols, "date", "bucket_ms",
+        *keys,
         F.struct(
             qsample_hash(F.col("tsid"), F.col("ts")).alias("hv"),
             F.col("value").alias("v"),
         ).alias("_s"),
-    ).distinct()
+    )
     # rank by the FULL struct (hv, v), not hv alone: a 48-bit hash
     # collision (or a re-ingested identity with a corrected value) ties
     # on hv, and an hv-only order would make the k-boundary survivor
     # arbitrary — breaking the bit-for-bit cascade==direct contract
     # (review finding r9); struct order is total and deterministic
-    w = Window.partitionBy(*series_cols, "date", "bucket_ms").orderBy("_s")
-    return (
-        h.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .groupBy(*series_cols, "date", "bucket_ms")
-        .agg(F.sort_array(F.collect_list("_s")).alias("p_qs"))
-    )
+    return _bottom_k(h, k, keys, "_s", "p_qs")
 
 
 def write_qsample_batch(
@@ -2022,18 +1957,12 @@ def write_qsample_batch(
 def _qsample_retake(df: DataFrame, k: int, group_cols: list[str]) -> DataFrame:
     """Union + re-take-k on the point-identity hash — the one merge rule,
     shared by cascade and read (the `_kmv_retake` twin over (hv, v)
-    structs; sort_array orders by hv, the struct's first field)."""
-    from pyspark.sql import Window
-
-    ex = df.select(*group_cols, F.explode("p_qs").alias("_s")).distinct()
-    # full-struct order: deterministic k-boundary under hv ties (see
-    # qsample_batch)
-    w = Window.partitionBy(*group_cols).orderBy("_s")
-    return (
-        ex.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .groupBy(*group_cols)
-        .agg(F.sort_array(F.collect_list("_s")).alias("p_qs"))
+    structs; sort_array orders by hv, the struct's first field).  The
+    full-struct order keeps the k-boundary deterministic under hv ties
+    (see qsample_batch)."""
+    return _bottom_k(
+        df.select(*group_cols, F.explode("p_qs").alias("_s")),
+        k, group_cols, "_s", "p_qs",
     )
 
 
@@ -2050,12 +1979,14 @@ def cascade_qsample(
 ) -> None:
     """Materialize a coarser sample rung from a finer one — the sample
     twin of ``cascade_kmv``, sharing the ONE pin/currency/guarded-swap
-    lifecycle (``_cascade_sketch``): re-bucket, union + re-take-k; exact
+    lifecycle (:func:`_cascade`): re-bucket, union + re-take-k; exact
     by bottom-k mergeability."""
-    _cascade_sketch(
-        spark, src_dir, dst_dir, dst_interval_ms, k, series_cols, lake_dir,
-        _qsample_retake, "qsample-cascade", "backfill_qsample",
-        carry_dir=carry_dir, carry_below_ms=carry_below_ms,
+    _cascade(
+        spark, src_dir, dst_dir, dst_interval_ms, series_cols, lake_dir,
+        lambda df, keys: _qsample_retake(df, k, keys), "qsample-cascade",
+        "qsample-cascade",
+        _sketch_pinless("qsample-cascade", "backfill_qsample"),
+        carry_dir, carry_below_ms,
     )
 
 
@@ -2077,6 +2008,26 @@ def backfill_qsample(
     )
 
 
+def _read_qsample(
+    spark, qs_dir: str, what: str, k: int, series_cols, interval_ms,
+    start_ms, clamp: bool, value,
+) -> DataFrame:
+    """The shared prefix of the qsample readers: guarded scan, union +
+    re-take-k per (series, bucket), then ``value(vs, n)`` over the
+    sorted sampled values ``vs`` and the sample size ``n``.  Returns
+    (series, bucket_ms, n_sample, value)."""
+    series_cols = series_cols or ["ksid", "tsid"]
+    df = _guarded_scan(spark, qs_dir, what, start_ms, clamp, interval_ms)
+    merged = _qsample_retake(df, k, [*series_cols, "bucket_ms"])
+    vs = F.array_sort(F.transform("p_qs", lambda s: s["v"]))
+    n = F.size("p_qs")
+    return merged.select(
+        *series_cols, "bucket_ms",
+        n.alias("n_sample"),
+        value(vs, n).alias("value"),
+    )
+
+
 def read_qsample_quantile(
     spark,
     qs_dir: str,
@@ -2094,24 +2045,14 @@ def read_qsample_quantile(
     convention as the exact operator, so ≤ k-point buckets are EXACT.
     Returns (series, bucket_ms, n_sample, value).  Pruned-lake reads
     follow :func:`guard_sketch_retention`."""
-    series_cols = series_cols or ["ksid", "tsid"]
-    df = _guarded_scan(
-        spark, qs_dir, "read_qsample_quantile", start_ms,
-        clamp_to_retention, interval_ms,
-    )
-    if interval_ms is not None:
-        df = df.withColumn(
-            "bucket_ms",
-            F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(interval_ms)),
-        )
-    merged = _qsample_retake(df, k, [*series_cols, "bucket_ms"])
-    vs = F.array_sort(F.transform("p_qs", lambda s: s["v"]))
-    n = F.size("p_qs")
-    idx = F.greatest(F.lit(1), F.ceil(F.lit(q) * n).cast("int"))
-    return merged.select(
-        *series_cols, "bucket_ms",
-        n.alias("n_sample"),
-        F.element_at(vs, idx).alias("value"),
+
+    def value(vs, n):
+        idx = F.greatest(F.lit(1), F.ceil(F.lit(q) * n).cast("int"))
+        return F.element_at(vs, idx)
+
+    return _read_qsample(
+        spark, qs_dir, "read_qsample_quantile", k, series_cols,
+        interval_ms, start_ms, clamp_to_retention, value,
     )
 
 
@@ -2141,30 +2082,19 @@ def read_qsample_percentile(
     verb at qsample RUNGS (full history, no retention marker, guard a
     no-op); a pruned fine dir configured AS a rung refuses here and the
     Engine degrades to the always-correct raw-point path."""
-    series_cols = series_cols or ["ksid", "tsid"]
-    df = _guarded_scan(
-        spark, qs_dir, "read_qsample_percentile", start_ms,
-        clamp_to_retention, interval_ms,
-    )
-    if interval_ms is not None:
-        df = df.withColumn(
-            "bucket_ms",
-            F.col("bucket_ms") - (F.col("bucket_ms") % F.lit(interval_ms)),
+
+    def value(vs, n):
+        h = (n - F.lit(1)).cast("double") * F.lit(q)
+        lo = F.floor(h).cast("int")
+        hi = F.ceil(h).cast("int")
+        return F.when(lo == hi, F.element_at(vs, lo + 1)).otherwise(
+            F.element_at(vs, lo + 1) * (hi.cast("double") - h)
+            + F.element_at(vs, hi + 1) * (h - lo.cast("double"))
         )
-    merged = _qsample_retake(df, k, [*series_cols, "bucket_ms"])
-    vs = F.array_sort(F.transform("p_qs", lambda s: s["v"]))
-    n = F.size("p_qs")
-    h = (n - F.lit(1)).cast("double") * F.lit(q)
-    lo = F.floor(h).cast("int")
-    hi = F.ceil(h).cast("int")
-    v = F.when(lo == hi, F.element_at(vs, lo + 1)).otherwise(
-        F.element_at(vs, lo + 1) * (hi.cast("double") - h)
-        + F.element_at(vs, hi + 1) * (h - lo.cast("double"))
-    )
-    return merged.select(
-        *series_cols, "bucket_ms",
-        n.alias("n_sample"),
-        v.alias("value"),
+
+    return _read_qsample(
+        spark, qs_dir, "read_qsample_percentile", k, series_cols,
+        interval_ms, start_ms, clamp_to_retention, value,
     )
 
 

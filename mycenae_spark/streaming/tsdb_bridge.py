@@ -17,11 +17,11 @@ makes it fresh BY CONSTRUCTION: one Structured Streaming job whose
    head (the bridge is the lake's single writer, so after the batch's
    moves settle the sketch content IS the lake content at that head —
    the pin the sketch-cascade lifecycle requires);
-3. advances every configured ladder on the cascade cadence:
-   ``refresh_ladder`` for the algebraic rungs (1m → 1h → 1d),
-   ``refresh_sketch_ladder`` for the KMV and qsample rungs — each
-   rebuilds only rungs the commit log proves stale, cascading
-   fine-to-coarse from the freshest divisible rung.
+3. advances every configured ladder on the cascade cadence: one
+   ``refresh_ladder`` pass per family (algebraic 1m → 1h → 1d, KMV,
+   qsample), each with the family's cascade verb — it rebuilds only
+   rungs the commit log proves stale, cascading fine-to-coarse from the
+   freshest divisible rung.
 
 After every drained batch (and once more at stream end, so a
 ``cascade_every > 1`` cadence still finishes current), an Engine
@@ -258,10 +258,17 @@ def run_tsdb_bridge(
         _read_marker_as_of,
         cascade_kmv,
         cascade_qsample,
+        cascade_rollup,
         mark_rollup_coverage,
         refresh_ladder,
-        refresh_sketch_ladder,
         rollup_coverage_complete,
+    )
+
+    #: (family, fine dir, rung map, cascade verb) — one row per ladder
+    families = (
+        ("rollup", rollup_dir, ladder, cascade_rollup),
+        ("kmv", kmv_fine_dir, kmv_ladder, cascade_kmv),
+        ("qsample", qsample_fine_dir, qsample_ladder, cascade_qsample),
     )
 
     if (kmv_ladder and not kmv_fine_dir) or (
@@ -418,9 +425,7 @@ def run_tsdb_bridge(
                     "family's backfill_* to heal, then re-drain",
                     {fam: seqs for fam, seqs in sorted(foreign.items())},
                 )
-            for fam, fine in (("rollup", rollup_dir),
-                              ("kmv", kmv_fine_dir),
-                              ("qsample", qsample_fine_dir)):
+            for fam, fine, _rungs, _cascade in families:
                 if fine is None:
                     continue
                 # preserve the first-write completeness verdict; the
@@ -452,21 +457,10 @@ def run_tsdb_bridge(
             # markers still claim complete, losing the demotion.  A
             # crash-rerun re-detecting the same offenders is idempotent.
             _write_foreign_cursor(lake_dir, rollup_dir, head)
-            refreshed = {}
-            if ladder:
-                refreshed["rollup"] = refresh_ladder(
-                    spark, lake_dir, rollup_dir, ladder
-                )
-            if kmv_ladder:
-                refreshed["kmv"] = refresh_sketch_ladder(
-                    spark, lake_dir, kmv_fine_dir, kmv_ladder, cascade_kmv
-                )
-            if qsample_ladder:
-                refreshed["qsample"] = refresh_sketch_ladder(
-                    spark, lake_dir, qsample_fine_dir, qsample_ladder,
-                    cascade_qsample,
-                )
-            stats["refreshed"] = refreshed
+            stats["refreshed"] = {
+                fam: refresh_ladder(spark, lake_dir, fine, rungs, cascade)
+                for fam, fine, rungs, cascade in families if rungs
+            }
 
         def sink(batch: DataFrame, batch_id: int) -> None:
             valid, _invalid = prepare_points(batch)
@@ -541,11 +535,7 @@ def run_tsdb_bridge(
             # starve the siblings' retention on every future drain.
             retention: dict = {}
             errors: dict = {}
-            for fam, fine, fam_rungs in (
-                ("rollup", rollup_dir, ladder),
-                ("kmv", kmv_fine_dir, kmv_ladder),
-                ("qsample", qsample_fine_dir, qsample_ladder),
-            ):
+            for fam, fine, fam_rungs, _cascade in families:
                 if fine and fam_rungs and has_series_partitions(fine):
                     try:
                         retention[fam] = prune_sketch_lake(
@@ -616,13 +606,9 @@ def run_tsdb_bridge(
                     else "maintenance_floor_s",
                     age,
                 )
-            fines = [
-                d for d in (rollup_dir, kmv_fine_dir, qsample_fine_dir)
-                if d
-            ]
+            fines = [fine for _f, fine, _r, _c in families if fine]
             rung_dirs = [
-                d for m in (ladder, kmv_ladder, qsample_ladder) if m
-                for d in m.values()
+                d for _f, _d, m, _c in families if m for d in m.values()
             ]
             # built INCREMENTALLY: a sweep failing midway must not
             # erase the audit trail of the deletes that already ran

@@ -36,7 +36,10 @@ SF_DIR = os.environ.get("MYCENAE_TEST_SF_DIR", "/root/testdata/sf0.001")
 # so a break in the family still fails it: bus_ingest_roundtrip (bus),
 # ann_ivfpq_recall_drift (pq index), stream_text_assimilate_roundtrip
 # (stream assimilation), ~10 s each; the media family's is the served
-# test_server.py::test_media_dups_endpoint (~18 s).
+# test_server.py::test_media_dups_endpoint (~18 s); the TSDB ingest
+# family's is stream_tsdb_ingest_roundtrip (~40 s), the one gated id
+# that refreshes all three rung families through the bridge and routes
+# the Engine onto the refreshed rungs.
 SLOW_TESTS = frozenset({
     "tests/test_bus.py::test_bus_engine_crash_replay_no_dupes",
     "tests/test_bus.py::test_start_bus_ingest_end_to_end",
@@ -67,7 +70,6 @@ SLOW_TESTS = frozenset({
     "tests/test_oracle.py::test_oracle_match[stream_chain_rebase_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_evict_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_media_assimilate_roundtrip]",
-    "tests/test_oracle.py::test_oracle_match[stream_tsdb_ingest_roundtrip]",
     "tests/test_pq_index.py::test_band_index_assimilate_equals_rebuild",
     "tests/test_pq_index.py::test_band_valve_report_tracks_assimilation",
     "tests/test_pq_index.py::test_ivfpq_assimilate_appends_frozen_encoded_delta",

@@ -552,6 +552,73 @@ def test_qsample_backfill_pin_and_currency(spark, tmp_path):
                         lake_dir=lake)
 
 
+def test_sketch_cascade_inherits_source_coverage(spark, tmp_path):
+    """A sketch rung never claims more coverage than its source.  A
+    foreign writer (no qsample/KMV dirs) lands 5 points after the
+    sketch backfills, and the fine sketch lakes are demoted the way the
+    ingest bridge does it: incomplete, re-pinned at the head.  A cascade
+    from them pins the head, so it reads current — it must therefore
+    inherit the INCOMPLETE verdict, or the Engine serves the rung's
+    30-point p50 (14.5) over the lake's 35 points (17.0)."""
+    from mycenae_spark.server import Engine
+    from mycenae_spark.streaming import commitlog
+    from mycenae_spark.streaming.ingest import (
+        decode_json_lines,
+        prepare_points,
+        write_points_batch,
+    )
+    from mycenae_spark.streaming.rollup import (
+        backfill_kmv,
+        backfill_qsample,
+        cascade_is_current,
+        cascade_kmv,
+        cascade_qsample,
+        mark_rollup_coverage,
+        rollup_coverage_complete,
+    )
+
+    BASE, HOUR = 1704067200000, 3_600_000
+
+    def mk(n, base_i=0):
+        rows = [
+            (json.dumps({
+                "metric": "cov.m", "tags": {"ksid": "ks1"},
+                "timestamp": BASE + (base_i + i) * 60_000,
+                "value": float(base_i + i)}),)
+            for i in range(n)
+        ]
+        valid, _ = prepare_points(
+            decode_json_lines(spark.createDataFrame(rows, ["value"]))
+        )
+        return valid
+
+    lake, catalog, qs, kmv, qs1h, kmv1h = (
+        str(tmp_path / d)
+        for d in ("lake", "cat", "qs", "kmv", "qs1h", "kmv1h")
+    )
+    write_points_batch(mk(30), lake, catalog, batch_id=0,
+                       qsample_dir=qs, kmv_dir=kmv)
+    backfill_qsample(spark, lake, qs)
+    backfill_kmv(spark, lake, kmv)
+    # the foreign writer: points only, no sketch sections
+    write_points_batch(mk(5, base_i=30), lake, catalog, batch_id=1)
+    head = commitlog.latest_seq(lake)
+    for fine in (qs, kmv):
+        mark_rollup_coverage(fine, False, kind="bridge-fine", as_of_seq=head)
+    cascade_qsample(spark, qs, qs1h, HOUR, lake_dir=lake)
+    cascade_kmv(spark, kmv, kmv1h, HOUR, lake_dir=lake)
+    for rung in (qs1h, kmv1h):
+        assert cascade_is_current(lake, rung)  # pinned at the head
+        assert not rollup_coverage_complete(rung)  # but no more than its source
+
+    eng = Engine(spark, lake, catalog, qsample_ladder={HOUR: qs1h})
+    out = eng.query({"start": BASE, "end": BASE + HOUR,
+                     "queries": [{"metric": "cov.m", "aggregator": "sum",
+                                  "downsample": "1h-p50"}]})
+    assert eng.last_routes() == ["fine"]
+    assert out[0]["dps"][str(BASE // 1000)] == 17.0  # median of 0..34
+
+
 def test_refresh_ladder_rebuilds_only_stale_rungs(spark, tmp_path):
     """refresh_ladder: current rungs are skipped, stale rungs rebuild
     (rung-from-rung where a fresher finer rung divides), the refreshed

@@ -2313,23 +2313,27 @@ def test_text_put_endpoint(server):
 
 
 _EXPRESSION = (
-    "merge(max,downsample(5m,avg,query(cpu.usage,{host=*},"
+    "merge(max,downsample(5m,avg,query(route.contract,{host=*},"
     f"{BASE_TS})))"
 )
+
+#: The series every data-reading contract case reads; ``route_series``
+#: puts it, so each case passes whichever tests ran before it.
+_ROUTE_POINT = {"metric": "route.contract",
+                "tags": {"ksid": "k1", "host": "r0"},
+                "timestamp": BASE_TS, "value": 1.0}
 
 #: (method, path, body, expected status) for every endpoint of the
 #: module docstring, plus known paths under the wrong method and unknown
 #: verbs, which answer 404.  ``{ks}`` is a keyspace created for the case.
 _ROUTE_CONTRACT = [
-    ("POST", "/api/put", [{"metric": "route.contract",
-                           "tags": {"ksid": "k1"}, "timestamp": BASE_TS,
-                           "value": 1.0}], 200),
+    ("POST", "/api/put", [_ROUTE_POINT], 200),
     ("POST", "/api/text/put", [{"metric": "route.contract",
                                 "tags": {"ksid": "k1"},
                                 "timestamp": BASE_TS, "text": "x"}], 200),
     ("POST", "/keysets/k1/api/query",
      {"start": BASE_TS, "end": BASE_TS + 60_000,
-      "queries": [{"metric": "cpu.usage", "aggregator": "sum"}]}, 200),
+      "queries": [{"metric": "route.contract", "aggregator": "sum"}]}, 200),
     # the legacy OpenTSDB ``tags`` map is refused, never silently dropped
     ("POST", "/keysets/legacy_tags/api/query",
      {"start": BASE_TS, "end": BASE_TS + 60_000,
@@ -2339,8 +2343,10 @@ _ROUTE_CONTRACT = [
     ("POST", "/keysets/k1/api/query/funnel", {}, 400),
     ("POST", "/keysets/k1/api/query/retention", {"user_tag": "nope"}, 400),
     ("POST", "/keysets/k1/api/query/attribution", {}, 400),
-    ("POST", "/keysets/k1/api/query/gaps", {"metric": "cpu.usage"}, 200),
-    ("POST", "/keysets/k1/api/query/last", {"metric": "cpu.usage"}, 200),
+    ("POST", "/keysets/k1/api/query/gaps", {"metric": "route.contract"},
+     200),
+    ("POST", "/keysets/k1/api/query/last", {"metric": "route.contract"},
+     200),
     ("POST", "/keysets/k1/api/query/media_dups", {}, 400),
     ("POST", "/keysets/k1/api/query/similar", {}, 400),
     ("GET", "/keysets/k1/api/query/ladder_status", None, 200),
@@ -2349,7 +2355,7 @@ _ROUTE_CONTRACT = [
     ("GET", "/keysets/k1/api/query/chain_status", None, 400),
     ("GET", "/keysets/k1/api/query/dedup_daily?day=1", None, 400),
     ("POST", "/api/expression/check", {"exp": _EXPRESSION}, 200),
-    ("GET", "/api/suggest?type=metrics&q=cpu&max=5", None, 200),
+    ("GET", "/api/suggest?type=metrics&q=route&max=5", None, 200),
     ("GET", "/api/aggregators", None, 200),
     ("GET", "/api/config/filters", None, 200),
     ("GET", "/keyspaces", None, 200),
@@ -2369,6 +2375,15 @@ _ROUTE_CONTRACT = [
 ]
 
 
+@pytest.fixture(scope="module")
+def route_series(server):
+    """Put the series the contract's data-reading cases read."""
+    assert _req(server, "/api/put", [_ROUTE_POINT]) == (
+        200, {"success": 1, "failed": 0}
+    )
+
+
+@pytest.mark.usefixtures("route_series")
 @pytest.mark.parametrize(
     "method,path,body,want", _ROUTE_CONTRACT,
     ids=[f"{m} {p.split('?')[0]}" for m, p, _b, _w in _ROUTE_CONTRACT],
