@@ -23,7 +23,11 @@ from mycenae_spark.operators import filters as flt
 from mycenae_spark.operators.downsample import downsample
 from mycenae_spark.operators.merge import merge
 from mycenae_spark.operators.rate import rate
-from mycenae_spark.schema import parse_interval_ms, parse_relative_time
+from mycenae_spark.schema import (
+    FINE_ROLLUP_MS,
+    parse_interval_ms,
+    parse_relative_time,
+)
 
 #: mycenae's default pipeline order when the query carries no ``order`` field
 #: (SURVEY.md §2.4 W7).
@@ -165,7 +169,7 @@ def plan(
     points: DataFrame,
     q: TsdbQuery,
     rollup: DataFrame | None = None,
-    rollup_interval_ms: int = 60_000,
+    rollup_interval_ms: int = FINE_ROLLUP_MS,
 ) -> DataFrame:
     """Lower a TsdbQuery onto a points frame.
 

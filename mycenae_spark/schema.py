@@ -107,6 +107,11 @@ _UNIT_MS = {
     "y": 365 * 86_400_000,
 }
 
+#: The fine rollup grain: every ingest front-end writes its fine
+#: partials and sketch states on this interval, and the Engine and the
+#: planner read the fine rollup lake at it.
+FINE_ROLLUP_MS = 60_000
+
 
 def parse_relative_time(spec: str | int, now_ms: int) -> int:
     """``Nx-ago`` → absolute epoch ms (SURVEY.md §2.4 W8, OpenTSDB contract).

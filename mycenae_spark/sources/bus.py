@@ -329,23 +329,21 @@ def start_bus_ingest(
     checkpoint_dir: str,
     available_now: bool = True,
     rollup_dir: str | None = None,
-    rollup_interval_ms: int = 60_000,
     group: str = "default",
 ):
-    """The bus-fed twin of ``streaming.ingest.start_ingest``: readStream
-    over the bus source → production JSON decoder → the SAME
-    ``write_points_batch`` two-phase-commit sink (points + rollup
-    partials + catalog merge under one manifest).  Exactly-once end to
-    end: the source replays checkpointed offset ranges, the sink's
-    batch-id manifests make re-delivered micro-batches idempotent.
-    Batch ids are prefixed ``bus-`` so replays can never collide with a
-    file-source ingest sharing the lake."""
-    from pyspark.sql import DataFrame
-
+    """The bus-fed twin of ``streaming.ingest.start_ingest``: the same
+    one ingest path (``streaming.ingest._start_point_stream``) with the
+    bus as its source — readStream over the bus source → the JSON
+    decoder → the ``write_points_batch`` staged-commit sink (points +
+    rollup partials + catalog merge under one manifest and one
+    commit-log entry).  Exactly-once end to end: the source replays
+    checkpointed offset ranges, the sink's batch-id manifests make
+    re-delivered micro-batches idempotent.  Batch ids are prefixed
+    ``bus-`` so replays can never collide with a file-source ingest
+    sharing the lake."""
     from mycenae_spark.streaming.ingest import (
+        _start_point_stream,
         decode_json_lines,
-        prepare_points,
-        write_points_batch,
     )
 
     register(spark)
@@ -355,31 +353,16 @@ def start_bus_ingest(
         .load()
         .select("value")
     )
-    decoded = decode_json_lines(raw)
-
     # Batch-id namespace: two GROUPS ingesting one topic into one lake
     # are distinct streams with independent batch counters — qualify the
     # manifest id per group so their replays can't collide (the default
     # group keeps the bare ``bus-`` prefix for marker continuity).
     prefix = "bus" if group == "default" else f"bus-{group}"
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        valid, _invalid = prepare_points(batch)
-        write_points_batch(
-            valid,
-            lake_dir,
-            catalog_dir,
-            batch_id=f"{prefix}-{batch_id}",
-            rollup_dir=rollup_dir,
-            rollup_interval_ms=rollup_interval_ms,
-        )
-
-    writer = decoded.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_point_stream(
+        raw, decode_json_lines, lake_dir, catalog_dir, checkpoint_dir,
+        batch_id=lambda n: f"{prefix}-{n}",
+        available_now=available_now, rollup_dir=rollup_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def gc_topic(topic_dir: str, keep_segments: int = 2) -> int:

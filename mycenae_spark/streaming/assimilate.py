@@ -178,8 +178,9 @@ def _load_state(out_dir: str, base_index_dir: str) -> dict:
 
 
 def _save_state(out_dir: str, state: dict) -> None:
-    """Persist the manifest atomically (write + rename) so a crash
-    mid-save leaves the previous manifest intact, and register it with
+    """Persist the manifest durably (``commitlog.write_json_atomic``:
+    write, fsync, rename) so a crash mid-save leaves the previous
+    manifest intact, never a torn one, and register it with
     the index root so the chain-aware GC spares every generation the
     manifest references (mid-chain generations look idle to the
     age-based sweep — daily use only touches the head).  Stored paths
@@ -187,19 +188,14 @@ def _save_state(out_dir: str, state: dict) -> None:
     time from whatever cwd the maintenance job runs in, so a relative
     path saved verbatim would silently lose its protection (review
     finding r17)."""
-    import json
-
     from mycenae_spark.functions.pq import register_chain_manifest
+    from mycenae_spark.streaming.commitlog import write_json_atomic
 
     state["base"] = os.path.abspath(state["base"])
     for e in state["events"]:
         if e.get("grown"):
             e["grown"] = os.path.abspath(e["grown"])
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, f"{_CHAIN_MANIFEST}.tmp.{os.getpid()}")
-    with open(tmp, "w") as fh:
-        json.dump(state, fh)
-    os.replace(tmp, os.path.join(out_dir, _CHAIN_MANIFEST))
+    write_json_atomic(os.path.join(out_dir, _CHAIN_MANIFEST), state)
     register_chain_manifest(out_dir)
 
 

@@ -41,6 +41,20 @@ class CommitConflict(Exception):
     """A concurrent commit landed after the head this writer read."""
 
 
+def write_json_atomic(path: str, payload) -> None:
+    """Durably replace ``path`` with ``payload`` as JSON — THE one
+    manifest/marker write: write ``path + ".tmp"``, flush, fsync, then
+    rename, so a crash leaves the old file or the new one, never a torn
+    one.  Creates the parent dir; dir listers skip the ``.tmp`` name."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(payload, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, path)
+
+
 def _log_dir(lake_dir: str) -> str:
     return os.path.join(lake_dir, "_commitlog")
 

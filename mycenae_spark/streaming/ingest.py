@@ -5,11 +5,23 @@ Cassandra + Solr): decode JSON points, validate per-point with error
 accounting, hash the series id, async-upsert new series metadata, insert
 points with keyspace TTL.
 
-Spark rebuild — one Structured Streaming job:
+Spark rebuild — one ingest path, like mycenae's one collector:
 
-    source → from_json(POINT_SCHEMA) → validate (valid/invalid split)
-           → tsid → foreachBatch { append points to lake partitioned by
-             (ksid, date); merge new tsids into the series catalog }
+    source → decode (``_DECODERS``: json, opentsdb, netdata)
+           → prepare_points (valid/invalid split, tsid)
+           → write_points_batch { one staged commit keyed by batch id:
+             points partitioned by (ksid, date), fine rollup/sketch
+             partials, new catalog rows, one commit-log entry }
+
+Every front-end shares it.  The streaming ones — ``start_ingest`` (file
+source, batch ids ``<n>``), ``sources.bus.start_bus_ingest`` (bus
+source, ``bus-<n>`` / ``bus-<group>-<n>``) and
+``streaming.tsdb_bridge.run_tsdb_bridge`` (file source plus the ladder
+cadence) — build their job with ``_start_point_stream``, the one
+``foreachBatch`` + checkpoint + trigger writer; ``Engine.put`` decodes
+with ``decode_json_lines`` and commits one ``put-<uuid>`` batch.  Every
+batch carries an id and a commit-log entry: there is no direct-append
+mode.
 
 The micro-batch boundary replaces goroutine batching; checkpointing upgrades
 UDP's at-most-once to exactly-once on the file sink.  Late/out-of-order
@@ -25,16 +37,21 @@ not ∝ points — the moral equivalent of mycenae's bloom-gated Solr upsert.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from mycenae_spark.schema import (
+    FINE_ROLLUP_MS,
     POINT_SCHEMA,
     normalize_timestamp_ms,
     tsid_column,
     valid_point_predicate,
 )
+from mycenae_spark.streaming import commitlog
 
 #: Sentinel for ``write_points_batch(content_fp=...)``: the caller's
 #: batch ids are uncollidable by construction (uuid HTTP puts), so the
@@ -186,53 +203,54 @@ def write_points_batch(
     valid: DataFrame,
     lake_dir: str,
     catalog_dir: str,
-    batch_id: int | str | None = None,
+    batch_id: int | str,
+    *,
     rollup_dir: str | None = None,
-    rollup_interval_ms: int = 60_000,
     kmv_dir: str | None = None,
     qsample_dir: str | None = None,
     content_fp: str | None = None,
 ) -> None:
-    """Shared lake+catalog writer (streaming micro-batches and the HTTP put
-    path both land here): append points partitioned by (ksid, date), sorted
-    by (tsid, ts) within partitions, then merge only *new* series into the
-    catalog — writes ∝ new series, mycenae's bloom-gated Solr upsert.
+    """THE one lake+catalog writer — every ingest front-end lands here
+    (file and bus streams, the TSDB bridge, HTTP puts): append points
+    partitioned by (ksid, date), sorted by (tsid, ts) within partitions,
+    then merge only *new* series into the catalog — writes ∝ new series,
+    mycenae's bloom-gated Solr upsert.
 
-    Exactly-once on replay: with a ``batch_id``, the append is a
-    Delta-shaped two-phase commit — the batch's part files are first written
-    under ``<lake>/_staging/<id>`` (underscore-prefixed, so Spark/Hadoop
-    file listing never surfaces them to readers), then a manifest listing
-    every staged file is atomically renamed into ``<lake>/_commits/<id>``
-    (the commit point), and only then are the files moved into the
-    partitioned tree.  Every crash point is safe: before the manifest
-    rename, nothing is visible and the replay rebuilds staging from
-    scratch; after it, the replay skips the write and idempotently re-runs
-    the remaining moves from the manifest (a move whose source is gone and
-    destination exists already happened).  This closes the
-    duplicate-on-crash window a bare write-then-marker scheme has — the
-    same files-invisible-until-log-commit idea as Delta/Iceberg, minus
-    snapshot isolation for concurrent writers (the ingest stream is the
-    single writer here).  Rollup partials (``rollup_dir``) stage and commit
-    under the SAME manifest, so points and partials land atomically
-    together; ``kmv_dir`` / ``qsample_dir`` extend the manifest with
-    fine KMV and bottom-k value-sample states on the rollup interval —
+    Every batch is a staged commit keyed by its ``batch_id`` (required;
+    there is no direct-append mode — a write with no commit-log entry
+    would be invisible to log-gated reads).  The append is a
+    Delta-shaped two-phase commit: the batch's part files are first
+    written under ``<lake>/_staging/<id>`` (underscore-prefixed, so
+    Spark/Hadoop file listing never surfaces them to readers), then a
+    manifest listing every staged file is atomically renamed into
+    ``<lake>/_commits/<id>`` (the commit point), and only then are the
+    files moved into the partitioned tree.  Every crash point is safe:
+    before the manifest rename, nothing is visible and the replay
+    rebuilds staging from scratch; after it, the replay skips the write
+    and idempotently re-runs the remaining moves from the manifest (a
+    move whose source is gone and destination exists already happened).
+    This closes the duplicate-on-crash window a bare write-then-marker
+    scheme has — the same files-invisible-until-log-commit idea as
+    Delta/Iceberg, minus snapshot isolation for concurrent writers (the
+    ingest stream is the single writer here).  Rollup partials
+    (``rollup_dir``) stage and commit under the SAME manifest, so points
+    and partials land atomically together; ``kmv_dir`` / ``qsample_dir``
+    extend the manifest with fine KMV and bottom-k value-sample states —
     the sketch lakes the coarse rungs cascade from, maintained
     batch-by-batch by the ingest bridge instead of by explicit
-    backfills.  The catalog merge is idempotent by construction (anti-join
-    against the stored catalog).  Orphaned ``_staging`` dirs (crash before
-    commit, batch id never replayed) are invisible garbage; the maintenance
-    job may GC them by age.
+    backfills.  Every derived family is written on the one fine grain,
+    ``schema.FINE_ROLLUP_MS``, the interval the Engine reads it at.  The
+    catalog merge is idempotent by construction (anti-join against the
+    stored catalog).  Orphaned ``_staging`` dirs (crash before commit,
+    batch id never replayed) are invisible garbage; the maintenance job
+    may GC them by age.
     """
     import json as _json
     import os
     import shutil
 
-    marker = staging = None
-    if batch_id is not None:
-        commits = os.path.join(lake_dir, "_commits")
-        os.makedirs(commits, exist_ok=True)
-        marker = os.path.join(commits, str(batch_id))
-        staging = os.path.join(lake_dir, "_staging", str(batch_id))
+    marker = os.path.join(lake_dir, "_commits", str(batch_id))
+    staging = os.path.join(lake_dir, "_staging", str(batch_id))
 
     def _unwritten(d: str) -> bool:
         # "First write" = the dir has never held data OR a coverage
@@ -334,8 +352,6 @@ def write_points_batch(
         runs on the hot path, only during crash recovery."""
         if manifest.get("seq") is not None:
             return
-        from mycenae_spark.streaming import commitlog
-
         seq = commitlog.find_batch(lake_dir, str(batch_id)) if replay else None
         if seq is None:
             seq = commitlog.append(
@@ -378,12 +394,7 @@ def write_points_batch(
                 },
             )
         manifest["seq"] = seq
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, marker)
+        commitlog.write_json_atomic(marker, manifest)
 
     def _new_series() -> DataFrame:
         ns = valid.select("ksid", "tsid", "metric", "tags").dropDuplicates(
@@ -412,13 +423,13 @@ def write_points_batch(
             # and the request-latency path skips the agg job (fourth
             # review pass r17)
             content_fp = None
-        elif content_fp is None and batch_id is not None:
-            # Compute the batch-content fingerprint for EVERY identified
-            # batch, so every caller gets the id-collision guard below
-            # without wiring it (review finding r17, twice: the first
-            # fix covered only the TSDB bridge's sink; the int-only
-            # second cut still missed the bus path's "bus-<n>" STRING
-            # epoch ids — the same replay domain, just prefixed).
+        elif content_fp is None:
+            # Compute the batch-content fingerprint for EVERY batch, so
+            # every caller gets the id-collision guard below without
+            # wiring it (review finding r17, twice: the first fix
+            # covered only the TSDB bridge's sink; the int-only second
+            # cut still missed the bus path's "bus-<n>" STRING epoch
+            # ids — the same replay domain, just prefixed).
             stat = valid.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
@@ -427,7 +438,7 @@ def write_points_batch(
                 ).alias("h"),
             ).collect()[0]
             content_fp = f"n{stat['n']}|h{stat['h']}"
-        if marker is not None and os.path.exists(marker):
+        if os.path.exists(marker):
             # Replay of a committed batch: data write already happened;
             # finish any moves the crash interrupted.
             with open(marker) as f:
@@ -459,74 +470,138 @@ def write_points_batch(
                 # direct append (idempotent: anti-join vs stored catalog)
                 _new_series().write.mode("append").parquet(catalog_dir)
         else:
-            points_out = lake_dir if staging is None else os.path.join(staging, "points")
-            if staging is not None:
-                shutil.rmtree(staging, ignore_errors=True)  # crashed attempt
+            shutil.rmtree(staging, ignore_errors=True)  # crashed attempt
             (
                 valid.repartition("ksid", "date")
                 .sortWithinPartitions("tsid", "ts")
                 .write.mode("append")
                 .partitionBy("ksid", "date")
-                .parquet(points_out)
+                .parquet(os.path.join(staging, "points"))
             )
             for sec, deriv_dir, writer in families:
-                writer(
-                    valid,
-                    deriv_dir if staging is None else os.path.join(staging, sec),
-                    rollup_interval_ms,
-                )
-            if marker is None:
-                _new_series().write.mode("append").parquet(catalog_dir)
-            else:
-                # Catalog entries stage under the SAME manifest as points:
-                # direct concurrent appends to one directory collide in
-                # Hadoop's shared _temporary committer dir, and a crash
-                # between the point append and the catalog append could
-                # separate points from their series metadata.  Staged part
-                # files carry job-unique names, so the final moves from many
-                # writers never clash.
-                _new_series().write.parquet(os.path.join(staging, "catalog"))
-                # the batch's metric footprint, for per-metric cache
-                # generations — derived DRIVER-SIDE from the already-
-                # materialized staged point files (column-pruned Arrow
-                # read), not a Spark distinct-collect: the staged parquet
-                # IS the batch, and an extra Spark job inside the 2PC
-                # critical section only added commit latency (r9 ADVICE).
-                # Capped; over-cap batches record the None wildcard,
-                # which only costs cache hits.
-                mets = _staged_metric_footprint(
-                    os.path.join(staging, "points"), cap=65
-                )
-                # roots are recorded ABSOLUTE (r19 review): a
-                # relative dir recorded as-given resolves against the
-                # READER's cwd — _appends_settled's foreign-root skip
-                # would misclassify a local batch as foreign and skip
-                # the torn-move wait, the exact failure it guards
-                manifest = {
-                    "roots": {"points": os.path.abspath(lake_dir),
-                              "catalog": os.path.abspath(catalog_dir)},
-                    "points": _staged_files(os.path.join(staging, "points")),
-                    "catalog": _staged_files(os.path.join(staging, "catalog")),
-                    "metrics": sorted(mets) if len(mets) <= 64 else None,
-                }
-                if content_fp is not None:
-                    # the caller's batch-content fingerprint: lets a
-                    # replay detect a batch-id collision with different
-                    # content (see the replay branch above)
-                    manifest["content_fp"] = content_fp
-                for sec, deriv_dir, _writer in families:
-                    manifest["roots"][sec] = os.path.abspath(deriv_dir)
-                    manifest[sec] = _staged_files(os.path.join(staging, sec))
-                tmp = marker + ".tmp"
-                with open(tmp, "w") as f:
-                    _json.dump(manifest, f)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.rename(tmp, marker)  # the commit point
-                _ensure_logged(manifest)
-                _apply_moves(manifest)
+                writer(valid, os.path.join(staging, sec), FINE_ROLLUP_MS)
+            # Catalog entries stage under the SAME manifest as points:
+            # direct concurrent appends to one directory collide in
+            # Hadoop's shared _temporary committer dir, and a crash
+            # between the point append and the catalog append could
+            # separate points from their series metadata.  Staged part
+            # files carry job-unique names, so the final moves from many
+            # writers never clash.
+            _new_series().write.parquet(os.path.join(staging, "catalog"))
+            # the batch's metric footprint, for per-metric cache
+            # generations — derived DRIVER-SIDE from the already-
+            # materialized staged point files (column-pruned Arrow
+            # read), not a Spark distinct-collect: the staged parquet
+            # IS the batch, and an extra Spark job inside the 2PC
+            # critical section only added commit latency (r9 ADVICE).
+            # Capped; over-cap batches record the None wildcard, which
+            # only costs cache hits.
+            mets = _staged_metric_footprint(
+                os.path.join(staging, "points"), cap=65
+            )
+            # roots are recorded ABSOLUTE (r19 review): a relative dir
+            # recorded as-given resolves against the READER's cwd —
+            # _appends_settled's foreign-root skip would misclassify a
+            # local batch as foreign and skip the torn-move wait, the
+            # exact failure it guards
+            manifest = {
+                "roots": {"points": os.path.abspath(lake_dir),
+                          "catalog": os.path.abspath(catalog_dir)},
+                "points": _staged_files(os.path.join(staging, "points")),
+                "catalog": _staged_files(os.path.join(staging, "catalog")),
+                "metrics": sorted(mets) if len(mets) <= 64 else None,
+            }
+            if content_fp is not None:
+                # the caller's batch-content fingerprint: lets a replay
+                # detect a batch-id collision with different content
+                # (see the replay branch above)
+                manifest["content_fp"] = content_fp
+            for sec, deriv_dir, _writer in families:
+                manifest["roots"][sec] = os.path.abspath(deriv_dir)
+                manifest[sec] = _staged_files(os.path.join(staging, sec))
+            commitlog.write_json_atomic(marker, manifest)  # the commit point
+            _ensure_logged(manifest)
+            _apply_moves(manifest)
     finally:
         valid.unpersist()
+
+
+#: Wire format → decoder: THE one table every file-fed front-end
+#: (``start_ingest``, ``run_tsdb_bridge``) resolves its ``fmt`` through.
+_DECODERS = {
+    "json": decode_json_lines,
+    "opentsdb": decode_opentsdb_lines,
+    "netdata": decode_netdata_lines,
+}
+
+
+def _decoder(
+    fmt: str, default_ksid: str | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """``fmt``'s decoder, checked before any stream or lock starts: an
+    unknown format is a ``ValueError`` naming the known ones, and
+    netdata needs the listener's ``default_ksid`` — its lines carry no
+    ksid tag, and the data model makes ksid mandatory
+    (``valid_point_predicate``), so without one every point would
+    silently route to the invalid side-output."""
+    if fmt not in _DECODERS:
+        raise ValueError(
+            f"unknown ingest format {fmt!r}: expected one of "
+            f"{sorted(_DECODERS)}"
+        )
+    if fmt != "netdata":
+        return _DECODERS[fmt]
+    if default_ksid is None:
+        raise ValueError(
+            "fmt='netdata' requires default_ksid: netdata lines carry no "
+            "ksid tag and validation drops ksid-less points"
+        )
+    return functools.partial(_DECODERS[fmt], default_ksid=default_ksid)
+
+
+def _start_point_stream(
+    raw: DataFrame,
+    decode: Callable[[DataFrame], DataFrame],
+    lake_dir: str,
+    catalog_dir: str,
+    checkpoint_dir: str,
+    *,
+    batch_id: Callable[[int], str] = str,
+    available_now: bool = True,
+    after_batch: Callable[[], None] | None = None,
+    rollup_dir: str | None = None,
+    kmv_dir: str | None = None,
+    qsample_dir: str | None = None,
+) -> StreamingQuery:
+    """THE one stream builder behind every streaming front-end: ``raw``
+    (the front-end's source) → ``decode`` → a ``foreachBatch`` sink
+    running ``prepare_points`` → ``write_points_batch`` under the batch
+    id ``batch_id(epoch)`` (the front-end's namespace), checkpointed at
+    ``checkpoint_dir``.  Structured Streaming's idempotent-sink
+    contract: a replayed epoch re-delivers the same id, and the staged
+    commit's manifest makes it a no-op.  ``after_batch`` runs after each
+    committed batch (the bridge's ladder cadence)."""
+
+    def sink(batch: DataFrame, epoch: int) -> None:
+        valid, _invalid = prepare_points(batch)
+        write_points_batch(
+            valid,
+            lake_dir,
+            catalog_dir,
+            batch_id(epoch),
+            rollup_dir=rollup_dir,
+            kmv_dir=kmv_dir,
+            qsample_dir=qsample_dir,
+        )
+        if after_batch is not None:
+            after_batch()
+
+    writer = decode(raw).writeStream.foreachBatch(sink).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_ingest(
@@ -538,52 +613,28 @@ def start_ingest(
     fmt: str = "json",
     available_now: bool = True,
     rollup_dir: str | None = None,
-    rollup_interval_ms: int = 60_000,
     default_ksid: str | None = None,
 ) -> StreamingQuery:
-    """File-source ingest job (tests use availableNow for bounded runs).
+    """File-source ingest job (tests use availableNow for bounded runs):
+    text files under ``source_dir`` → the ``fmt`` decoder → the one
+    staged-commit sink, batch ids ``<n>`` (the stream's epoch).
 
     With ``rollup_dir``, each batch also appends mergeable downsample
     partials (streaming/rollup.py) — the continuous-aggregate path long
     time-range queries read instead of raw points.
 
     ``default_ksid`` is the listener's configured keyset, injected into
-    formats whose wire protocol carries no ksid tag (netdata).  The data
-    model makes ksid mandatory (valid_point_predicate), so starting a
-    netdata ingest without one would silently route every point to the
-    invalid side-output — fail fast instead.
+    formats whose wire protocol carries no ksid tag (netdata); starting
+    a netdata ingest without one, or an unknown ``fmt``, raises
+    ``ValueError`` before the stream starts.
     """
-    if fmt == "netdata" and default_ksid is None:
-        raise ValueError(
-            "fmt='netdata' requires default_ksid: netdata lines carry no "
-            "ksid tag and validation drops ksid-less points"
-        )
+    decode = _decoder(fmt, default_ksid)
     raw = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", "16")
         .load(source_dir)
     )
-    decoders = {
-        "json": decode_json_lines,
-        "opentsdb": decode_opentsdb_lines,
-        "netdata": lambda r: decode_netdata_lines(r, default_ksid=default_ksid),
-    }
-    decoded = decoders[fmt](raw)
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        valid, _invalid = prepare_points(batch)
-        write_points_batch(
-            valid,
-            lake_dir,
-            catalog_dir,
-            batch_id=batch_id,
-            rollup_dir=rollup_dir,
-            rollup_interval_ms=rollup_interval_ms,
-        )
-
-    writer = decoded.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_point_stream(
+        raw, decode, lake_dir, catalog_dir, checkpoint_dir,
+        available_now=available_now, rollup_dir=rollup_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from mycenae_spark.operators.downsample import bucket_ms_long
+from mycenae_spark.schema import FINE_ROLLUP_MS
 
 #: Read-path reconstruction per downsample aggregator.
 _MERGE_EXPRS = {
@@ -181,12 +182,8 @@ def mark_rollup_coverage(
     and not beyond") cannot express.  Consumers: the serving engine's
     per-request foreign-tail gate and the bridge GC tail's
     truncation floor."""
-    import json
-    import os
+    from mycenae_spark.streaming.commitlog import write_json_atomic
 
-    os.makedirs(rollup_dir, exist_ok=True)
-    path = os.path.join(rollup_dir, _COVERAGE_MARKER)
-    tmp = path + ".tmp"
     payload = {"complete": bool(complete)}
     if as_of_seq is not None:
         payload["as_of_seq"] = int(as_of_seq)
@@ -208,11 +205,7 @@ def mark_rollup_coverage(
         checked_to_seq = prev.get("checked_to_seq")
     if checked_to_seq is not None:
         payload["checked_to_seq"] = int(checked_to_seq)
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
+    write_json_atomic(os.path.join(rollup_dir, _COVERAGE_MARKER), payload)
 
 
 def rollup_coverage_complete(rollup_dir: str) -> bool:
@@ -534,7 +527,7 @@ def backfill_rollup(
     spark,
     lake_dir: str,
     rollup_dir: str,
-    interval_ms: int = 60_000,
+    interval_ms: int = FINE_ROLLUP_MS,
     series_cols: list[str] | None = None,
 ) -> dict:
     """Rebuild the rollup lake from the point lake and mark coverage
@@ -1820,7 +1813,7 @@ def backfill_kmv(
     spark,
     lake_dir: str,
     kmv_dir: str,
-    interval_ms: int = 60_000,
+    interval_ms: int = FINE_ROLLUP_MS,
     k: int = KMV_K,
     key_col: str = "value",
     series_cols: list[str] | None = None,
@@ -1994,7 +1987,7 @@ def backfill_qsample(
     spark,
     lake_dir: str,
     qs_dir: str,
-    interval_ms: int = 60_000,
+    interval_ms: int = FINE_ROLLUP_MS,
     k: int = QSAMPLE_K,
     series_cols: list[str] | None = None,
 ) -> dict:

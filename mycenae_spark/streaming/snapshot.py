@@ -247,14 +247,9 @@ def write_checkpoint(
         except commitlog.CommitConflict:
             continue
         state["seq"] = seq
-        d = _cp_dir(lake_dir)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp-{os.getpid()}-{seq}")
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, os.path.join(d, f"{seq:020d}.json"))
+        commitlog.write_json_atomic(
+            os.path.join(_cp_dir(lake_dir), f"{seq:020d}.json"), state
+        )
         return seq
     if unsettled:
         raise TransientInFlight(

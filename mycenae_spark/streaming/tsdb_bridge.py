@@ -52,7 +52,7 @@ from __future__ import annotations
 import logging
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
 
@@ -159,16 +159,12 @@ def _read_foreign_cursor(lake_dir: str, rollup_dir: str) -> int | None:
 
 
 def _write_foreign_cursor(lake_dir: str, rollup_dir: str, seq: int) -> None:
-    import json
+    from mycenae_spark.streaming.commitlog import write_json_atomic
 
-    path = _foreign_cursor_path(lake_dir, rollup_dir)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"seq": int(seq), "rollup_dir": rollup_dir}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
+    write_json_atomic(
+        _foreign_cursor_path(lake_dir, rollup_dir),
+        {"seq": int(seq), "rollup_dir": rollup_dir},
+    )
 
 
 def run_tsdb_bridge(
@@ -185,7 +181,6 @@ def run_tsdb_bridge(
     qsample_fine_dir: str | None = None,
     qsample_ladder: dict[int, str] | None = None,
     fmt: str = "json",
-    rollup_interval_ms: int = 60_000,
     cascade_every: int = 1,
     max_files_per_trigger: int = 16,
     default_ksid: str | None = None,
@@ -196,7 +191,14 @@ def run_tsdb_bridge(
     commitlog_keep_last: int | None = None,
 ) -> dict:
     """Drain ``source_dir`` through the ingest bridge (availableNow) and
-    leave every configured rung current.  ``ladder`` / ``kmv_ladder`` /
+    leave every configured rung current.  The ingest is the one ingest
+    path (``streaming.ingest._start_point_stream``): text files → the
+    ``fmt`` decoder → ``write_points_batch`` under batch ids ``<n>``,
+    staging the points, the fine rollup partials and every configured
+    fine sketch lake in one commit; the bridge adds only its ladder
+    cadence, run after each committed batch.  An unknown ``fmt``, or
+    netdata without ``default_ksid``, raises ``ValueError`` before any
+    lock is taken.  ``ladder`` / ``kmv_ladder`` /
     ``qsample_ladder`` map interval_ms → rung dir (the same maps the
     Engine takes); sketch ladders require their fine lake dir.  Returns
     ``{"batches": n, "refreshed": {...}}`` — ``refreshed`` holds the
@@ -247,13 +249,7 @@ def run_tsdb_bridge(
     everyone else."""
     from mycenae_spark.registry.util import await_or_raise
     from mycenae_spark.streaming import commitlog
-    from mycenae_spark.streaming.ingest import (
-        decode_json_lines,
-        decode_netdata_lines,
-        decode_opentsdb_lines,
-        prepare_points,
-        write_points_batch,
-    )
+    from mycenae_spark.streaming.ingest import _decoder, _start_point_stream
     from mycenae_spark.streaming.rollup import (
         _read_marker_as_of,
         cascade_kmv,
@@ -278,11 +274,7 @@ def run_tsdb_bridge(
             "a sketch ladder needs its fine lake: pass kmv_fine_dir / "
             "qsample_fine_dir so the rungs have a cascade source"
         )
-    if fmt == "netdata" and default_ksid is None:
-        raise ValueError(
-            "fmt='netdata' requires default_ksid: netdata lines carry no "
-            "ksid tag and validation drops ksid-less points"
-        )
+    decode = _decoder(fmt, default_ksid)
     if maintenance_floor_s is not None and maintenance_max_age_s is None:
         raise ValueError(
             "maintenance_floor_s set without maintenance_max_age_s: the "
@@ -462,48 +454,22 @@ def run_tsdb_bridge(
                 for fam, fine, rungs, cascade in families if rungs
             }
 
-        def sink(batch: DataFrame, batch_id: int) -> None:
-            valid, _invalid = prepare_points(batch)
-            # write_points_batch computes the batch-content fingerprint for
-            # every integer (streaming) batch id: a lost-checkpoint re-run
-            # whose slicing changed collides ids with different content, and
-            # the committed marker would otherwise silently swallow the new
-            # rows — the collision refuses loudly instead (review finding
-            # r17; the guard lives in the writer so start_ingest gets it
-            # too).
-            write_points_batch(
-                valid,
-                lake_dir,
-                catalog_dir,
-                batch_id=batch_id,
-                rollup_dir=rollup_dir,
-                rollup_interval_ms=rollup_interval_ms,
-                kmv_dir=kmv_fine_dir,
-                qsample_dir=qsample_fine_dir,
-            )
+        def after_batch() -> None:
             stats["batches"] += 1
             if stats["batches"] % cascade_every == 0:
                 advance_ladders()
 
-        decoders = {
-            "json": decode_json_lines,
-            "opentsdb": decode_opentsdb_lines,
-            "netdata": lambda r: decode_netdata_lines(
-                r, default_ksid=default_ksid
-            ),
-        }
         raw = (
             spark.readStream.format("text")
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
             .load(source_dir)
         )
-        writer = (
-            decoders[fmt](raw)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
+        job = _start_point_stream(
+            raw, decode, lake_dir, catalog_dir, checkpoint_dir,
+            after_batch=after_batch, rollup_dir=rollup_dir,
+            kmv_dir=kmv_fine_dir, qsample_dir=qsample_fine_dir,
         )
-        await_or_raise(writer.start(), timeout, "run_tsdb_bridge")
+        await_or_raise(job, timeout, "run_tsdb_bridge")
         if stats["batches"] and stats["batches"] % cascade_every != 0:
             # the cadence left a tail batch unrefreshed: finish current
             advance_ladders()

@@ -39,7 +39,9 @@ SF_DIR = os.environ.get("MYCENAE_TEST_SF_DIR", "/root/testdata/sf0.001")
 # test_server.py::test_media_dups_endpoint (~18 s); the TSDB ingest
 # family's is stream_tsdb_ingest_roundtrip (~40 s), the one gated id
 # that refreshes all three rung families through the bridge and routes
-# the Engine onto the refreshed rungs.
+# the Engine onto the refreshed rungs; the pipeline family's is
+# pipeline_media_prep (8.4 s in the default suite, ~30 s alone;
+# pipeline_corpus_prep took 72 s alone).
 SLOW_TESTS = frozenset({
     "tests/test_bus.py::test_bus_engine_crash_replay_no_dupes",
     "tests/test_bus.py::test_start_bus_ingest_end_to_end",
@@ -64,7 +66,6 @@ SLOW_TESTS = frozenset({
     "tests/test_oracle.py::test_oracle_match[dedup_media_index_assimilate]",
     "tests/test_oracle.py::test_oracle_match[kmv_backfill_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[pipeline_corpus_prep]",
-    "tests/test_oracle.py::test_oracle_match[pipeline_media_prep]",
     "tests/test_oracle.py::test_oracle_match[sketch_retention_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_ann_assimilate_roundtrip]",
     "tests/test_oracle.py::test_oracle_match[stream_chain_rebase_roundtrip]",

@@ -144,6 +144,32 @@ def test_netdata_ingest_end_to_end(spark, tmp_path):
     assert pts.select("ksid").distinct().collect()[0][0] == "ks1"
 
 
+def test_unknown_ingest_format_is_a_typed_error(spark, tmp_path):
+    """An unknown ``fmt`` is a ValueError naming the known formats, from
+    both file-fed front-ends, before any stream starts or any lock is
+    taken (the bridge flocks — and so creates — its lake dirs)."""
+    from mycenae_spark.streaming.tsdb_bridge import run_tsdb_bridge
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.txt").write_text("<point/>\n")
+    lake, catalog, ck, roll = (
+        str(tmp_path / d) for d in ("lake", "catalog", "ck", "roll")
+    )
+    known = r"unknown ingest format 'xml'.*\['json', 'netdata', 'opentsdb'\]"
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match=known):
+        start_ingest(spark, str(src), lake, catalog, ck, fmt="xml")
+    with pytest.raises(ValueError, match=known):
+        run_tsdb_bridge(
+            spark, str(src), lake, catalog, ck, rollup_dir=roll, fmt="xml"
+        )
+    assert len(spark.streams.active) == active
+    assert not any(
+        (tmp_path / d).exists() for d in ("lake", "catalog", "ck", "roll")
+    )
+
+
 def test_batch_replay_is_exactly_once(spark, tmp_path):
     """Replaying a foreachBatch (Spark re-runs the whole batch when the
     sink fails before the checkpoint commits) must not duplicate lake rows
