@@ -78,6 +78,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from mycenae_spark.api import (
@@ -112,6 +113,13 @@ def _tag_columns(keys) -> list:
     """One ``tag_<k>`` column per tag key, expanded from the ``tags`` map:
     the per-tag-column form the planner and ``catalog.suggest`` read."""
     return [F.col("tags").getItem(k).alias(f"tag_{k}") for k in keys]
+
+
+def _unpersist(value) -> None:
+    """Release a memo value dropped from ``Engine._frames`` (a no-op for
+    the tag-key list and for a frame that was never persisted)."""
+    if isinstance(value, DataFrame):
+        value.unpersist(blocking=True)
 
 
 class _RequestState(threading.local):
@@ -219,6 +227,16 @@ class Engine:
         #:   stamp than the stored one stores nothing.
         #: * The serving frames are not stored once a read of the request
         #:   degraded to a directory listing (NoBaseline).
+        #: * Stored frames are persisted and hash-partitioned by "metric"
+        #:   (_persisted); every serving plan groups by metric, so a
+        #:   cache-missing read on them is one Spark job.  Values that are
+        #:   not stored are never persisted.
+        #: * A superseded frame is unpersisted BEFORE its rebuild: Spark
+        #:   matches cached data by plan, and a rung's directory read
+        #:   would otherwise be served the old generation's rows after a
+        #:   refresh_ladder swap.  An evicted frame, or one a concurrent
+        #:   store replaces, is unpersisted when dropped.  So memory holds
+        #:   one generation's points, catalog, fine rollup and rungs.
         #: * A read that raises on reused serving frames evicts them,
         #:   rebuilds and retries once (_retry_on_fresh_frames); a rung
         #:   read or build that raced a swap evicts that rung.  _memo's
@@ -456,34 +474,69 @@ class Engine:
         needs the stored stamp and inputs to equal ``stamp`` and
         ``inputs``.  A None stamp (an unpinned serving frame) builds fresh
         and stores nothing.  A build stores nothing when the slot already
-        holds a newer stamp — a straggler request at an older head — nor,
-        for a serving frame, once any read of this request degraded (the
-        result cache's rule)."""
+        holds a newer stamp — a straggler request at an older head — or
+        this very generation, nor, for a serving frame, once any read of
+        this request degraded (the result cache's rule).  A value that is
+        not stored is returned as built; a stored DataFrame is stored
+        persisted (``_persisted``).
+
+        A superseded entry is dropped and unpersisted BEFORE ``build()``
+        runs: Spark matches a new plan to cached data by ``sameResult``,
+        and a directory read (a ladder rung) compares by its root path, so
+        a rung rebuilt after refresh_ladder's swap would otherwise be
+        served the old generation's cached rows."""
         if stamp is None:
             return build()
         serving = slot in self._SERVING_FRAMES
         with self._result_cache_lock:
             entry = self._frames.get(slot)
-        if entry is not None and entry[:2] == (stamp, inputs):
-            if serving:
-                self._read_pin.reused.add(slot)
-            return entry[2]
+            if entry is not None and entry[:2] == (stamp, inputs):
+                if serving:
+                    self._read_pin.reused.add(slot)
+                return entry[2]
+            superseded = entry is not None and entry[0] <= stamp
+            if superseded:
+                del self._frames[slot]
+        if superseded:
+            _unpersist(entry[2])
         value = build()
-        if not (serving and self._read_pin.degraded):
-            with self._result_cache_lock:
-                entry = self._frames.get(slot)
-                if entry is None or entry[0] <= stamp:
-                    self._frames[slot] = (stamp, inputs, value)
+        if serving and self._read_pin.degraded:
+            return value
+        with self._result_cache_lock:
+            entry = self._frames.get(slot)
+            if entry is not None and (
+                entry[0] > stamp or entry[:2] == (stamp, inputs)
+            ):
+                return value
+            value = self._persisted(value)
+            self._frames[slot] = (stamp, inputs, value)
+        if entry is not None:
+            _unpersist(entry[2])
+        return value
+
+    def _persisted(self, value):
+        """``value`` as the memo stores it.  A DataFrame with a ``metric``
+        column (the serving frames and the rungs) is hash-partitioned by
+        ``metric`` and persisted: every serving plan groups by ``metric``
+        plus tags and bucket, so the aggregate and the rate window need
+        no further exchange and a read on it is one Spark job.  Anything
+        else (the tag-key list) is stored as is."""
+        if isinstance(value, DataFrame) and "metric" in value.columns:
+            return value.repartition(
+                self.spark.sparkContext.defaultParallelism, "metric"
+            ).persist(StorageLevel.MEMORY_AND_DISK)
         return value
 
     def _evict(self, *slots: str) -> None:
-        """Drop ``slots`` from the memo, after a read on their memoized
-        values failed: the evict-and-retry (``_retry_on_fresh_frames``),
-        a rung read that raced a swap (``_run_subquery``) and a rung
-        build that did (``_walk_rungs``)."""
+        """Drop ``slots`` from the memo and unpersist their values, after
+        a read on them failed: the evict-and-retry
+        (``_retry_on_fresh_frames``), a rung read that raced a swap
+        (``_run_subquery``) and a rung build that did (``_walk_rungs``)."""
         with self._result_cache_lock:
-            for slot in slots:
-                self._frames.pop(slot, None)
+            dropped = [self._frames.pop(slot, None) for slot in slots]
+        for entry in dropped:
+            if entry is not None:
+                _unpersist(entry[2])
 
     def _retry_on_fresh_frames(self, head: int | None, compute):
         """``compute()`` for one pinned request, retried at most once.

@@ -47,6 +47,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from mycenae_spark.streaming import commitlog
+
 _log = logging.getLogger(__name__)
 
 def _register_by_value() -> None:
@@ -68,6 +70,8 @@ def _register_by_value() -> None:
         from mycenae_spark.pickling import register_module_by_value
     except ImportError:
         return  # worker without the repo on sys.path
+    # commit() runs in a worker too and writes through commitlog
+    register_module_by_value(commitlog)
     register_module_by_value(mod)
 
 
@@ -251,13 +255,12 @@ class BusStreamReader(DataSourceStreamReader):
         # consumer-group offset marker (namespaced per group — see
         # _group_marker): observability + a GC hook for fully-consumed
         # segments; correctness never depends on it (the checkpoint owns
-        # replay)
-        marker = _group_marker(self.topic_dir, self.group)
-        tmp = marker + f".{os.getpid()}.tmp"
+        # replay).  Written durably: gc_topic reads a torn marker as
+        # offset 0 on every partition.
         try:
-            with open(tmp, "w") as f:
-                json.dump(end, f)
-            os.rename(tmp, marker)
+            commitlog.write_json_atomic(
+                _group_marker(self.topic_dir, self.group), end
+            )
         except OSError:
             _log.debug("commit marker write failed (best-effort)", exc_info=True)
 
@@ -369,7 +372,8 @@ def gc_topic(topic_dir: str, keep_segments: int = 2) -> int:
     """Drop head segments FULLY CONSUMED by EVERY consumer group — the
     GC line per partition is the MINIMUM over all ``_committed-<group>``
     markers (r9 ADVICE: a shared marker let a fast group's commit drop
-    segments a slower group still needed) — keeping at least the newest
+    segments a slower group still needed; a marker that cannot be read
+    counts as offset 0 on every partition) — keeping at least the newest
     ``keep_segments`` (min 1) per partition regardless: replay headroom
     for a checkpoint slightly behind its marker (the marker trails batch
     completion by design), and an anchor for the absolute offset line.
@@ -403,7 +407,9 @@ def gc_topic(topic_dir: str, keep_segments: int = 2) -> int:
             with open(marker) as f:
                 data = json.load(f)
         except (OSError, ValueError):
-            continue
+            # fail closed: a marker that cannot be read (torn by a crash)
+            # holds the line at offset 0 on every partition
+            data = {}
         if marker == legacy_path:
             legacy = data
         else:

@@ -132,6 +132,20 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _release_cached_frames():
+    """Drop every cached frame after each test.  The session is shared,
+    and each Engine persists its memo frames: left cached, they would
+    pile up in storage memory, and every later plan would be checked
+    against them by the cache lookup."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
+
+
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()

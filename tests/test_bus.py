@@ -299,3 +299,28 @@ def test_gc_topic_retires_superseded_legacy_marker(tmp_path):
     assert bus.gc_topic(topic, keep_segments=1) == 2
     assert not os.path.exists(legacy)
     assert bus._earliest_offsets(topic) == {"0": 6}
+
+
+def test_gc_topic_holds_line_at_unreadable_marker(tmp_path):
+    """A group marker that cannot be parsed (torn by a crash) holds the
+    GC line at offset 0 on every partition: with five one-message
+    segments, group ``fast`` at offset 5 and an empty
+    ``_committed-slow.json``, GC removes nothing (skipping the marker
+    removed 4).  Once ``slow`` commits durably through the reader, the
+    line moves to its offset."""
+    topic = str(tmp_path / "t")
+    for i in range(5):
+        bus.publish(topic, 0, [f"m{i}"])
+    with open(os.path.join(topic, "_committed-fast.json"), "w") as f:
+        json.dump({"0": 5}, f)
+    slow = os.path.join(topic, "_committed-slow.json")
+    open(slow, "w").close()
+    assert bus.gc_topic(topic, keep_segments=1) == 0
+    assert len(bus._segments(os.path.join(topic, "p=0"))) == 5
+
+    bus.BusStreamReader(topic, "slow").commit({"0": 2})
+    with open(slow) as f:
+        assert json.load(f) == {"0": 2}
+    assert not [n for n in os.listdir(topic) if n.endswith(".tmp")]
+    assert bus.gc_topic(topic, keep_segments=1) == 2
+    assert bus._earliest_offsets(topic) == {"0": 2}

@@ -533,7 +533,7 @@ def test_engine_ladder_swap_race_retries_on_fine_path(spark, tmp_path_factory):
     failure and retry once via the fine rollup/points path instead of
     surfacing a request error.  Simulated by deleting the rung's parquet
     data (keeping the marker, so routing still picks it) after the frame
-    is memoized."""
+    is memoized, and then the frame's cached rows."""
     import glob
     import os
 
@@ -566,6 +566,12 @@ def test_engine_ladder_swap_race_retries_on_fine_path(spark, tmp_path_factory):
     for p in glob.glob(os.path.join(rung1h, "**", "*.parquet"),
                        recursive=True):
         os.remove(p)
+    # the memoized frame is persisted: its cached rows still answer
+    assert eng.query(body)[0]["dps"] == want
+    assert eng.last_routes() == ["ladder:3600000"]
+    # once they are gone too (as an executor loss drops them), the read
+    # goes back to the vanished files
+    spark.catalog.clearCache()
     # drop the generation-scoped RESULT cache so the re-issued request
     # actually replans (a cache hit here would be CORRECT — same log
     # generation, a rung refresh never changes answers — but this test
@@ -945,9 +951,10 @@ def test_frame_memo_survives_files_moved_by_compaction(
 ):
     """Compaction moves the superseded point files into _retained/<seq>.
     A request still pinned at the old head S (latest_seq frozen at S)
-    hits the memoized frame, whose file list is gone: the read fails,
-    the generation is evicted, and the rebuilt snapshot read (which finds
-    the files under _retained) answers correctly."""
+    hits the memoized frame, whose cached rows answer.  Once those are
+    gone too, the frame's file list is gone: the read fails, the
+    generation is evicted, and the rebuilt snapshot read (which finds the
+    files under _retained) answers correctly."""
     import os
 
     import mycenae_spark.streaming.commitlog as cl
@@ -973,6 +980,13 @@ def test_frame_memo_survives_files_moved_by_compaction(
     compact_partition(spark, lake, "k1", "2024-01-01")
     assert os.path.isdir(os.path.join(lake, "_retained"))
     monkeypatch.setattr(cl, "latest_seq", lambda p: head_s)
+    eng._result_cache.clear()
+    # the memoized frame is persisted: its cached rows still answer
+    assert sum(eng.query(body)[0]["dps"].values()) == pytest.approx(3.0)
+    assert eng._frames["points"][2] is memoized["points"][2]
+    # once they are gone too (as an executor loss drops them), the read
+    # goes back to the moved files
+    spark.catalog.clearCache()
     eng._result_cache.clear()
     out = eng.query(body)
     assert sum(out[0]["dps"].values()) == pytest.approx(3.0)
@@ -1012,6 +1026,217 @@ def test_memo_keeps_newest_stamp_under_concurrent_builds(tmp_path):
     assert not any(t.is_alive() for t in threads)
     assert not wrong
     assert eng._frames["tag_keys"][0] == 3999
+
+
+def test_rebuilt_rung_frame_serves_the_swapped_generation(
+    spark, tmp_path_factory
+):
+    """refresh_ladder publishes a rung's new generation under the same
+    directory.  Spark matches cached data to a plan by ``sameResult``, and
+    a directory read compares by its root path, so the old rung frame must
+    be unpersisted before its rebuild: one Engine throughout, the second
+    rung-routed read carries the new value, from a rebuilt frame that is
+    itself persisted."""
+    from pyspark import StorageLevel
+
+    from mycenae_spark.server import Engine
+    from mycenae_spark.streaming.rollup import refresh_ladder
+
+    d = tmp_path_factory.mktemp("stalerung")
+    lake, catalog, roll, rung1h = (
+        str(d / n) for n in ("lake", "catalog", "rollup", "rollup_1h")
+    )
+    ladder = {3_600_000: rung1h}
+    eng = Engine(spark, lake, catalog, rollup_dir=roll, ladder=ladder)
+    eng.put([{"metric": "sr.s", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + i * 1_200_000, "value": 1.0}
+             for i in range(6)])
+    body = {
+        "start": BASE_TS, "end": BASE_TS + 2 * 3_600_000,
+        "queries": [{"metric": "sr.s", "aggregator": "sum",
+                     "downsample": "1h-sum"}],
+    }
+    hour0, hour1 = str(BASE_TS // 1000), str(BASE_TS // 1000 + 3600)
+
+    refresh_ladder(spark, lake, roll, ladder)
+    out = eng.query(body)
+    assert eng.last_routes() == ["ladder:3600000"]
+    assert out[0]["dps"] == {hour0: pytest.approx(3.0),
+                             hour1: pytest.approx(3.0)}
+    first = eng._frames[rung1h]
+
+    eng.put([{"metric": "sr.s", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + 600_000, "value": 4.0}])
+    refresh_ladder(spark, lake, roll, ladder)
+    out = eng.query(body)
+    assert eng.last_routes() == ["ladder:3600000"]
+    assert out[0]["dps"] == {hour0: pytest.approx(7.0),
+                             hour1: pytest.approx(3.0)}
+    rebuilt = eng._frames[rung1h]
+    assert rebuilt[0] > first[0]
+    assert rebuilt[2].storageLevel != StorageLevel.NONE
+
+
+def test_memo_persists_stored_frames_and_unpersists_dropped_ones(
+    spark, tmp_path_factory
+):
+    """Every DataFrame the memo stores (the points, catalog and fine
+    rollup serving frames and a ladder rung's frame) is persisted; a
+    frame replaced by a newer stamp, or evicted, is unpersisted."""
+    from pyspark import StorageLevel
+
+    from mycenae_spark.server import Engine
+    from mycenae_spark.streaming.rollup import refresh_ladder
+
+    d = tmp_path_factory.mktemp("memopersist")
+    lake, catalog, roll, rung1h = (
+        str(d / n) for n in ("lake", "catalog", "rollup", "rollup_1h")
+    )
+    ladder = {3_600_000: rung1h}
+    eng = Engine(spark, lake, catalog, rollup_dir=roll, ladder=ladder)
+    eng.put([{"metric": "mp.s", "tags": {"ksid": "k1", "host": f"h{i % 2}"},
+              "timestamp": BASE_TS + i * 600_000, "value": float(i)}
+             for i in range(12)])
+    eng.checkpoint()
+    refresh_ladder(spark, lake, roll, ladder)
+
+    def query(downsample):
+        eng.query({
+            "start": BASE_TS, "end": BASE_TS + 2 * 3_600_000,
+            "queries": [{"metric": "mp.s", "aggregator": "sum",
+                         "downsample": downsample}],
+        })
+        return eng.last_routes()
+
+    assert query("1h-avg") == ["ladder:3600000"]
+    assert query("10m-avg") == ["fine"]
+    slots = ("points", "catalog", "rollup", rung1h)
+    frames = {slot: eng._frames[slot][2] for slot in slots}
+    for slot, frame in frames.items():
+        assert frame.storageLevel != StorageLevel.NONE, slot
+
+    eng.put([{"metric": "mp.s", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + 1, "value": 100.0}])
+    assert query("10m-avg") == ["fine"]
+    for slot in ("points", "catalog", "rollup"):
+        assert eng._frames[slot][2] is not frames[slot]
+        assert frames[slot].storageLevel == StorageLevel.NONE, slot
+        assert eng._frames[slot][2].storageLevel != StorageLevel.NONE, slot
+
+    eng._evict(rung1h)
+    assert rung1h not in eng._frames
+    assert frames[rung1h].storageLevel == StorageLevel.NONE
+
+
+def test_unstored_frame_builds_persist_nothing(spark, tmp_path_factory,
+                                               monkeypatch):
+    """Only stored frames are persisted: an unpinned read (no checkpoint)
+    and a degraded read (a catalog snapshot raising NoBaseline) return
+    their frames as built, so the session's persistent RDDs are the same
+    before and after each of them."""
+    import mycenae_spark.streaming.snapshot as snap
+    from mycenae_spark.server import Engine
+
+    d = tmp_path_factory.mktemp("unstored")
+    eng = Engine(spark, str(d / "lake"), str(d / "catalog"),
+                 rollup_dir=str(d / "rollup"))
+    eng.put([{"metric": "un.s", "tags": {"ksid": "k1", "host": "h0"},
+              "timestamp": BASE_TS + i * 60_000, "value": float(i)}
+             for i in range(10)])
+    body = {
+        "start": BASE_TS, "end": BASE_TS + 600_000,
+        "queries": [{"metric": "un.s", "aggregator": "sum",
+                     "downsample": "5m-avg"}],
+    }
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    n_before = persistent().size()
+    assert sum(eng.query(body)[0]["dps"].values()) == pytest.approx(45 / 5)
+    assert persistent().size() == n_before
+    assert set(eng._frames) == {"tag_keys"}
+
+    eng.checkpoint()
+
+    def no_baseline(*a, **k):
+        raise snap.NoBaseline("checkpoint lacks a catalog section")
+    monkeypatch.setattr(snap, "read_catalog_snapshot", no_baseline)
+    eng._result_cache.clear()
+    n_before = persistent().size()
+    assert sum(eng.query(body)[0]["dps"].values()) == pytest.approx(45 / 5)
+    assert persistent().size() == n_before
+    assert set(eng._frames) == {"tag_keys"}
+
+
+def test_cache_missing_read_is_one_spark_job(spark, tmp_path_factory):
+    """On memoized frames a result-cache miss is ONE Spark job, for every
+    /api/query shape of the served-read benchmark: rung-routed, fine,
+    fine with rate, tag group-by, raw percentile and raw wildcard.  The
+    memo's frames are hash-partitioned by ``metric``, which every serving
+    plan groups by, so no exchange is left above the cached scan.  Each
+    shape is served once to warm the memo, then a fresh window of each
+    runs under its own job group."""
+    import uuid
+
+    from mycenae_spark.server import Engine
+    from mycenae_spark.streaming.rollup import refresh_ladder
+
+    H = 3_600_000
+    d = tmp_path_factory.mktemp("onejob")
+    lake, catalog, roll, rung1h = (
+        str(d / n) for n in ("lake", "catalog", "rollup", "rollup_1h")
+    )
+    ladder = {H: rung1h}
+    eng = Engine(spark, lake, catalog, rollup_dir=roll, ladder=ladder)
+    eng.put([{"metric": m, "tags": {"ksid": "k1", "host": f"h{h}",
+                                    "dc": f"dc{h % 2}"},
+              "timestamp": BASE_TS + i * 300_000, "value": float(i + h)}
+             for m in ("oj.a", "oj.b") for h in range(4) for i in range(96)])
+    eng.checkpoint()
+    refresh_ladder(spark, lake, roll, ladder)
+
+    #: shape → (its route, its sub-query)
+    shapes = {
+        "rung": ("ladder:3600000",
+                 {"aggregator": "sum", "downsample": "1h-avg"}),
+        "fine": ("fine", {"aggregator": "max", "downsample": "5m-max"}),
+        "rate": ("fine", {"aggregator": "avg", "downsample": "1m-avg",
+                          "rate": True}),
+        "group-by": ("fine", {"aggregator": "avg", "downsample": "10m-avg",
+                              "filters": [{"type": "literal_or",
+                                           "tagk": "dc", "filter": "dc0|dc1",
+                                           "groupBy": True}]}),
+        "raw p95": ("fine", {"aggregator": "max",
+                             "downsample": "15m-p95"}),
+        "raw wildcard": ("fine", {"aggregator": "sum",
+                                  "filters": [{"type": "wildcard",
+                                               "tagk": "host",
+                                               "filter": "h1*",
+                                               "groupBy": True}]}),
+    }
+
+    def query(shape, metric, start):
+        route, sub = shapes[shape]
+        out = eng.query({
+            "start": start, "end": start + 2 * H,
+            "queries": [{"metric": metric, **sub}],
+        })
+        assert out and all(r["dps"] for r in out), shape
+        assert eng.last_routes() == [route], shape
+
+    for shape in shapes:
+        query(shape, "oj.a", BASE_TS)
+    sc = spark.sparkContext
+    jobs = {}
+    for shape in shapes:
+        group = f"one-job-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, shape)
+        try:
+            query(shape, "oj.b", BASE_TS + 4 * H)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[shape] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {shape: 1 for shape in shapes}
 
 
 def test_tag_key_discovery_reads_catalog_not_lake(spark, tmp_path_factory):
