@@ -15,7 +15,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
-from mycenae_spark.registry.util import expand_rounding_macros, r4, r6, r6_sql, t
+from mycenae_spark.registry.util import (
+    bridge_day_summary,
+    detach,
+    expand_rounding_macros,
+    r4,
+    r6,
+    r6_sql,
+    sandbox,
+    t,
+)
 from mycenae_spark.sources.tables import explode_ne, spread_scan
 
 QUERIES = {}
@@ -3664,8 +3673,6 @@ def stream_ann_assimilate_roundtrip(spark, sf_dir):
     own cadences."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from mycenae_spark.functions import pq
     from mycenae_spark.streaming.assimilate import (
@@ -3681,10 +3688,8 @@ def stream_ann_assimilate_roundtrip(spark, sf_dir):
         spark, sf_dir, rounder=r6, pred=base_pred, pred_desc="mod20ne23"
     )
 
-    base = tempfile.mkdtemp(prefix="sannassim_rt_")
-    try:
+    with sandbox(spark, "sannassim_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
         rdir = os.path.join(base, "results")
         # Bounded driver hop by construction: each day slice is capped
         # (< 500 ∧ one residue class) — ≤ 25 rows at any judged scale.
@@ -3711,12 +3716,7 @@ def stream_ann_assimilate_roundtrip(spark, sf_dir):
             raise AssertionError(
                 f"expected 3 index generations, got {len(chain)}: {chain}"
             )
-        res = read_bridge_output(spark, rdir, ANN_RESULT_SCHEMA)
-        rows = res.collect()
-        res_schema = res.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+        return detach(read_bridge_output(spark, rdir, ANN_RESULT_SCHEMA))
 
 
 #: The retrain contract: the chain's covered corpus (base % 10 < 7 plus
@@ -5728,8 +5728,6 @@ def stream_text_assimilate_roundtrip(spark, sf_dir):
     reads, assimilation writes ∝ keeps, the corpus is never re-hashed."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from mycenae_spark.functions.dedup import ensure_band_index
     from mycenae_spark.streaming.assimilate import (
@@ -5744,10 +5742,22 @@ def stream_text_assimilate_roundtrip(spark, sf_dir):
             f"w{i}p{j}" for j in range(12)
         )
 
-    base = tempfile.mkdtemp(prefix="stassim_rt_")
-    try:
+    def jrow(did, day, txt):
+        return _json.dumps({"doc_id": did, "day": day, "text": txt})
+
+    def cover(gen_dir):
+        return (
+            spark.read.schema(
+                "idx_id long, sig string, band int, shard bigint"
+            )
+            .parquet(os.path.join(gen_dir, "bands"))
+            .select("idx_id")
+            .distinct()
+            .count()
+        )
+
+    with sandbox(spark, "stassim_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
         vdir = os.path.join(base, "verdicts")
 
         day0 = spark.createDataFrame(
@@ -5758,9 +5768,6 @@ def stream_text_assimilate_roundtrip(spark, sf_dir):
             pred_desc="stream_text_day0", n_bands=N_BANDS,
             max_bucket_size=MAX_BUCKET,
         )
-
-        def jrow(did, day, txt):
-            return _json.dumps({"doc_id": did, "day": day, "text": txt})
 
         rows1 = [jrow(1000, 1, text(0)), jrow(1001, 1, text(1))] + [
             jrow(1000 + i, 1, text(i)) for i in range(10, 14)
@@ -5780,46 +5787,10 @@ def stream_text_assimilate_roundtrip(spark, sf_dir):
                 f"expected 3 index generations, got {len(chain)}: {chain}"
             )
 
-        def cover(gen_dir):
-            return (
-                spark.read.schema(
-                    "idx_id long, sig string, band int, shard bigint"
-                )
-                .parquet(os.path.join(gen_dir, "bands"))
-                .select("idx_id")
-                .distinct()
-                .count()
-            )
-
-        covers = {1: cover(chain[0]), 2: cover(chain[1])}
-        out = (
-            read_bridge_output(spark, vdir, TEXT_VERDICT_SCHEMA)
-            .groupBy("day")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(
-                    F.when(
-                        (F.col("dup_of") >= 0) & (F.col("dup_of") < 1000), 1
-                    ).otherwise(0)
-                ).alias("n_dup_day0"),
-                F.sum(
-                    F.when(F.col("dup_of") >= 1000, 1).otherwise(0)
-                ).alias("n_dup_day1"),
-                F.sum(F.lit(1) - F.col("is_dup")).alias("n_keeps"),
-            )
-        )
-        cov = spark.createDataFrame(
-            [(d, c) for d, c in covers.items()], "day int, idx_cover long"
-        )
-        res = out.join(cov, "day").select(
-            "day", "n_docs", "n_dup_day0", "n_dup_day1", "n_keeps",
-            "idx_cover",
-        )
-        rows = res.collect()
-        res_schema = res.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+        return detach(bridge_day_summary(
+            read_bridge_output(spark, vdir, TEXT_VERDICT_SCHEMA), "n_docs",
+            {1: cover(chain[0]), 2: cover(chain[1])},
+        ))
 
 
 # ------------------------------------------- DSIR importance resampling

@@ -8,7 +8,7 @@ modules — the same code paths the OpenTSDB planner (plans/tsdb.py) uses.
 
 from __future__ import annotations
 
-import logging
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window
@@ -22,17 +22,24 @@ from mycenae_spark.registry.util import (
     MS_2024_01_12,
     SQL_POINTS,
     await_or_raise,
+    bridge_day_summary,
     bucket_ms_sql,
+    detach,
+    drain,
     expand_rounding_macros,
+    json_points,
+    memory_sink,
     points,
     r4,
     r6,
+    sandbox,
 )
-
-_log = logging.getLogger(__name__)
 
 HOUR_MS = 3_600_000
 DAY_MS = 86_400_000
+#: Where the lifecycle ids' synthesized input starts: 2024-01-01T00:00Z,
+#: day-aligned.
+BASE_MS = 1704067200000
 
 QUERIES = {}
 ORACLE = {}
@@ -84,22 +91,17 @@ def ingest_roundtrip(spark, sf_dir):
     becomes a judged value equality, not just a pytest.
 
     90 points over two metrics; expected counts/sums/series and the
-    rollup's re-merged sum are closed-form.  The result is collected (5
-    rows) and re-created so the returned frame has no lineage into the
-    temp dir, which is removed before returning.  ``sf_dir`` is unused —
-    the input is synthesized, making the check scale-invariant."""
+    rollup's re-merged sum are closed-form.  ``sf_dir`` is unused — the
+    input is synthesized, making the check scale-invariant."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.ingest import start_ingest
     from mycenae_spark.streaming.rollup import read_rollup
 
-    base = tempfile.mkdtemp(prefix="ingest_rt_")
-    try:
+    with sandbox(spark, "ingest_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
         pts = [
             {"metric": "cpu.usage", "tags": {"ksid": "k1", "host": f"h{i % 2}"},
              "timestamp": 1704067200000 + i * 1000, "value": float(i)}
@@ -109,8 +111,7 @@ def ingest_roundtrip(spark, sf_dir):
              "timestamp": 1704067200000 + i * 1000, "value": float(i)}
             for i in range(30)
         ]
-        with open(os.path.join(src, "b.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in pts))
+        write_day_files(src, [("b.jsonl", [_json.dumps(p) for p in pts])])
         lake, catalog, ck, roll = (
             os.path.join(base, d) for d in ("lake", "catalog", "ck", "rollup")
         )
@@ -135,15 +136,10 @@ def ingest_roundtrip(spark, sf_dir):
             .groupBy("metric")
             .agg(r4(F.sum("value")).alias("rollup_sum_r"))
         )
-        out = (
+        return detach(
             lake_agg.join(cat_agg, "metric").join(roll_agg, "metric")
             .select("metric", "n_points", "sum_v_r", "n_series", "rollup_sum_r")
         )
-        rows = out.collect()  # 2 rows — decouples the frame from temp files
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @q(
@@ -161,15 +157,10 @@ def meta_delete_roundtrip(spark, sf_dir):
     delete one metric's series (commit-log CAS-guarded atomic rewrite,
     server.Engine.delete_meta), read the catalog back — against a constant
     oracle.  Points are untouched (they expire via keyspace TTL; mycenae's
-    contract).  Like ingest_roundtrip the result is collected (2 rows) so
-    the returned frame has no lineage into the removed temp dir."""
-    import shutil
-    import tempfile
-
+    contract)."""
     from mycenae_spark.server import Engine
 
-    base = tempfile.mkdtemp(prefix="meta_del_")
-    try:
+    with sandbox(spark, "meta_del_") as base:
         eng = Engine(spark, base + "/lake", base + "/catalog")
         eng.put([
             {"metric": "del.metric", "tags": {"ksid": "k1", "host": "h0"},
@@ -186,14 +177,9 @@ def meta_delete_roundtrip(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
             .withColumnRenamed("metric", "what")
         )
-        res = remaining.unionByName(
+        return detach(remaining.unionByName(
             spark.createDataFrame([("deleted", out["deleted"])], "what string, n long")
-        )
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        ))
 
 
 @q(
@@ -211,41 +197,32 @@ def keyspace_ttl_roundtrip(spark, sf_dir):
     date partitions are dropped (pure directory deletes, cost independent
     of partition bytes: mycenae's Cassandra-TTL contract as partition
     pruning) — then read the lake back per remaining date.  Constant
-    oracle; collected (2 rows) so the frame outlives the temp dir."""
+    oracle."""
     import datetime
-    import shutil
-    import tempfile
 
     from mycenae_spark.keyspace import Keyspace, KeyspaceManager
     from mycenae_spark.server import Engine
 
-    base = tempfile.mkdtemp(prefix="ks_ttl_")
-    try:
+    with sandbox(spark, "ks_ttl_") as base:
         lake = base + "/lake"
         eng = Engine(spark, lake, base + "/catalog")
         day_ms = 86_400_000
         d0 = 1704067200000  # 2024-01-01
-        pts = [
+        eng.put([
             {"metric": "ttl.m", "tags": {"ksid": "k1", "host": f"h{i}"},
              "timestamp": d0 + d * day_ms + i * 1000, "value": 1.0}
             for d in range(4)
             for i in range(10)
-        ]
-        eng.put(pts)
+        ])
         mgr = KeyspaceManager(lake)
         mgr.create(Keyspace(name="k1", ttl_days=2))
         dropped = mgr.apply_ttl("k1", today=datetime.date(2024, 1, 5))
         assert len(dropped) == 2, dropped
-        out = (
+        return detach(
             spark.read.parquet(lake)
             .groupBy(F.col("date").cast("string").alias("date_kept"))
             .agg(F.count(F.lit(1)).alias("n_points"))
         )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @q(
@@ -1777,40 +1754,21 @@ def compaction_roundtrip(spark, sf_dir):
     the compaction still serves the original rows from the retained
     generation (`_retained/<seq>` — the VACUUM grace window); then
     ``gc_retained(max_age_s=0)`` sweeps that generation and the current
-    head read is untouched.  Constant oracle; collected before rmtree.
-    ``sf_dir`` unused — input synthesized, scale-invariant."""
+    head read is untouched.  Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
     import glob as _glob
-    import json as _json
-    import shutil
-    import tempfile
 
     from mycenae_spark.maintenance import compact_partition, gc_retained
     from mycenae_spark.streaming import snapshot as snap
-    from mycenae_spark.streaming.ingest import (
-        decode_json_lines,
-        prepare_points,
-        write_points_batch,
-    )
-
-    BASE = 1704067200000
+    from mycenae_spark.streaming.ingest import write_points_batch
 
     def mk(n, base_i):
-        rows = [
-            (_json.dumps({
-                "metric": "cmp.m",
-                "tags": {"ksid": "k1", "host": f"h{base_i + i}"},
-                "timestamp": BASE + (base_i + i) * 60_000,
-                "value": float(base_i + i),
-            }),)
+        return json_points(spark, [
+            {"metric": "cmp.m", "tags": {"ksid": "k1", "host": f"h{base_i + i}"},
+             "timestamp": BASE_MS + (base_i + i) * 60_000, "value": float(base_i + i)}
             for i in range(n)
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="cmp_rt_")
-    try:
+    with sandbox(spark, "cmp_rt_") as base:
         lake, catalog = base + "/lake", base + "/catalog"
         write_points_batch(mk(10, 0), lake, catalog, batch_id="a")
         write_points_batch(mk(5, 10), lake, catalog, batch_id="b")
@@ -1837,23 +1795,15 @@ def compaction_roundtrip(spark, sf_dir):
         removed = gc_retained(lake, max_age_s=0)
         n_after_gc = spark.read.parquet(lake).count()
 
-        out = spark.createDataFrame(
-            [
-                ("files_before_ge_3", 1 if files_before >= 3 else 0),
-                ("files_after_one", 1 if fa == 1 else 0),
-                ("count_preserved", n_head),
-                ("sum_preserved", sum_ok),
-                ("pinned_read_survives_compaction", pinned_ok),
-                ("retained_generation_swept", 1 if removed else 0),
-                ("head_read_after_gc", n_after_gc),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, schema)
+        return spark.createDataFrame([
+            ("files_before_ge_3", 1 if files_before >= 3 else 0),
+            ("files_after_one", 1 if fa == 1 else 0),
+            ("count_preserved", n_head),
+            ("sum_preserved", sum_ok),
+            ("pinned_read_survives_compaction", pinned_ok),
+            ("retained_generation_swept", 1 if removed else 0),
+            ("head_read_after_gc", n_after_gc),
+        ], "what string, n long")
 
 
 @q(
@@ -1883,41 +1833,20 @@ def maintenance_gc_roundtrip(spark, sf_dir):
     1 debris dir.  Constant oracle; ``sf_dir`` unused."""
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
 
-    from mycenae_spark.maintenance import (
-        gc_commit_markers,
-        gc_commitlog,
-        gc_staging,
-    )
+    from mycenae_spark.maintenance import gc_commit_markers, gc_commitlog, gc_staging
     from mycenae_spark.sources import bus
-    from mycenae_spark.streaming.ingest import (
-        decode_json_lines,
-        prepare_points,
-        write_points_batch,
-    )
+    from mycenae_spark.streaming.ingest import write_points_batch
     from mycenae_spark.streaming.rollup import gc_ladder_temps
 
-    BASE = 1704067200000
-
     def mk(n, base_i):
-        rows = [
-            (_json.dumps({
-                "metric": "gc.m",
-                "tags": {"ksid": "k1", "host": f"h{base_i + i}"},
-                "timestamp": BASE + (base_i + i) * 60_000,
-                "value": float(base_i + i),
-            }),)
+        return json_points(spark, [
+            {"metric": "gc.m", "tags": {"ksid": "k1", "host": f"h{base_i + i}"},
+             "timestamp": BASE_MS + (base_i + i) * 60_000, "value": float(base_i + i)}
             for i in range(n)
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="gc_rt_")
-    try:
+    with sandbox(spark, "gc_rt_") as base:
         lake, catalog = base + "/lake", base + "/catalog"
         write_points_batch(mk(10, 0), lake, catalog, batch_id="a")
         write_points_batch(mk(5, 10), lake, catalog, batch_id="b")
@@ -1943,24 +1872,16 @@ def maintenance_gc_roundtrip(spark, sf_dir):
         ladder_swept = len(gc_ladder_temps({60_000: rung}, max_age_s=0))
         n_lake = spark.read.parquet(lake).count()
 
-        out = spark.createDataFrame(
-            [
-                ("staging_orphans_swept", staging_swept),
-                ("commit_markers_swept",
-                 1 if markers_swept == 2 else 0),
-                ("commitlog_truncated_to_keep",
-                 1 if log_removed == 1 else 0),
-                ("topic_segments_swept", topic_swept),
-                ("ladder_debris_swept", ladder_swept),
-                ("lake_intact_after_sweeps", n_lake),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, schema)
+        return spark.createDataFrame([
+            ("staging_orphans_swept", staging_swept),
+            ("commit_markers_swept",
+             1 if markers_swept == 2 else 0),
+            ("commitlog_truncated_to_keep",
+             1 if log_removed == 1 else 0),
+            ("topic_segments_swept", topic_swept),
+            ("ladder_debris_swept", ladder_swept),
+            ("lake_intact_after_sweeps", n_lake),
+        ], "what string, n long")
 
 
 @q(
@@ -1987,38 +1908,22 @@ def snapshot_read_roundtrip(spark, sf_dir):
     * a plain directory read DOES see the foreign rows (the gap being
       closed).
 
-    Constant oracle; collected (4 rows) so the frame outlives the temp
-    dir.  ``sf_dir`` unused — input synthesized, scale-invariant."""
+    Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
     import glob
-    import json as _json
     import os
     import shutil
-    import tempfile
 
     from mycenae_spark.streaming import snapshot as snap
-    from mycenae_spark.streaming.ingest import (
-        decode_json_lines,
-        prepare_points,
-        write_points_batch,
-    )
+    from mycenae_spark.streaming.ingest import write_points_batch
 
     def mk(metric, n):
-        rows = [
-            (_json.dumps({
-                "metric": metric,
-                "tags": {"ksid": "k1", "host": f"h{i}"},
-                "timestamp": 1704067200000 + i * 60_000,
-                "value": float(i),
-            }),)
+        return json_points(spark, [
+            {"metric": metric, "tags": {"ksid": "k1", "host": f"h{i}"},
+             "timestamp": 1704067200000 + i * 60_000, "value": float(i)}
             for i in range(n)
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="snap_rt_")
-    try:
+    with sandbox(spark, "snap_rt_") as base:
         lake, catalog = base + "/lake", base + "/catalog"
         write_points_batch(mk("snap.a", 10), lake, catalog, batch_id="a")
         cp = snap.write_checkpoint(lake, catalog)
@@ -2034,20 +1939,12 @@ def snapshot_read_roundtrip(spark, sf_dir):
         n_head_after = snap.read_points_snapshot(spark, lake).count()
         n_dir_after = spark.read.parquet(lake).count()
 
-        out = spark.createDataFrame(
-            [
-                ("snapshot_pinned", n_pinned),
-                ("snapshot_head", n_head),
-                ("foreign_file_invisible", 1 if n_head_after == n_head else 0),
-                ("directory_sees_foreign", 1 if n_dir_after > n_head else 0),
-            ],
-            "what string, n long",
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame([
+            ("snapshot_pinned", n_pinned),
+            ("snapshot_head", n_head),
+            ("foreign_file_invisible", 1 if n_head_after == n_head else 0),
+            ("directory_sees_foreign", 1 if n_dir_after > n_head else 0),
+        ], "what string, n long")
 
 
 @q(
@@ -2079,39 +1976,20 @@ def rollup_backfill_roundtrip(spark, sf_dir):
     * merging head partials reproduces the exact total sum (55+15+10=80)
       — the mergeability invariant the whole rollup design rests on.
 
-    Constant oracle; collected so the frame outlives the temp dir.
-    ``sf_dir`` unused — input synthesized, scale-invariant."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    import pyspark.sql.functions as _F
-
+    Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
     from mycenae_spark.streaming import snapshot as snap
-    from mycenae_spark.streaming.ingest import (
-        decode_json_lines,
-        prepare_points,
-        write_points_batch,
-    )
+    from mycenae_spark.streaming.ingest import write_points_batch
     from mycenae_spark.streaming.rollup import backfill_rollup
 
     def mk(minute0, n):
-        rows = [
-            (_json.dumps({
-                "metric": "bf.m",
-                "tags": {"ksid": "k1", "host": "h0"},
-                "timestamp": 1704067200000 + (minute0 + i) * 60_000,
-                "value": float(i + 1),
-            }),)
+        return json_points(spark, [
+            {"metric": "bf.m", "tags": {"ksid": "k1", "host": "h0"},
+             "timestamp": 1704067200000 + (minute0 + i) * 60_000,
+             "value": float(i + 1)}
             for i in range(n)
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="bf_rt_")
-    try:
+    with sandbox(spark, "bf_rt_") as base:
         lake, catalog, roll = (
             base + "/lake", base + "/catalog", base + "/rollup"
         )
@@ -2130,24 +2008,16 @@ def rollup_backfill_roundtrip(spark, sf_dir):
         ).count()
         head = snap.read_rollup_snapshot(spark, lake, roll)
         n_head = head.count()
-        total = head.agg(_F.sum("p_sum")).collect()[0][0]
+        total = head.agg(F.sum("p_sum")).collect()[0][0]
         # per-batch values are 1..n: A=Σ1..10=55, B=Σ1..5=15, C=Σ1..4=10
         sum_ok = 1 if abs(total - 80.0) < 1e-9 else 0
 
-        out = spark.createDataFrame(
-            [
-                ("pinned_pre_backfill", n_pre),
-                ("pinned_at_backfill", n_at),
-                ("head_after_later_batch", n_head),
-                ("merged_sum_exact", sum_ok),
-            ],
-            "what string, n long",
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame([
+            ("pinned_pre_backfill", n_pre),
+            ("pinned_at_backfill", n_at),
+            ("head_after_later_batch", n_head),
+            ("merged_sum_exact", sum_ok),
+        ], "what string, n long")
 
 
 @q(
@@ -2239,13 +2109,7 @@ def rollup_ladder_roundtrip(spark, sf_dir):
 
     At 100 TB the ladder is what keeps a year-long 1d query at
     #series × 365 rollup rows instead of #series × 525k.  Constant
-    oracle; collected so the frame outlives the temp dir.  ``sf_dir``
-    unused — input synthesized, scale-invariant."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from mycenae_spark.streaming.ingest import decode_json_lines, prepare_points
+    oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
     from mycenae_spark.streaming.rollup import (
         cascade_rollup,
         ladder_rung,
@@ -2254,21 +2118,12 @@ def rollup_ladder_roundtrip(spark, sf_dir):
         write_rollup_batch,
     )
 
-    BASE = 1704067200000  # 2024-01-01T00:00Z, day-aligned
-    rows = [
-        (_json.dumps({
-            "metric": "lad.m",
-            "tags": {"ksid": "k1", "host": "h0"},
-            "timestamp": BASE + i * 20 * 60_000,
-            "value": float(i),
-        }),)
+    valid = json_points(spark, [
+        {"metric": "lad.m", "tags": {"ksid": "k1", "host": "h0"},
+         "timestamp": BASE_MS + i * 20 * 60_000, "value": float(i)}
         for i in range(144)
-    ]
-    valid, _ = prepare_points(
-        decode_json_lines(spark.createDataFrame(rows, ["value"]))
-    )
-    base = tempfile.mkdtemp(prefix="ladder_rt_")
-    try:
+    ])
+    with sandbox(spark, "ladder_rt_") as base:
         m_dir, h_dir, d_dir = (f"{base}/r{s}" for s in ("1m", "1h", "1d"))
         write_rollup_batch(valid, m_dir, 60_000)
         cascade_rollup(spark, m_dir, h_dir, HOUR_MS)
@@ -2283,8 +2138,8 @@ def rollup_ladder_roundtrip(spark, sf_dir):
             for r in read_rollup(spark, d_dir, agg="avg").collect()
         }
         day_ok = 1 if (
-            abs(day_avg.get(BASE, 0) - 35.5) < 1e-9
-            and abs(day_avg.get(BASE + DAY_MS, 0) - 107.5) < 1e-9
+            abs(day_avg.get(BASE_MS, 0) - 35.5) < 1e-9
+            and abs(day_avg.get(BASE_MS + DAY_MS, 0) - 107.5) < 1e-9
         ) else 0
 
         aggs_ok = 1
@@ -2306,23 +2161,15 @@ def rollup_ladder_roundtrip(spark, sf_dir):
         rungs = {60_000: m_dir, HOUR_MS: h_dir, DAY_MS: d_dir}
         route_ok = 1 if ladder_rung(rungs, 2 * HOUR_MS) == (HOUR_MS, h_dir) else 0
 
-        out = spark.createDataFrame(
-            [
-                ("n_1m_partials", n_m),
-                ("n_1h_partials", n_h),
-                ("n_1d_partials", n_d),
-                ("day_avgs_exact", day_ok),
-                ("cascade_all_aggs_exact", aggs_ok),
-                ("cascade_p95_exact", p95_ok),
-                ("route_2h_picks_1h_rung", route_ok),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, schema)
+        return spark.createDataFrame([
+            ("n_1m_partials", n_m),
+            ("n_1h_partials", n_h),
+            ("n_1d_partials", n_d),
+            ("day_avgs_exact", day_ok),
+            ("cascade_all_aggs_exact", aggs_ok),
+            ("cascade_p95_exact", p95_ok),
+            ("route_2h_picks_1h_rung", route_ok),
+        ], "what string, n long")
 
 
 @q(
@@ -2360,30 +2207,22 @@ def bus_ingest_roundtrip(spark, sf_dir):
     ``from_json(POINT_SCHEMA)`` decoder.  At 100 TB the same readStream
     plan + checkpoint replay contract carries onto Spark's JVM Kafka
     DSv2 source; the bus semantics — not the file transport — are what
-    this row pins.  Constant oracle; collected before rmtree.  ``sf_dir``
-    unused — input synthesized, scale-invariant."""
+    this row pins.  Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
     import json as _json
-    import shutil
-    import tempfile
-
-    import pyspark.sql.functions as _F
 
     from mycenae_spark.schema import POINT_SCHEMA
     from mycenae_spark.sources import bus
-
-    BASE = 1704067200000
 
     def msg(part: int, i: int) -> str:
         return _json.dumps({
             "metric": "bus.rt",
             "tags": {"ksid": "k1", "host": f"h{part}_{i}"},
-            "timestamp": BASE + i,
+            "timestamp": BASE_MS + i,
             "value": float(i),
         })
 
-    base = tempfile.mkdtemp(prefix="bus_rt_")
-    topic, ck, sink = f"{base}/topic", f"{base}/ck", f"{base}/sink"
-    try:
+    with sandbox(spark, "bus_rt_") as base:
+        topic, ck, sink = f"{base}/topic", f"{base}/ck", f"{base}/sink"
         bus.register(spark)
         bus.publish(topic, 0, [msg(0, i) for i in range(5)])
         bus.publish(topic, 0, [msg(0, 5 + i) for i in range(2)])
@@ -2413,21 +2252,21 @@ def bus_ingest_roundtrip(spark, sf_dir):
         out = spark.read.parquet(sink)
         final = out.count()
         new_part = int(
-            out.filter(_F.col("partition") == 2).count() == 4
+            out.filter(F.col("partition") == 2).count() == 4
         )
         dups = (
             out.groupBy("partition", "offset").count()
-            .filter(_F.col("count") > 1).count()
+            .filter(F.col("count") > 1).count()
         )
         maxima = {
             r["partition"]: r["mx"]
             for r in out.groupBy("partition")
-            .agg(_F.max("offset").alias("mx")).collect()
+            .agg(F.max("offset").alias("mx")).collect()
         }
         parsed = out.select(
-            _F.from_json("value", POINT_SCHEMA).alias("p")
-        ).filter(_F.col("p.metric").isNotNull()).count()
-        rows = [
+            F.from_json("value", POINT_SCHEMA).alias("p")
+        ).filter(F.col("p.metric").isNotNull()).count()
+        return spark.createDataFrame([
             ("batch_rows", batch_rows),
             ("stream_pass1_rows", pass1),
             ("replay_idempotent", replay_ok),
@@ -2437,10 +2276,7 @@ def bus_ingest_roundtrip(spark, sf_dir):
             ("p0_max_offset", maxima.get(0, -1)),
             ("p1_max_offset", maxima.get(1, -1)),
             ("parsed_points_valid", parsed),
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "what string, n long")
+        ], "what string, n long")
 
 
 @q(
@@ -2481,34 +2317,27 @@ def bus_engine_roundtrip(spark, sf_dir):
     host series) → drain → lake 64, query 2016, catalog 3 series,
     rollup partials re-merge to 2016 (the sink maintained them batch by
     batch), commit log advanced → a checkpointed (LOG-GATED) read
-    serves the same 2016.  Constant oracle; rows collected before
-    rmtree; ``sf_dir`` unused — input synthesized, scale-invariant.
+    serves the same 2016.  Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant.
     The crash-replay twin (kill between micro-batches, restart, no
     dupes) is tests/test_bus.py::test_bus_engine_crash_replay_no_dupes."""
     import json as _json
-    import shutil
-    import tempfile
 
     from mycenae_spark.server import Engine
     from mycenae_spark.sources import bus
     from mycenae_spark.streaming import commitlog
-
-    BASE = 1704067200000
+    from mycenae_spark.streaming.rollup import read_rollup
 
     def msg(i: int, host: str) -> str:
         return _json.dumps({
             "metric": "bus.eng",
             "tags": {"ksid": "k1", "host": host},
-            "timestamp": BASE + i * 1000,
+            "timestamp": BASE_MS + i * 1000,
             "value": float(i),
         })
 
-    base = tempfile.mkdtemp(prefix="bus_eng_")
-    topic, ck = f"{base}/topic", f"{base}/ck"
-    lake, catalog, roll = f"{base}/lake", f"{base}/catalog", f"{base}/rollup"
     body = {
-        "start": BASE,
-        "end": BASE + 3_600_000,
+        "start": BASE_MS,
+        "end": BASE_MS + 3_600_000,
         "queries": [{"metric": "bus.eng", "aggregator": "sum"}],
     }
 
@@ -2516,7 +2345,9 @@ def bus_engine_roundtrip(spark, sf_dir):
         out = eng.query(body)
         return float(sum(out[0]["dps"].values())) if out else -1.0
 
-    try:
+    with sandbox(spark, "bus_eng_") as base:
+        topic, ck = f"{base}/topic", f"{base}/ck"
+        lake, catalog, roll = f"{base}/lake", f"{base}/catalog", f"{base}/rollup"
         eng = Engine(spark, lake, catalog, rollup_dir=roll)
         bus.publish(topic, 0, [msg(i, f"h{i % 2}") for i in range(30)])
         bus.publish(topic, 0, [msg(i, f"h{i % 2}") for i in range(30, 45)])
@@ -2534,8 +2365,6 @@ def bus_engine_roundtrip(spark, sf_dir):
         final = spark.read.parquet(lake).count()
         sum2 = qsum(eng)
         n_series = spark.read.parquet(catalog).count()
-        from mycenae_spark.streaming.rollup import read_rollup
-
         roll_sum = (
             read_rollup(spark, roll, agg="sum", series_cols=["metric"])
             .agg(F.sum("value").alias("s")).collect()[0]["s"]
@@ -2544,7 +2373,7 @@ def bus_engine_roundtrip(spark, sf_dir):
         eng.checkpoint()  # log-gated reads from here on
         sum3 = qsum(eng)
 
-        rows = [
+        return spark.createDataFrame([
             ("lake_rows_pass1", float(pass1)),
             ("query_sum_pass1", sum1),
             ("replay_idempotent", float(replay_ok)),
@@ -2554,10 +2383,7 @@ def bus_engine_roundtrip(spark, sf_dir):
             ("rollup_sum", float(roll_sum)),
             ("commitlog_advanced", float(log_ok)),
             ("log_gated_query_sum", sum3),
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "what string, n double")
+        ], "what string, n double")
 
 
 @q(
@@ -2587,21 +2413,14 @@ def listener_roundtrip(spark, sf_dir):
 
     At 100 TB the listener tier is horizontally sharded stateless
     processes ahead of the same spool contract; the judged path is the
-    per-shard pipeline.  Constant oracle; collected so the frame
-    outlives the temp dir.  ``sf_dir`` unused — input synthesized,
+    per-shard pipeline.  Constant oracle; ``sf_dir`` unused — input synthesized,
     scale-invariant."""
     import json as _json
-    import shutil
     import socket as _socket
-    import tempfile
     import time as _time
-
-    import pyspark.sql.functions as _F
 
     from mycenae_spark.listeners import TelnetListener, UdpListener
     from mycenae_spark.streaming.ingest import start_ingest
-
-    BASE = 1704067200000
 
     def wait_spool(listener, n, timeout=10):
         deadline = _time.time() + timeout
@@ -2619,8 +2438,7 @@ def listener_roundtrip(spark, sf_dir):
             "ingest defect"
         )
 
-    base = tempfile.mkdtemp(prefix="lis_rt_")
-    try:
+    with sandbox(spark, "lis_rt_") as base:
         # --- UDP: JSON datagrams -> spool ---------------------------------
         u_spool = f"{base}/u_spool"
         lis = UdpListener(u_spool)
@@ -2631,7 +2449,7 @@ def listener_roundtrip(spark, sf_dir):
                     _json.dumps({
                         "metric": "udp.rt",
                         "tags": {"ksid": "k1", "host": f"h{i}"},
-                        "timestamp": BASE + i,
+                        "timestamp": BASE_MS + i,
                         "value": float(i),
                     }).encode(),
                     lis.address,
@@ -2651,7 +2469,7 @@ def listener_roundtrip(spark, sf_dir):
         )
         u_got = spark.read.parquet(u_lake)
         n_udp = u_got.count()
-        u_sum = u_got.agg(_F.sum("value")).collect()[0][0]
+        u_sum = u_got.agg(F.sum("value")).collect()[0][0]
         udp_sum_ok = 1 if abs((u_sum or 0.0) - 10.0) < 1e-9 else 0
 
         # --- telnet: OpenTSDB put lines -> spool --------------------------
@@ -2665,7 +2483,7 @@ def listener_roundtrip(spark, sf_dir):
                 f.readline()  # banner
                 for i in range(4):
                     f.write(
-                        f"put tcp.rt {BASE + i} {float(i)} "
+                        f"put tcp.rt {BASE_MS + i} {float(i)} "
                         f"ksid=k1 host=h{i % 2}\n"
                     )
                 f.write("not a put line\n")  # decoder's problem, not ours
@@ -2686,24 +2504,16 @@ def listener_roundtrip(spark, sf_dir):
         n_tcp = t_got.count()
         bad_dropped = 1 if n_tcp == 4 else 0
         n_h0 = t_got.filter(
-            _F.col("tags").getItem("host") == "h0"
+            F.col("tags").getItem("host") == "h0"
         ).count()
 
-        out = spark.createDataFrame(
-            [
-                ("udp_points_ingested", n_udp),
-                ("udp_value_sum_exact", udp_sum_ok),
-                ("telnet_points_ingested", n_tcp),
-                ("telnet_bad_line_dropped", bad_dropped),
-                ("telnet_h0_series_points", n_h0),
-            ],
-            "what string, n long",
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        return spark.createDataFrame([
+            ("udp_points_ingested", n_udp),
+            ("udp_value_sum_exact", udp_sum_ok),
+            ("telnet_points_ingested", n_tcp),
+            ("telnet_bad_line_dropped", bad_dropped),
+            ("telnet_h0_series_points", n_h0),
+        ], "what string, n long")
 
 
 @q(
@@ -2744,13 +2554,7 @@ def rollup_kmv_roundtrip(spark, sf_dir):
 
     At 100 TB this makes a year-long `1d-count-distinct` read #series ×
     365 sketch rows (k hashes each) instead of re-scanning raw points.
-    Constant oracle; collected so the frame outlives the temp dir.
-    ``sf_dir`` unused — input synthesized, scale-invariant."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from mycenae_spark.streaming.ingest import decode_json_lines, prepare_points
+    Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
     from mycenae_spark.streaming.rollup import (
         cascade_kmv,
         ladder_rung,
@@ -2759,24 +2563,15 @@ def rollup_kmv_roundtrip(spark, sf_dir):
         write_kmv_batch,
     )
 
-    BASE = 1704067200000  # 2024-01-01T00:00Z, day-aligned
     def mk(idxs):
-        rows = [
-            (_json.dumps({
-                "metric": "kmv.m",
-                "tags": {"ksid": "k1", "host": "h0"},
-                "timestamp": BASE + i * 20 * 60_000,
-                "value": float(i % 7 if i < 72 else i),
-            }),)
+        return json_points(spark, [
+            {"metric": "kmv.m", "tags": {"ksid": "k1", "host": "h0"},
+             "timestamp": BASE_MS + i * 20 * 60_000,
+             "value": float(i % 7 if i < 72 else i)}
             for i in idxs
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="kmv_rt_")
-    try:
+    with sandbox(spark, "kmv_rt_") as base:
         m_dir, h_dir, d_dir = (f"{base}/k{s}" for s in ("1m", "1h", "1d"))
         # two interleaved batches: every 1h bucket spans both appends
         write_kmv_batch(mk(range(0, 144, 2)), m_dir, 60_000)
@@ -2798,9 +2593,9 @@ def rollup_kmv_roundtrip(spark, sf_dir):
 
         day = {r["bucket_ms"]: (r["n_kmv"], r["value"])
                for r in read_kmv_distinct(spark, d_dir).collect()}
-        d0_n, d0_v = day.get(BASE, (0, 0.0))
+        d0_n, d0_v = day.get(BASE_MS, (0, 0.0))
         day0_ok = 1 if d0_n == 7 and abs(d0_v - 7.0) < 1e-9 else 0
-        d1_n, d1_v = day.get(BASE + DAY_MS, (0, 0.0))
+        d1_n, d1_v = day.get(BASE_MS + DAY_MS, (0, 0.0))
         day1_ok = 1 if d1_n == 16 and 36.0 < d1_v < 108.0 else 0
 
         rungs = {60_000: m_dir, HOUR_MS: h_dir, DAY_MS: d_dir}
@@ -2809,22 +2604,14 @@ def rollup_kmv_roundtrip(spark, sf_dir):
             and read_kmv_ladder(spark, rungs, 2 * HOUR_MS).count() == 24
         ) else 0
 
-        out = spark.createDataFrame(
-            [
-                ("n_1m_states", n_m),
-                ("ladder_vs_direct_1h", ladder_ok[HOUR_MS]),
-                ("ladder_vs_direct_1d", ladder_ok[DAY_MS]),
-                ("day0_exact_seven", day0_ok),
-                ("day1_sketch_estimates", day1_ok),
-                ("route_2h_picks_1h_rung", route_ok),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, schema)
+        return spark.createDataFrame([
+            ("n_1m_states", n_m),
+            ("ladder_vs_direct_1h", ladder_ok[HOUR_MS]),
+            ("ladder_vs_direct_1d", ladder_ok[DAY_MS]),
+            ("day0_exact_seven", day0_ok),
+            ("day1_sketch_estimates", day1_ok),
+            ("route_2h_picks_1h_rung", route_ok),
+        ], "what string, n long")
 
 
 @q(
@@ -2868,14 +2655,8 @@ def rollup_qsample_roundtrip(spark, sf_dir):
 
     At 100 TB a year-long `1d-p99` reads #series × 365 sample rows
     (k values each) instead of raw points, with principled error instead
-    of bin-width error.  Constant oracle; collected so the frame
-    outlives the temp dir.  ``sf_dir`` unused — input synthesized,
+    of bin-width error.  Constant oracle; ``sf_dir`` unused — input synthesized,
     scale-invariant."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from mycenae_spark.streaming.ingest import decode_json_lines, prepare_points
     from mycenae_spark.streaming.rollup import (
         cascade_qsample,
         ladder_rung,
@@ -2883,25 +2664,14 @@ def rollup_qsample_roundtrip(spark, sf_dir):
         write_qsample_batch,
     )
 
-    BASE = 1704067200000  # 2024-01-01T00:00Z, day-aligned
-
     def mk(idxs):
-        rows = [
-            (_json.dumps({
-                "metric": "qs.m",
-                "tags": {"ksid": "k1", "host": "h0"},
-                "timestamp": BASE + i * 20 * 60_000,
-                "value": float(i),
-            }),)
+        return json_points(spark, [
+            {"metric": "qs.m", "tags": {"ksid": "k1", "host": "h0"},
+             "timestamp": BASE_MS + i * 20 * 60_000, "value": float(i)}
             for i in idxs
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="qs_rt_")
-    try:
+    with sandbox(spark, "qs_rt_") as base:
         m_dir, h_dir, d_dir = (f"{base}/q{s}" for s in ("1m", "1h", "1d"))
         # two interleaved batches: every 1h bucket spans both appends
         write_qsample_batch(mk(range(0, 144, 2)), m_dir, 60_000)
@@ -2930,7 +2700,7 @@ def rollup_qsample_roundtrip(spark, sf_dir):
 
         day = {r["bucket_ms"]: (r["n_sample"], r["value"])
                for r in read_qsample_quantile(spark, d_dir, 0.5).collect()}
-        d0_n, d0_v = day.get(BASE, (0, -1.0))
+        d0_n, d0_v = day.get(BASE_MS, (0, -1.0))
         # exact median of 0..71 at q=.5 is v_36 = 35.0; k=64 of 72 points
         # bounds the estimate within a few ranks of it
         day0_ok = 1 if d0_n == 64 and 25.0 <= d0_v <= 45.0 else 0
@@ -2944,22 +2714,14 @@ def rollup_qsample_roundtrip(spark, sf_dir):
             ).count() == 24
         ) else 0
 
-        out = spark.createDataFrame(
-            [
-                ("n_1m_states", n_m),
-                ("ladder_vs_direct_1h", ladder_ok[HOUR_MS]),
-                ("ladder_vs_direct_1d", ladder_ok[DAY_MS]),
-                ("hourly_p50_all_exact", hourly_ok),
-                ("day0_p50_sampled_in_band", day0_ok),
-                ("route_2h_picks_1h_rung", route_ok),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, schema)
+        return spark.createDataFrame([
+            ("n_1m_states", n_m),
+            ("ladder_vs_direct_1h", ladder_ok[HOUR_MS]),
+            ("ladder_vs_direct_1d", ladder_ok[DAY_MS]),
+            ("hourly_p50_all_exact", hourly_ok),
+            ("day0_p50_sampled_in_band", day0_ok),
+            ("route_2h_picks_1h_rung", route_ok),
+        ], "what string, n long")
 
 
 @q(
@@ -2998,18 +2760,12 @@ def qsample_route_roundtrip(spark, sf_dir):
     not approximation, is what's judged.  Then a write STALES the rung
     (commit-log currency) → the same query falls back to the fine path;
     a re-backfill re-pins → routes again and still equals fine.
-    Constant oracle; collected before rmtree; ``sf_dir`` unused."""
-    import shutil
-    import tempfile
-
+    Constant oracle; ``sf_dir`` unused."""
     from mycenae_spark.server import Engine
     from mycenae_spark.streaming.rollup import backfill_qsample
 
-    BASE = 1704067200000
-    base = tempfile.mkdtemp(prefix="qs_route_")
-    lake, catalog, qs1h = f"{base}/lake", f"{base}/cat", f"{base}/qs1h"
     body = {
-        "start": BASE, "end": BASE + 2 * 3_600_000,
+        "start": BASE_MS, "end": BASE_MS + 2 * 3_600_000,
         "queries": [{"metric": "qs.route", "aggregator": "sum",
                      "downsample": "1h-p95"}],
     }
@@ -3018,16 +2774,17 @@ def qsample_route_roundtrip(spark, sf_dir):
         out = engine.query(body)
         return {k: round(v, 6) for k, v in out[0]["dps"].items()}
 
-    try:
+    with sandbox(spark, "qs_route_") as base:
+        lake, catalog, qs1h = f"{base}/lake", f"{base}/cat", f"{base}/qs1h"
         eng = Engine(spark, lake, catalog, qsample_ladder={3_600_000: qs1h})
         fine = Engine(spark, lake, catalog)
         eng.put(
             [{"metric": "qs.route", "tags": {"ksid": "k1", "host": "h0"},
-              "timestamp": BASE + b * 3_600_000 + j * 60_000,
+              "timestamp": BASE_MS + b * 3_600_000 + j * 60_000,
               "value": float(100 * b + j)}
              for b in range(2) for j in range(60)]
             + [{"metric": "qs.route", "tags": {"ksid": "k1", "host": "h1"},
-                "timestamp": BASE + b * 3_600_000 + j * 60_000,
+                "timestamp": BASE_MS + b * 3_600_000 + j * 60_000,
                 "value": float(1000 + 100 * b + 2 * j)}
                for b in range(2) for j in range(60)]
         )
@@ -3036,22 +2793,22 @@ def qsample_route_roundtrip(spark, sf_dir):
         routed = dps(eng)
         routed_ok = int(eng.last_routes() == ["qsample:3600000"])
         fine1 = dps(fine)
-        eq_fine = int(routed == fine1 and fine.last_routes() == ["fine"])
-        b0 = round(routed.get(str(BASE // 1000), -1.0), 4)
-        b1 = round(routed.get(str((BASE + 3_600_000) // 1000), -1.0), 4)
+        eq_fine = int(routed == fine1 and fine.last_routes() == ["raw"])
+        b0 = round(routed.get(str(BASE_MS // 1000), -1.0), 4)
+        b1 = round(routed.get(str((BASE_MS + 3_600_000) // 1000), -1.0), 4)
 
         eng.put([{"metric": "qs.route",
                   "tags": {"ksid": "k1", "host": "h0"},
-                  "timestamp": BASE + 30_000, "value": 1e6}])
+                  "timestamp": BASE_MS + 30_000, "value": 1e6}])
         stale = dps(eng)
-        stale_ok = int(eng.last_routes() == ["fine"] and stale != routed)
+        stale_ok = int(eng.last_routes() == ["raw"] and stale != routed)
 
         backfill_qsample(spark, lake, qs1h, interval_ms=3_600_000)
         refreshed = dps(eng)
         rerouted_ok = int(eng.last_routes() == ["qsample:3600000"])
         req_fine = int(refreshed == dps(fine))
 
-        rows = [
+        return spark.createDataFrame([
             ("routed_via_qsample_1h", float(routed_ok)),
             ("routed_equals_fine", float(eq_fine)),
             ("n_buckets", float(len(routed))),
@@ -3060,10 +2817,7 @@ def qsample_route_roundtrip(spark, sf_dir):
             ("stale_falls_back_fine", float(stale_ok)),
             ("refreshed_routes_again", float(rerouted_ok)),
             ("refreshed_equals_fine", float(req_fine)),
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "what string, n double")
+        ], "what string, n double")
 
 
 @q(
@@ -3093,73 +2847,45 @@ def stream_kmv_roundtrip(spark, sf_dir):
     synthesized, scale-invariant."""
     import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.stateful import kmv_stream
 
-    base = tempfile.mkdtemp(prefix="skmv_rt_")
-    try:
+    t0 = 1704067200000
+    batch1 = [
+        {"metric": "sk.m", "ts_ms": t0 + i * 1000,
+         "value": float(i % 10 + 1)}
+        for i in range(15)  # values 1..10, five repeats
+    ]
+    batch2 = [
+        {"metric": "sk.m", "ts_ms": t0 + (100 + i) * 1000,
+         "value": float(6 + i)}
+        for i in range(10)  # values 6..15: five overlap, five new
+    ]
+    with sandbox(spark, "skmv_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        t0 = 1704067200000
-        batch1 = [
-            {"metric": "sk.m", "ts_ms": t0 + i * 1000,
-             "value": float(i % 10 + 1)}
-            for i in range(15)  # values 1..10, five repeats
-        ]
-        batch2 = [
-            {"metric": "sk.m", "ts_ms": t0 + (100 + i) * 1000,
-             "value": float(6 + i)}
-            for i in range(10)  # values 6..15: five overlap, five new
-        ]
-        with open(os.path.join(src, "a.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in batch1))
-        with open(os.path.join(src, "b.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in batch2))
-        # pin mtimes: the file source orders batches by modification
-        # time and same-ms writes tie (see stream_qsample_roundtrip)
-        now = os.path.getmtime(os.path.join(src, "b.jsonl"))
-        os.utime(os.path.join(src, "a.jsonl"), (now - 10, now - 10))
-
-        schema = "metric string, ts_ms long, value double"
+        # mtime-ordered files: the file source orders batches by mtime
+        write_day_files(src, [
+            (name, [_json.dumps(p) for p in b])
+            for name, b in (("a.jsonl", batch1), ("b.jsonl", batch2))
+        ])
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema("metric string, ts_ms long, value double")
             .option("maxFilesPerTrigger", "1")  # force two micro-batches
             .json(src)
             .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
         )
-        sink = f"skmv_{uuid.uuid4().hex[:8]}"
-        await_or_raise(
-            kmv_stream(stream).writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(),
-            120,
-            "stream_kmv",
-        )
-        rows = spark.table(sink).collect()
-        spark.catalog.dropTempView(sink)
-        counts = sorted(r["n_kmv"] for r in rows)
-        final = max(rows, key=lambda r: r["n_kmv"])
-        final_ok = 1 if (
-            final["n_kmv"] == 15 and abs(final["est"] - 15.0) < 1e-9
-        ) else 0
-        out = spark.createDataFrame(
-            [
-                ("batches_observed", len(rows)),
-                ("after_first_batch_distinct", counts[0]),
-                ("final_distinct_exact", final_ok),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        res_schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, res_schema)
+        rows = drain(kmv_stream(stream), "stream_kmv", 120)
+    counts = sorted(r["n_kmv"] for r in rows)
+    final = max(rows, key=lambda r: r["n_kmv"])
+    final_ok = 1 if (
+        final["n_kmv"] == 15 and abs(final["est"] - 15.0) < 1e-9
+    ) else 0
+    return spark.createDataFrame([
+        ("batches_observed", len(rows)),
+        ("after_first_batch_distinct", counts[0]),
+        ("final_distinct_exact", final_ok),
+    ], "what string, n long")
 
 
 @q(
@@ -3192,75 +2918,49 @@ def stream_qsample_roundtrip(spark, sf_dir):
     scale-invariant."""
     import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.stateful import qsample_stream
 
-    base = tempfile.mkdtemp(prefix="sqs_rt_")
-    try:
+    t0 = 1704067200000
+    batch1 = [
+        {"metric": "sq.m", "tsid": "t1", "ts_ms": t0 + i * 1000,
+         "value": float((i + 1) * 10)}
+        for i in range(9)  # values 10..90
+    ]
+    batch2 = [
+        {"metric": "sq.m", "tsid": "t1", "ts_ms": t0 + (100 + i) * 1000,
+         "value": float(i + 1)}
+        for i in range(6)  # values 1..6
+    ] + [batch1[0]]  # replayed point: must dedupe on identity hash
+    with sandbox(spark, "sqs_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        t0 = 1704067200000
-        batch1 = [
-            {"metric": "sq.m", "tsid": "t1", "ts_ms": t0 + i * 1000,
-             "value": float((i + 1) * 10)}
-            for i in range(9)  # values 10..90
-        ]
-        batch2 = [
-            {"metric": "sq.m", "tsid": "t1", "ts_ms": t0 + (100 + i) * 1000,
-             "value": float(i + 1)}
-            for i in range(6)  # values 1..6
-        ] + [batch1[0]]  # replayed point: must dedupe on identity hash
-        with open(os.path.join(src, "a.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in batch1))
-        with open(os.path.join(src, "b.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in batch2))
         # the file source orders by MODIFICATION TIME, and same-ms writes
-        # tie — pin mtimes so batch 1 is always file a (the flake class
-        # caught in-round: b-first flips first_batch_n to 7)
-        now = os.path.getmtime(os.path.join(src, "b.jsonl"))
-        os.utime(os.path.join(src, "a.jsonl"), (now - 10, now - 10))
-
-        schema = "metric string, tsid string, ts_ms long, value double"
+        # tie: mtime-ordered files keep batch 1 file a (b-first flips
+        # first_batch_n to 7)
+        write_day_files(src, [
+            (name, [_json.dumps(p) for p in b])
+            for name, b in (("a.jsonl", batch1), ("b.jsonl", batch2))
+        ])
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream
+            .schema("metric string, tsid string, ts_ms long, value double")
             .option("maxFilesPerTrigger", "1")  # force two micro-batches
             .json(src)
             .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
         )
-        sink = f"sqs_{uuid.uuid4().hex[:8]}"
-        await_or_raise(
-            qsample_stream(stream).writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(),
-            120,
-            "stream_qsample",
-        )
-        rows = spark.table(sink).collect()
-        spark.catalog.dropTempView(sink)
-        first = min(rows, key=lambda r: r["n_sample"])
-        final = max(rows, key=lambda r: r["n_sample"])
-        out = spark.createDataFrame(
-            [
-                ("batches_observed", len(rows)),
-                ("first_batch_n", first["n_sample"]),
-                ("first_batch_p50_exact",
-                 1 if abs(first["p50"] - 50.0) < 1e-9 else 0),
-                ("final_n_after_replay_dedup", final["n_sample"]),
-                ("final_p50_exact",
-                 1 if abs(final["p50"] - 20.0) < 1e-9 else 0),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        res_schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, res_schema)
+        rows = drain(qsample_stream(stream), "stream_qsample", 120)
+    first = min(rows, key=lambda r: r["n_sample"])
+    final = max(rows, key=lambda r: r["n_sample"])
+    return spark.createDataFrame([
+        ("batches_observed", len(rows)),
+        ("first_batch_n", first["n_sample"]),
+        ("first_batch_p50_exact",
+         1 if abs(first["p50"] - 50.0) < 1e-9 else 0),
+        ("final_n_after_replay_dedup", final["n_sample"]),
+        ("final_p50_exact",
+         1 if abs(final["p50"] - 20.0) < 1e-9 else 0),
+    ], "what string, n long")
 
 
 @q(
@@ -3295,42 +2995,27 @@ def kmv_backfill_roundtrip(spark, sf_dir):
     * re-backfilling re-pins and the day count now sees the new batch's
       4 novel values (14 distinct).
 
-    Constant oracle; collected so the frame outlives the temp dir.
-    ``sf_dir`` unused — input synthesized, scale-invariant."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from mycenae_spark.streaming.ingest import (
-        decode_json_lines,
-        prepare_points,
-        write_points_batch,
-    )
+    Constant oracle; ``sf_dir`` unused — input synthesized, scale-invariant."""
+    from mycenae_spark.streaming.ingest import write_points_batch
     from mycenae_spark.streaming.rollup import (
         backfill_kmv,
         cascade_is_current,
         read_kmv_distinct,
     )
 
-    BASE = 1704067200000
-
     def mk(minute0, values):
-        rows = [
-            (_json.dumps({
-                "metric": "kbf.m",
-                "tags": {"ksid": "k1", "host": "h0"},
-                "timestamp": BASE + (minute0 + i) * 60_000,
-                "value": float(v),
-            }),)
+        return json_points(spark, [
+            {"metric": "kbf.m", "tags": {"ksid": "k1", "host": "h0"},
+             "timestamp": BASE_MS + (minute0 + i) * 60_000, "value": float(v)}
             for i, v in enumerate(values)
-        ]
-        valid, _ = prepare_points(
-            decode_json_lines(spark.createDataFrame(rows, ["value"]))
-        )
-        return valid
+        ])
 
-    base = tempfile.mkdtemp(prefix="kbf_rt_")
-    try:
+    def day_count():
+        rows = read_kmv_distinct(spark, kmv, interval_ms=DAY_MS).collect()
+        assert len(rows) == 1, rows
+        return rows[0]["n_kmv"], rows[0]["value"]
+
+    with sandbox(spark, "kbf_rt_") as base:
         lake, catalog, kmv = (
             base + "/lake", base + "/catalog", base + "/kmv"
         )
@@ -3338,13 +3023,6 @@ def kmv_backfill_roundtrip(spark, sf_dir):
         write_points_batch(mk(100, range(1, 6)), lake, catalog, batch_id="b")
         res = backfill_kmv(spark, lake, kmv)
         cur1 = 1 if cascade_is_current(lake, kmv) else 0
-
-        def day_count():
-            rows = read_kmv_distinct(
-                spark, kmv, interval_ms=DAY_MS
-            ).collect()
-            assert len(rows) == 1, rows
-            return rows[0]["n_kmv"], rows[0]["value"]
 
         n1, v1 = day_count()
         day_ok = 1 if n1 == 10 and abs(v1 - 10.0) < 1e-9 else 0
@@ -3360,21 +3038,13 @@ def kmv_backfill_roundtrip(spark, sf_dir):
             and n2 == 14 and abs(v2 - 14.0) < 1e-9
         ) else 0
 
-        out = spark.createDataFrame(
-            [
-                ("n_states_initial", res["n_states"]),
-                ("current_after_backfill", cur1),
-                ("day_distinct_exact", day_ok),
-                ("stale_after_new_batch", stale_ok),
-                ("refreshed_sees_new_values", refresh_ok),
-            ],
-            "what string, n long",
-        )
-        rows_out = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows_out, schema)
+        return spark.createDataFrame([
+            ("n_states_initial", res["n_states"]),
+            ("current_after_backfill", cur1),
+            ("day_distinct_exact", day_ok),
+            ("stale_after_new_batch", stale_ok),
+            ("refreshed_sees_new_values", refresh_ok),
+        ], "what string, n long")
 
 
 @q(
@@ -3399,62 +3069,71 @@ def stream_dedup_roundtrip(spark, sf_dir):
     — input synthesized, scale-invariant."""
     import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.windows import dedup_stream_retransmit
 
-    base = tempfile.mkdtemp(prefix="sdedup_rt_")
-    try:
+    t0 = 1704067200000
+    orig = [
+        {"event_id": i, "ts_ms": t0 + i * 1000, "metric": "sd.m",
+         "value": float(i)}
+        for i in range(10)
+    ]
+    retrans = [dict(p, ts_ms=p["ts_ms"] + 5000) for p in orig] + [
+        {"event_id": i, "ts_ms": t0 + i * 1000, "metric": "sd.m",
+         "value": float(i)}
+        for i in range(10, 15)
+    ]
+    schema = "event_id long, ts_ms long, metric string, value double"
+    with sandbox(spark, "sdedup_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        t0 = 1704067200000
-        orig = [
-            {"event_id": i, "ts_ms": t0 + i * 1000, "metric": "sd.m",
-             "value": float(i)}
-            for i in range(10)
-        ]
-        retrans = [dict(p, ts_ms=p["ts_ms"] + 5000) for p in orig] + [
-            {"event_id": i, "ts_ms": t0 + i * 1000, "metric": "sd.m",
-             "value": float(i)}
-            for i in range(10, 15)
-        ]
-        with open(os.path.join(src, "a.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in orig))
-        with open(os.path.join(src, "b.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in retrans))
-
-        schema = "event_id long, ts_ms long, metric string, value double"
+        write_day_files(src, [
+            (name, [_json.dumps(p) for p in b])
+            for name, b in (("a.jsonl", orig), ("b.jsonl", retrans))
+        ])
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")  # force a multi-batch run
             .json(src)
             .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
         )
-        deduped = dedup_stream_retransmit(stream)
-        sink = f"sdedup_{uuid.uuid4().hex[:8]}"
-        await_or_raise(
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(),
-            120,
-            "stream_dedup",
-        )
+        n_dedup = len(drain(dedup_stream_retransmit(stream), "stream_dedup", 120))
         n_raw = spark.read.schema(schema).json(src).count()
-        n_dedup = spark.table(sink).count()
-        out = spark.createDataFrame(
-            [("raw_rows", n_raw), ("deduped_rows", n_dedup)],
-            "what string, n long",
-        )
-        rows = out.collect()
-        res_schema = out.schema
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+    return spark.createDataFrame(
+        [("raw_rows", n_raw), ("deduped_rows", n_dedup)],
+        "what string, n long",
+    )
+
+
+def _png_payload(d):
+    """PNG encoding of media-corpus image ``d``."""
+    from mycenae_spark.functions.multimodal import encode_png, pixel_corpus_image
+
+    _w, _h, ct, _gray, px = pixel_corpus_image(d)
+    return encode_png(px, ct, row_filters=lambda y: y % 5, n_idat=2)
+
+
+def _gif_payload(d):
+    """GIF re-encode of media-corpus image ``d``: byte-distinct from its
+    PNG, signature-identical (the re-encode retransmit md5 cannot
+    catch)."""
+    from mycenae_spark.functions.multimodal import (
+        _GRAY_PALETTE,
+        encode_gif,
+        pixel_corpus_image,
+    )
+
+    _w, _h, _ct, gray, _px = pixel_corpus_image(d)
+    return encode_gif(gray, _GRAY_PALETTE)
+
+
+def _media_jrow(mid, day, payload):
+    """One jsonl row of a media bridge's crawl-day file."""
+    import base64
+    import json
+
+    return json.dumps({"media_id": mid, "day": day,
+                       "payload_b64": base64.b64encode(payload).decode()})
 
 
 @q(
@@ -3493,66 +3172,52 @@ def stream_media_dedup_roundtrip(spark, sf_dir):
     import base64 as _b64
     import json as _json
     import os
-    import shutil
     import sys as _sys
-    import tempfile
-    import uuid
 
     from mycenae_spark.functions import multimodal as _mm
     from mycenae_spark.pickling import register_module_by_value
+    from mycenae_spark.streaming.assimilate import write_day_files
 
     register_module_by_value(_sys.modules[_mm.__name__])
     import pandas as _pd
 
-    base = tempfile.mkdtemp(prefix="smdedup_rt_")
-    try:
+    t0 = 1704067200000
+
+    rows_a = [
+        {"media_id": d, "ts_ms": t0 + d * 1000,
+         "payload_b64": _b64.b64encode(_png_payload(d)).decode()}
+        for d in range(30)
+    ]
+    rows_b = [
+        {"media_id": 1000 + d, "ts_ms": t0 + 60_000 + d * 1000,
+         "payload_b64": _b64.b64encode(_gif_payload(d)).decode()}
+        for d in range(15)
+    ] + [
+        {"media_id": d, "ts_ms": t0 + 90_000 + d * 1000,
+         "payload_b64": _b64.b64encode(_png_payload(d)).decode()}
+        for d in range(30, 36)
+    ]
+    schema = "media_id long, ts_ms long, payload_b64 string"
+
+    def sig_kernel(batches):
+        for pdf in batches:
+            yield _pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "ts_ms": pdf["ts_ms"],
+                    "dhash": _pd.array(
+                        [_mm.dhash64(p) for p in pdf["payload"]],
+                        dtype="Int64",
+                    ),
+                }
+            )
+
+    with sandbox(spark, "smdedup_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        t0 = 1704067200000
-
-        def png_payload(d):
-            w, h, ct, gray, px = _mm.pixel_corpus_image(d)
-            return _mm.encode_png(px, ct, row_filters=lambda y: y % 5,
-                                  n_idat=2)
-
-        def gif_payload(d):
-            w, h, ct, gray, px = _mm.pixel_corpus_image(d)
-            return _mm.encode_gif(gray, _mm._GRAY_PALETTE)
-
-        rows_a = [
-            {"media_id": d, "ts_ms": t0 + d * 1000,
-             "payload_b64": _b64.b64encode(png_payload(d)).decode()}
-            for d in range(30)
-        ]
-        rows_b = [
-            {"media_id": 1000 + d, "ts_ms": t0 + 60_000 + d * 1000,
-             "payload_b64": _b64.b64encode(gif_payload(d)).decode()}
-            for d in range(15)
-        ] + [
-            {"media_id": d, "ts_ms": t0 + 90_000 + d * 1000,
-             "payload_b64": _b64.b64encode(png_payload(d)).decode()}
-            for d in range(30, 36)
-        ]
-        with open(os.path.join(src, "a.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in rows_a))
-        with open(os.path.join(src, "b.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in rows_b))
-
-        schema = "media_id long, ts_ms long, payload_b64 string"
-
-        def sig_kernel(batches):
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "ts_ms": pdf["ts_ms"],
-                        "dhash": _pd.array(
-                            [_mm.dhash64(p) for p in pdf["payload"]],
-                            dtype="Int64",
-                        ),
-                    }
-                )
-
+        write_day_files(src, [
+            (name, [_json.dumps(p) for p in b])
+            for name, b in (("a.jsonl", rows_a), ("b.jsonl", rows_b))
+        ])
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -3566,33 +3231,17 @@ def stream_media_dedup_roundtrip(spark, sf_dir):
             .withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark(["dhash"])
         )
-        sink = f"smdedup_{uuid.uuid4().hex[:8]}"
-        await_or_raise(
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(),
-            120,
-            "stream_media_dedup",
-        )
+        n_sigs = len(drain(stream, "stream_media_dedup", 120))
         raw = spark.read.schema(schema).json(src)
         n_raw = raw.count()
         n_payloads = raw.select(
             F.md5(F.unbase64("payload_b64"))
         ).distinct().count()
-        n_sigs = spark.table(sink).count()
-        out = spark.createDataFrame(
-            [("raw_rows", n_raw), ("unique_payloads", n_payloads),
-             ("unique_signatures", n_sigs)],
-            "what string, n long",
-        )
-        rows = out.collect()
-        res_schema = out.schema
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+    return spark.createDataFrame(
+        [("raw_rows", n_raw), ("unique_payloads", n_payloads),
+         ("unique_signatures", n_sigs)],
+        "what string, n long",
+    )
 
 
 @q(
@@ -3635,21 +3284,10 @@ def stream_media_assimilate_roundtrip(spark, sf_dir):
     probe reads ∝ batch via (j, shard) pruning, assimilation writes
     ∝ keeps, corpus never rescanned, and the driver carries only the
     generation pointer between micro-batches."""
-    import base64 as _b64
-    import json as _json
     import os
-    import shutil
-    import tempfile
 
     from mycenae_spark.functions.dedup import ensure_sig_index
-    from mycenae_spark.functions.multimodal import (
-        MEDIA_CORPUS_VERSION,
-        _GRAY_PALETTE,
-        dhash_media,
-        encode_gif,
-        encode_png,
-        pixel_corpus_image,
-    )
+    from mycenae_spark.functions.multimodal import MEDIA_CORPUS_VERSION, dhash_media
     from mycenae_spark.streaming.assimilate import (
         VERDICT_SCHEMA,
         media_assimilate_stream,
@@ -3657,22 +3295,23 @@ def stream_media_assimilate_roundtrip(spark, sf_dir):
         write_day_files,
     )
 
-    def png_payload(d):
-        _w, _h, ct, _gray, px = pixel_corpus_image(d)
-        return encode_png(px, ct, row_filters=lambda y: y % 5, n_idat=2)
+    def cover(gen_dir):
+        return (
+            spark.read.schema(
+                "idx_id long, sig long, segval long, j int, shard bigint"
+            )
+            .parquet(os.path.join(gen_dir, "segments"))
+            .select("idx_id")
+            .distinct()
+            .count()
+        )
 
-    def gif_payload(d):
-        _w, _h, _ct, gray, _px = pixel_corpus_image(d)
-        return encode_gif(gray, _GRAY_PALETTE)
-
-    base = tempfile.mkdtemp(prefix="smassim_rt_")
-    try:
+    with sandbox(spark, "smassim_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
         vdir = os.path.join(base, "verdicts")
 
         day0 = spark.createDataFrame(
-            [(d, bytearray(png_payload(d))) for d in range(30)],
+            [(d, bytearray(_png_payload(d))) for d in range(30)],
             "media_id long, payload binary",
         )
         base_dir = ensure_sig_index(
@@ -3685,19 +3324,13 @@ def stream_media_assimilate_roundtrip(spark, sf_dir):
             source_version=MEDIA_CORPUS_VERSION,
         )
 
-        def jrow(mid, day, payload):
-            return _json.dumps(
-                {"media_id": mid, "day": day,
-                 "payload_b64": _b64.b64encode(payload).decode()}
-            )
-
-        rows1 = [jrow(1000 + d, 1, gif_payload(d)) for d in range(6)] + [
-            jrow(1000 + d, 1, png_payload(d)) for d in range(30, 45)
+        rows1 = [_media_jrow(1000 + d, 1, _gif_payload(d)) for d in range(6)] + [
+            _media_jrow(1000 + d, 1, _png_payload(d)) for d in range(30, 45)
         ]
         rows2 = (
-            [jrow(2000 + d, 2, gif_payload(d)) for d in range(30, 36)]
-            + [jrow(2000 + d, 2, png_payload(d)) for d in range(6, 9)]
-            + [jrow(2000 + d, 2, png_payload(d)) for d in range(45, 51)]
+            [_media_jrow(2000 + d, 2, _gif_payload(d)) for d in range(30, 36)]
+            + [_media_jrow(2000 + d, 2, _png_payload(d)) for d in range(6, 9)]
+            + [_media_jrow(2000 + d, 2, _png_payload(d)) for d in range(45, 51)]
         )
         write_day_files(src, [("day1.jsonl", rows1), ("day2.jsonl", rows2)])
 
@@ -3708,46 +3341,10 @@ def stream_media_assimilate_roundtrip(spark, sf_dir):
                 f"keeps), got {len(chain)}: {chain}"
             )
 
-        def cover(gen_dir):
-            return (
-                spark.read.schema(
-                    "idx_id long, sig long, segval long, j int, shard bigint"
-                )
-                .parquet(os.path.join(gen_dir, "segments"))
-                .select("idx_id")
-                .distinct()
-                .count()
-            )
-
-        covers = {1: cover(chain[0]), 2: cover(chain[1])}
-        out = (
-            read_bridge_output(spark, vdir, VERDICT_SCHEMA)
-            .groupBy("day")
-            .agg(
-                F.count(F.lit(1)).alias("n_assets"),
-                F.sum(
-                    F.when(
-                        (F.col("dup_of") >= 0) & (F.col("dup_of") < 1000), 1
-                    ).otherwise(0)
-                ).alias("n_dup_day0"),
-                F.sum(
-                    F.when(F.col("dup_of") >= 1000, 1).otherwise(0)
-                ).alias("n_dup_day1"),
-                F.sum(F.lit(1) - F.col("is_dup")).alias("n_keeps"),
-            )
-        )
-        cov = spark.createDataFrame(
-            [(d, c) for d, c in covers.items()], "day int, idx_cover long"
-        )
-        res = out.join(cov, "day").select(
-            "day", "n_assets", "n_dup_day0", "n_dup_day1", "n_keeps",
-            "idx_cover",
-        )
-        rows = res.collect()
-        res_schema = res.schema
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+        return detach(bridge_day_summary(
+            read_bridge_output(spark, vdir, VERDICT_SCHEMA), "n_assets",
+            {1: cover(chain[0]), 2: cover(chain[1])},
+        ))
 
 
 @q(
@@ -3773,63 +3370,42 @@ def stream_enrich_roundtrip(spark, sf_dir):
     ``sf_dir`` unused — input synthesized, scale-invariant."""
     import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.windows import enrich_stream
 
-    base = tempfile.mkdtemp(prefix="senrich_rt_")
-    try:
+    t0 = 1704067200000
+    pts = [
+        {"event_id": i, "ts_ms": t0 + i * 1000, "user_id": i % 4,
+         "value": float(i)}
+        for i in range(20)
+    ]
+    dim = spark.createDataFrame(
+        [(u, "even" if u % 2 == 0 else "odd") for u in range(4)],
+        "user_id long, segment string",
+    )
+    with sandbox(spark, "senrich_rt_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        t0 = 1704067200000
-        pts = [
-            {"event_id": i, "ts_ms": t0 + i * 1000, "user_id": i % 4,
-             "value": float(i)}
-            for i in range(20)
-        ]
         # two files so the enrichment provably spans micro-batches
-        with open(os.path.join(src, "a.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in pts[:11]))
-        with open(os.path.join(src, "b.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in pts[11:]))
-
-        dim = spark.createDataFrame(
-            [(u, "even" if u % 2 == 0 else "odd") for u in range(4)],
-            "user_id long, segment string",
-        )
-        schema = "event_id long, ts_ms long, user_id long, value double"
+        write_day_files(src, [
+            ("a.jsonl", [_json.dumps(p) for p in pts[:11]]),
+            ("b.jsonl", [_json.dumps(p) for p in pts[11:]]),
+        ])
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream
+            .schema("event_id long, ts_ms long, user_id long, value double")
             .option("maxFilesPerTrigger", "1")
             .json(src)
         )
-        enriched = enrich_stream(stream, dim, key="user_id")
-        sink = f"senrich_{uuid.uuid4().hex[:8]}"
-        await_or_raise(
-            enriched.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(),
-            120,
-            "stream_enrich",
-        )
-        out = (
-            spark.table(sink)
-            .groupBy("segment")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("value").alias("sum_value"),
-            )
-        )
-        rows = out.collect()
-        res_schema = out.schema
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+        rows = drain(enrich_stream(stream, dim, key="user_id"), "stream_enrich", 120)
+    agg = {}
+    for r in rows:
+        n, s = agg.get(r["segment"], (0, 0.0))
+        agg[r["segment"]] = (n + 1, s + r["value"])
+    return spark.createDataFrame(
+        [(seg, n, s) for seg, (n, s) in agg.items()],
+        "segment string, n long, sum_value double",
+    )
 
 
 @q(
@@ -3857,74 +3433,50 @@ def stream_join_roundtrip(spark, sf_dir):
     unused — input synthesized, scale-invariant."""
     import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.windows import stream_stream_join
 
-    base = tempfile.mkdtemp(prefix="sjoin_rt_")
-    try:
+    t0 = 1704067200000
+    purchases = [
+        {"event_id": i, "ts_ms": t0 + i * 600_000, "tag_user": i}
+        for i in range(5)
+    ]
+    clicks = [
+        {"event_id": 100 + i, "ts_ms": t0 + i * 600_000 - 300_000,
+         "tag_user": i}
+        for i in range(5)
+    ] + [
+        # outside the 30-minute band
+        {"event_id": 200, "ts_ms": t0 - 7_200_000, "tag_user": 0},
+        # after its purchase: fails the as-of inequality
+        {"event_id": 201, "ts_ms": t0 + 600_000 + 60_000, "tag_user": 1},
+    ]
+    schema = "event_id long, ts_ms long, tag_user long"
+
+    def _stream(path):
+        return (
+            spark.readStream.schema(schema)
+            .json(path)
+            .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
+        )
+
+    with sandbox(spark, "sjoin_rt_") as base:
         lsrc = os.path.join(base, "left")
         rsrc = os.path.join(base, "right")
-        os.makedirs(lsrc)
-        os.makedirs(rsrc)
-        t0 = 1704067200000
-        purchases = [
-            {"event_id": i, "ts_ms": t0 + i * 600_000, "tag_user": i}
-            for i in range(5)
-        ]
-        clicks = [
-            {"event_id": 100 + i, "ts_ms": t0 + i * 600_000 - 300_000,
-             "tag_user": i}
-            for i in range(5)
-        ] + [
-            # outside the 30-minute band
-            {"event_id": 200, "ts_ms": t0 - 7_200_000, "tag_user": 0},
-            # after its purchase: fails the as-of inequality
-            {"event_id": 201, "ts_ms": t0 + 600_000 + 60_000, "tag_user": 1},
-        ]
-        with open(os.path.join(lsrc, "l.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in purchases))
-        with open(os.path.join(rsrc, "r.jsonl"), "w") as f:
-            f.write("\n".join(_json.dumps(p) for p in clicks))
-
-        schema = "event_id long, ts_ms long, tag_user long"
-
-        def _stream(path):
-            return (
-                spark.readStream.schema(schema)
-                .json(path)
-                .withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
-            )
-
+        write_day_files(lsrc, [("l.jsonl", [_json.dumps(p) for p in purchases])])
+        write_day_files(rsrc, [("r.jsonl", [_json.dumps(p) for p in clicks])])
         joined = stream_stream_join(
             _stream(lsrc), _stream(rsrc), key="tag_user", within="30 minutes"
         )
-        sink = f"sjoin_{uuid.uuid4().hex[:8]}"
-        await_or_raise(
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(),
-            120,
-            "stream_join",
-        )
+        n_joined = len(drain(joined, "stream_join", 120))
         n_left = spark.read.schema(schema).json(lsrc).count()
         n_right = spark.read.schema(schema).json(rsrc).count()
-        n_joined = spark.table(sink).count()
-        out = spark.createDataFrame(
-            [("raw_left", n_left), ("raw_right", n_right),
-             ("joined_rows", n_joined)],
-            "what string, n long",
-        )
-        rows = out.collect()
-        res_schema = out.schema
-        spark.catalog.dropTempView(sink)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, res_schema)
+    return spark.createDataFrame(
+        [("raw_left", n_left), ("raw_right", n_right),
+         ("joined_rows", n_joined)],
+        "what string, n long",
+    )
 
 
 # ----------------------------------------------------------- funnel analysis
@@ -4085,10 +3637,8 @@ def stream_funnel_roundtrip(spark, sf_dir):
     purchase@T+4s (complete); u2 view@T click@T+20s (outside window);
     u3 view@T+1s (batch 2)."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.stateful import funnel_stream
 
     T = 1_704_067_200_000_000  # us
@@ -4110,44 +3660,26 @@ def stream_funnel_roundtrip(spark, sf_dir):
         ],
     ]
 
-    def run(files: list[list[tuple]], sink: str):
-        base = tempfile.mkdtemp(prefix="sfunnel_")
-        try:
+    def run(files: list[list[tuple]]):
+        with sandbox(spark, "sfunnel_") as base:
             src = os.path.join(base, "src")
-            os.makedirs(src)
-            for i, rows in enumerate(files):
-                path = os.path.join(src, f"{chr(ord('a') + i)}.json")
-                with open(path, "w") as f:
-                    f.write("\n".join(
-                        '{"user":"%s","metric":"%s","ts_us":%d}' % r
-                        for r in rows
-                    ))
-                # deterministic batch order: the file source lists by
-                # modification time; pin strictly increasing mtimes
-                os.utime(path, (1_700_000_000 + 10 * i,) * 2)
+            # deterministic batch order: mtime-ordered files
+            write_day_files(src, [
+                (f"{chr(ord('a') + i)}.json",
+                 ['{"user":"%s","metric":"%s","ts_us":%d}' % r for r in rows])
+                for i, rows in enumerate(files)
+            ])
             stream = (
                 spark.readStream.schema("user string, metric string, ts_us long")
                 .option("maxFilesPerTrigger", "1")
                 .json(src)
                 .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
             )
-            job = (
-                funnel_stream(stream, steps, window_us=10 * S)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_or_raise(job, 180, "stream_funnel")
-            return [r.asDict() for r in spark.table(sink).collect()]
-        finally:
-            spark.catalog.dropTempView(sink)
-            shutil.rmtree(base, ignore_errors=True)
+            return drain(funnel_stream(stream, steps, window_us=10 * S),
+                         "stream_funnel", 180)
 
-    tag = uuid.uuid4().hex[:8]
-    multi = run(batches, f"sfun_m_{tag}")
-    oneshot = run([[r for b in batches for r in b]], f"sfun_1_{tag}")
+    multi = run(batches)
+    oneshot = run([[r for b in batches for r in b]])
 
     key = lambda d: tuple(sorted(d.items()))  # noqa: E731 — row identity
     u1 = [d for d in multi if d["user"] == "u1"]
@@ -4170,6 +3702,24 @@ def stream_funnel_roundtrip(spark, sf_dir):
         ("oneshot_equals_multibatch_final", n_equal),
     ]
     return spark.createDataFrame(flags, "what string, n long")
+
+
+def _post_json(base, path, body):
+    """POST ``body`` as JSON to ``base + path``: (status, parsed reply),
+    error replies included."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    req = urllib.request.Request(
+        f"{base}{path}", data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=120) as resp:
+            return resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
 
 
 @q(
@@ -4207,12 +3757,6 @@ def analytics_endpoints_roundtrip(spark, sf_dir):
     per-user frame to #steps numbers cluster-side, so the response is
     driver-safe at any corpus size.  Constant oracle; rates emitted as
     ×10000 BIGINTs; ``sf_dir`` unused — input synthesized."""
-    import json as _json
-    import shutil
-    import tempfile
-    import urllib.error
-    import urllib.request
-
     from mycenae_spark.server import serve
 
     B = 1_704_067_200_000  # ms
@@ -4226,23 +3770,13 @@ def analytics_endpoints_roundtrip(spark, sf_dir):
         ("a3", "view", B + H),          # stage 1
         ("a4", "click", B),             # no view: stage 0
     ]
-    base_dir = tempfile.mkdtemp(prefix="analytics_http_")
-    try:
+    with sandbox(spark, "analytics_http_") as base_dir:
         httpd, _ = serve(
             spark, f"{base_dir}/lake", f"{base_dir}/catalog"
         )
         base = f"http://127.0.0.1:{httpd.server_address[1]}"
 
-        def post(path, body):
-            req = urllib.request.Request(
-                f"{base}{path}", data=_json.dumps(body).encode(),
-                headers={"Content-Type": "application/json"},
-            )
-            try:
-                with urllib.request.urlopen(req, timeout=120) as resp:
-                    return resp.status, _json.loads(resp.read())
-            except urllib.error.HTTPError as e:
-                return e.code, _json.loads(e.read())
+        post = partial(_post_json, base)
 
         try:
             _, put_resp = post("/api/put", [
@@ -4265,24 +3799,22 @@ def analytics_endpoints_roundtrip(spark, sf_dir):
         finally:
             httpd.shutdown()
             httpd.server_close()  # release the listening fd (r11 ADVICE)
-        cells = {c["offset"]: c for c in rr["cells"]}
-        flags = [
-            ("put_failed", put_resp["failed"]),
-            ("funnel_users", fr["users"]),
-            ("funnel_reach_0", fr["reached"][0]),
-            ("funnel_reach_1", fr["reached"][1]),
-            ("funnel_reach_2", fr["reached"][2]),
-            ("funnel_rate2_x10k", int(round(fr["rate"][2] * 10_000))),
-            ("funnel_top_user_stage", fr["sample"][0]["stage"]),
-            ("retention_cells", len(rr["cells"])),
-            ("retention_off0_active", cells[0]["n_active"]),
-            ("retention_off1_active", cells[1]["n_active"]),
-            ("retention_off1_rate_x10k",
-             int(round(cells[1]["rate"] * 10_000))),
-            ("bad_user_tag_is_400", int(bad_code == 400)),
-        ]
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
+    cells = {c["offset"]: c for c in rr["cells"]}
+    flags = [
+        ("put_failed", put_resp["failed"]),
+        ("funnel_users", fr["users"]),
+        ("funnel_reach_0", fr["reached"][0]),
+        ("funnel_reach_1", fr["reached"][1]),
+        ("funnel_reach_2", fr["reached"][2]),
+        ("funnel_rate2_x10k", int(round(fr["rate"][2] * 10_000))),
+        ("funnel_top_user_stage", fr["sample"][0]["stage"]),
+        ("retention_cells", len(rr["cells"])),
+        ("retention_off0_active", cells[0]["n_active"]),
+        ("retention_off1_active", cells[1]["n_active"]),
+        ("retention_off1_rate_x10k",
+         int(round(cells[1]["rate"] * 10_000))),
+        ("bad_user_tag_is_400", int(bad_code == 400)),
+    ]
     return spark.createDataFrame(flags, "what string, n long")
 
 
@@ -4438,10 +3970,8 @@ def stream_gaps_roundtrip(spark, sf_dir):
     unused — input synthesized, scale-invariant.  Kernel:
     streaming/stateful.py::make_gap_fn."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.stateful import gap_stream
 
     T = 1_704_067_200_000_000
@@ -4452,49 +3982,32 @@ def stream_gaps_roundtrip(spark, sf_dir):
         [("s1", T + 10 * H + 60 * S), ("s1", T + 60 * S),  # replay
          ("s2", T + 2 * H), ("s3", T), ("s3", T + 7 * H)],
     ]
-    base = tempfile.mkdtemp(prefix="sgaps_")
-    sink = f"sgaps_{uuid.uuid4().hex[:8]}"
-    try:
+    with sandbox(spark, "sgaps_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        for i, rows in enumerate(batches):
-            path = os.path.join(src, f"{chr(ord('a') + i)}.json")
-            with open(path, "w") as f:
-                f.write("\n".join(
-                    '{"series":"%s","ts_us":%d}' % r for r in rows
-                ))
-            os.utime(path, (1_700_000_000 + 10 * i,) * 2)
+        write_day_files(src, [
+            (f"{chr(ord('a') + i)}.json",
+             ['{"series":"%s","ts_us":%d}' % r for r in rows])
+            for i, rows in enumerate(batches)
+        ])
         stream = (
             spark.readStream.schema("series string, ts_us long")
             .option("maxFilesPerTrigger", "1")
             .json(src)
             .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         )
-        job = (
-            gap_stream(stream, threshold_us=6 * H)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(job, 180, "stream_gaps")
-        alerts = [r.asDict() for r in spark.table(sink).collect()]
-        by = {}
-        for a in alerts:
-            by.setdefault(a["series"], []).append(a)
-        flags = [
-            ("total_alerts", len(alerts)),
-            ("s1_alerts", len(by.get("s1", []))),
-            ("s1_gap_s", by["s1"][0]["gap_us"] // 1_000_000
-             if by.get("s1") else -1),
-            ("s2_alerts", len(by.get("s2", []))),
-            ("s3_gap_s", by["s3"][0]["gap_us"] // 1_000_000
-             if by.get("s3") else -1),
-        ]
-    finally:
-        spark.catalog.dropTempView(sink)
-        shutil.rmtree(base, ignore_errors=True)
+        alerts = drain(gap_stream(stream, threshold_us=6 * H), "stream_gaps", 180)
+    by = {}
+    for a in alerts:
+        by.setdefault(a["series"], []).append(a)
+    flags = [
+        ("total_alerts", len(alerts)),
+        ("s1_alerts", len(by.get("s1", []))),
+        ("s1_gap_s", by["s1"][0]["gap_us"] // 1_000_000
+         if by.get("s1") else -1),
+        ("s2_alerts", len(by.get("s2", []))),
+        ("s3_gap_s", by["s3"][0]["gap_us"] // 1_000_000
+         if by.get("s3") else -1),
+    ]
     return spark.createDataFrame(flags, "what string, n long")
 
 
@@ -4805,32 +4318,16 @@ def series_cap_roundtrip(spark, sf_dir):
     (bare wildcard over a million-series keyset) costing one catalog
     count versus a full lake scan + an unbounded driver collect.
     Constant oracle; ``sf_dir`` unused — input synthesized."""
-    import json as _json
-    import shutil
-    import tempfile
-    import urllib.error
-    import urllib.request
-
     from mycenae_spark.server import serve
 
     B = 1_704_067_200_000  # ms
-    base_dir = tempfile.mkdtemp(prefix="series_cap_")
-    try:
+    with sandbox(spark, "series_cap_") as base_dir:
         httpd, _ = serve(
             spark, f"{base_dir}/lake", f"{base_dir}/catalog", max_series=3
         )
         base = f"http://127.0.0.1:{httpd.server_address[1]}"
 
-        def post(path, body):
-            req = urllib.request.Request(
-                f"{base}{path}", data=_json.dumps(body).encode(),
-                headers={"Content-Type": "application/json"},
-            )
-            try:
-                with urllib.request.urlopen(req, timeout=120) as resp:
-                    return resp.status, _json.loads(resp.read())
-            except urllib.error.HTTPError as e:
-                return e.code, _json.loads(e.read())
+        post = partial(_post_json, base)
 
         try:
             _, put_resp = post("/api/put", [
@@ -4880,21 +4377,19 @@ def series_cap_roundtrip(spark, sf_dir):
         finally:
             httpd.shutdown()
             httpd.server_close()
-        flags = [
-            ("put_failed", put_resp["failed"]),
-            ("overcap_query_400", int(over_code == 400)),
-            ("filtered_query_ok", int(flt_code == 200)),
-            ("undercap_query_ok", int(small_code == 200)),
-            ("gaps_unbounded_400", int(gaps_code == 400)),
-            ("last_unbounded_400", int(last_code == 400)),
-            ("last_pages", pages),
-            ("last_rows_total", len(seen)),
-            ("last_rows_distinct", len(set(seen))),
-            ("gaps_page2_rows", len(g2)),
-            ("funnel_overcap_400", int(fun_code == 400)),
-        ]
-    finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
+    flags = [
+        ("put_failed", put_resp["failed"]),
+        ("overcap_query_400", int(over_code == 400)),
+        ("filtered_query_ok", int(flt_code == 200)),
+        ("undercap_query_ok", int(small_code == 200)),
+        ("gaps_unbounded_400", int(gaps_code == 400)),
+        ("last_unbounded_400", int(last_code == 400)),
+        ("last_pages", pages),
+        ("last_rows_total", len(seen)),
+        ("last_rows_distinct", len(set(seen))),
+        ("gaps_page2_rows", len(g2)),
+        ("funnel_overcap_400", int(fun_code == 400)),
+    ]
     return spark.createDataFrame(flags, "what string, n long")
 
 
@@ -5102,22 +4597,13 @@ def stream_evict_roundtrip(spark, sf_dir):
     active keys\' inter-batch gaps stay far under the window.
     Constant oracle; ``sf_dir`` unused."""
     import os
-    import shutil
-    import tempfile
     import time as _time
-    import uuid
 
     from mycenae_spark.streaming.stateful import funnel_stream, gap_stream
 
     T = 1_704_067_200_000_000  # us
     S = 1_000_000
     EVICT_MS = 6_000
-    base = tempfile.mkdtemp(prefix="sevict_")
-    tag = uuid.uuid4().hex[:8]
-    fsink, gsink = f"sev_f_{tag}", f"sev_g_{tag}"
-    fdir, gdir = os.path.join(base, "f"), os.path.join(base, "g")
-    os.makedirs(fdir)
-    os.makedirs(gdir)
     seq = [0]
 
     def write(dirpath, lines):
@@ -5128,31 +4614,21 @@ def stream_evict_roundtrip(spark, sf_dir):
             f.write("\n".join(lines))
         os.rename(tmp, p)
 
-    def wait_rows(sink, want, timeout_s=120):
-        """Bounded wait until the memory sink holds >= want rows; the
-        protocol writes nothing new before the previous write is
-        observed, so counts are exact (no batch coalescing ambiguity)."""
-        deadline = _time.monotonic() + timeout_s
-        while _time.monotonic() < deadline:
-            n = spark.table(sink).count()
-            if n >= want:
-                return n
-            _time.sleep(0.25)
-        raise TimeoutError(f"{sink}: expected {want} rows within {timeout_s}s")
+    def batch_ms(job):
+        return [p.durationMs.get("triggerExecution")
+                for p in job.recentProgress[-5:]]
 
     fev = lambda u, m, ts: \
         '{"user":"%s","metric":"%s","ts_us":%d}' % (u, m, ts)  # noqa: E731
     gev = lambda s, ts: '{"series":"%s","ts_us":%d}' % (s, ts)  # noqa: E731
-    qf = qg = None
-    # A vanilla driver session carries spark.sql.shuffle.partitions=200:
-    # each 500 ms micro-batch of the two stateful ops then runs 200 state
-    # tasks and batch turnaround can exceed the eviction window itself,
-    # evicting the ACTIVE keys between ticks (measured — the cross-batch
-    # s9 alert vanished under a vanilla session).  Pin a small partition
-    # count for the queries (captured at .start()) and restore after.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # The state-partition pin (STATE_PARTITIONS) matters here: under a
+    # vanilla session's 200, batch turnaround of the two 500 ms stateful
+    # streams can exceed the eviction window itself and evict the ACTIVE
+    # keys between ticks.
+    with sandbox(spark, "sevict_") as base:
+        fdir, gdir = os.path.join(base, "f"), os.path.join(base, "g")
+        os.makedirs(fdir)
+        os.makedirs(gdir)
         fstream = (
             spark.readStream.schema("user string, metric string, ts_us long")
             .json(fdir)
@@ -5163,85 +4639,88 @@ def stream_evict_roundtrip(spark, sf_dir):
             .json(gdir)
             .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         )
-        qf = (
-            funnel_stream(fstream, ["view", "click", "purchase"],
-                          window_us=10 * S, evict_after_ms=EVICT_MS)
-            .writeStream.format("memory").queryName(fsink)
-            .outputMode("append")
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        qg = (
-            gap_stream(gstream, threshold_us=2 * S, evict_after_ms=EVICT_MS)
-            .writeStream.format("memory").queryName(gsink)
-            .outputMode("append")
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        # batch 1: u1 at stage 2; s1 alive.  The observer series "obs"
-        # writes an IN-BATCH 10 s pair every file, so every gaps batch
-        # yields exactly one alert whether obs state is alive or was
-        # itself evicted (the pair alerts within the batch; consecutive
-        # pairs step +1 s in event time, under the threshold, so a
-        # surviving state adds no cross-batch alert either) — exact,
-        # eviction-independent sink counts.
-        obs_end = T + 10 * S
+        with (
+            memory_sink(
+                funnel_stream(fstream, ["view", "click", "purchase"],
+                              window_us=10 * S, evict_after_ms=EVICT_MS),
+                "sev_f", processingTime="500 milliseconds",
+            ) as (qf, fsink),
+            memory_sink(
+                gap_stream(gstream, threshold_us=2 * S, evict_after_ms=EVICT_MS),
+                "sev_g", processingTime="500 milliseconds",
+            ) as (qg, gsink),
+        ):
+            def wait_rows(sink, want, timeout_s=120):
+                """Bounded wait until the memory sink holds >= want rows;
+                the protocol writes nothing new before the previous write
+                is observed, so counts are exact (no batch coalescing
+                ambiguity).  A timeout reports both queries' last batch
+                durations against the eviction window."""
+                deadline = _time.monotonic() + timeout_s
+                while _time.monotonic() < deadline:
+                    n = spark.table(sink).count()
+                    if n >= want:
+                        return n
+                    _time.sleep(0.25)
+                raise TimeoutError(
+                    f"{sink}: expected {want} rows within {timeout_s}s; "
+                    f"last triggerExecution ms: funnel {batch_ms(qf)}, "
+                    f"gaps {batch_ms(qg)}; eviction window {EVICT_MS} ms"
+                )
 
-        def obs_pair():
-            nonlocal obs_end
-            a = obs_end + 1 * S
-            obs_end = a + 10 * S
-            return [gev("obs", a), gev("obs", obs_end)]
+            # batch 1: u1 at stage 2; s1 alive.  The observer series "obs"
+            # writes an IN-BATCH 10 s pair every file, so every gaps batch
+            # yields exactly one alert whether obs state is alive or was
+            # itself evicted (the pair alerts within the batch; consecutive
+            # pairs step +1 s in event time, under the threshold, so a
+            # surviving state adds no cross-batch alert either) — exact,
+            # eviction-independent sink counts.
+            obs_end = T + 10 * S
 
-        write(fdir, [fev("u1", "view", T), fev("u1", "click", T + 2 * S),
-                     fev("u9", "view", T)])
-        write(gdir, [gev("s1", T), gev("obs", T), gev("obs", obs_end)])
-        f_want = wait_rows(fsink, 2)   # u1 + u9 rows
-        g_want = wait_rows(gsink, 1)   # obs in-batch alert
-        evict_deadline = _time.monotonic() + EVICT_MS / 1000 + 1.0
-        s9_ticks = [T + 1 * S, T + 5 * S]  # the judged 4 s cross-batch jump
-        i = 0
-        while _time.monotonic() < evict_deadline or i < 3:
-            gl = obs_pair()
-            if i < len(s9_ticks):
-                gl.append(gev("s9", s9_ticks[i]))
+            def obs_pair():
+                nonlocal obs_end
+                a = obs_end + 1 * S
+                obs_end = a + 10 * S
+                return [gev("obs", a), gev("obs", obs_end)]
+
+            write(fdir, [fev("u1", "view", T), fev("u1", "click", T + 2 * S),
+                         fev("u9", "view", T)])
+            write(gdir, [gev("s1", T), gev("obs", T), gev("obs", obs_end)])
+            f_want = wait_rows(fsink, 2)   # u1 + u9 rows
+            g_want = wait_rows(gsink, 1)   # obs in-batch alert
+            evict_deadline = _time.monotonic() + EVICT_MS / 1000 + 1.0
+            s9_ticks = [T + 1 * S, T + 5 * S]  # the judged 4 s cross-batch jump
+            i = 0
+            while _time.monotonic() < evict_deadline or i < 3:
+                gl = obs_pair()
+                if i < len(s9_ticks):
+                    gl.append(gev("s9", s9_ticks[i]))
+                write(fdir, [fev("u9", "click", T + 1 * S)])
+                write(gdir, gl)
+                f_want = wait_rows(fsink, f_want + 1)      # u9 row per tick
+                g_want = wait_rows(
+                    gsink, g_want + 1 + (1 if i == 1 else 0)  # obs (+ s9 jump)
+                )
+                _time.sleep(1.0)
+                i += 1
+                if i > 60:
+                    raise TimeoutError("eviction tick loop never converged")
+            # one tick strictly AFTER the deadline: its observed batch runs at
+            # wall >= batch1 + EVICT + 1 s, so the u1/s1 timeouts have
+            # provably fired before the return events below
             write(fdir, [fev("u9", "click", T + 1 * S)])
-            write(gdir, gl)
-            f_want = wait_rows(fsink, f_want + 1)      # u9 row per tick
-            g_want = wait_rows(
-                gsink, g_want + 1 + (1 if i == 1 else 0)  # obs (+ s9 jump)
-            )
-            _time.sleep(1.0)
-            i += 1
-            if i > 60:
-                raise TimeoutError("eviction tick loop never converged")
-        # one tick strictly AFTER the deadline: its observed batch runs at
-        # wall >= batch1 + EVICT + 1 s, so the u1/s1 timeouts have
-        # provably fired before the return events below
-        write(fdir, [fev("u9", "click", T + 1 * S)])
-        write(gdir, obs_pair())
-        f_want = wait_rows(fsink, f_want + 1)
-        g_want = wait_rows(gsink, g_want + 1)
-        # the evicted keys return: in-window event times that WOULD have
-        # extended the old chains had state survived eviction
-        write(fdir, [fev("u1", "purchase", T + 4 * S)])
-        write(gdir, [gev("s1", T + 8 * S)] + obs_pair())
-        wait_rows(fsink, f_want + 1)  # u1's fresh-chain row
-        wait_rows(gsink, g_want + 1)  # obs marker (s1 must stay silent)
-        _time.sleep(1.0)  # grace: a buggy surviving s1 alert gets seen
-        frows = [r.asDict() for r in spark.table(fsink).collect()]
-        grows = [r.asDict() for r in spark.table(gsink).collect()]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        for qq in (qf, qg):
-            if qq is not None:
-                qq.stop()
-        for snk in (fsink, gsink):
-            try:
-                spark.catalog.dropTempView(snk)
-            except Exception:
-                _log.debug("cleanup: dropTempView(%s) failed", snk, exc_info=True)
-        shutil.rmtree(base, ignore_errors=True)
+            write(gdir, obs_pair())
+            f_want = wait_rows(fsink, f_want + 1)
+            g_want = wait_rows(gsink, g_want + 1)
+            # the evicted keys return: in-window event times that WOULD have
+            # extended the old chains had state survived eviction
+            write(fdir, [fev("u1", "purchase", T + 4 * S)])
+            write(gdir, [gev("s1", T + 8 * S)] + obs_pair())
+            wait_rows(fsink, f_want + 1)  # u1's fresh-chain row
+            wait_rows(gsink, g_want + 1)  # obs marker (s1 must stay silent)
+            _time.sleep(1.0)  # grace: a buggy surviving s1 alert gets seen
+            frows = [r.asDict() for r in spark.table(fsink).collect()]
+            grows = [r.asDict() for r in spark.table(gsink).collect()]
     u1 = [d for d in frows if d["user"] == "u1"]
     ret = u1[-1] if len(u1) > 1 else {"stage": -1, "n_seen": -1}
     s1_alerts = [d for d in grows if d["series"] == "s1"]
@@ -5374,10 +4853,8 @@ def stream_heavyhitters_roundtrip(spark, sf_dir):
     bounded-state discipline.  Constant oracle; ``sf_dir`` unused.
     Kernel: streaming/stateful.py::make_heavy_hitters_fn."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.stateful import heavy_hitters_stream
 
     T = 1_704_067_200_000_000
@@ -5387,49 +4864,21 @@ def stream_heavyhitters_roundtrip(spark, sf_dir):
         ["e"] * 3 + ["hot"],
     ]
     true_hot = sum(b.count("hot") for b in batches)  # 10
-    base = tempfile.mkdtemp(prefix="shh_")
-    sink = f"shh_{uuid.uuid4().hex[:8]}"
-    try:
+    with sandbox(spark, "shh_") as base:
         src = os.path.join(base, "src")
-        os.makedirs(src)
-        for i, toks in enumerate(batches):
-            path = os.path.join(src, f"{chr(ord('a') + i)}.json")
-            with open(path, "w") as f:
-                f.write("\n".join(
-                    '{"metric":"m","tok":"%s","ts_us":%d}' % (tk, T + j)
-                    for j, tk in enumerate(toks)
-                ))
-            os.utime(path, (1_700_000_000 + 10 * i,) * 2)
+        write_day_files(src, [
+            (f"{chr(ord('a') + i)}.json",
+             ['{"metric":"m","tok":"%s","ts_us":%d}' % (tk, T + j)
+              for j, tk in enumerate(toks)])
+            for i, toks in enumerate(batches)
+        ])
         stream = (
             spark.readStream.schema("metric string, tok string, ts_us long")
             .option("maxFilesPerTrigger", "1")
             .json(src)
             .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         )
-        # pin a small state-store partition count for the run (vanilla
-        # sessions carry 200 — 600 state tasks for 21 rows; the
-        # stream_evict_roundtrip convention) and restore after
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            job = (
-                heavy_hitters_stream(stream, k=3)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_or_raise(job, 180, "heavy hitters")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        rows = [r.asDict() for r in spark.table(sink).collect()]
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            _log.debug("cleanup: dropTempView(%s) failed", sink, exc_info=True)
-        shutil.rmtree(base, ignore_errors=True)
+        rows = drain(heavy_hitters_stream(stream, k=3), "heavy hitters", 180)
     by_batch = {}
     for r in rows:
         by_batch.setdefault(r["n_seen"], {})[r["tok"]] = r["mg_count"]
@@ -5526,6 +4975,65 @@ def downsample_cal_week(spark, sf_dir):
     )
 
 
+def _bridge_day_rows(metric, d):
+    """Day ``d`` of a TSDB-bridge lifecycle: 24 h × 12 points at 5-min
+    spacing on one series, value = 100·H + j for global hour H."""
+    import json
+
+    return [
+        json.dumps({
+            "metric": metric,
+            "tags": {"ksid": "k1", "host": "h0"},
+            "timestamp": BASE_MS + d * DAY_MS + h * HOUR_MS + j * 300_000,
+            "value": float(100 * (d * 24 + h) + j),
+        })
+        for h in range(24)
+        for j in range(12)
+    ]
+
+
+def _run_bridge(spark, base, metric, n_days, **kw):
+    """Write crawl days 1..``n_days`` under ``base``/src (the earlier
+    days again, as a drop directory holds them) and run the TSDB ingest
+    bridge on the one checkpoint, with the fine rollup, KMV and qsample
+    lakes and their 1h rungs under ``base``."""
+    from mycenae_spark.streaming.assimilate import write_day_files
+    from mycenae_spark.streaming.tsdb_bridge import run_tsdb_bridge
+
+    write_day_files(f"{base}/src", [
+        (f"day{d + 1}.jsonl", _bridge_day_rows(metric, d)) for d in range(n_days)
+    ])
+    return run_tsdb_bridge(
+        spark, f"{base}/src", f"{base}/lake", f"{base}/cat", f"{base}/ckpt",
+        rollup_dir=f"{base}/r1m", ladder={HOUR_MS: f"{base}/r1h"},
+        kmv_fine_dir=f"{base}/kmv1m", kmv_ladder={HOUR_MS: f"{base}/kmv1h"},
+        qsample_fine_dir=f"{base}/qs1m", qsample_ladder={HOUR_MS: f"{base}/qs1h"},
+        max_files_per_trigger=1, **kw,
+    )
+
+
+def _bridge_dps(eng, metric, ds, start, n_days):
+    """The served ``sum`` of ``metric`` downsampled by ``ds``, from
+    ``start`` to the end of day ``n_days``: {bucket s: value}."""
+    out = eng.query({
+        "start": start, "end": BASE_MS + n_days * DAY_MS,
+        "queries": [{"metric": metric, "aggregator": "sum", "downsample": ds}],
+    })
+    return {int(k): v for k, v in out[0]["dps"].items()}
+
+
+def _hours_exact(got, n_hours, offset):
+    """1 iff ``got`` holds exactly the first ``n_hours`` hourly buckets,
+    each the closed form 100·H + ``offset``."""
+    if len(got) != n_hours:
+        return 0
+    return int(all(
+        abs(got.get((BASE_MS + hh * HOUR_MS) // 1000, -1e18)
+            - (100 * hh + offset)) < 1e-6
+        for hh in range(n_hours)
+    ))
+
+
 @q(
     "stream_tsdb_ingest_roundtrip",
     """
@@ -5574,99 +5082,39 @@ def stream_tsdb_ingest_roundtrip(spark, sf_dir):
     inside that batch, and the SAME engine instance routes the
     extended query again — 72 exact buckets — proving freshness is the
     ingest transaction's property, not an operator's.  Constant
-    oracle; rows collected before rmtree; ``sf_dir`` unused (input
-    synthesized, scale-invariant)."""
-    import json as _json
-    import shutil
-    import tempfile
-
+    oracle; ``sf_dir`` unused (input synthesized, scale-invariant)."""
     from mycenae_spark.server import Engine
-    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.rollup import read_kmv_distinct
-    from mycenae_spark.streaming.tsdb_bridge import run_tsdb_bridge
 
-    BASE = 1704067200000  # 2024-01-01T00:00Z, day-aligned
-    base = tempfile.mkdtemp(prefix="tsdb_bridge_rt_")
-    lake, cat, ckpt = f"{base}/lake", f"{base}/cat", f"{base}/ckpt"
-    r1m, r1h = f"{base}/r1m", f"{base}/r1h"
-    kmv1m, kmv1h = f"{base}/kmv1m", f"{base}/kmv1h"
-    qs1m, qs1h = f"{base}/qs1m", f"{base}/qs1h"
-
-    def day_rows(d):
-        return [
-            _json.dumps({
-                "metric": "bridge.m",
-                "tags": {"ksid": "k1", "host": "h0"},
-                "timestamp": BASE + d * DAY_MS + h * HOUR_MS + j * 300_000,
-                "value": float(100 * (d * 24 + h) + j),
-            })
-            for h in range(24)
-            for j in range(12)
-        ]
-
-    def run():
-        return run_tsdb_bridge(
-            spark, f"{base}/src", lake, cat, ckpt,
-            rollup_dir=r1m, ladder={HOUR_MS: r1h},
-            kmv_fine_dir=kmv1m, kmv_ladder={HOUR_MS: kmv1h},
-            qsample_fine_dir=qs1m, qsample_ladder={HOUR_MS: qs1h},
-            max_files_per_trigger=1,
-        )
-
-    def dps(eng, n_days, ds):
-        out = eng.query({
-            "start": BASE, "end": BASE + n_days * DAY_MS,
-            "queries": [{"metric": "bridge.m", "aggregator": "sum",
-                         "downsample": ds}],
-        })
-        return {int(k): v for k, v in out[0]["dps"].items()}
-
-    def all_exact(got, n_hours, offset):
-        if len(got) != n_hours:
-            return 0
-        return int(all(
-            abs(got.get((BASE + hh * HOUR_MS) // 1000, -1e18)
-                - (100 * hh + offset)) < 1e-6
-            for hh in range(n_hours)
-        ))
-
-    try:
-        write_day_files(
-            f"{base}/src",
-            [("day1.jsonl", day_rows(0)), ("day2.jsonl", day_rows(1))],
-        )
-        stats1 = run()
+    with sandbox(spark, "tsdb_bridge_rt_") as base:
+        stats1 = _run_bridge(spark, base, "bridge.m", 2)
         eng = Engine(
-            spark, lake, cat, rollup_dir=r1m, ladder={HOUR_MS: r1h},
-            qsample_ladder={HOUR_MS: qs1h},
+            spark, f"{base}/lake", f"{base}/cat", rollup_dir=f"{base}/r1m",
+            ladder={HOUR_MS: f"{base}/r1h"},
+            qsample_ladder={HOUR_MS: f"{base}/qs1h"},
         )
-        n_1m = spark.read.parquet(r1m).count()
+        n_1m = spark.read.parquet(f"{base}/r1m").count()
 
-        avg = dps(eng, 2, "1h-avg")
+        avg = _bridge_dps(eng, "bridge.m", "1h-avg", BASE_MS, 2)
         avg_routed = int(eng.last_routes() == ["ladder:3600000"])
-        avg_ok = all_exact(avg, 48, 5.5)
+        avg_ok = _hours_exact(avg, 48, 5.5)
 
-        p95 = dps(eng, 2, "1h-p95")
+        p95 = _bridge_dps(eng, "bridge.m", "1h-p95", BASE_MS, 2)
         p95_routed = int(eng.last_routes() == ["qsample:3600000"])
-        p95_ok = all_exact(p95, 48, 10.45)
+        p95_ok = _hours_exact(p95, 48, 10.45)
 
-        kmv = read_kmv_distinct(spark, kmv1h).collect()
+        kmv = read_kmv_distinct(spark, f"{base}/kmv1h").collect()
         kmv_ok = int(
             len(kmv) == 48 and all(r["value"] == 12.0 for r in kmv)
         )
 
         # tomorrow: day 3 lands; same checkpoint resumes the backlog
-        write_day_files(
-            f"{base}/src",
-            [("day1.jsonl", day_rows(0)), ("day2.jsonl", day_rows(1)),
-             ("day3.jsonl", day_rows(2))],
-        )
-        stats2 = run()
-        avg3 = dps(eng, 3, "1h-avg")
+        stats2 = _run_bridge(spark, base, "bridge.m", 3)
+        avg3 = _bridge_dps(eng, "bridge.m", "1h-avg", BASE_MS, 3)
         avg3_routed = int(eng.last_routes() == ["ladder:3600000"])
-        avg3_ok = all_exact(avg3, 72, 5.5)
+        avg3_ok = _hours_exact(avg3, 72, 5.5)
 
-        rows = [
+        return spark.createDataFrame([
             ("batches_first_run", stats1["batches"]),
             ("n_1m_partials_after_2d", n_1m),
             ("avg_routed_via_1h_rung", avg_routed),
@@ -5677,12 +5125,7 @@ def stream_tsdb_ingest_roundtrip(spark, sf_dir):
             ("day3_batches", stats2["batches"]),
             ("day3_avg_routed_again", avg3_routed),
             ("day3_avg_all_72_buckets_exact", avg3_ok),
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        [(w, int(n)) for w, n in rows], "what string, n long"
-    )
+        ], "what string, n long")
 
 
 @q(
@@ -5746,76 +5189,31 @@ def sketch_retention_roundtrip(spark, sf_dir):
       carrying the pre-horizon span over from the previous rung
       generation — 120 exact buckets, nothing lost.
 
-    Constant oracle; rows collected before rmtree; ``sf_dir`` unused
-    (input synthesized, scale-invariant)."""
+    Constant oracle; ``sf_dir`` unused (input synthesized,
+    scale-invariant)."""
     import datetime as _dt
-    import json as _json
-    import shutil
-    import tempfile
 
     from mycenae_spark.server import Engine
-    from mycenae_spark.streaming.assimilate import write_day_files
     from mycenae_spark.streaming.rollup import (
         prune_sketch_lake,
         read_kmv_distinct,
         read_rollup,
     )
-    from mycenae_spark.streaming.tsdb_bridge import run_tsdb_bridge
 
-    BASE = 1704067200000  # 2024-01-01T00:00Z, day-aligned
-    base = tempfile.mkdtemp(prefix="sketch_ret_rt_")
-    lake, cat, ckpt = f"{base}/lake", f"{base}/cat", f"{base}/ckpt"
-    r1m, r1h = f"{base}/r1m", f"{base}/r1h"
-    kmv1m, kmv1h = f"{base}/kmv1m", f"{base}/kmv1h"
-    qs1m, qs1h = f"{base}/qs1m", f"{base}/qs1h"
     retention = {"keep_days": 2, "floor_days": 1,
                  "today": _dt.date(2024, 1, 5)}  # horizon 2024-01-03
 
-    def day_rows(d):
-        return [
-            _json.dumps({
-                "metric": "ret.m",
-                "tags": {"ksid": "k1", "host": "h0"},
-                "timestamp": BASE + d * DAY_MS + h * HOUR_MS + j * 300_000,
-                "value": float(100 * (d * 24 + h) + j),
-            })
-            for h in range(24)
-            for j in range(12)
-        ]
-
-    def run():
-        return run_tsdb_bridge(
-            spark, f"{base}/src", lake, cat, ckpt,
-            rollup_dir=r1m, ladder={HOUR_MS: r1h},
-            kmv_fine_dir=kmv1m, kmv_ladder={HOUR_MS: kmv1h},
-            qsample_fine_dir=qs1m, qsample_ladder={HOUR_MS: qs1h},
-            max_files_per_trigger=1, sketch_retention=retention,
-        )
-
-    def dps(eng, ds, start, n_days_end):
-        out = eng.query({
-            "start": start, "end": BASE + n_days_end * DAY_MS,
-            "queries": [{"metric": "ret.m", "aggregator": "sum",
-                         "downsample": ds}],
-        })
-        return {int(k): v for k, v in out[0]["dps"].items()}
-
-    def all_exact(got, n_hours, offset):
-        if len(got) != n_hours:
+    def refuses(fn, *args, **kw):
+        try:
+            fn(*args, **kw)
             return 0
-        return int(all(
-            abs(got.get((BASE + hh * HOUR_MS) // 1000, -1e18)
-                - (100 * hh + offset)) < 1e-6
-            for hh in range(n_hours)
-        ))
+        except ValueError:
+            return 1
 
     two_days = ["ksid=k1/date=2024-01-01", "ksid=k1/date=2024-01-02"]
-    try:
-        write_day_files(
-            f"{base}/src",
-            [(f"day{d + 1}.jsonl", day_rows(d)) for d in range(4)],
-        )
-        stats1 = run()
+    with sandbox(spark, "sketch_ret_rt_") as base:
+        r1m = f"{base}/r1m"
+        stats1 = _run_bridge(spark, base, "ret.m", 4, sketch_retention=retention)
         pruned_ok = int(all(
             stats1["retention"][fam]["pruned"] == two_days
             for fam in ("rollup", "kmv", "qsample")
@@ -5823,57 +5221,43 @@ def sketch_retention_roundtrip(spark, sf_dir):
         n_1m = spark.read.parquet(r1m).count()
 
         eng = Engine(
-            spark, lake, cat, rollup_dir=r1m, ladder={HOUR_MS: r1h},
-            qsample_ladder={HOUR_MS: qs1h},
+            spark, f"{base}/lake", f"{base}/cat", rollup_dir=r1m,
+            ladder={HOUR_MS: f"{base}/r1h"},
+            qsample_ladder={HOUR_MS: f"{base}/qs1h"},
         )
-        avg = dps(eng, "1h-avg", BASE, 4)
+        avg = _bridge_dps(eng, "ret.m", "1h-avg", BASE_MS, 4)
         avg_routed = int(eng.last_routes() == ["ladder:3600000"])
-        avg_ok = all_exact(avg, 96, 5.5)
-        p95 = dps(eng, "1h-p95", BASE, 4)
+        avg_ok = _hours_exact(avg, 96, 5.5)
+        p95 = _bridge_dps(eng, "ret.m", "1h-p95", BASE_MS, 4)
         p95_routed = int(eng.last_routes() == ["qsample:3600000"])
-        p95_ok = all_exact(p95, 96, 10.45)
-        kmv = read_kmv_distinct(spark, kmv1h).collect()
+        p95_ok = _hours_exact(p95, 96, 10.45)
+        kmv = read_kmv_distinct(spark, f"{base}/kmv1h").collect()
         kmv_ok = int(
             len(kmv) == 96 and all(r["value"] == 12.0 for r in kmv)
         )
-        fine_ok = dps(eng, "1m-avg", BASE + 2 * DAY_MS, 4)
-        try:
-            dps(eng, "1m-avg", BASE, 4)
-            refused = 0
-        except ValueError:
-            refused = 1
+        fine_ok = _bridge_dps(eng, "ret.m", "1m-avg", BASE_MS + 2 * DAY_MS, 4)
+        refused = refuses(_bridge_dps, eng, "ret.m", "1m-avg", BASE_MS, 4)
         # the LIBRARY seam (r18 VERDICT missing #1): a direct read verb
         # over the pruned fine lake refuses by default — the Engine's
         # typed 400 is not the only guard — and serves the retained
         # span only behind the explicit clamp acknowledgement
-        try:
-            read_rollup(spark, r1m)
-            lib_refused = 0
-        except ValueError:
-            lib_refused = 1
+        lib_refused = refuses(read_rollup, spark, r1m)
         lib_clamped = read_rollup(
             spark, r1m, agg="avg", clamp_to_retention=True
         ).count()
-        try:
-            prune_sketch_lake(
-                lake, r1m, {HOUR_MS: r1h}, keep_days=0, floor_days=1,
-                today=_dt.date(2024, 1, 5),
-            )
-            floor_refused = 0
-        except ValueError:
-            floor_refused = 1
+        floor_refused = refuses(
+            prune_sketch_lake,
+            f"{base}/lake", r1m, {HOUR_MS: f"{base}/r1h"}, keep_days=0,
+            floor_days=1, today=_dt.date(2024, 1, 5),
+        )
 
         # day 5 on the same checkpoint: the in-batch refresh rebuilds
         # the staled rungs from the PRUNED fine lake via carry-over
-        write_day_files(
-            f"{base}/src",
-            [(f"day{d + 1}.jsonl", day_rows(d)) for d in range(5)],
-        )
-        stats2 = run()
-        avg5 = dps(eng, "1h-avg", BASE, 5)
-        avg5_ok = all_exact(avg5, 120, 5.5)
+        stats2 = _run_bridge(spark, base, "ret.m", 5, sketch_retention=retention)
+        avg5 = _bridge_dps(eng, "ret.m", "1h-avg", BASE_MS, 5)
+        avg5_ok = _hours_exact(avg5, 120, 5.5)
 
-        rows = [
+        return spark.createDataFrame([
             ("batches_first_run", stats1["batches"]),
             ("pruned_2_days_each_family", pruned_ok),
             ("n_1m_partials_after_prune", n_1m),
@@ -5889,12 +5273,7 @@ def sketch_retention_roundtrip(spark, sf_dir):
             ("floor_refused", floor_refused),
             ("day5_batches", stats2["batches"]),
             ("day5_avg_all_120_buckets_exact", avg5_ok),
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        [(w, int(n)) for w, n in rows], "what string, n long"
-    )
+        ], "what string, n long")
 
 
 @q(
@@ -5933,26 +5312,12 @@ def stream_chain_rebase_roundtrip(spark, sf_dir):
     cache must not be swept).  Constant oracle; scale-invariant
     synthesized input; ``sf_dir`` scopes only the index cache identity
     inside the private root."""
-    import base64 as _b64
-    import json as _json
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     from mycenae_spark.functions import pq
-    from mycenae_spark.functions.dedup import (
-        compact_sig_index,
-        ensure_sig_index,
-    )
-    from mycenae_spark.functions.multimodal import (
-        MEDIA_CORPUS_VERSION,
-        _GRAY_PALETTE,
-        dhash_media,
-        encode_gif,
-        encode_png,
-        pixel_corpus_image,
-    )
+    from mycenae_spark.functions.dedup import compact_sig_index, ensure_sig_index
+    from mycenae_spark.functions.multimodal import MEDIA_CORPUS_VERSION, dhash_media
     from mycenae_spark.streaming.assimilate import (
         VERDICT_SCHEMA,
         media_assimilate_stream,
@@ -5961,107 +5326,88 @@ def stream_chain_rebase_roundtrip(spark, sf_dir):
         write_day_files,
     )
 
-    def png_payload(d):
-        _w, _h, ct, _gray, px = pixel_corpus_image(d)
-        return encode_png(px, ct, row_filters=lambda y: y % 5, n_idat=2)
-
-    def gif_payload(d):
-        _w, _h, _ct, gray, _px = pixel_corpus_image(d)
-        return encode_gif(gray, _GRAY_PALETTE)
-
-    def jrow(mid, day, payload):
-        return _json.dumps(
-            {"media_id": mid, "day": day,
-             "payload_b64": _b64.b64encode(payload).decode()}
-        )
-
-    base = tempfile.mkdtemp(prefix="chain_rebase_rt_")
-    idx_root = os.path.join(base, "idxroot")
     old_root = os.environ.get("MYCENAE_INDEX_ROOT")
-    os.environ["MYCENAE_INDEX_ROOT"] = idx_root
-    try:
-        src, vdir, ckpt = (os.path.join(base, p) for p in
-                           ("src", "verdicts", "ckpt"))
-        day0 = spark.createDataFrame(
-            [(d, bytearray(png_payload(d))) for d in range(6)],
-            "media_id long, payload binary",
-        )
-        base_dir = ensure_sig_index(
-            spark, sf_dir,
-            dhash_media(day0, max_batch_bytes=1 << 20)
-            .select("media_id", "dhash"),
-            "media_id", "dhash",
-            pred_desc="chain_rebase_day0", kind="dhash-rebase",
-            bits=64, n_segments=6, max_bucket_size=512,
-            source_version=MEDIA_CORPUS_VERSION,
-        )
-        day1 = [jrow(1000 + d, 1, png_payload(d)) for d in (6, 7)]
-        day2 = [jrow(2000, 2, png_payload(9))]
-        write_day_files(src, [("day1.jsonl", day1), ("day2.jsonl", day2)])
-        chain = media_assimilate_stream(
-            spark, src, base_dir, vdir, checkpoint_dir=ckpt
-        )
-        chain_gens = len(chain)
-
-        def age_everything():
-            old = _time.time() - 9 * 24 * 3600
-            for name in os.listdir(idx_root):
-                os.utime(os.path.join(idx_root, name), (old, old))
-
-        age_everything()
-        gc_spares = int(
-            pq.gc_pq_indexes() == []
-            and all(os.path.isdir(d) for d in chain)
-        )
-
-        compacted = compact_sig_index(spark, chain[-1])
-        rebase_bridge_chain(vdir, compacted, expect_head=chain[-1])
-        age_everything()
-        removed = set(pq.gc_pq_indexes())
-        released_swept = int(
-            {os.path.abspath(d) for d in chain}
-            <= {os.path.abspath(d) for d in removed}
-        )
-        head_survives = int(os.path.isdir(compacted))
-
-        day3 = [jrow(3000, 3, gif_payload(6)), jrow(3001, 3, png_payload(12))]
-        write_day_files(
-            src,
-            [("day1.jsonl", day1), ("day2.jsonl", day2),
-             ("day3.jsonl", day3)],
-        )
-        media_assimilate_stream(
-            spark, src, compacted, vdir, checkpoint_dir=ckpt
-        )
-        got = {
-            r["media_id"]: (r["dup_of"], r["is_dup"])
-            for r in read_bridge_output(spark, vdir, VERDICT_SCHEMA)
-            .filter("day = 3").collect()
-        }
-        dup_ok = int(got.get(3000) == (1006, 1))
-        keep_ok = int(got.get(3001) == (-1, 0))
-
-        refused = 0
+    with sandbox(spark, "chain_rebase_rt_") as base:
+        idx_root = os.path.join(base, "idxroot")
+        os.environ["MYCENAE_INDEX_ROOT"] = idx_root
         try:
-            media_assimilate_stream(spark, src, compacted, vdir, timeout=120)
-        except Exception as exc:  # noqa: BLE001 — the refusal IS the flag
-            refused = int("rebase horizon" in str(exc))
+            src, vdir, ckpt = (os.path.join(base, p) for p in
+                               ("src", "verdicts", "ckpt"))
+            day0 = spark.createDataFrame(
+                [(d, bytearray(_png_payload(d))) for d in range(6)],
+                "media_id long, payload binary",
+            )
+            base_dir = ensure_sig_index(
+                spark, sf_dir,
+                dhash_media(day0, max_batch_bytes=1 << 20)
+                .select("media_id", "dhash"),
+                "media_id", "dhash",
+                pred_desc="chain_rebase_day0", kind="dhash-rebase",
+                bits=64, n_segments=6, max_bucket_size=512,
+                source_version=MEDIA_CORPUS_VERSION,
+            )
+            day1 = [_media_jrow(1000 + d, 1, _png_payload(d)) for d in (6, 7)]
+            day2 = [_media_jrow(2000, 2, _png_payload(9))]
+            write_day_files(src, [("day1.jsonl", day1), ("day2.jsonl", day2)])
+            chain = media_assimilate_stream(
+                spark, src, base_dir, vdir, checkpoint_dir=ckpt
+            )
+            chain_gens = len(chain)
 
-        rows = [
-            ("chain_gens", chain_gens),
-            ("gc_spares_aged_chain", gc_spares),
-            ("released_swept_after_rebase", released_swept),
-            ("rebased_head_survives", head_survives),
-            ("day3_dup_of_day1_keep", dup_ok),
-            ("day3_new_keep", keep_ok),
-            ("horizon_replay_refused", refused),
-        ]
-    finally:
-        if old_root is None:
-            os.environ.pop("MYCENAE_INDEX_ROOT", None)
-        else:
-            os.environ["MYCENAE_INDEX_ROOT"] = old_root
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        [(w, int(n)) for w, n in rows], "what string, n long"
-    )
+            def age_everything():
+                old = _time.time() - 9 * 24 * 3600
+                for name in os.listdir(idx_root):
+                    os.utime(os.path.join(idx_root, name), (old, old))
+
+            age_everything()
+            gc_spares = int(
+                pq.gc_pq_indexes() == []
+                and all(os.path.isdir(d) for d in chain)
+            )
+
+            compacted = compact_sig_index(spark, chain[-1])
+            rebase_bridge_chain(vdir, compacted, expect_head=chain[-1])
+            age_everything()
+            removed = set(pq.gc_pq_indexes())
+            released_swept = int(
+                {os.path.abspath(d) for d in chain}
+                <= {os.path.abspath(d) for d in removed}
+            )
+            head_survives = int(os.path.isdir(compacted))
+
+            day3 = [_media_jrow(3000, 3, _gif_payload(6)), _media_jrow(3001, 3, _png_payload(12))]
+            write_day_files(
+                src,
+                [("day1.jsonl", day1), ("day2.jsonl", day2),
+                 ("day3.jsonl", day3)],
+            )
+            media_assimilate_stream(
+                spark, src, compacted, vdir, checkpoint_dir=ckpt
+            )
+            got = {
+                r["media_id"]: (r["dup_of"], r["is_dup"])
+                for r in read_bridge_output(spark, vdir, VERDICT_SCHEMA)
+                .filter("day = 3").collect()
+            }
+            dup_ok = int(got.get(3000) == (1006, 1))
+            keep_ok = int(got.get(3001) == (-1, 0))
+
+            refused = 0
+            try:
+                media_assimilate_stream(spark, src, compacted, vdir, timeout=120)
+            except Exception as exc:  # noqa: BLE001 — the refusal IS the flag
+                refused = int("rebase horizon" in str(exc))
+        finally:
+            if old_root is None:
+                os.environ.pop("MYCENAE_INDEX_ROOT", None)
+            else:
+                os.environ["MYCENAE_INDEX_ROOT"] = old_root
+    return spark.createDataFrame([
+        ("chain_gens", chain_gens),
+        ("gc_spares_aged_chain", gc_spares),
+        ("released_swept_after_rebase", released_swept),
+        ("rebased_head_survives", head_survives),
+        ("day3_dup_of_day1_keep", dup_ok),
+        ("day3_new_keep", keep_ok),
+        ("horizon_replay_refused", refused),
+    ], "what string, n long")

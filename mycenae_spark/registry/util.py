@@ -10,9 +10,23 @@ replica of the driver's check):
   (integer arithmetic identical in both engines, no tz/unit ambiguity);
   instants are BIGINT epoch µs.
 * Every computed column is aliased; the driver sorts columns by name.
+
+Lifecycle ids (``*_roundtrip``, ``stream_*``, ``pipeline_*``) run real
+jobs on synthesized input and compare to a constant oracle.  The
+harness at the end of this module is the one way such an id gets a
+temp dir (:func:`sandbox`), drains a stream (:func:`drain`, or
+:func:`memory_sink` for a processing-time run) and returns a result
+that outlives its temp dir (:func:`detach`).
 """
 
 from __future__ import annotations
+
+import json
+import re
+import shutil
+import tempfile
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
@@ -130,3 +144,114 @@ def await_or_raise(job, seconds: int, what: str = "stream job") -> None:
         except Exception:
             pass  # best-effort: the raise below is the signal
         raise TimeoutError(f"{what}: not drained in {seconds}s")
+
+
+# ------------------------------------------------------ lifecycle harness
+
+#: Shuffle partitions, and so state-store partitions, while a lifecycle
+#: id runs.  A vanilla driver session carries 200: each micro-batch of a
+#: stateful stream then runs 200 state tasks per operator for a few dozen
+#: rows, and batch turnaround can outlast stream_evict_roundtrip's
+#: eviction window (the cross-batch s9 alert vanished under a vanilla
+#: session).  A stream captures the count at ``.start()``.
+STATE_PARTITIONS = "8"
+
+
+@contextmanager
+def _pinned_partitions(spark: SparkSession):
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, STATE_PARTITIONS)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@contextmanager
+def sandbox(spark: SparkSession, prefix: str):
+    """Yield a fresh temp dir; remove it on exit, also when the body
+    raises.  :data:`STATE_PARTITIONS` is pinned for the body and the
+    session's own value restored after.  Anything returned from the body
+    must not read files under the dir: a frame that does goes through
+    :func:`detach` first, a frame built from a Python list needs
+    nothing."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        with _pinned_partitions(spark):
+            yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+@contextmanager
+def memory_sink(stream_df: DataFrame, what: str, **trigger):
+    """Start ``stream_df`` into an append-mode memory sink named
+    ``<what>_<uuid>`` under ``trigger`` (with :data:`STATE_PARTITIONS`
+    pinned at ``.start()``) and yield ``(job, name)``.  On exit the job
+    is stopped and the temp view dropped."""
+    spark = stream_df.sparkSession
+    name = re.sub(r"\W+", "_", what) + f"_{uuid.uuid4().hex[:8]}"
+    with _pinned_partitions(spark):
+        job = (
+            stream_df.writeStream.format("memory").queryName(name)
+            .outputMode("append").trigger(**trigger).start()
+        )
+    try:
+        yield job, name
+    finally:
+        try:
+            job.stop()
+        finally:
+            spark.catalog.dropTempView(name)
+
+
+def drain(stream_df: DataFrame, what: str, seconds: int) -> list[dict]:
+    """Run ``stream_df`` once over everything available (``availableNow``,
+    the deterministic run-once trigger) into a memory sink and return its
+    rows as dicts.  A run not drained in ``seconds`` is stopped and raises
+    ``TimeoutError`` (:func:`await_or_raise`); the view is dropped
+    either way."""
+    with memory_sink(stream_df, what, availableNow=True) as (job, name):
+        await_or_raise(job, seconds, what)
+        return [r.asDict() for r in stream_df.sparkSession.table(name).collect()]
+
+
+def detach(df: DataFrame) -> DataFrame:
+    """Collect ``df`` and re-create it from the rows, cutting its lineage
+    into a :func:`sandbox` dir that is about to be removed.  Only for
+    frames that read sandbox files."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+
+
+def json_points(spark: SparkSession, dicts) -> DataFrame:
+    """Point dicts (``metric``/``tags``/``timestamp``/``value``) through
+    the production JSON decoder and validation: the valid points."""
+    from mycenae_spark.streaming.ingest import decode_json_lines, prepare_points
+
+    lines = spark.createDataFrame([(json.dumps(d),) for d in dicts], ["value"])
+    return prepare_points(decode_json_lines(lines))[0]
+
+
+def bridge_day_summary(verdicts: DataFrame, n_col: str, covers: dict) -> DataFrame:
+    """One row per crawl day of a dedup bridge's verdict table: the row
+    count (``n_col``), the dups caught by the base generation (``dup_of``
+    below 1000) and by day 1's keeps (1000 and up), the keeps, and
+    ``idx_cover``, the distinct ids the probed generation covered
+    (``covers``: {day: n})."""
+    cov = verdicts.sparkSession.createDataFrame(
+        list(covers.items()), "day int, idx_cover long"
+    )
+    dup_of = F.col("dup_of")
+    return (
+        verdicts.groupBy("day")
+        .agg(
+            F.count(F.lit(1)).alias(n_col),
+            F.sum(F.when((dup_of >= 0) & (dup_of < 1000), 1).otherwise(0))
+            .alias("n_dup_day0"),
+            F.sum(F.when(dup_of >= 1000, 1).otherwise(0)).alias("n_dup_day1"),
+            F.sum(F.lit(1) - F.col("is_dup")).alias("n_keeps"),
+        )
+        .join(cov, "day")
+        .select("day", n_col, "n_dup_day0", "n_dup_day1", "n_keeps", "idx_cover")
+    )

@@ -618,8 +618,10 @@ class Engine:
 
     def last_routes(self) -> list[str]:
         """Routing trace of this thread's most recent query() — one
-        "qsample:<iv>" / "ladder:<iv>" / "fine" / "cache" entry per
-        subquery, in order."""
+        entry per subquery, in order: "cache", "qsample:<iv>" or
+        "ladder:<iv>" (a rung), "fine" (the fine rollup partials) or
+        "raw" (the point lake: no fine rollup, or a downsample the fine
+        partials cannot answer exactly)."""
         return list(self._read_pin.routes)
 
     @staticmethod
@@ -891,7 +893,12 @@ class Engine:
             q,
             nan_fill=nan_fill,
         )
-        self._note_route("fine")
+        from mycenae_spark.plans.tsdb import rollup_routable
+
+        # plan() takes the fine partials on exactly this test; otherwise
+        # it scans raw points
+        routable = rollup is not None and rollup_routable(q, FINE_ROLLUP_MS)
+        self._note_route("fine" if routable else "raw")
         return rows
 
     def _guard_fine_retention(self, q) -> None:

@@ -641,7 +641,7 @@ def test_sketch_cascade_inherits_source_coverage(spark, tmp_path):
     out = eng.query({"start": BASE, "end": BASE + HOUR,
                      "queries": [{"metric": "cov.m", "aggregator": "sum",
                                   "downsample": "1h-p50"}]})
-    assert eng.last_routes() == ["fine"]
+    assert eng.last_routes() == ["raw"]
     assert out[0]["dps"][str(BASE // 1000)] == 17.0  # median of 0..34
 
 

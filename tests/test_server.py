@@ -872,7 +872,7 @@ def test_frame_memo_reused_across_requests_at_one_generation(
                                              pytest.approx(14.0)]
     out2 = query(aggregator="max")
     assert sum(out2[0]["dps"].values()) == pytest.approx(45.0)
-    assert eng.last_routes() == ["fine"]  # a miss, not a cache hit
+    assert eng.last_routes() == ["raw"]  # a miss, not a cache hit
     assert (len(points), len(series)) == (1, 1)
 
     exp = eng.query_expression(
@@ -1205,13 +1205,13 @@ def test_cache_missing_read_is_one_spark_job(spark, tmp_path_factory):
                               "filters": [{"type": "literal_or",
                                            "tagk": "dc", "filter": "dc0|dc1",
                                            "groupBy": True}]}),
-        "raw p95": ("fine", {"aggregator": "max",
-                             "downsample": "15m-p95"}),
-        "raw wildcard": ("fine", {"aggregator": "sum",
-                                  "filters": [{"type": "wildcard",
-                                               "tagk": "host",
-                                               "filter": "h1*",
-                                               "groupBy": True}]}),
+        "raw p95": ("raw", {"aggregator": "max",
+                            "downsample": "15m-p95"}),
+        "raw wildcard": ("raw", {"aggregator": "sum",
+                                 "filters": [{"type": "wildcard",
+                                              "tagk": "host",
+                                              "filter": "h1*",
+                                              "groupBy": True}]}),
     }
 
     def query(shape, metric, start):
@@ -1402,7 +1402,7 @@ def test_engine_routes_pnn_onto_qsample_ladder(spark, tmp_path_factory):
     # the fine path (no ladder) computes the identical answer
     eng_fine = Engine(spark, lake, catalog)
     out_fine = eng_fine.query(body)
-    assert eng_fine.last_routes() == ["fine"]
+    assert eng_fine.last_routes() == ["raw"]
     assert out_fine[0]["dps"] == out[0]["dps"]
 
     # per-series grouping routes too (tags joined from the catalog)
@@ -1423,7 +1423,7 @@ def test_engine_routes_pnn_onto_qsample_ladder(spark, tmp_path_factory):
     eng.put([{"metric": "qs.route", "tags": {"ksid": "k1", "host": "h0"},
               "timestamp": BASE_TS + 30_000, "value": 1e6}])
     out_stale = eng.query(body)
-    assert eng.last_routes() == ["fine"]
+    assert eng.last_routes() == ["raw"]
     # p95 of h0's bucket now spans 61 values (h=57 exactly -> 57.0):
     # 57.0 + 1112.1 = 1169.1 -- the new point IS in the fine answer
     assert {int(k) * 1000: v for k, v in out_stale[0]["dps"].items()}[
@@ -1440,7 +1440,7 @@ def test_engine_routes_pnn_onto_qsample_ladder(spark, tmp_path_factory):
                 "queries": [{"metric": "qs.route", "aggregator": "sum",
                              "downsample": "1h-p95"}]}
     eng.query(body_mis)
-    assert eng.last_routes() == ["fine"]
+    assert eng.last_routes() == ["raw"]
 
 
 def test_funnel_and_retention_endpoints(server):
