@@ -19,25 +19,33 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-#: Downsample aggregator name → column expression (SURVEY.md §2.4 W1).
+#: Downsample aggregator name → its SQL aggregate over the ``{}`` column
+#: (SURVEY.md §2.4 W1).  The one definition: the planner splices it into
+#: its statement and :func:`downsample_agg` derives the Column form.
 DOWNSAMPLE_AGGS = {
-    "avg": F.avg,
-    "sum": F.sum,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,
-    "first": lambda c: F.first(c, ignorenulls=True),
-    "last": lambda c: F.last(c, ignorenulls=True),
+    "avg": "avg({})",
+    "sum": "sum({})",
+    "min": "min({})",
+    "max": "max({})",
+    "count": "count({})",
+    "first": "first({}, true)",
+    "last": "last({}, true)",
     # OpenTSDB pNN downsampler family.  Exact interpolated percentile so the
     # result is oracle-checkable (DuckDB quantile_cont); `percentile` is a
     # hash-aggregate (sorts only within each (series, bucket) group — bounded
     # by points-per-bucket, never a global sort).  At 100 TB swap for
     # `percentile_approx` (mergeable single-pass sketch) when ±ε is fine.
-    "p50": lambda c: F.percentile(c, F.lit(0.5)),
-    "p90": lambda c: F.percentile(c, F.lit(0.9)),
-    "p95": lambda c: F.percentile(c, F.lit(0.95)),
-    "p99": lambda c: F.percentile(c, F.lit(0.99)),
+    "p50": "percentile({}, 0.5D, 1)",
+    "p90": "percentile({}, 0.9D, 1)",
+    "p95": "percentile({}, 0.95D, 1)",
+    "p99": "percentile({}, 0.99D, 1)",
 }
+
+
+def downsample_agg(agg: str, col: str) -> Column:
+    """The Column form of downsample aggregator ``agg`` over column ``col``."""
+    return F.expr(DOWNSAMPLE_AGGS[agg].format(f"`{col}`"))
+
 
 FILL_POLICIES = ("none", "null", "nan", "zero")
 
@@ -78,7 +86,7 @@ def downsample(
     agged = (
         df.withColumn("bucket_ms", b)
         .groupBy(*series_cols, "bucket_ms")
-        .agg(DOWNSAMPLE_AGGS[agg](F.col(value_col)).alias(out_col))
+        .agg(downsample_agg(agg, value_col).alias(out_col))
     )
     if fill == "none":
         return agged

@@ -64,31 +64,65 @@ _VALUE_OPS = {
 }
 
 
-def filter_value(col: Column, spec: str) -> Column:
-    """mycenae ``filterValue`` extension: ``\">5\"``, ``\"<=0.2\"`` … on values.
+def parse_filter_value(spec: str) -> tuple[str, float]:
+    """mycenae ``filterValue`` extension: ``\">5\"``, ``\"<=0.2\"`` … on
+    values, as (operator, operand).
 
     (SURVEY.md §2.2 F9; upstream query struct + ``lib/plot`` math.)
     """
     spec = spec.strip()
     for op in (">=", "<=", "==", "!=", ">", "<"):
         if spec.startswith(op):
-            return _VALUE_OPS[op](col, float(spec[len(op):]))
+            return op, float(spec[len(op):])
     raise ValueError(f"bad filterValue: {spec!r}")
+
+
+def filter_value(col: Column, spec: str) -> Column:
+    """The ``filterValue`` predicate on ``col`` (:func:`parse_filter_value`)."""
+    op, x = parse_filter_value(spec)
+    return _VALUE_OPS[op](col, x)
+
+
+def _values(arg) -> list:
+    """The alternatives of a ``*literal_or`` filter: a list, or ``a|b|c``."""
+    return arg if isinstance(arg, list) else arg.split("|")
 
 
 def build_tag_filter(col: Column, ftype: str, arg) -> Column:
     """Dispatch an OpenTSDB filter spec {type, filter} to a predicate."""
     ftype = ftype.lower()
     if ftype == "literal_or":
-        return literal_or(col, arg if isinstance(arg, list) else arg.split("|"))
+        return literal_or(col, _values(arg))
     if ftype == "not_literal_or":
-        return not_literal_or(col, arg if isinstance(arg, list) else arg.split("|"))
+        return not_literal_or(col, _values(arg))
     if ftype == "iliteral_or":
-        return iliteral_or(col, arg if isinstance(arg, list) else arg.split("|"))
+        return iliteral_or(col, _values(arg))
     if ftype == "wildcard":
         return wildcard(col, arg)
     if ftype == "iwildcard":
         return iwildcard(col, arg)
     if ftype == "regexp":
         return regexp(col, arg)
+    raise ValueError(f"unknown filter type: {ftype!r}")
+
+
+def tag_filter_sql(col: str, ftype: str, arg, bind) -> str:
+    """:func:`build_tag_filter` as SQL text on the quoted column ``col``.
+    Every filter value goes through ``bind`` (value → parameter marker), so
+    none is ever part of the text."""
+    ftype = ftype.lower()
+    if ftype in ("literal_or", "not_literal_or", "iliteral_or"):
+        values = _values(arg)
+        if ftype == "iliteral_or":
+            col, values = f"lower({col})", [v.lower() for v in values]
+        if not values:  # IN () is no SQL; Spark's empty IN is false
+            return "true" if ftype == "not_literal_or" else "false"
+        test = f"{col} IN ({', '.join(bind(v) for v in values)})"
+        return f"NOT {test}" if ftype == "not_literal_or" else test
+    if ftype == "wildcard":
+        return f"{col} LIKE {bind(glob_to_like(arg))}"
+    if ftype == "iwildcard":
+        return f"lower({col}) LIKE {bind(glob_to_like(arg.lower()))}"
+    if ftype == "regexp":
+        return f"{col} RLIKE {bind(arg)}"
     raise ValueError(f"unknown filter type: {ftype!r}")

@@ -15,29 +15,32 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
-#: OpenTSDB aggregator → Spark expression.  The five mycenae core ones plus
-#: the wider OpenTSDB set, each a one-liner (SURVEY.md §2.3 note).
-AGGREGATORS: dict[str, callable] = {
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,
-    "dev": F.stddev_samp,
-    "zimsum": F.sum,  # zero-if-missing sum == sum under hash-agg alignment
-    "mimmin": F.min,
-    "mimmax": F.max,
-    "p50": lambda c: F.percentile_approx(c, 0.5),
-    "p90": lambda c: F.percentile_approx(c, 0.9),
-    "p95": lambda c: F.percentile_approx(c, 0.95),
-    "p99": lambda c: F.percentile_approx(c, 0.99),
+#: OpenTSDB aggregator → its SQL aggregate over the ``{}`` column.  The
+#: five mycenae core ones plus the wider OpenTSDB set, each a one-liner
+#: (SURVEY.md §2.3 note).  The one definition: the planner splices it into
+#: its statement and :func:`agg_expr` derives the Column form.
+AGGREGATORS: dict[str, str] = {
+    "sum": "sum({})",
+    "avg": "avg({})",
+    "min": "min({})",
+    "max": "max({})",
+    "count": "count({})",
+    "dev": "stddev_samp({})",
+    "zimsum": "sum({})",  # zero-if-missing sum == sum under hash-agg alignment
+    "mimmin": "min({})",
+    "mimmax": "max({})",
+    "p50": "percentile_approx({}, 0.5D, 10000)",
+    "p90": "percentile_approx({}, 0.9D, 10000)",
+    "p95": "percentile_approx({}, 0.95D, 10000)",
+    "p99": "percentile_approx({}, 0.99D, 10000)",
 }
 
 
-def agg_expr(name: str, col: str | Column = "value") -> Column:
+def agg_expr(name: str, col: str = "value") -> Column:
+    """The Column form of aggregator ``name`` over column ``col``."""
     if name not in AGGREGATORS:
         raise ValueError(f"unknown aggregator: {name!r}")
-    return AGGREGATORS[name](F.col(col) if isinstance(col, str) else col)
+    return F.expr(AGGREGATORS[name].format(f"`{col}`"))
 
 
 def merge(

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from mycenae_spark.operators.downsample import DOWNSAMPLE_AGGS, bucket_ms_long
+from mycenae_spark.operators.downsample import bucket_ms_long, downsample_agg
 
 #: Aggregators that re-merge losslessly from salted partials:
 #: name → (partial agg, merge agg).
@@ -67,6 +67,6 @@ def salted_downsample(
         raise ValueError(f"aggregator {agg!r} is not salt-mergeable")
     p_agg, m_agg = _MERGEABLE[agg]
     partial = salted.groupBy(*keys, "_salt").agg(
-        DOWNSAMPLE_AGGS[p_agg](F.col(value_col)).alias("_p")
+        downsample_agg(p_agg, value_col).alias("_p")
     )
-    return partial.groupBy(*keys).agg(DOWNSAMPLE_AGGS[m_agg](F.col("_p")).alias(out_col))
+    return partial.groupBy(*keys).agg(downsample_agg(m_agg, "_p").alias(out_col))

@@ -145,8 +145,37 @@ class _RequestState(threading.local):
         self.routes: list = []
 
 
+def _serving_session(spark: SparkSession) -> SparkSession:
+    """The Engine's own session: ``spark.newSession()`` with every
+    modifiable runtime conf of ``spark`` copied in and code generation
+    off: no whole-stage codegen, and expressions (predicates,
+    projections, orderings) evaluated by their interpreted forms.
+    ``spark`` itself is left as it was; the cache is shared state, so
+    frames persisted through either session serve both."""
+    session = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            session.conf.set(key, value)
+    session.conf.set("spark.sql.codegen.wholeStage", "false")
+    session.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    return session
+
+
 class Engine:
-    """Lake-backed query/ingest engine shared by all requests."""
+    """Lake-backed query/ingest engine shared by all requests.
+
+    The Engine runs on its own serving session (:func:`_serving_session`),
+    never on the caller's: a copy of the caller's runtime confs with
+    code generation off.  A served read is a fresh plan over a few MB of
+    persisted rows, and each request's values (time bounds, filter
+    values) are inlined into its generated classes, whole-stage or
+    per-expression, so under codegen every cache miss pays Janino
+    compiles that its execution never earns back; interpreted operators
+    and expressions skip them (adaptive query compilation,
+    Kohn, Leis & Neumann, ICDE 2018: compile only when execution pays
+    for it).  Scoping the switch to this session leaves every other
+    workload on the caller's session compiled as before.  Confs set on
+    the caller's session after construction do not reach the Engine."""
 
     def __init__(
         self,
@@ -163,7 +192,8 @@ class Engine:
         ann_drift_dir: str | None = None,
         chain_dir: str | None = None,
     ):
-        self.spark = spark
+        # None builds a Spark-free Engine (the memo's own unit tests)
+        self.spark = None if spark is None else _serving_session(spark)
         self.lake_dir = lake_dir
         self.catalog_dir = catalog_dir
         self.rollup_dir = rollup_dir

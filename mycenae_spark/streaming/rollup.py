@@ -35,13 +35,15 @@ from pyspark.sql import DataFrame
 from mycenae_spark.operators.downsample import bucket_ms_long
 from mycenae_spark.schema import FINE_ROLLUP_MS
 
-#: Read-path reconstruction per downsample aggregator.
+#: Read-path reconstruction per downsample aggregator, as SQL over the
+#: partial columns: the planner splices it into its statement, and
+#: ``read_rollup`` takes its Column form with ``F.expr``.
 _MERGE_EXPRS = {
-    "avg": lambda: (F.sum("p_sum") / F.sum("p_count")),
-    "sum": lambda: F.sum("p_sum"),
-    "min": lambda: F.min("p_min"),
-    "max": lambda: F.max("p_max"),
-    "count": lambda: F.sum("p_count"),
+    "avg": "sum(p_sum) / sum(p_count)",
+    "sum": "sum(p_sum)",
+    "min": "min(p_min)",
+    "max": "max(p_max)",
+    "count": "sum(p_count)",
 }
 
 
@@ -1512,7 +1514,7 @@ def read_rollup(
     )
     return (
         df.groupBy(*series_cols, "bucket_ms")
-        .agg(_MERGE_EXPRS[agg]().alias("value"))
+        .agg(F.expr(_MERGE_EXPRS[agg]).alias("value"))
     )
 
 

@@ -109,6 +109,49 @@ def test_error_paths(server):
     assert code == 400 and "error" in resp
 
 
+def test_query_values_are_parameters_over_http(server):
+    """A hostile metric name is a value, not SQL: it answers no series
+    (200, empty); an unknown filter tagk is the typed analysis 400 that
+    names the column."""
+    code, resp = _req(server, "/api/put", [
+        {"metric": "param.probe", "tags": {"ksid": "k1", "probe": "p"},
+         "timestamp": BASE_TS, "value": 1.0}])
+    assert (code, resp) == (200, {"success": 1, "failed": 0})
+    hostile = "param.probe' OR '1'='1`; -- %_*\\"
+    code, out = _req(server, "/keysets/k1/api/query", {
+        "start": BASE_TS, "end": BASE_TS + 3_600_000,
+        "queries": [{"metric": hostile, "aggregator": "sum"}]})
+    assert (code, out) == (200, [])
+    code, resp = _req(server, "/keysets/k1/api/query", {
+        "start": BASE_TS, "end": BASE_TS + 3_600_000,
+        "queries": [{"metric": "param.probe", "aggregator": "sum",
+                     "filters": [{"tagk": "nosuch", "type": "literal_or",
+                                  "filter": "x"}]}]})
+    assert code == 400
+    assert "UNRESOLVED_COLUMN" in resp["error"] and "tag_nosuch" in resp["error"]
+
+
+def test_engine_runs_on_its_own_interpreted_session(spark, tmp_path):
+    """The Engine plans on a session of its own: code generation off,
+    the caller's runtime confs copied in, the caller left untouched."""
+    from mycenae_spark.server import Engine
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "America/Sao_Paulo")
+    eng = Engine(caller, str(tmp_path / "lake"), str(tmp_path / "catalog"))
+    whole_stage = "spark.sql.codegen.wholeStage"
+    factory = "spark.sql.codegen.factoryMode"
+    assert eng.spark is not caller
+    assert caller.conf.get(whole_stage) == "true"
+    assert caller.conf.get(factory) == "FALLBACK"
+    assert eng.spark.conf.get(whole_stage) == "false"
+    assert eng.spark.conf.get(factory) == "NO_CODEGEN"
+    assert eng.spark.conf.get("spark.sql.session.timeZone") == (
+        "America/Sao_Paulo")
+    Engine(spark, str(tmp_path / "lake2"), str(tmp_path / "catalog2"))
+    assert spark.conf.get(whole_stage) == "true"
+
+
 def test_keyspace_rest_crud(server):
     code, resp = _req(server, "/keyspaces/ks_rest", {"ttl_days": 30})
     assert code == 201 and resp["ksid"] == "ks_rest"
