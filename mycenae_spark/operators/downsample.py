@@ -12,12 +12,18 @@ Buckets are epoch-aligned (floor of epoch time to the interval) and carried
 as BIGINT epoch-milliseconds — mycenae's native unit, and an arithmetic
 representation identical across engines (no timezone/units ambiguity in the
 correctness oracle).
+
+Each stage is SQL on a :class:`~mycenae_spark.operators.statement.Statement`
+(:func:`downsample_stage`, :func:`fill_stage`): the planner chains them
+into a served read's one statement, and :func:`downsample` runs them alone.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
+
+from mycenae_spark.operators.statement import Statement, ident
 
 #: Downsample aggregator name → its SQL aggregate over the ``{}`` column
 #: (SURVEY.md §2.4 W1).  The one definition: the planner splices it into
@@ -61,6 +67,75 @@ def bucket_ms_long(ts_us: Column, interval_ms: int) -> Column:
     return (start_us / F.lit(1000)).cast("long")
 
 
+def bucket_sql(st: Statement, ts_us_col: str, interval_ms: int) -> str:
+    """:func:`bucket_ms_long` as SQL on ``st``: the bucket start of the µs
+    column ``ts_us_col``, the interval a parameter."""
+    ts = ident(ts_us_col)
+    iv_us = st.bind(interval_ms * 1000)
+    return f"CAST(({ts} - ({ts} % {iv_us})) / 1000 AS BIGINT)"
+
+
+def downsample_stage(
+    st: Statement,
+    series_cols: list[str],
+    bucket: str,
+    agg: str,
+    interval_ms: int,
+    fill: str,
+    out_col: str = "value",
+) -> None:
+    """Tumbling buckets on ``st``: ``bucket`` (SQL, epoch ms) per row as
+    ``bucket_ms``, ``agg`` (SQL) per (series, bucket) as ``out_col``, then
+    the fill policy (:func:`fill_stage`)."""
+    st.with_column("bucket_ms", bucket)
+    st.group([*series_cols, "bucket_ms"], agg, out_col)
+    fill_stage(st, series_cols, interval_ms, out_col, fill)
+
+
+def fill_stage(
+    st: Statement, series_cols: list[str], interval_ms: int, out_col: str,
+    fill: str,
+) -> None:
+    """Left-join each series onto its own dense bucket spine.
+
+    The spine is ``sequence(min_bucket, max_bucket, interval)`` exploded —
+    generated per series from the (already tiny) aggregated relation, so
+    its cost is ∝ #buckets.  The join key (series, bucket) is
+    co-partitioned with the aggregation output; AQE turns it into a local
+    join after the same shuffle at scale.
+    """
+    if fill == "none":
+        return
+    agged, agged_cols = st.text, st.cols
+    keys = [*series_cols, "bucket_ms"]
+    st.select([*((c, None) for c in series_cols),
+               ("_lo", "min(`bucket_ms`)"), ("_hi", "max(`bucket_ms`)")],
+              group_by=series_cols)
+    st.select([
+        *((c, None) for c in series_cols),
+        ("bucket_ms",
+         f"explode(sequence(`_lo`, `_hi`, {st.bind(interval_ms)}))"),
+    ])
+    st.text = (f"(SELECT * FROM {st.text} LEFT JOIN {agged} "
+               f"USING ({', '.join(map(ident, keys))}))")
+    st.cols = [*keys, *(c for c in agged_cols if c not in keys)]
+    if fill == "zero":
+        st.with_column(out_col, f"coalesce({ident(out_col)}, 0.0D)")
+    # fill in ("null", "nan"): empty buckets stay NULL internally.  OpenTSDB
+    # NaN-fill semantics skip NaN buckets in downstream aggregation, which is
+    # exactly what NULL gives Spark's sum/avg for free; a literal NaN here
+    # would instead poison every merged group containing a missing bucket.
+    # NaN is rendered only at the JSON edge (shape_response nan_fill).
+
+
+def check_downsample(agg: str, fill: str) -> None:
+    """Refuse an unknown downsample aggregator or fill policy."""
+    if agg not in DOWNSAMPLE_AGGS:
+        raise ValueError(f"unknown downsample agg: {agg!r}")
+    if fill not in FILL_POLICIES:
+        raise ValueError(f"unknown fill policy: {fill!r}")
+
+
 def downsample(
     df: DataFrame,
     series_cols: list[str],
@@ -77,52 +152,23 @@ def downsample(
     empty buckets inside each series' own [min,max] bucket extent are emitted
     (SURVEY.md §7.2 M2 decision: per-series extent) as null / NaN / 0.
     """
-    if agg not in DOWNSAMPLE_AGGS:
-        raise ValueError(f"unknown downsample agg: {agg!r}")
-    if fill not in FILL_POLICIES:
-        raise ValueError(f"unknown fill policy: {fill!r}")
-
-    b = bucket_ms_long(F.col(ts_us_col), interval_ms)
-    agged = (
-        df.withColumn("bucket_ms", b)
-        .groupBy(*series_cols, "bucket_ms")
-        .agg(downsample_agg(agg, value_col).alias(out_col))
+    check_downsample(agg, fill)
+    st = Statement(df)
+    downsample_stage(
+        st, series_cols, bucket_sql(st, ts_us_col, interval_ms),
+        DOWNSAMPLE_AGGS[agg].format(ident(value_col)), interval_ms, fill,
+        out_col,
     )
-    if fill == "none":
-        return agged
-    return _fill(agged, series_cols, interval_ms, out_col, fill)
+    return st.run()
 
 
 def _fill(
     agged: DataFrame, series_cols: list[str], interval_ms: int, out_col: str, fill: str
 ) -> DataFrame:
-    """Left-join each series onto its own dense bucket spine.
-
-    The spine is ``sequence(min_bucket, max_bucket, interval)`` exploded —
-    generated per series from the (already tiny) aggregated frame, so its
-    cost is ∝ #buckets.  The join key (series, bucket) is co-partitioned with
-    the aggregation output; AQE turns it into a local join after the same
-    shuffle at scale.
-    """
-    spine = (
-        agged.groupBy(*series_cols)
-        .agg(F.min("bucket_ms").alias("_lo"), F.max("bucket_ms").alias("_hi"))
-        .select(
-            *series_cols,
-            F.explode(F.sequence(F.col("_lo"), F.col("_hi"), F.lit(interval_ms))).alias(
-                "bucket_ms"
-            ),
-        )
-    )
-    joined = spine.join(agged, [*series_cols, "bucket_ms"], "left")
-    if fill == "zero":
-        return joined.withColumn(out_col, F.coalesce(F.col(out_col), F.lit(0.0)))
-    # fill in ("null", "nan"): empty buckets stay NULL internally.  OpenTSDB
-    # NaN-fill semantics skip NaN buckets in downstream aggregation, which is
-    # exactly what NULL gives Spark's sum/avg for free; a literal NaN here
-    # would instead poison every merged group containing a missing bucket.
-    # NaN is rendered only at the JSON edge (shape_response nan_fill).
-    return joined
+    """:func:`fill_stage` alone on an aggregated frame."""
+    st = Statement(agged)
+    fill_stage(st, series_cols, interval_ms, out_col, fill)
+    return st.run()
 
 
 def fill_linear(

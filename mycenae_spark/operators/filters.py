@@ -22,36 +22,12 @@ def time_range(ts: Column, start, end) -> Column:
     return (ts >= F.lit(start)) & (ts < F.lit(end))
 
 
-def literal_or(col: Column, values: list[str]) -> Column:
-    return col.isin(values)
-
-
-def not_literal_or(col: Column, values: list[str]) -> Column:
-    return ~col.isin(values)
-
-
-def iliteral_or(col: Column, values: list[str]) -> Column:
-    return F.lower(col).isin([v.lower() for v in values])
-
-
 def glob_to_like(pattern: str) -> str:
     """OpenTSDB wildcard (``*`` only) → SQL LIKE pattern.
 
     ``%`` and ``_`` occurring literally are escaped so only ``*`` globs.
     """
     return pattern.replace("\\", "\\\\").replace("%", r"\%").replace("_", r"\_").replace("*", "%")
-
-
-def wildcard(col: Column, pattern: str) -> Column:
-    return col.like(glob_to_like(pattern))
-
-
-def iwildcard(col: Column, pattern: str) -> Column:
-    return F.lower(col).like(glob_to_like(pattern.lower()))
-
-
-def regexp(col: Column, pattern: str) -> Column:
-    return col.rlike(pattern)
 
 
 _VALUE_OPS = {
@@ -88,28 +64,12 @@ def _values(arg) -> list:
     return arg if isinstance(arg, list) else arg.split("|")
 
 
-def build_tag_filter(col: Column, ftype: str, arg) -> Column:
-    """Dispatch an OpenTSDB filter spec {type, filter} to a predicate."""
-    ftype = ftype.lower()
-    if ftype == "literal_or":
-        return literal_or(col, _values(arg))
-    if ftype == "not_literal_or":
-        return not_literal_or(col, _values(arg))
-    if ftype == "iliteral_or":
-        return iliteral_or(col, _values(arg))
-    if ftype == "wildcard":
-        return wildcard(col, arg)
-    if ftype == "iwildcard":
-        return iwildcard(col, arg)
-    if ftype == "regexp":
-        return regexp(col, arg)
-    raise ValueError(f"unknown filter type: {ftype!r}")
-
-
 def tag_filter_sql(col: str, ftype: str, arg, bind) -> str:
-    """:func:`build_tag_filter` as SQL text on the quoted column ``col``.
-    Every filter value goes through ``bind`` (value → parameter marker), so
-    none is ever part of the text."""
+    """An OpenTSDB filter spec {type, filter} as a SQL predicate on the SQL
+    expression ``col`` (a quoted column name, or an expression over
+    columns): the one definition of each filter type.  Every filter value
+    goes through ``bind`` (value → SQL text: a statement's parameter
+    marker, or :func:`sql_literal`), never straight into the text."""
     ftype = ftype.lower()
     if ftype in ("literal_or", "not_literal_or", "iliteral_or"):
         values = _values(arg)
@@ -126,3 +86,22 @@ def tag_filter_sql(col: str, ftype: str, arg, bind) -> str:
     if ftype == "regexp":
         return f"{col} RLIKE {bind(arg)}"
     raise ValueError(f"unknown filter type: {ftype!r}")
+
+
+def sql_literal(value) -> str:
+    """``value`` as SQL literal text, for a Column form built with
+    ``F.expr``.  A string is spelled by its UTF-8 bytes (``X'…'``), so
+    none of its characters is ever read as SQL."""
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(value, (int, float)) and not isinstance(value, bool):
+        kind = "INT" if isinstance(value, int) else "DOUBLE"
+        return f"CAST('{value!r}' AS {kind})"
+    raise TypeError(f"no SQL literal for {value!r}")
+
+
+def build_tag_filter(col: str, ftype: str, arg) -> Column:
+    """The Column form of :func:`tag_filter_sql` on the SQL expression
+    ``col``."""
+    return F.expr(tag_filter_sql(col, ftype, arg, sql_literal))
+

@@ -7,13 +7,18 @@ grouped away are reported as ``aggregateTags``.
 
 In Spark the whole align-and-aggregate machinery collapses into one hash
 aggregation ``groupBy(group_cols + [time]).agg(...)`` with automatic
-partial (map-side) aggregation — no alignment code at all.
+partial (map-side) aggregation — no alignment code at all.  The stage is
+SQL on a :class:`~mycenae_spark.operators.statement.Statement`
+(:func:`merge_stage`): the planner chains it into a served read's one
+statement, and :func:`merge` runs it alone.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
+
+from mycenae_spark.operators.statement import Statement, ident
 
 #: OpenTSDB aggregator → its SQL aggregate over the ``{}`` column.  The
 #: five mycenae core ones plus the wider OpenTSDB set, each a one-liner
@@ -43,6 +48,22 @@ def agg_expr(name: str, col: str = "value") -> Column:
     return F.expr(AGGREGATORS[name].format(f"`{col}`"))
 
 
+def merge_stage(
+    st: Statement,
+    aggregator: str,
+    group_cols: list[str],
+    time_col: str = "bucket_ms",
+    value_col: str = "value",
+    out_col: str = "value",
+) -> None:
+    """Merge series on ``st``: one row per (group, time) with the
+    aggregated value as ``out_col``."""
+    if aggregator not in AGGREGATORS:
+        raise ValueError(f"unknown aggregator: {aggregator!r}")
+    st.group([*group_cols, time_col],
+             AGGREGATORS[aggregator].format(ident(value_col)), out_col)
+
+
 def merge(
     df: DataFrame,
     aggregator: str,
@@ -51,7 +72,8 @@ def merge(
     value_col: str = "value",
     out_col: str = "value",
 ) -> DataFrame:
-    """Merge series: one row per (group, time) with the aggregated value."""
-    return df.groupBy(*group_cols, time_col).agg(
-        agg_expr(aggregator, value_col).alias(out_col)
-    )
+    """Merge series: one row per (group, time) with the aggregated value
+    (:func:`merge_stage` alone)."""
+    st = Statement(df)
+    merge_stage(st, aggregator, group_cols, time_col, value_col, out_col)
+    return st.run()

@@ -6,19 +6,21 @@ from Cassandra; then per sub-query apply, in the order given by the mycenae
 ``order`` extension, any of {downsample, aggregation, rate, filterValue};
 finally group by tags and serialize.
 
-Here the planner lowers a query into ONE Spark SQL statement: one nested
-SELECT level per step, in that order, analysed by one ``sparkSession.sql``
-call.  A DataFrame chain would be a separately analysed Dataset per step,
-hundreds of py4j round trips per request; the statement is one.  Its
-optimized plan is the chain's (the levels mirror the operator modules'
-DataFrame programs) — Catalyst then fuses the filters into the scan
-(pushdown), prunes columns, and picks physical operators; §4 of SURVEY.md
-documents why zero custom optimizer rules are needed.
+Here the planner lowers a query into ONE Spark SQL statement
+(operators/statement.py): one nested SELECT level per step, in that order,
+analysed by one ``sparkSession.sql`` call.  A DataFrame chain would be a
+separately analysed Dataset per step, hundreds of py4j round trips per
+request; the statement is one.  Each step is the operator module's own
+stage (``merge_stage``, ``downsample_stage``, ``rate_stage``,
+``tag_filter_sql``), the same SQL the operators' DataFrame forms run, so
+the optimized plan is theirs — Catalyst then fuses the filters into the
+scan (pushdown), prunes columns, and picks physical operators; §4 of
+SURVEY.md documents why zero custom optimizer rules are needed.
 
 The parameter rule: every request value — metric, time bounds, intervals,
 filter values and patterns, counter options, the filterValue operand — is a
 named parameter of the statement, never part of its text.  The text holds
-only the planner's own SQL, the aggregator tables' SQL (the one definition
+only the stages' own SQL, the aggregator tables' SQL (the one definition
 of each aggregator, operators/merge.py, operators/downsample.py,
 streaming/rollup.py) and tag column names taken from the frame's schema,
 backtick-quoted.
@@ -26,14 +28,20 @@ backtick-quoted.
 
 from __future__ import annotations
 
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
 from mycenae_spark.operators import filters as flt
-from mycenae_spark.operators.downsample import DOWNSAMPLE_AGGS, FILL_POLICIES
-from mycenae_spark.operators.merge import AGGREGATORS
+from mycenae_spark.operators.downsample import (
+    DOWNSAMPLE_AGGS,
+    bucket_sql,
+    check_downsample,
+    downsample_stage,
+)
+from mycenae_spark.operators.merge import merge_stage
+from mycenae_spark.operators.rate import rate_stage
+from mycenae_spark.operators.statement import Statement, ident
 from mycenae_spark.streaming.rollup import _MERGE_EXPRS
 from mycenae_spark.schema import (
     FINE_ROLLUP_MS,
@@ -177,100 +185,6 @@ def qsample_routable(q: TsdbQuery, rung_interval_ms: int) -> bool:
     return False
 
 
-def _ident(name: str) -> str:
-    """``name`` backtick-quoted for the statement text."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-class _Statement:
-    """One nested SELECT under construction: the relation text so far, its
-    output columns (in order, as the DataFrame it lowers would have them)
-    and the named parameters every request value is bound to."""
-
-    def __init__(self, relation: str, columns: list[str]):
-        self.text = relation
-        self.cols = list(columns)
-        self.args: dict = {}
-
-    def bind(self, value) -> str:
-        """A parameter marker for ``value``; the value never enters the text."""
-        name = f"p{len(self.args)}"
-        self.args[name] = value
-        return ":" + name
-
-    def select(self, items, where: str | None = None,
-               group_by: list[str] | None = None) -> None:
-        """Wrap the relation in one more SELECT level over ``items``:
-        (name, SQL expression) pairs, where a None expression passes the
-        column through."""
-        sel = ", ".join(
-            _ident(n) if e is None else f"{e} AS {_ident(n)}" for n, e in items
-        )
-        text = f"SELECT {sel} FROM {self.text}"
-        if where:
-            text += f" WHERE {where}"
-        if group_by:
-            text += f" GROUP BY {', '.join(map(_ident, group_by))}"
-        self.text, self.cols = f"({text})", [n for n, _ in items]
-
-    def with_column(self, name: str, expr: str) -> None:
-        """``DataFrame.withColumn``: replace ``name`` in place, or append it."""
-        items = [(c, expr if c == name else None) for c in self.cols]
-        self.select(items + ([] if name in self.cols else [(name, expr)]))
-
-    def where(self, pred: str) -> None:
-        self.select([(c, None) for c in self.cols], where=pred)
-
-    def group(self, keys: list[str], agg: str) -> None:
-        """One row per ``keys`` with ``agg`` as ``value``."""
-        self.select([*((k, None) for k in keys), ("value", agg)], group_by=keys)
-
-    def downsample(self, keys: list[str], bucket: str, agg: str,
-                   interval_ms: int, fill: str) -> None:
-        """Tumbling buckets: ``bucket`` (SQL, epoch ms) per row, ``agg``
-        per (``keys``, bucket), then the fill policy on each series' own
-        bucket extent (operators/downsample.py ``downsample``/``_fill``)."""
-        self.with_column("bucket_ms", bucket)
-        self.group([*keys, "bucket_ms"], agg)
-        if fill == "none":
-            return
-        agged, k = self.text, [_ident(c) for c in keys]
-        self.select([*((c, None) for c in keys), ("_lo", "min(`bucket_ms`)"),
-                     ("_hi", "max(`bucket_ms`)")], group_by=keys)
-        self.select([
-            *((c, None) for c in keys),
-            ("bucket_ms",
-             f"explode(sequence(`_lo`, `_hi`, {self.bind(interval_ms)}))"),
-        ])
-        self.text = (f"(SELECT * FROM {self.text} LEFT JOIN {agged} "
-                     f"USING ({', '.join([*k, '`bucket_ms`'])}))")
-        self.cols = [*keys, "bucket_ms", "value"]
-        if fill == "zero":
-            self.with_column("value", "coalesce(`value`, 0.0D)")
-
-    def rate(self, keys: list[str], ts: str, q: "TsdbQuery") -> None:
-        """First derivative per series in ``ts`` order; the first point of
-        each series has no predecessor and is dropped
-        (operators/rate.py ``rate``)."""
-        w = (f"OVER (PARTITION BY {', '.join(map(_ident, keys))} "
-             f"ORDER BY {_ident(ts)})")
-        prev_ts = f"lag({_ident(ts)}) {w}"
-        delta = f"(`value` - lag(`value`) {w})"
-        if q.counter:
-            # wrap handling before division, reset check after (W6 order)
-            wrapped = ("0.0D" if q.counter_max is None
-                       else f"{delta} + {self.bind(float(q.counter_max))}")
-            delta = f"CASE WHEN {delta} < 0 THEN {wrapped} ELSE {delta} END"
-        r = f"({delta}) / (({_ident(ts)} - {prev_ts}) / 1000000.0D)"
-        if q.counter and q.reset_value is not None and q.reset_value > 0:
-            r = (f"CASE WHEN {r} > {self.bind(float(q.reset_value))} "
-                 f"THEN 0.0D ELSE {r} END")
-        self.with_column("_prev_ts", prev_ts)
-        self.with_column("value", r)
-        keep = [c for c in self.cols if c != "_prev_ts"]
-        self.select([(c, None) for c in keep], where="`_prev_ts` IS NOT NULL")
-
-
 def plan(
     points: DataFrame,
     q: TsdbQuery,
@@ -294,26 +208,24 @@ def plan(
     points; non-routable queries silently use the point path.
 
     One statement, one ``sparkSession.sql`` call: a nested SELECT per
-    step, mirroring the operator modules' DataFrame programs, so the
-    optimized plan is theirs.  Every request value is a named parameter,
-    never SQL text (the module doc's parameter rule).
+    step, each the operator module's own stage, so the optimized plan is
+    the operators'.  Every request value is a named parameter, never SQL
+    text (the module doc's parameter rule).
     """
     downsample_done = False
     group_tags = [f"tag_{f.tagk}" for f in q.filters if f.group_by]
     routed = rollup is not None and rollup_routable(q, rollup_interval_ms)
-    frame = rollup if routed else points
-    view = f"_tsdb_plan_{uuid.uuid4().hex}"
-    st = _Statement(view, frame.columns)
+    st = Statement(rollup if routed else points)
 
     # Tag values are strings in the data model (SURVEY.md §1.1); sources
     # that surface typed tag columns (events.user_id) are normalized here
     # so every filter type (wildcard/regexp/...) applies uniformly.
     casts = {
-        f.name for f in frame.schema.fields
+        f.name for f in st.schema.fields
         if f.name.startswith("tag_") and f.dataType.simpleString() != "string"
     }
     if casts:
-        st.select([(c, f"CAST({_ident(c)} AS STRING)" if c in casts else None)
+        st.select([(c, f"CAST({ident(c)} AS STRING)" if c in casts else None)
                    for c in st.cols])
     tcol, scale = ("bucket_ms", 1) if routed else ("ts_us", 1000)
     # one WHERE level per predicate, as Catalyst then combines them
@@ -322,15 +234,15 @@ def plan(
              f"AND `{tcol}` < {st.bind(q.end_ms * scale)}")
     for f in q.filters:
         st.where(flt.tag_filter_sql(
-            _ident(f"tag_{f.tagk}"), f.type, f.filter, st.bind))
+            ident(f"tag_{f.tagk}"), f.type, f.filter, st.bind))
     series_cols = ["metric"] + sorted(c for c in st.cols if c.startswith("tag_"))
 
     if routed:
         parts = q.downsample.split("-")
         interval_ms = parse_interval_ms(parts[0])
-        iv = st.bind(interval_ms)
-        st.downsample(
-            series_cols, f"`bucket_ms` - (`bucket_ms` % {iv})",
+        downsample_stage(
+            st, series_cols,
+            f"`bucket_ms` - (`bucket_ms` % {st.bind(interval_ms)})",
             _MERGE_EXPRS[parts[1]], interval_ms,
             parts[2] if len(parts) > 2 else "none",
         )
@@ -344,15 +256,11 @@ def plan(
             interval_ms = parse_interval_ms(parts[0])
             agg = parts[1]
             fill = parts[2] if len(parts) > 2 else "none"
-            if agg not in DOWNSAMPLE_AGGS:
-                raise ValueError(f"unknown downsample agg: {agg!r}")
-            if fill not in FILL_POLICIES:
-                raise ValueError(f"unknown fill policy: {fill!r}")
-            ts = _ident("ts_us" if not merged else "bucket_us")
-            iv_us = st.bind(interval_ms * 1000)
-            st.downsample(
-                series_cols if not merged else ["metric", *group_tags],
-                f"CAST(({ts} - ({ts} % {iv_us})) / 1000 AS BIGINT)",
+            check_downsample(agg, fill)
+            downsample_stage(
+                st, series_cols if not merged else ["metric", *group_tags],
+                bucket_sql(st, "ts_us" if not merged else "bucket_us",
+                           interval_ms),
                 DOWNSAMPLE_AGGS[agg].format("`value`"), interval_ms, fill,
             )
             # Re-derive the µs bucket column on BOTH branches: the merged-path
@@ -365,9 +273,10 @@ def plan(
             st.with_column("bucket_us", "`bucket_ms` * 1000")
             merged = True
         elif stage == "rate" and q.rate:
-            st.rate(
-                ["metric", *group_tags] if merged else series_cols,
-                "bucket_us" if "bucket_us" in st.cols else "ts_us", q,
+            rate_stage(
+                st, ["metric", *group_tags] if merged else series_cols,
+                "bucket_us" if "bucket_us" in st.cols else "ts_us",
+                q.counter, q.counter_max, q.reset_value,
             )
         elif stage == "filterValue" and q.filter_value:
             op, x = flt.parse_filter_value(q.filter_value)
@@ -378,32 +287,15 @@ def plan(
         # per group with the aggregator (OpenTSDB always merges).
         _merge(st, q.aggregator, group_tags)
 
-    keep = [c for c in ["metric", *group_tags, "bucket_ms", "value"]
-            if c in st.cols]
-    # The frame enters the statement as a temp view of this call only.
-    # Not through sql()'s frame keywords: those drop their view with
-    # Catalog.dropTempView, which also uncaches the view's plan, and so
-    # would evict a persisted serving frame on every read.  The session
-    # catalog's own drop removes the name only; analysis has already
-    # inlined the frame's plan by then.
-    spark = frame.sparkSession
-    frame.createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"SELECT {', '.join(map(_ident, keep))} FROM {st.text}", st.args
-        )
-    finally:
-        spark._jsparkSession.sessionState().catalog().dropTempView(view)
+    return st.run([c for c in ["metric", *group_tags, "bucket_ms", "value"]
+                   if c in st.cols])
 
 
-def _merge(st: _Statement, aggregator: str, group_tags: list[str]) -> None:
-    """The aggregation stage (operators/merge.py ``merge``): one row per
-    (group, timestamp); a raw-point timestamp becomes ``bucket_ms``."""
-    if aggregator not in AGGREGATORS:
-        raise ValueError(f"unknown aggregator: {aggregator!r}")
+def _merge(st: Statement, aggregator: str, group_tags: list[str]) -> None:
+    """The aggregation stage (``merge_stage``): one row per (group,
+    timestamp); a raw-point timestamp becomes ``bucket_ms``."""
     time_col = "bucket_ms" if "bucket_ms" in st.cols else "ts_us"
-    st.group(["metric", *group_tags, time_col],
-             AGGREGATORS[aggregator].format("`value`"))
+    merge_stage(st, aggregator, ["metric", *group_tags], time_col)
     if time_col == "ts_us":
         st.with_column("bucket_ms", "`ts_us` div 1000")
         st.select([(c, None) for c in st.cols if c != "ts_us"])

@@ -362,7 +362,7 @@ def filter_time_range(spark, sf_dir):
 )
 def filter_literal_or(spark, sf_dir):
     p = points(spark, sf_dir)
-    return p.filter(flt.literal_or(F.col("metric"), ["click", "view"])).select(
+    return p.filter(flt.build_tag_filter("metric", "literal_or", ["click", "view"])).select(
         "event_id", "metric", "tag_user", "value"
     )
 
@@ -375,7 +375,8 @@ def filter_literal_or(spark, sf_dir):
 def filter_not_literal_or(spark, sf_dir):
     p = points(spark, sf_dir)
     return p.filter(
-        flt.not_literal_or(F.col("tag_user").cast("string"), ["1", "2", "3"])
+        flt.build_tag_filter(
+            "CAST(tag_user AS STRING)", "not_literal_or", ["1", "2", "3"])
     ).select("event_id", "metric", "tag_user", "value")
 
 
@@ -386,7 +387,7 @@ def filter_not_literal_or(spark, sf_dir):
 )
 def filter_iliteral_or(spark, sf_dir):
     p = points(spark, sf_dir)
-    return p.filter(flt.iliteral_or(F.col("metric"), ["CLICK", "Signup"])).select(
+    return p.filter(flt.build_tag_filter("metric", "iliteral_or", ["CLICK", "Signup"])).select(
         "event_id", "metric", "tag_user", "value"
     )
 
@@ -398,7 +399,7 @@ def filter_iliteral_or(spark, sf_dir):
 )
 def filter_wildcard(spark, sf_dir):
     p = points(spark, sf_dir)
-    return p.filter(flt.wildcard(F.col("metric"), "c*")).select(
+    return p.filter(flt.build_tag_filter("metric", "wildcard", "c*")).select(
         "event_id", "metric", "tag_user", "value"
     )
 
@@ -410,7 +411,7 @@ def filter_wildcard(spark, sf_dir):
 )
 def filter_iwildcard(spark, sf_dir):
     p = points(spark, sf_dir)
-    return p.filter(flt.iwildcard(F.col("metric"), "*U*")).select(
+    return p.filter(flt.build_tag_filter("metric", "iwildcard", "*U*")).select(
         "event_id", "metric", "tag_user", "value"
     )
 
@@ -422,7 +423,7 @@ def filter_iwildcard(spark, sf_dir):
 )
 def filter_regexp(spark, sf_dir):
     p = points(spark, sf_dir)
-    return p.filter(flt.regexp(F.col("metric"), "^(cl|si)")).select(
+    return p.filter(flt.build_tag_filter("metric", "regexp", "^(cl|si)")).select(
         "event_id", "metric", "tag_user", "value"
     )
 

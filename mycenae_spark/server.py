@@ -146,12 +146,11 @@ class _RequestState(threading.local):
 
 
 def _serving_session(spark: SparkSession) -> SparkSession:
-    """The Engine's own session: ``spark.newSession()`` with every
+    """The served reads' session: ``spark.newSession()`` with every
     modifiable runtime conf of ``spark`` copied in and code generation
     off: no whole-stage codegen, and expressions (predicates,
     projections, orderings) evaluated by their interpreted forms.
-    ``spark`` itself is left as it was; the cache is shared state, so
-    frames persisted through either session serve both."""
+    ``spark`` itself is left as it was."""
     session = spark.newSession()
     for key, value in spark.conf.getAll.items():
         if spark.conf.isModifiable(key):
@@ -161,21 +160,35 @@ def _serving_session(spark: SparkSession) -> SparkSession:
     return session
 
 
+def _on_session(session: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``'s analysed plan as a DataFrame of ``session``.  The cache
+    is shared state, matched by plan, so a persisted ``df`` answers from
+    its cached rows here too.  The public route between sessions is a
+    global temp view, and its drop uncaches the plan behind it."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, session)
+
+
 class Engine:
     """Lake-backed query/ingest engine shared by all requests.
 
-    The Engine runs on its own serving session (:func:`_serving_session`),
-    never on the caller's: a copy of the caller's runtime confs with
-    code generation off.  A served read is a fresh plan over a few MB of
-    persisted rows, and each request's values (time bounds, filter
-    values) are inlined into its generated classes, whole-stage or
-    per-expression, so under codegen every cache miss pays Janino
-    compiles that its execution never earns back; interpreted operators
-    and expressions skip them (adaptive query compilation,
-    Kohn, Leis & Neumann, ICDE 2018: compile only when execution pays
-    for it).  Scoping the switch to this session leaves every other
-    workload on the caller's session compiled as before.  Confs set on
-    the caller's session after construction do not reach the Engine."""
+    Each served read's one statement (:meth:`_plan`) runs on a serving
+    session of its own (:func:`_serving_session`): a copy of the
+    caller's runtime confs with code generation off.  A served read is a
+    fresh plan over a few MB of persisted rows, and each request's
+    values (time bounds, filter values) are inlined into its generated
+    classes, whole-stage or per-expression, so under codegen every cache
+    miss pays Janino compiles that its execution never earns back;
+    interpreted operators and expressions skip them (adaptive query
+    compilation, Kohn, Leis & Neumann, ICDE 2018: compile only when
+    execution pays for it).  Everything else — the memo frames' builds,
+    ingest, the analytics, dedup and similarity verbs — runs on the
+    caller's session, compiled as before; the cache is shared, so the
+    frames persisted there answer the serving session's statements.
+    Confs set on the caller's session after construction do not reach
+    the serving session."""
 
     def __init__(
         self,
@@ -192,8 +205,9 @@ class Engine:
         ann_drift_dir: str | None = None,
         chain_dir: str | None = None,
     ):
+        self.spark = spark
         # None builds a Spark-free Engine (the memo's own unit tests)
-        self.spark = None if spark is None else _serving_session(spark)
+        self._serving = None if spark is None else _serving_session(spark)
         self.lake_dir = lake_dir
         self.catalog_dir = catalog_dir
         self.rollup_dir = rollup_dir
@@ -840,6 +854,17 @@ class Engine:
         self._read_pin.frames = (pts, rollup)
         return pts, rollup
 
+    def _plan(self, pts, q, rollup=None, rollup_interval_ms=FINE_ROLLUP_MS):
+        """:func:`plan` with its statement on the serving session: the
+        frames, built and persisted on the caller's session, are handed
+        over as plans (:func:`_on_session`), so the read compiles no
+        classes and still answers from their cached rows."""
+        pts = _on_session(self._serving, pts)
+        if rollup is not None:
+            rollup = _on_session(self._serving, rollup)
+        return plan(pts, q, rollup=rollup,
+                    rollup_interval_ms=rollup_interval_ms)
+
     def _run_subquery(self, pts, rollup, q) -> list:
         nan_fill = bool(q.downsample and q.downsample.endswith("-nan"))
         # Percentile downsamples first consult the quantile-sample ladder
@@ -853,7 +878,7 @@ class Engine:
             qpts, q2, qs_iv = picked
             try:
                 rows = shape_response(
-                    plan(qpts, q2), q2, nan_fill=nan_fill
+                    self._plan(qpts, q2), q2, nan_fill=nan_fill
                 )
                 self._note_route(f"qsample:{qs_iv}")
                 return rows
@@ -898,7 +923,7 @@ class Engine:
                 break
             try:
                 rows = shape_response(
-                    plan(pts, q, rollup=r, rollup_interval_ms=r_iv),
+                    self._plan(pts, q, rollup=r, rollup_interval_ms=r_iv),
                     q,
                     nan_fill=nan_fill,
                 )
@@ -919,7 +944,8 @@ class Engine:
         if rollup is not None:
             self._guard_fine_retention(q)
         rows = shape_response(
-            plan(pts, q, rollup=rollup, rollup_interval_ms=FINE_ROLLUP_MS),
+            self._plan(pts, q, rollup=rollup,
+                       rollup_interval_ms=FINE_ROLLUP_MS),
             q,
             nan_fill=nan_fill,
         )
@@ -1195,7 +1221,7 @@ class Engine:
         head = self._checkpointed_head()
         with self._pinned(head):
             return self._retry_on_fresh_frames(
-                head, lambda: shape_response(plan(self._points(), q), q)
+                head, lambda: shape_response(self._plan(self._points(), q), q)
             )
 
     #: Recognized body fields + defaults per analytics verb — the cache
@@ -1298,7 +1324,7 @@ class Engine:
         for f in filters:
             cat = cat.filter(
                 flt.build_tag_filter(
-                    F.col("tags").getItem(f.tagk).cast("string"),
+                    f"CAST(`tags`[{flt.sql_literal(f.tagk)}] AS STRING)",
                     f.type,
                     f.filter,
                 )

@@ -131,23 +131,37 @@ def test_query_values_are_parameters_over_http(server):
     assert "UNRESOLVED_COLUMN" in resp["error"] and "tag_nosuch" in resp["error"]
 
 
-def test_engine_runs_on_its_own_interpreted_session(spark, tmp_path):
-    """The Engine plans on a session of its own: code generation off,
-    the caller's runtime confs copied in, the caller left untouched."""
-    from mycenae_spark.server import Engine
+def test_engine_serves_reads_on_its_own_interpreted_session(spark, tmp_path):
+    """A served read's statement runs on a session of the Engine's own:
+    code generation off, the caller's runtime confs copied in.  The
+    caller is left untouched and stays the session of everything else,
+    and a frame persisted there answers the serving statement from its
+    cached rows."""
+    from mycenae_spark.server import Engine, _on_session
 
     caller = spark.newSession()
     caller.conf.set("spark.sql.session.timeZone", "America/Sao_Paulo")
     eng = Engine(caller, str(tmp_path / "lake"), str(tmp_path / "catalog"))
     whole_stage = "spark.sql.codegen.wholeStage"
     factory = "spark.sql.codegen.factoryMode"
-    assert eng.spark is not caller
+    assert eng.spark is caller
     assert caller.conf.get(whole_stage) == "true"
     assert caller.conf.get(factory) == "FALLBACK"
-    assert eng.spark.conf.get(whole_stage) == "false"
-    assert eng.spark.conf.get(factory) == "NO_CODEGEN"
-    assert eng.spark.conf.get("spark.sql.session.timeZone") == (
+    serving = eng._serving
+    assert serving is not caller
+    assert serving.conf.get(whole_stage) == "false"
+    assert serving.conf.get(factory) == "NO_CODEGEN"
+    assert serving.conf.get("spark.sql.session.timeZone") == (
         "America/Sao_Paulo")
+    frame = caller.range(10).withColumnRenamed("id", "v").persist()
+    try:
+        served = _on_session(serving, frame).where("v > 6")
+        assert served.sparkSession is serving
+        assert "InMemoryRelation" in (
+            served._jdf.queryExecution().optimizedPlan().toString())
+        assert sorted(r.v for r in served.collect()) == [7, 8, 9]
+    finally:
+        frame.unpersist(blocking=True)
     Engine(spark, str(tmp_path / "lake2"), str(tmp_path / "catalog2"))
     assert spark.conf.get(whole_stage) == "true"
 

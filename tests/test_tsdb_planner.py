@@ -496,6 +496,29 @@ def test_request_values_never_become_sql_text(spark):
     assert ask(metric="m%b") is None  # no LIKE on the metric
 
 
+def test_filter_column_forms_spell_values_as_literals(spark):
+    """The filter Column forms run the same SQL as the planner, values
+    spelled by ``sql_literal``: hostile values match literally there too."""
+    from mycenae_spark.operators.filters import build_tag_filter
+
+    pts = _hostile_points(spark).where("metric = 'm'").cache()
+    values = HOSTILE + DECOYS
+    try:
+        for v in HOSTILE:
+            for ftype, arg, match in (
+                ("literal_or", [v], lambda x: x == v),
+                ("not_literal_or", [v], lambda x: x != v),
+                ("iliteral_or", [v.upper()], lambda x: x == v),
+                ("wildcard", v, _glob(v)),
+                ("iwildcard", v.upper(), _glob(v)),
+            ):
+                got = {r.tag_host for r in pts.where(
+                    build_tag_filter("`tag_host`", ftype, arg)).collect()}
+                assert got == {x for x in values if match(x)}, (ftype, v)
+    finally:
+        pts.unpersist()
+
+
 def test_plan_leaves_a_persisted_frame_cached(spark):
     """The frame enters the statement as a temp view; dropping that view
     must not uncache the frame (a served read would otherwise evict the
